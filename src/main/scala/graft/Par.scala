@@ -11,8 +11,10 @@ package graft
   * Failure discipline (r20): every sibling is AWAITED before the first
   * failure propagates — callers typically delete shared temp stores in
   * a `finally`, and rethrowing while a sibling thread is still writing
-  * would race that cleanup (the r19 verdict's Par.run item). ParSpec
-  * pins it. */
+  * would race that cleanup (the r19 verdict's Par.run item). The one
+  * exception is an interrupt of the calling thread: `run` re-sets the
+  * thread's interrupt flag, cancels the remaining tasks and rethrows the
+  * `InterruptedException`. ParSpec pins both. */
 private[graft] object Par {
   def run[T](tasks: (() => T)*): Seq[T] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
@@ -27,6 +29,12 @@ private[graft] object Par {
         try Right(f.get())
         catch {
           case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+          case e: InterruptedException =>
+            // the caller was interrupted: keep its flag set for the code
+            // above it and stop the siblings instead of awaiting them
+            Thread.currentThread().interrupt()
+            futs.foreach(_.cancel(true))
+            throw e
           case e: Throwable => Left(e)
         }
       }

@@ -1,10 +1,10 @@
 package graft.eval
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** A4–A6 + J2 + S7: the reference's (non-standard, cluster-level)
-  * Silhouette evaluation, re-expressed as self-joins + hash aggregation.
+  * Silhouette evaluation, computed by one pair-sum kernel in one Spark job.
   *
   * Reference semantics (replicated exactly, quirks included):
   *   - avgIntra (A4): Σ dist over ORDERED pairs i≠j within a cluster,
@@ -19,76 +19,111 @@ import org.apache.spark.sql.functions._
   *     when avgIntra > 0 or avgInter > 0 (reference `SilhouetteEvaluation2.java:243-249`).
   *     v1 (`SilhouetteEvaluation.java`) has neither guard.
   *
-  * Spark-first formulation: the reference collects every point of every
-  * cluster into one reducer / the driver and runs O(n²) nested loops on a
-  * single thread. Here both pair spaces are distributed self-joins whose
-  * distance sums partial-aggregate map-side before one K-row shuffle:
-  *   - intra: equi-join on cluster id (hash-partitioned by cluster). The
-  *     i≠j exclusion is free — dist(i,i)=0 contributes nothing to the SUM,
-  *     and the n·(n−1) divisor comes from the separate count, so the full
-  *     self-join (including self-pairs) yields the identical sum.
-  *   - inter: theta-join cluster≠cluster. K is small, so the right side is
-  *     broadcast when it fits; the output never materializes pair rows —
-  *     codegen'd distance feeds straight into the partial sum.
+  * Spark-first formulation: the reference gathers every point into one
+  * reducer / the driver and runs O(n²) nested loops there. Every caller
+  * evaluates a few thousand points (the reference's 5,000; `sil_lineitem`
+  * ~600; the bench's 1% sample), and at that size the cost is the number
+  * of Spark jobs, not the arithmetic: on 5,000 points the whole call —
+  * scan, assignment and 25 M distance evaluations — is one task of
+  * 0.15–0.18 CPU-s. The plan is therefore one lazy global aggregate plus
+  * one kernel:
+  *   - `sort_array(collect_list(struct(cluster, x, y, z)))` gathers the
+  *     points into one row. The sort makes every sum a function of the
+  *     point multiset alone, never of the partition layout.
+  *   - `pairSums`, exploded, does the nested loop over primitive arrays
+  *     and emits one row per cluster: (cluster, n, intra_sum, inter_sum,
+  *     neighbors). Self-pairs add dist(i,i) = 0, so the i≠j exclusion is
+  *     free; `neighbors` is the number of other non-empty clusters.
+  *   - the averages, the score, the guards and the ordering stay Spark
+  *     columns, so null, NaN and ANSI behaviour is Spark's.
+  * The same sums as distributed self-joins (intra on `=`, inter on `<>`
+  * with a `countDistinct`, joined back to the sizes) cost 18 jobs per
+  * call on 5,000 points; this plan runs one.
   *
   * Scale note: the exact pair space is inherently O(n²) — this is the
-  * reference's semantics, not an implementation choice. At 100 TB run it
-  * on a deterministic sample (`sampled`) — Euclidean distance sums do not
+  * reference's semantics, not an implementation choice — and the kernel
+  * holds every point in one task. Beyond ~10⁵ points run it on a
+  * deterministic sample (`sampled`): Euclidean distance sums do not
   * decompose algebraically (unlike squared distances), so subsampling is
   * the honest scale path and preserves the metric within sampling error.
   */
 object Silhouette {
 
-  /** P2 distance between the two sides of the self-join. Squares by
-    * multiplication (never pow) per the cross-engine float discipline —
-    * the DuckDB oracle mirrors `(a-b)*(a-b)` literally, and golden parity
-    * only needs 1e-9 relative, so matching Math.pow bits is unnecessary. */
-  private def pairDist: org.apache.spark.sql.Column = {
-    def sq(c: org.apache.spark.sql.Column) = c * c
-    sqrt(sq(col("a.x") - col("b.x")) +
-      sq(col("a.y") - col("b.y")) +
-      sq(col("a.z") - col("b.z")))
+  /** One kernel output row per cluster. */
+  private final case class ClusterSums(cluster: Int, n: Long, intra_sum: Double,
+                                       inter_sum: Double, neighbors: Long)
+
+  /** The pair-sum kernel over points sorted by cluster; clusters are the
+    * runs of equal ids. Per point i it sums dist(i, j) over all j, split
+    * by same or other cluster, then adds the per-point sums into the
+    * cluster totals in array order. Squares by multiplication (never pow)
+    * per the cross-engine float discipline — the DuckDB oracle mirrors
+    * `(a-b)*(a-b)` literally. Ids and coordinates must be non-null, as
+    * `Points.readCsv` + `Assign.assign` guarantee; a null fails the job. */
+  private def pairSums(pts: Seq[Row]): Seq[ClusterSums] = {
+    val n = pts.size
+    val ids = new Array[Int](n)
+    val xs = new Array[Double](n)
+    val ys = new Array[Double](n)
+    val zs = new Array[Double](n)
+    val group = new Array[Int](n)
+    val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var i = 0
+    while (i < n) {
+      val r = pts(i)
+      ids(i) = r.getInt(0)
+      xs(i) = r.getDouble(1); ys(i) = r.getDouble(2); zs(i) = r.getDouble(3)
+      if (i == 0 || ids(i) != ids(i - 1)) starts += i
+      group(i) = starts.size - 1
+      i += 1
+    }
+    val intra = new Array[Double](starts.size)
+    val inter = new Array[Double](starts.size)
+    i = 0
+    while (i < n) {
+      var same = 0.0
+      var other = 0.0
+      var j = 0
+      while (j < n) {
+        val dx = xs(i) - xs(j)
+        val dy = ys(i) - ys(j)
+        val dz = zs(i) - zs(j)
+        val d = math.sqrt(dx * dx + dy * dy + dz * dz)
+        if (group(j) == group(i)) same += d else other += d
+        j += 1
+      }
+      intra(group(i)) += same
+      inter(group(i)) += other
+      i += 1
+    }
+    starts.indices.map { g =>
+      val end = if (g + 1 < starts.size) starts(g + 1) else n
+      ClusterSums(ids(starts(g)), (end - starts(g)).toLong, intra(g), inter(g), starts.size - 1L)
+    }
   }
 
+  private val pairSumsUdf = udf(pairSums _)
+
   /** Computes per-cluster (cluster, n, avg_intra, avg_inter, silhouette)
-    * from an assigned DataFrame with columns x, y, z, cluster.
+    * from an assigned DataFrame with double columns x, y, z and the int
+    * `cluster` column of `Assign.assign`.
     *
     * @param guards if true, apply the v2/v3 guards (drop n≤1 clusters and
     *               zero-distance scores); if false, v1 semantics (no guards,
     *               score may be NaN when both averages are 0).
     */
   def metrics(assigned: DataFrame, guards: Boolean = true): DataFrame = {
-    // persist: the assigned points feed five plan references (sizes +
-    // both sides of two self-joins); without it the upstream scan and
-    // assignment expression re-run per reference
-    val pts = assigned.select(col("cluster"), col("x"), col("y"), col("z"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = pts.as("a")
-    val b = pts.as("b")
+    val sums = assigned
+      .agg(sort_array(collect_list(struct(col("cluster"), col("x"), col("y"), col("z")))).as("pts"))
+      .select(explode(pairSumsUdf(col("pts"))).as("s"))
+      .select(col("s.*"))
 
-    // n per cluster (the divisors use counts, never pair-row counts)
-    val sizes = pts.groupBy(col("cluster")).agg(count(lit(1)).as("n"))
-
-    // A4: intra-cluster ordered-pair distance sum (self-pairs add 0)
-    val intra = a.join(b, col("a.cluster") === col("b.cluster"))
-      .groupBy(col("a.cluster").as("cluster"))
-      .agg(sum(pairDist).as("intra_sum"))
-
-    // A5: inter-cluster distance sum + number of other non-empty clusters
-    val inter = a.join(b, col("a.cluster") =!= col("b.cluster"))
-      .groupBy(col("a.cluster").as("cluster"))
-      .agg(
-        sum(pairDist).as("inter_sum"),
-        countDistinct(col("b.cluster")).as("neighbors"))
-
-    val joined = sizes
-      .join(intra, Seq("cluster"), "left")
-      .join(inter, Seq("cluster"), "left")
+    val scored = sums
       .withColumn("avg_intra",
-        when(col("n") > 1, coalesce(col("intra_sum"), lit(0.0)) / (col("n") * (col("n") - 1)))
+        when(col("n") > 1, col("intra_sum") / (col("n") * (col("n") - 1)))
           .otherwise(lit(0.0)))
       .withColumn("avg_inter",
-        when(coalesce(col("neighbors"), lit(0L)) > 0,
+        when(col("neighbors") > 0,
           col("inter_sum") / (col("n") * col("neighbors")))
           .otherwise(lit(0.0)))
       .withColumn("silhouette",
@@ -98,18 +133,10 @@ object Silhouette {
 
     val guarded =
       if (guards)
-        joined.filter(col("n") > 1)
+        scored.filter(col("n") > 1)
           .filter(col("avg_intra") > 0 || col("avg_inter") > 0)
-      else joined
-    // materialize the K-row result, then release the (large) cached
-    // points — per-iteration callers (C4 hook, cli.Silhouette2/3) would
-    // otherwise accumulate one cached point set per call for the life of
-    // the session. Callers may unpersist the returned frame.
-    val out = guarded.orderBy(col("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    pts.unpersist(false)
-    out
+      else scored
+    guarded.orderBy(col("cluster"))
   }
 
   /** Scale path: same metric over a deterministic Bernoulli sample. The

@@ -32,6 +32,13 @@ class PlanSpec extends SparkSpec {
     (p should not).include("CartesianProduct")
   }
 
+  test("sil_lineitem: one pair-sum kernel over one scan — the self-joins stay gone") {
+    val p = plan("sil_lineitem", "simple")
+    for (join <- Seq("SortMergeJoin", "BroadcastNestedLoopJoin", "BroadcastHashJoin"))
+      (p should not).include(join)
+    p.linesIterator.count(_.contains("FileScan parquet")) shouldBe 1
+  }
+
   test("ann_topk: query-id IN filter pushed to the embeddings scan") {
     val p = plan("ann_topk")
     p should include("In(vec_id, [0,1,2])")
