@@ -55,8 +55,6 @@ final class BloomIngest(expectedItems: Long, numBits: Long) {
     * the identical logic (the IngestDedup pattern). */
   def ingestBatch(batch: DataFrame, corpusPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(corpusPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchDocs = batch.select(col("doc_id"), col("text"))
     if (batchDocs.isEmpty) return
     // bloom probe: misses are definitively new; hits are candidates
@@ -74,10 +72,8 @@ final class BloomIngest(expectedItems: Long, numBits: Long) {
     // — the IngestDedup pruned-read rule; its own crashed output never
     // self-matches). Candidate texts broadcast: the store scan never
     // shuffles.
-    val partDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$corpusPath/ingest_batch=*"))
     val seenTexts =
-      if (partDirs == null || partDirs.isEmpty) None
+      if (StoreCompaction.batchDirs(spark, corpusPath).isEmpty) None
       else {
         val cand = flagged.filter(col("bloom_hit")).select(col("text")).distinct()
         Some(spark.read.parquet(corpusPath)
@@ -93,15 +89,10 @@ final class BloomIngest(expectedItems: Long, numBits: Long) {
       case None => flagged
     }
     // one row per distinct new text: lowest doc_id (the exact keeper)
-    val survivors = newRows
-      .groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"), col("text"))
-      .withColumn("ingest_batch", lit(batchId))
-    survivors.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(corpusPath)
+    StoreCompaction.writeBatch(
+      newRows.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
+        .select(col("doc_id"), col("text")),
+      corpusPath, batchId)
     // fold the batch's texts into the bloom (distributed build, OR-merge
     // with the running filter; idempotent under replay)
     val cms = batchDocs.select(xxhash64(col("text")).as("h"))

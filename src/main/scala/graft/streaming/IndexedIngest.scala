@@ -31,56 +31,19 @@ object IndexedIngest {
   def ingestBatch(batch: DataFrame, corpusPath: String, indexPath: String,
                   batchId: Long, threshold: Double): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(corpusPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchDocs = batch.select(col("doc_id"), col("text"))
     if (batchDocs.isEmpty) return
-    if (batchId <= math.max(StoreCompaction.coveredThrough(spark, corpusPath),
-        StoreCompaction.coveredThrough(spark, indexPath)))
-      return // compacted replay: effects durable inside the generations
-    val partDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$corpusPath/ingest_batch=*"))
-    val indexDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$indexPath/ingest_batch=*"))
-    val prior =
-      if (partDirs != null && partDirs.nonEmpty)
-        Some((
-          StoreCompaction.committedView(spark, corpusPath)
-            .filter(col("ingest_batch") < batchId)
-            .select(col("doc_id"), col("text")),
-          // torn first batch: a crash between the corpus write and the
-          // index write leaves corpus partitions with NO index directory
-          // — reading indexPath would then throw on every replay and
-          // wedge the stream. The empty-index substitute is scoped to
-          // EXACTLY that case: every corpus partition carries
-          // ingest_batch >= batchId (only this batch's own torn write,
-          // which the `< batchId` replay filter excludes anyway). A
-          // missing index beside genuinely PRIOR corpus batches is loss
-          // (external deletion, partial restore) — raise rather than
-          // silently degrade cross-batch near-dup to within-batch-only;
-          // schema comes from the same builder so the shapes can't drift
-          if (indexDirs != null && indexDirs.nonEmpty)
-            StoreCompaction.committedView(spark, indexPath)
-              .filter(col("ingest_batch") < batchId)
-              .select(col("doc_id"), col("band"), col("key"))
-          else {
-            val priorCorpusBatches = partDirs.toSeq
-              .map(_.getPath.getName.stripPrefix("ingest_batch="))
-              .flatMap(s => scala.util.Try(s.toLong).toOption)
-              .filter(_ < batchId)
-            require(priorCorpusBatches.isEmpty,
-              s"band index missing at $indexPath but corpus has prior " +
-                s"batches ${priorCorpusBatches.sorted.mkString(",")} — " +
-                "index was lost (not a torn-first-batch replay); rebuild " +
-                "it with Dedup.writeBandIndex before resuming")
-            Dedup.bandIndexRows(batchDocs.limit(0))
-          }))
-      else None
+    if (StoreCompaction.replayCovered(spark, batchId, corpusPath, indexPath)) return
+    val prior = StoreCompaction.priorIndex(spark, corpusPath, indexPath, batchId,
+        Dedup.bandIndexRows(batchDocs.limit(0)), "band index",
+        "Dedup.writeBandIndex before resuming")
+      .map(index => (
+        StoreCompaction.committedView(spark, corpusPath)
+          .filter(col("ingest_batch") < batchId)
+          .select(col("doc_id"), col("text")),
+        index.select(col("doc_id"), col("band"), col("key"))))
     val dropIds = Dedup.ingestDupIdsIndexed(batchDocs, prior, threshold)
-    val survivors = batchDocs
-      .join(dropIds, Seq("doc_id"), "left_anti")
-      .withColumn("ingest_batch", lit(batchId))
-      .persist()
+    val survivors = batchDocs.join(dropIds, Seq("doc_id"), "left_anti").persist()
     // force the survivor cache with one job, then land corpus and index
     // CONCURRENTLY (guide-§2.6 driver overlap): both are deterministic
     // projections of the same cached survivors into their own batch
@@ -89,25 +52,17 @@ object IndexedIngest {
     // rewrite (the index-written/corpus-missing case replays as a first
     // batch and overwrites its own index partition byte-identically).
     // Per-batch wall drops from write+write to max(write, write).
-    survivors.count()
-    graft.Par.run(
-      () =>
-        survivors.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(corpusPath),
-      () =>
-        Dedup.bandIndexRows(survivors.select(col("doc_id"), col("text")))
-          .withColumn("ingest_batch", lit(batchId))
-          .write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(indexPath))
-    survivors.unpersist(false)
-    dropIds.unpersist(false)
-    ()
+    try {
+      survivors.count()
+      graft.Par.run(
+        () => StoreCompaction.writeBatch(survivors, corpusPath, batchId),
+        () => StoreCompaction.writeBatch(
+          Dedup.bandIndexRows(survivors), indexPath, batchId))
+      ()
+    } finally {
+      survivors.unpersist(false)
+      dropIds.unpersist(false)
+    }
   }
 
   /** @param autoCompactEvery when set, both stores self-OPTIMIZE once

@@ -32,45 +32,25 @@ object IngestDedup {
   def ingestBatch(batch: DataFrame, corpusPath: String, batchId: Long,
                   threshold: Double): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(corpusPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchDocs = batch.select(col("doc_id"), col("text"))
-    // an empty batch writes nothing: a zero-row dynamic overwrite would
-    // create a file-less directory that later parquet reads choke on
     if (batchDocs.isEmpty) return
-    // compacted replay (StoreCompaction watershed): effects durable
-    // inside the generation — rewriting a covered partition would
-    // resurrect it beside the generation's copy of the same rows
-    if (batchId <= StoreCompaction.coveredThrough(spark, corpusPath)) return
-    // corpus presence = actual ingest_batch=* partition directories
-    // (cheap filesystem metadata, no Spark job) — a bare exists() on
-    // the root is wrong after any file-less write
-    val partDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$corpusPath/ingest_batch=*"))
+    if (StoreCompaction.replayCovered(spark, batchId, corpusPath)) return
     // a batch compares ONLY against partitions written BEFORE it
     // (ingest_batch < batchId, a pruned directory read): a REPLAYED
     // batch therefore sees exactly the corpus view of its original
     // run — comparing against its own previous output would self-match
     // and drop every row, turning replay into data loss
     val corpus =
-      if (partDirs != null && partDirs.nonEmpty)
-        Some(StoreCompaction.committedView(spark, corpusPath)
-          .filter(col("ingest_batch") < batchId)
-          .select(col("doc_id"), col("text")))
-      else None
-    // one shared batch signature table drives both candidate sets
+      if (StoreCompaction.batchDirs(spark, corpusPath).isEmpty) None
+      else Some(StoreCompaction.committedView(spark, corpusPath)
+        .filter(col("ingest_batch") < batchId)
+        .select(col("doc_id"), col("text")))
+    // one shared batch signature table drives both candidate sets; the
+    // drop-id frame is the only cache ingestDupIds leaves alive
     val dropIds = Dedup.ingestDupIds(batchDocs, corpus, threshold)
-    val survivors = batchDocs
-      .join(dropIds, Seq("doc_id"), "left_anti")
-      .withColumn("ingest_batch", lit(batchId))
-    survivors.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(corpusPath)
-    // the drop-id frame is the only cache ingestDupIds leaves alive
-    dropIds.unpersist(false)
-    ()
+    try StoreCompaction.writeBatch(
+      batchDocs.join(dropIds, Seq("doc_id"), "left_anti"), corpusPath, batchId)
+    finally dropIds.unpersist(false)
   }
 
   /** Starts the ingestion stream; `docsStream` must be a streaming

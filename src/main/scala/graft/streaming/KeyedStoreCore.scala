@@ -7,19 +7,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** The shared (id, payload) store lifecycle behind [[VecStoreIngest]]
   * and [[DocStoreIngest]] — one implementation of the ingest /
   * committedView / deletion-vector / compaction discipline so a fix to
-  * the admission or replay logic can never silently reach one store
-  * family and not the other (the two public objects stay as thin named
-  * facades for their documented serving roles). Payloads store
-  * VERBATIM: whatever bits arrive are the bits [[view]] serves.
+  * it can never silently reach one store family and not the other (the
+  * two public objects stay as thin named facades for their documented
+  * serving roles). Payloads store VERBATIM: whatever bits arrive are
+  * the bits [[view]] serves.
   *
-  * Semantics are [[VectorIndexIngest]]'s verbatim: deterministic
-  * per-batch projection into an `ingest_batch=` partition with dynamic
-  * overwrite (replay rewrites byte-identically), watershed skip at or
-  * below a compacted generation, optional admission dedup (within-batch
-  * collapse to min(payload) — deterministic, so replays still rewrite
-  * byte-identically — plus an anti-join against the committed prior
-  * view), id-sorted consolidation at compact for row-group id-lookup
-  * locality (fetches are point lookups, never scans). */
+  * The per-batch steps are [[StoreCompaction]]'s shared protocol, the
+  * same one [[VectorIndexIngest]] runs: watershed replay skip, optional
+  * admission dedup ([[StoreCompaction.admit]]), and the deterministic
+  * dynamic-overwrite `ingest_batch=` write (replay rewrites
+  * byte-identically). Compaction consolidates id-sorted for row-group
+  * id-lookup locality (fetches are point lookups, never scans). */
 private[streaming] object KeyedStoreCore {
 
   def ingestBatch(batch: DataFrame, storePath: String, batchId: Long,
@@ -27,32 +25,13 @@ private[streaming] object KeyedStoreCore {
                   dedupAdmission: Boolean): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
-    if (batchId <= StoreCompaction.coveredThrough(spark, storePath))
-      return // compacted replay: effects durable inside the generation
+    if (StoreCompaction.replayCovered(spark, batchId, storePath)) return
     val rows = batch.select(col(idCol), col(valCol))
     val admitted =
-      if (!dedupAdmission) rows
-      else {
-        val inBatch = rows.groupBy(col(idCol))
-          .agg(min(col(valCol)).as(valCol))
-        val hasPrior = StoreCompaction.batchDirs(spark, storePath).nonEmpty
-        if (!hasPrior) inBatch
-        else inBatch.join(
-          StoreCompaction.committedView(spark, storePath)
-            .filter(col("ingest_batch").cast("long") < batchId)
-            .select(col(idCol)),
-          Seq(idCol), "left_anti")
-      }
-    // empty only the admission anti-join can produce: without
-    // dedupAdmission, admitted IS rows (whose source isEmpty already
-    // ran) — skip the limit-1 job per batch (r19 job-floor trim)
+      if (dedupAdmission) StoreCompaction.admit(rows, storePath, batchId, idCol, valCol)
+      else rows
     if (dedupAdmission && admitted.isEmpty) return
-    admitted
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(storePath)
+    StoreCompaction.writeBatch(admitted, storePath, batchId)
   }
 
   def start(stream: DataFrame, storePath: String, checkpoint: String,

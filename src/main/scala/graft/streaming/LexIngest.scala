@@ -51,36 +51,17 @@ object LexIngest {
     val spark = batch.sparkSession
     val raw = batch.select(col("doc_id"), col("text"))
     if (raw.isEmpty) return
-    if (batchId <= math.max(
-        StoreCompaction.coveredThrough(spark, s"$indexPath/postings"),
-        StoreCompaction.coveredThrough(spark, s"$indexPath/stats")))
-      return // compacted replay: effects durable inside the generations
+    if (StoreCompaction.replayCovered(spark, batchId,
+        s"$indexPath/postings", s"$indexPath/stats")) return
     val admitted =
-      if (!dedupAdmission) raw
-      else {
-        val inBatch = raw.groupBy(col("doc_id"))
-          .agg(min(col("text")).as("text"))
-        // data-file presence, not directory existence: a forget request
-        // marked before the first ingest leaves a stats dir holding only
-        // _deletes, which parquet discovery cannot infer a schema from
-        val hasPrior = StoreCompaction
-          .batchDirs(spark, s"$indexPath/stats").nonEmpty
-        if (!hasPrior) inBatch
-        else inBatch.join(
-          StoreCompaction.committedView(spark, s"$indexPath/stats")
-            .filter(col("ingest_batch").cast("long") < batchId)
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-      }
+      if (dedupAdmission)
+        StoreCompaction.admit(raw, s"$indexPath/stats", batchId, "doc_id", "text")
+      else raw
     // three writes read this plan (postings, stats, stats_agg) — persist
     // once or the admission anti-join re-runs per consumer
     val batchDocs = admitted
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // empty only the admission anti-join can produce: without
-      // dedupAdmission, batchDocs IS raw, whose isEmpty already ran —
-      // re-checking would pay one limit-1 job per batch for nothing
-      // (r19: ~1 job floor per batch across every lex lifecycle line)
       if (dedupAdmission && batchDocs.isEmpty) return
       // materialize the shared batch cache with ONE cheap job before the
       // fan-out, then land the three components CONCURRENTLY (guide
@@ -93,38 +74,23 @@ object LexIngest {
       // unchanged.
       batchDocs.count()
       graft.Par.run(
-        () =>
-          TextAnalysis.lexPostings(batchDocs)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(s"$indexPath/postings"),
+        () => StoreCompaction.writeBatch(TextAnalysis.lexPostings(batchDocs),
+          s"$indexPath/postings", batchId),
         // per-DOCUMENT stats (doc_id, dl): still additive across batches,
         // and subtractable per doc — a deletion-vector probe recomputes the
         // exact (n, Σdl) of the SURVIVING corpus, which is what keeps the
         // post-forget ranking bitwise-equal to the one-shot scorer over the
         // surviving documents
-        () =>
-          TextAnalysis.lexDocStats(batchDocs)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(s"$indexPath/stats"),
+        () => StoreCompaction.writeBatch(TextAnalysis.lexDocStats(batchDocs),
+          s"$indexPath/stats", batchId),
         // per-BATCH one-row aggregate (n, sumdl): the probe-side corpus
         // constants become O(committed batches) instead of a per-probe scan
         // of every per-doc row — BIGINT addition is associative, so the
         // folded totals are bit-identical to the per-doc sum. Same pure-
         // projection exactly-once story; the per-doc rows stay the source
         // of truth (forget subtraction and compaction rebuilds need them).
-        () =>
-          TextAnalysis.lexStats(batchDocs)
-            .withColumn("ingest_batch", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(s"$indexPath/stats_agg"))
+        () => StoreCompaction.writeBatch(TextAnalysis.lexStats(batchDocs),
+          s"$indexPath/stats_agg", batchId))
       ()
     } finally batchDocs.unpersist(false)
   }
@@ -171,10 +137,9 @@ object LexIngest {
         ingestBatch(batch.toDF(), indexPath, batchId, dedupAdmission)
         autoCompactEvery.foreach { n =>
           val spark = batch.sparkSession
-          val w = StoreCompaction.coveredThrough(spark, s"$indexPath/postings")
-          val live = StoreCompaction.batchDirs(spark, s"$indexPath/postings")
-            .map(_._2).filter(_ > w).distinct.count(_ >= 0L)
-          if (live >= n) { compact(spark, indexPath); vacuum(spark, indexPath) }
+          if (StoreCompaction.liveBatches(spark, s"$indexPath/postings") >= n) {
+            compact(spark, indexPath); vacuum(spark, indexPath)
+          }
         }
       }
       .start()
@@ -359,13 +324,10 @@ object LexIngest {
       targetFiles = 1, sortCols = Seq("term"), deleteIdCol = Some("doc_id"))
     val sw = StoreCompaction.compact(spark, s"$indexPath/stats", Nil,
       deleteIdCol = Some("doc_id"))
-    StoreCompaction.committedView(spark, s"$indexPath/stats")
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
-      .withColumn("ingest_batch", lit(-sw.generation))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch")
-      .parquet(s"$indexPath/stats_agg")
+    StoreCompaction.writeBatch(
+      StoreCompaction.committedView(spark, s"$indexPath/stats")
+        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl")),
+      s"$indexPath/stats_agg", -sw.generation)
     sw
   }
 

@@ -34,7 +34,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * compares only against partitions written BEFORE it, so a replay
   * sees its original corpus view and rewrites its own partitions
   * byte-identically. The torn-first-batch escape and the
-  * missing-index-beside-prior-batches raise are inherited verbatim.
+  * missing-index-beside-prior-batches raise are the shared
+  * [[StoreCompaction.priorIndex]] rule.
   *
   * Long-lived stores compact with [[StoreCompaction]] — corpus and
   * index TOGETHER, to the same watershed (they describe the same
@@ -50,85 +51,52 @@ object SpanIngest {
     val spark = batch.sparkSession
     val batchDocs = batch.select(col("doc_id"), col("text"))
     if (batchDocs.isEmpty) return
-    if (batchId <= math.max(StoreCompaction.coveredThrough(spark, corpusPath),
-        StoreCompaction.coveredThrough(spark, indexPath)))
-      return // compacted replay: effects durable inside the generations
-    val fs = new org.apache.hadoop.fs.Path(corpusPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val partDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$corpusPath/ingest_batch=*"))
-    val indexDirs = fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$indexPath/ingest_batch=*"))
-    val priorGrams =
-      if (partDirs == null || partDirs.isEmpty)
-        Dedup.spanIndexRows(batchDocs.limit(0), n)
-      else if (indexDirs != null && indexDirs.nonEmpty)
-        StoreCompaction.committedView(spark, indexPath)
-          .filter(col("ingest_batch") < batchId)
-          .select(col("g"))
-      else {
-        // torn first batch: corpus written, index write never happened —
-        // only this batch's own partitions can exist (the replay filter
-        // excludes them anyway). Prior corpus batches with no index is
-        // LOSS: raise, don't silently degrade to within-batch-only.
-        val priorCorpusBatches = partDirs.toSeq
-          .map(_.getPath.getName.stripPrefix("ingest_batch="))
-          .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .filter(_ < batchId)
-        require(priorCorpusBatches.isEmpty,
-          s"span index missing at $indexPath but corpus has prior " +
-            s"batches ${priorCorpusBatches.sorted.mkString(",")} — " +
-            "index was lost (not a torn-first-batch replay); rebuild " +
-            "it with Dedup.writeSpanIndex over the stored corpus")
-        Dedup.spanIndexRows(batchDocs.limit(0), n)
-      }
+    if (StoreCompaction.replayCovered(spark, batchId, corpusPath, indexPath)) return
+    val noGrams = Dedup.spanIndexRows(batchDocs.limit(0), n)
+    val priorGrams = StoreCompaction.priorIndex(spark, corpusPath, indexPath,
+        batchId, noGrams, "span index",
+        "Dedup.writeSpanIndex over the stored corpus")
+      .fold(noGrams)(_.select(col("g")))
     // removeCorpusSpans returns its output persisted + materialized —
     // both writes below are cache reads of the one computation. With
     // selfClean the batch first strips its own internal duplicate runs,
     // then the survivor text cleans against the corpus; the landed
     // counts re-anchor to the raw batch (total tokens, total dropped)
-    // via one batch-sized join of the two cached stages.
-    val cleanedBase =
+    // via one batch-sized join of the two cached stages. Every cached
+    // stage is released on the way out, a throwing step included.
+    val cleaned =
       if (!selfClean) Dedup.removeCorpusSpans(batchDocs, priorGrams, n)
       else {
         val sc = Dedup.removeDuplicateSpans(batchDocs, n)
-        val cc = Dedup.removeCorpusSpans(
-          sc.select(col("doc_id"), col("text")), priorGrams, n)
-        val merged = cc
-          .select(col("doc_id"), col("n_dropped").as("_cd"), col("text"))
-          .join(sc.select(col("doc_id"), col("n_tokens"),
-            col("n_dropped").as("_sd")), Seq("doc_id"))
-          .select(col("doc_id"), col("n_tokens"),
-            (col("_sd") + col("_cd")).as("n_dropped"), col("text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        merged.count()
-        cc.unpersist(false)
-        sc.unpersist(false)
-        merged
+        try {
+          val cc = Dedup.removeCorpusSpans(
+            sc.select(col("doc_id"), col("text")), priorGrams, n)
+          try {
+            val merged = cc
+              .select(col("doc_id"), col("n_dropped").as("_cd"), col("text"))
+              .join(sc.select(col("doc_id"), col("n_tokens"),
+                col("n_dropped").as("_sd")), Seq("doc_id"))
+              .select(col("doc_id"), col("n_tokens"),
+                (col("_sd") + col("_cd")).as("n_dropped"), col("text"))
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            try { merged.count(); merged }
+            catch { case t: Throwable => merged.unpersist(false); throw t }
+          } finally cc.unpersist(false)
+        } finally sc.unpersist(false)
       }
-    val cleaned = cleanedBase.withColumn("ingest_batch", lit(batchId))
-    // cleanedBase is already persisted + materialized, so both writes
-    // are cache reads of the one computation — land them CONCURRENTLY
-    // (the IndexedIngest driver-overlap rationale; write order never
+    // cleaned is already persisted + materialized, so both writes are
+    // cache reads of the one computation — land them CONCURRENTLY (the
+    // IndexedIngest driver-overlap rationale; write order never
     // mattered for replay, a torn attempt in either order rewrites its
     // own partitions byte-identically)
-    graft.Par.run(
-      () =>
-        cleaned.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(corpusPath),
-      () =>
-        Dedup.spanIndexRows(cleaned.select(col("doc_id"), col("text")), n)
-          .withColumn("ingest_batch", lit(batchId))
-          .write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("ingest_batch")
-          .parquet(indexPath))
-    cleanedBase.unpersist(false)
-    ()
+    try {
+      graft.Par.run(
+        () => StoreCompaction.writeBatch(cleaned, corpusPath, batchId),
+        () => StoreCompaction.writeBatch(
+          Dedup.spanIndexRows(cleaned.select(col("doc_id"), col("text")), n),
+          indexPath, batchId))
+      ()
+    } finally cleaned.unpersist(false)
   }
 
   /** @param autoCompactEvery when set, both stores self-OPTIMIZE once

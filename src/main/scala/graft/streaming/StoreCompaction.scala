@@ -40,12 +40,17 @@ import org.apache.spark.sql.functions._
   * batch. A replayed batch b ≤ W must SKIP (its effects are already
   * durable inside the generation; a dynamic-partition overwrite would
   * resurrect its covered partition and double its rows) — every ingest
-  * checks [[coveredThrough]] first, exactly like ScdIngest skips
+  * asks [[replayCovered]] first, exactly like ScdIngest skips
   * already-committed manifest versions. A replayed batch b > W sees
   * {−g} ∪ {W < b' < b} through the view — precisely its original prior
   * corpus — and rewrites its own partitions byte-identically, so the
   * ingests' replay contract is preserved above the watershed and
-  * subsumed below it (the Delta/Iceberg checkpoint semantics).
+  * subsumed below it (the Delta/Iceberg checkpoint semantics). The
+  * rest of the per-batch protocol lives here too, so every ingest runs
+  * the same steps: [[writeBatch]] (the dynamic-overwrite batch write),
+  * [[admit]] (the id-admission anti-join), [[priorIndex]] (the
+  * two-store ingests' torn-first-batch rule) and [[liveBatches]] (the
+  * auto-compaction trigger).
   *
   * [[vacuum]] is pure GC: correctness comes from the marker filter
   * alone, so covered partitions and superseded generations can be
@@ -297,7 +302,11 @@ object StoreCompaction {
 
   /** `ingest_batch=` partition directories at either layout depth
     * (top-level for (ingest_batch) stores, one below for
-    * (cluster, ingest_batch) stores), with their parsed batch values. */
+    * (cluster, ingest_batch) stores), with their parsed batch values.
+    * Every "does this store hold data yet" test asks this listing, never
+    * whether the root exists: a forget request marked before the first
+    * ingest leaves a root holding only `_deletes`, which parquet
+    * discovery cannot infer a schema from. */
   private[streaming] def batchDirs(spark: SparkSession, path: String): Seq[(Path, Long)] = {
     val fs = fsOf(spark, path)
     def glob(pat: String): Seq[Path] =
@@ -306,6 +315,92 @@ object StoreCompaction {
     (glob("ingest_batch=*") ++ glob("*/ingest_batch=*"))
       .flatMap(p => scala.util.Try(
         p.getName.stripPrefix("ingest_batch=").toLong).toOption.map(v => (p, v)))
+  }
+
+  // ---------- the per-batch protocol every ingest shares ----------
+
+  /** Lands `rows` as batch `batchId` of the store: one dynamic-overwrite
+    * write partitioned by (clusterCols…, ingest_batch), so a replayed
+    * batch rewrites exactly its own partitions, byte-identically when
+    * the rows are a deterministic function of the batch, and no other
+    * partition is touched. Callers skip empty batches first — a
+    * zero-row write would leave a file-less directory that later
+    * parquet reads cannot infer a schema from. */
+  private[streaming] def writeBatch(rows: DataFrame, path: String, batchId: Long,
+                                    clusterCols: Seq[String] = Nil): Unit =
+    rows.withColumn("ingest_batch", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy((clusterCols :+ "ingest_batch"): _*)
+      .parquet(path)
+
+  /** Whether batch `batchId` is at or below the watershed of any of the
+    * stores it writes — its effects are then durable inside a committed
+    * generation and the replay must skip (see the scaladoc above). Stores
+    * that share a batch spine compact to the same watershed, so one
+    * covered store is enough. */
+  private[streaming] def replayCovered(spark: SparkSession, batchId: Long,
+                                       paths: String*): Boolean =
+    paths.exists(p => batchId <= coveredThrough(spark, p))
+
+  /** Id admission for a batch-disjoint store: within the batch each
+    * `idCol` collapses to its min(`valCol`) — deterministic, so a replay
+    * still rewrites byte-identically — and ids already committed to
+    * `registry` by EARLIER batches anti-join away (the prior view is
+    * `ingest_batch < batchId`, so a replay sees its original registry).
+    *
+    * The result is the ONLY empty frame an ingest can meet after its
+    * source's own `isEmpty` check. Callers probe emptiness on it and
+    * nowhere else — with admission off the batch IS its already-checked
+    * source, and a second probe would pay a limit-1 job per batch. */
+  private[streaming] def admit(rows: DataFrame, registry: String, batchId: Long,
+                               idCol: String, valCol: String): DataFrame = {
+    val spark = rows.sparkSession
+    val inBatch = rows.groupBy(col(idCol)).agg(min(col(valCol)).as(valCol))
+    if (batchDirs(spark, registry).isEmpty) inBatch
+    else inBatch.join(
+      committedView(spark, registry)
+        .filter(col("ingest_batch").cast("long") < batchId)
+        .select(col(idCol)),
+      Seq(idCol), "left_anti")
+  }
+
+  /** The prior view of a corpus+index ingest's INDEX (its committed rows
+    * of batches before `batchId`), or None while the corpus holds no
+    * batch at all.
+    *
+    * Torn first batch: a crash between the corpus write and the index
+    * write leaves corpus partitions and NO index directory — reading the
+    * index would throw on every replay and wedge the stream. The `empty`
+    * substitute is scoped to exactly that case: every corpus partition
+    * is at or above `batchId` (only this batch's own torn write, which
+    * the `< batchId` prior filter excludes anyway). A missing index
+    * beside genuinely PRIOR corpus batches is loss (external deletion,
+    * partial restore) and raises, naming `what` was lost and how to
+    * `rebuild` it, rather than silently degrade cross-batch dedup to
+    * within-batch only. */
+  private[streaming] def priorIndex(spark: SparkSession, corpus: String, index: String,
+                                    batchId: Long, empty: => DataFrame,
+                                    what: String, rebuild: String): Option[DataFrame] = {
+    val corpusBatches = batchDirs(spark, corpus).map(_._2)
+    if (corpusBatches.isEmpty) None
+    else if (batchDirs(spark, index).nonEmpty)
+      Some(committedView(spark, index).filter(col("ingest_batch") < batchId))
+    else {
+      val prior = corpusBatches.filter(_ < batchId)
+      require(prior.isEmpty,
+        s"$what missing at $index but corpus has prior batches " +
+          s"${prior.sorted.mkString(",")} — index was lost (not a " +
+          s"torn-first-batch replay); rebuild it with $rebuild")
+      Some(empty)
+    }
+  }
+
+  /** Committed batch partitions above the watershed — the
+    * auto-compaction trigger quantity, one directory listing. */
+  private[streaming] def liveBatches(spark: SparkSession, path: String): Int = {
+    val w = coveredThrough(spark, path)
+    batchDirs(spark, path).map(_._2).filter(_ > w).distinct.count(_ >= 0L)
   }
 
   /** Rewrites every committed row into generation (g+1): one shuffle
@@ -362,17 +457,13 @@ object StoreCompaction {
       case Some(idc) if pendingDeleteFiles.nonEmpty => liveView(spark, path, idc)
       case _ => committedView(spark, path)
     }
-    val rows = base.withColumn("ingest_batch", lit(-gen))
     val packed =
-      if (clusterCols.nonEmpty) rows.repartition(clusterCols.map(col): _*)
-      else rows.repartition(targetFiles)
+      if (clusterCols.nonEmpty) base.repartition(clusterCols.map(col): _*)
+      else base.repartition(targetFiles)
     val sized =
       if (sortCols.isEmpty) packed
       else packed.sortWithinPartitions(sortCols.map(col): _*)
-    sized.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy((clusterCols :+ "ingest_batch"): _*)
-      .parquet(path)
+    writeBatch(sized, path, -gen, clusterCols)
     // commit: marker content is the covered high-water batch id; the
     // rename is the commit point (ManifestSink discipline)
     val fs = fsOf(spark, path)
@@ -405,10 +496,7 @@ object StoreCompaction {
                       targetFiles: Int = 1, sortCols: Seq[String] = Nil,
                       deleteIdCol: Option[String] = None): Option[Watershed] = {
     require(maxBatches >= 1, s"need maxBatches >= 1, got $maxBatches")
-    val w = coveredThrough(spark, path)
-    val live = batchDirs(spark, path).map(_._2).filter(_ > w).distinct
-      .count(_ >= 0L)
-    if (live < maxBatches) None
+    if (liveBatches(spark, path) < maxBatches) None
     else {
       val ws = compact(spark, path, clusterCols, targetFiles, sortCols, deleteIdCol)
       vacuum(spark, path)

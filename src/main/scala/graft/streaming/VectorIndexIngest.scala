@@ -76,34 +76,14 @@ object VectorIndexIngest {
           "bitwise from the store's published _quantizer — the quantizer " +
           "is FROZEN per store (retraining means a batch rebuild via " +
           "writeIvfPqIndex to a new path, never a streaming mutation)")
-    if (batchId <= StoreCompaction.coveredThrough(spark, indexPath))
-      return // compacted replay: effects durable inside the generation
+    if (StoreCompaction.replayCovered(spark, batchId, indexPath)) return
     val admitted =
-      if (!dedupAdmission) batch
-      else {
-        val inBatch = batch.groupBy(col("vec_id"))
-          .agg(min(col("embedding")).as("embedding"))
-        // data-file presence, not directory existence: a forget request
-        // marked before the first ingest leaves only _deletes under the
-        // root, which parquet discovery cannot infer a schema from
-        val hasPrior = StoreCompaction.batchDirs(spark, indexPath).nonEmpty
-        if (!hasPrior) inBatch
-        else inBatch.join(
-          StoreCompaction.committedView(spark, indexPath)
-            .filter(col("ingest_batch").cast("long") < batchId)
-            .select(col("vec_id")),
-          Seq("vec_id"), "left_anti")
-      }
-    // empty only the admission anti-join can produce: without
-    // dedupAdmission, admitted IS batch (already isEmpty-checked) —
-    // skip the limit-1 job per batch (r19 job-floor trim)
+      if (dedupAdmission)
+        StoreCompaction.admit(batch, indexPath, batchId, "vec_id", "embedding")
+      else batch
     if (dedupAdmission && admitted.isEmpty) return
-    Similarity.ivfPqIndexRows(admitted, q)
-      .withColumn("ingest_batch", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell_id", "ingest_batch")
-      .parquet(indexPath)
+    StoreCompaction.writeBatch(Similarity.ivfPqIndexRows(admitted, q),
+      indexPath, batchId, Seq("cell_id"))
   }
 
   /** @param vecStream streaming (vec_id, embedding) rows.

@@ -1209,8 +1209,9 @@ object ScalingAudit {
       .agg(max(col("df"))).head.getLong(0)
     println(s"== noveltyAb: $n docs, hottest shingle df = $maxDf " +
       s"(one window group spanning ${100.0 * maxDf / n} pct of the corpus) ==")
+    // each arm releases only what it cached (`out`): the persisted
+    // corpus `big` stays cached across every timed arm
     def run(df: => DataFrame): (Double, Map[Long, (Long, Long)]) = {
-      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val out = df
       val m = out.select(col("doc_id"), col("n_shingles"), col("n_unique"))
@@ -1234,7 +1235,10 @@ object ScalingAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScalingAudit candidates|sf1ish|annprobe <sfDir>...")
+    require(args.length >= 2, "usage: ScalingAudit " +
+      "candidates|sf1ish|annprobe|hotsource|bigram|trigram|scalejson|" +
+      "noveltyab|compactab|probeab|quantab <sfDir>... " +
+      "(hotsource takes an optional factor, scalejson an <outFile>)")
     val spark = SparkSession.builder()
       .appName("graft-scaling-audit")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))

@@ -222,6 +222,30 @@ class StreamingSpec extends SparkSpec {
     ex.getMessage should include("prior batches 0")
   }
 
+  test("ingest failure paths release their caches: a store path that is a regular file leaves nothing cached") {
+    // each write throws (the store path cannot become a directory); the
+    // frames an ingest persisted on the way must not outlive the call
+    val dir = java.nio.file.Files.createTempDirectory("ingestfail").toString
+    val file = java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(dir, "not-a-dir")).toString
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
+    val ingests: Seq[(String, () => Unit)] = Seq(
+      "IngestDedup" -> (() =>
+        IngestDedup.ingestBatch(docs, file, batchId = 0L, threshold = 0.5)),
+      "IndexedIngest" -> (() =>
+        IndexedIngest.ingestBatch(docs, s"$dir/idx-corpus", file,
+          batchId = 0L, threshold = 0.5)),
+      "SpanIngest" -> (() =>
+        SpanIngest.ingestBatch(docs, s"$dir/span-corpus", file,
+          batchId = 0L, n = 3)))
+    for ((name, ingest) <- ingests) withClue(s"$name: ") {
+      spark.catalog.clearCache()
+      an[Exception] should be thrownBy ingest()
+      spark.sharedState.cacheManager.isEmpty shouldBe true
+    }
+  }
+
   test("corpusCard: the complete-mode table equals the batch datasheet's additive integers at every trigger") {
     implicit val ctx = spark.sqlContext
     val mem = MemoryStream[(Long, String, String, String)]
@@ -353,6 +377,33 @@ class StreamingSpec extends SparkSpec {
         c, i, batchId = 3L, n = 3)
     }
     ex.getMessage should include("span index missing")
+  }
+
+  test("span ingest: torn first batch (corpus written, index missing) replays instead of wedging") {
+    // the IndexedIngest crash window on the span stores: batch 0's
+    // corpus partition landed, its gram index never did
+    val dir = java.nio.file.Files.createTempDirectory("tornspan").toString
+    val (c, i) = (s"$dir/c", s"$dir/i")
+    val b0 = Seq((1L, "a b c d"), (2L, "p q r")).toDF("doc_id", "text")
+    SpanIngest.ingestBatch(b0, c, i, batchId = 0L, n = 3)
+    val fs = new org.apache.hadoop.fs.Path(i)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(i), true) shouldBe true
+    // replay of batch 0 must succeed and rebuild both stores
+    noException should be thrownBy SpanIngest.ingestBatch(b0, c, i, batchId = 0L, n = 3)
+    def corpus(): Seq[(Long, Long, String)] =
+      spark.read.parquet(c).select("doc_id", "n_dropped", "text")
+        .orderBy("doc_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    corpus() shouldBe Seq((1L, 0L, "a b c d"), (2L, 0L, "p q r"))
+    def grams(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select(col("g").cast("string")).collect().map(_.getString(0)).toSet
+    grams(spark.read.parquet(i)) shouldBe grams(graft.llm.Dedup.spanIndexRows(b0, 3))
+    // and the stream continues normally: batch 1 cleans against the
+    // rebuilt index
+    SpanIngest.ingestBatch(Seq((10L, "x a b c y")).toDF("doc_id", "text"),
+      c, i, batchId = 1L, n = 3)
+    corpus().last shouldBe ((10L, 3L, "x y"))
   }
 
   test("span ingest selfClean: a self-duplicating batch lands span-disjoint internally AND against the store; counts anchor to the raw batch") {
@@ -1560,6 +1611,26 @@ class StreamingSpec extends SparkSpec {
     DocStoreIngest.view(spark, s"$dir/docs").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
       Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
+    // across a compacted generation: after compact + vacuum the registry
+    // is the lone ingest_batch=-1 partition, and a re-sent id 3 must
+    // still anti-join away while a new id lands
+    VecStoreIngest.compact(spark, s"$dir/vecs")
+    StoreCompaction.vacuum(spark, s"$dir/vecs")
+    StoreCompaction.batchDirs(spark, s"$dir/vecs").map(_._2) shouldBe Seq(-1L)
+    VecStoreIngest.ingestBatch(
+      Seq((3L, Seq(9.0, 9.0)), (4L, Seq(2.0, 0.0))).toDF("vec_id", "embedding"),
+      s"$dir/vecs", 2L, dedupAdmission = true)
+    VecStoreIngest.view(spark, s"$dir/vecs").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq shouldBe
+      got :+ ((4L, Seq(2.0, 0.0)))
+    DocStoreIngest.compact(spark, s"$dir/docs")
+    StoreCompaction.vacuum(spark, s"$dir/docs")
+    StoreCompaction.batchDirs(spark, s"$dir/docs").map(_._2) shouldBe Seq(-1L)
+    DocStoreIngest.ingestBatch(Seq((3L, "again"), (4L, "delta")).toDF("doc_id", "text"),
+      s"$dir/docs", 2L, dedupAdmission = true)
+    DocStoreIngest.view(spark, s"$dir/docs").collect()
+      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
+      Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"))
     // without the flag the duplicate lands twice — the hazard the arm closes
     DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
       s"$dir/raw", 0L)
