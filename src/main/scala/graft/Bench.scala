@@ -11,25 +11,16 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   /** Contract rows exempt from the untimed sf0.001 warm-suite pass:
-    * exactly the store-LIFECYCLE compositions — every query whose body
-    * builds temp-dir stores batch-by-batch before probing (grep:
-    * createTempDirectory in SparkEntry). Floor-dominated (Spark's ~2s
+    * exactly the store-LIFECYCLE compositions, i.e. the lines declared
+    * through `SparkEntry.store` (every query whose body builds temp-dir
+    * stores batch-by-batch before probing). Floor-dominated (Spark's ~2s
     * tiny-data job floor × 8-15 jobs per line), not JIT-dominated, so
     * warming them at sf0.001 costs nearly their sf0.1 wall for no
-    * steady-state benefit. WarmExemptSpec pins membership against the
-    * registry (every name must exist) and against the temp-store
-    * criterion (no non-lifecycle row may creep in).
+    * steady-state benefit. Derived, so a new store line is exempt with
+    * no edit here; WarmExemptSpec pins temp-dir creation to the one
+    * scope helper, so a temp store cannot be built outside it.
     */
-  val WarmExempt: Set[String] = Set(
-    "q_hamming_stored", "q_hamming_served", "q_hybrid_indexed",
-    "q_mmr_stored", "q_mmr_served", "q_refine_served",
-    "q_store_asof", "q_store_export", "q_store_describe",
-    "q_forget_compliance", "q_store_consistency", "q_rag_served",
-    "q_ann_filtered", "ann_indexed", "ann_compacted", "ann_forget",
-    "q_bm25_forget", "q_prf_indexed", "q_chunk_indexed",
-    "q_bm25_multi", "q_bm25_indexed", "q_lex_export",
-    "q_eval_served", "q_eval_asof", "q_eval_hybrid", "q_lex_describe",
-    "q_vec_export")
+  val WarmExempt: Set[String] = SparkEntry.storeLines
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -148,8 +139,8 @@ object Bench {
         // JIT off the clock via the ingest/stream extras and the other
         // members of each family, and every line above RetimeFloorSec
         // is re-sampled with min-of-samples, which absorbs any residual
-        // first-run compilation. WarmExemptSpec pins this set against
-        // the registry so a rename can't silently re-inflate the pass.
+        // first-run compilation. The set is derived from the registry,
+        // so a rename can't silently re-inflate the pass.
         if (Bench.WarmExempt(name)) warmSkipped += 1
         else { try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () } }
       }
@@ -279,18 +270,12 @@ object Bench {
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         val quant = Similarity.trainIvfPqQuantizer(
           e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_annidx_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_annidx_bench") { tmp =>
           Similarity.writeIvfPqIndex(e, quant, s"$tmp/idx")
           val stored = Similarity.readIvfPqIndex(spark, s"$tmp/idx")
           val hits = Similarity.ivfPqProbe(stored, quant,
             Similarity.collectVectors(e, Seq(0L, 1L, 2L)), nprobe = 2, k = 10).count()
           require(hits > 0, "empty probe over the persisted IVF-PQ index")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming surface: file-stream click attribution over the events
@@ -315,8 +300,7 @@ object Bench {
         val evCount = ev.count()
         val streamParts = math.max(2L, math.min(32L, evCount / 65536L)).toString
         s2.conf.set("spark.sql.shuffle.partitions", streamParts)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_stream_bench") { tmp =>
           val views = ev.filter(col("event_type") === "view").drop("event_type")
           val clicks = ev.filter(col("event_type") === "click").drop("event_type")
           views.write.mode("overwrite").parquet(s"$tmp/v")
@@ -332,11 +316,6 @@ object Bench {
           q.processAllAvailable()
           q.stop()
           require(pairs > 0, "no attribution pairs from the stream")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming corpus ingestion with near-dup suppression: the full
@@ -353,8 +332,7 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ingest_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_ingest_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -365,11 +343,6 @@ object Bench {
           val survived = s2.read.parquet(s"$tmp/corpus").count()
           require(survived > 0 && survived <= nDocs,
             s"ingest stream kept $survived of $nDocs docs")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming EXACT ingest dedup with constant driver state: the
@@ -385,8 +358,7 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("n_chars"))
         val nDocs = docs.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_qgate_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_qgate_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -402,11 +374,6 @@ object Bench {
             try s2.read.parquet(p).count() catch { case _: Throwable => 0L }
           require(cnt(s"$tmp/acc") + cnt(s"$tmp/quar") == nDocs,
             "gate lost or duplicated rows")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       "stream_bloom_ingest" -> (() => {
@@ -416,8 +383,7 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bloom_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_bloom_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -429,11 +395,6 @@ object Bench {
           val survived = s2.read.parquet(s"$tmp/corpus").count()
           require(survived > 0 && survived <= nDocs,
             s"bloom ingest kept $survived of $nDocs docs")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // index-maintaining streaming ingest: the amortized twin of
@@ -452,8 +413,7 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_idxingest_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_idxingest_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -467,11 +427,6 @@ object Bench {
             .select("doc_id").distinct().count()
           require(survived > 0 && survived <= nDocs && indexed == survived,
             s"indexed ingest kept $survived of $nDocs docs, index covers $indexed")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // live corpus card: the documents table fed as a 4-batch file
@@ -488,8 +443,7 @@ object Bench {
             docs, 30, 100000, 4.0, 10.0, 2, 0.8)
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(4),
             r.getLong(6))).sortBy(_._1).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft_card_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_card_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -504,11 +458,6 @@ object Bench {
             .sortBy(_._1).toSeq
           require(streamed == batch,
             s"live card has ${streamed.size} sources, batch ${batch.size}")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming drift-since-last-publish: the live card stitched
@@ -533,8 +482,7 @@ object Bench {
             r.getAs[Long]("tokens_old"), r.getAs[Long]("tokens_new"),
             r.getAs[Long]("pass_old"), r.getAs[Long]("pass_new")))
           .sortBy(_._1).toSeq
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cdiff_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_cdiff_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -553,11 +501,6 @@ object Bench {
             .sortBy(_._1).toSeq
           require(got == expected,
             s"drift monitor has ${got.size} sources, batch diff ${expected.size}")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming span-cleaning ingest: the documents table fed as a
@@ -573,8 +516,7 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_spaning_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_spaning_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -588,11 +530,6 @@ object Bench {
             .head().getLong(0)
           require(landed == nDocs && dropped > 0,
             s"span ingest landed $landed of $nDocs docs, dropped $dropped tokens")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming vector-index ingest: the embeddings table fed as a
@@ -610,8 +547,7 @@ object Bench {
         val nVecs = e.count()
         val quant = Similarity.trainIvfPqQuantizer(
           e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_vecing_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_vecing_bench") { tmp =>
           e.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(e.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -625,11 +561,6 @@ object Bench {
             Similarity.collectVectors(e, Seq(0L, 1L, 2L)), nprobe = 2, k = 10).count()
           require(indexed == nVecs && hits > 0,
             s"vector ingest indexed $indexed of $nVecs vectors, $hits probe hits")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming lexical-index ingest: the documents table fed as a
@@ -644,8 +575,7 @@ object Bench {
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_lexing_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_lexing_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -658,11 +588,6 @@ object Bench {
             Seq("spark", "window", "customer", "filter"), 10).count()
           require(n == nDocs && hits > 0,
             s"lex ingest indexed $n of $nDocs docs, $hits ranked")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // the STREAMED SERVING tail end-to-end: docs and vectors file-
@@ -683,8 +608,7 @@ object Bench {
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         val quant = Similarity.trainIvfPqQuantizer(
           emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ragserve_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_ragserve_bench") { tmp =>
           docs.repartition(2).write.mode("overwrite").parquet(s"$tmp/din")
           emb.repartition(2).write.mode("overwrite").parquet(s"$tmp/vin")
           val dsrc = s2.readStream.schema(docs.schema)
@@ -712,11 +636,6 @@ object Bench {
             .count()
           require(prf == 10 && mmr == 5,
             s"stream_rag_serve: prf ranked $prf, mmr selected $mmr valid ids")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // persisted lexical (BM25) index lifecycle: write the term-clustered
@@ -727,17 +646,11 @@ object Bench {
         import org.apache.spark.sql.functions._
         val d = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_lex_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_lex_bench") { tmp =>
           graft.llm.TextAnalysis.writeLexIndex(d, tmp)
           val hits = graft.llm.TextAnalysis.bm25Probe(spark, tmp,
             Seq("spark", "window", "customer", "filter"), 10).count()
           require(hits > 0, "empty BM25 ranking over the persisted index")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // indexed HYBRID retrieval: both persisted stores built (term-
@@ -753,8 +666,7 @@ object Bench {
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         val quant = Similarity.trainIvfPqQuantizer(
           e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_hybrid_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_hybrid_bench") { tmp =>
           TextAnalysis.writeLexIndex(d, s"$tmp/lex")
           Similarity.writeIvfPqIndex(e, quant, s"$tmp/vec")
           val lex = TextAnalysis.bm25Probe(spark, s"$tmp/lex",
@@ -770,11 +682,6 @@ object Bench {
           val fused = Similarity.rrfFuse(lex, sem, 60, 5).count()
           require(nLex > 0 && nSem > 0 && fused > 0,
             s"hybrid arm died: lex=$nLex sem=$nSem fused=$fused")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // OPTIMIZE lifecycle over an ingest-built vector index: 8 appended
@@ -789,8 +696,7 @@ object Bench {
         val nVecs = e.count()
         val quant = Similarity.trainIvfPqQuantizer(
           e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cmp_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_cmp_bench") { tmp =>
           for (b <- 0 until 8)
             graft.streaming.VectorIndexIngest.ingestBatch(
               e.filter(col("vec_id") % 8 === b), s"$tmp/idx", quant, b.toLong)
@@ -803,11 +709,6 @@ object Bench {
             Similarity.collectVectors(e, Seq(0L, 1L, 2L)), nprobe = 2, k = 10).count()
           require(ws.coveredThrough == 7L && indexed == nVecs && hits > 0,
             s"compacted store holds $indexed of $nVecs vectors, $hits probe hits")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming count-min sketch: the documents table fed as a 4-batch
@@ -823,8 +724,7 @@ object Bench {
           .select(col("doc_id"), col("text"))
         val nToks = docs.select(explode(
           graft.llm.TextAnalysis.tokens(col("text"))).as("w")).count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cms_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_cms_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -835,11 +735,6 @@ object Bench {
           q.stop()
           require(sk.snapshot.totalCount() == nToks,
             s"streamed CMS saw ${sk.snapshot.totalCount()} tokens, corpus has $nToks")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming transition-matrix twin: the events table fed as a
@@ -854,8 +749,7 @@ object Bench {
           .select(col("user_id"), col("event_id"), col("event_type"), col("tus"))
         val batch = graft.analytics.Analytics.transitionMatrix(ev).collect()
           .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-        val tmp = java.nio.file.Files.createTempDirectory("graft_trans_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_trans_bench") { tmp =>
           ev.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           import s2.implicits._
           val src = s2.readStream.schema(ev.schema)
@@ -872,11 +766,6 @@ object Bench {
             .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
           require(streamed == batch,
             s"streamed transition matrix has ${streamed.size} cells, batch ${batch.size}")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming debounce: the events table fed as a 4-batch file
@@ -891,8 +780,7 @@ object Bench {
         val ev = graft.SparkEntry.events(spark, sfDir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("tus"))
         val nBatch = graft.analytics.Analytics.debounceEvents(ev, gap).count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_deb_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_deb_bench") { tmp =>
           // event-time-ordered 4-way split so triggers respect time
           ev.withColumn("part", ntile(4).over(
               org.apache.spark.sql.expressions.Window.orderBy(col("tus"), col("event_id"))))
@@ -929,11 +817,6 @@ object Bench {
           val kept = s2.sql("SELECT count(*) FROM deb_bench").head().getLong(0)
           require(kept == nBatch,
             s"streamed debounce kept $kept, batch kept $nBatch")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming as-of enrichment: the events table fed as a 4-batch
@@ -958,8 +841,7 @@ object Bench {
             Seq("user_id"), "tus", Seq("vtus"), tol)
           .agg(count(lit(1)), count(col("asof_vtus"))).head()
         val (nClicks, nMatched) = (batch.getLong(0), batch.getLong(1))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_asof_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_asof_bench") { tmp =>
           ev.withColumn("part", ntile(4).over(
               org.apache.spark.sql.expressions.Window.orderBy(col("tus"), col("event_id"))))
             .repartition(1).write.partitionBy("part")
@@ -991,11 +873,6 @@ object Bench {
           require(got.getLong(0) == nClicks && got.getLong(1) == nMatched,
             s"streamed as-of emitted ${got.getLong(0)}/${got.getLong(1)} " +
               s"vs batch $nClicks/$nMatched")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming SCD2 dimension maintenance: a 4-batch change stream
@@ -1012,8 +889,7 @@ object Bench {
             concat(col("c_mktsegment"), lit("_"), col("c_custkey") % 4).as("seg"),
             (col("c_custkey") % 4).as("part"))
         val nKeys = changes.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_scd_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_scd_bench") { tmp =>
           // one file per key quarter => exactly 4 micro-batches
           changes.repartition(1).write.partitionBy("part")
             .mode("overwrite").parquet(s"$tmp/in")
@@ -1029,11 +905,6 @@ object Bench {
           val open = hist.filter(col("is_current")).count()
           require(vs.length == 4 && open == nKeys,
             s"scd ingest committed ${vs.length} versions, $open/$nKeys open rows")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming point-in-time enrichment: the SCD read side live — a
@@ -1058,8 +929,7 @@ object Bench {
         val facts = c.select(col("key"), (col("key") % 12).as("t"),
           (col("key") % 4).as("part"))
         val nFacts = facts.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_enrich_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_enrich_bench") { tmp =>
           graft.ops.ManifestSink.publishAt(hist, s"$tmp/hist", 0L)
           facts.repartition(1).write.partitionBy("part")
             .mode("overwrite").parquet(s"$tmp/in")
@@ -1079,11 +949,6 @@ object Bench {
           val pre = out.filter(col("asof_seg").isNull).count()
           require(n == nFacts && v1 > 0 && v2 > 0 && pre > 0,
             s"enrich covered $n/$nFacts facts (v1=$v1, v2=$v2, pre=$pre)")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming per-source token-budget gate: the documents table fed
@@ -1098,8 +963,7 @@ object Bench {
         s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("source"), col("text"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_budget_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_budget_bench") { tmp =>
           docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           val src = s2.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
@@ -1118,11 +982,6 @@ object Bench {
             "FROM budget_bench WHERE kept GROUP BY source").collect()
           require(kept.nonEmpty && kept.forall(_.getLong(2) <= budget),
             s"budget gate: ${kept.length} sources, max cum ${kept.map(_.getLong(2)).maxOption}")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming drift monitor: TV + KS emitted per trigger from ONE
@@ -1143,8 +1002,7 @@ object Bench {
         val ref = Array.fill(nbins)(0L)
         binned.groupBy(col("bin")).count().collect()
           .foreach(r => ref(r.getInt(0)) = r.getLong(1))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_drift_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_drift_bench") { tmp =>
           binned.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           import s2.implicits._
           val src = s2.readStream.schema(binned.schema)
@@ -1160,11 +1018,6 @@ object Bench {
             r.getDouble(0) >= 0.0 && r.getDouble(0) <= 1.0 &&
               r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0),
             s"drift monitor emitted ${rows.length} rows with out-of-range stats")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming K-Means step: the engine core live — per-cell gridded
@@ -1185,8 +1038,7 @@ object Bench {
         val assigned = e.select(
           graft.llm.VectorKMeans.cellOf(col("vec"), cents).as("cell"), col("vec"))
         val nVecs = assigned.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_vkstream_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_vkstream_bench") { tmp =>
           assigned.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           import s2.implicits._
           val src = s2.readStream.schema(assigned.schema)
@@ -1202,11 +1054,6 @@ object Bench {
             .collect().map(_.getLong(1)).sum
           require(covered == nVecs,
             s"streamed step covered $covered of $nVecs vectors")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming per-label embedding drift: int8 code sums per label in
@@ -1226,8 +1073,7 @@ object Bench {
           .groupBy(col("pos")).agg(sum(col("code")).as("s"))
           .orderBy(col("pos")).collect().map(_.getLong(1)).toSeq
         val nLabels = coded.select(col("label")).distinct().count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ldrift_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_ldrift_bench") { tmp =>
           coded.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           import s2.implicits._
           val src = s2.readStream.schema(coded.schema)
@@ -1244,11 +1090,6 @@ object Bench {
           require(rows.length == nLabels && cos.nonEmpty &&
             cos.forall(c => c >= -1.0 && c <= 1.0),
             s"label drift covered ${rows.length}/$nLabels labels")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }),
       // streaming retention-matrix deltas (flatMapGroupsWithState with
@@ -1264,8 +1105,7 @@ object Bench {
         s2.conf.set("spark.sql.shuffle.partitions", "8")
         val ev = SparkEntry.events(spark, sfDir)
           .select(col("user_id"), expr("tus div 3600000000").as("hour"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_retention_bench").toString
-        try {
+        SparkEntry.withTempRoot(spark, "graft_retention_bench") { tmp =>
           ev.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
           import s2.implicits._
           val src = s2.readStream.schema(ev.schema)
@@ -1288,11 +1128,6 @@ object Bench {
           q.stop()
           require(cells.valuesIterator.exists(_ > 0L),
             "no positive retention cells from the stream")
-        } finally {
-          try {
-            val p = new org.apache.hadoop.fs.Path(tmp)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          } catch { case _: Throwable => () }
         }
       }))
 

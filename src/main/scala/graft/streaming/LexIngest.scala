@@ -276,13 +276,15 @@ object LexIngest {
     require(fbDocs >= 1 && fbTerms >= 1,
       s"need fbDocs, fbTerms >= 1, got $fbDocs, $fbTerms")
     val fb = probe(spark, indexPath, seedTerms, fbDocs, k1, b)
-      .select(col("doc_id"))
     val live = StoreCompaction.liveView(spark, s"$indexPath/postings", "doc_id")
-    // the feedback docs' postings ARE the (term, tf) vote
-    val ftf = live.join(broadcast(fb), Seq("doc_id"))
-      .filter(!col("term").isin(seedTerms: _*))
-      .groupBy(col("term")).agg(sum(col("tf")).as("ftf"))
-      .collect().map(r => (r.getString(0), r.getLong(1)))
+    // the feedback docs' postings ARE the (term, tf) vote; the eager
+    // feedback probe is spent once the vote is collected
+    val ftf =
+      try live.join(broadcast(fb.select(col("doc_id"))), Seq("doc_id"))
+        .filter(!col("term").isin(seedTerms: _*))
+        .groupBy(col("term")).agg(sum(col("tf")).as("ftf"))
+        .collect().map(r => (r.getString(0), r.getLong(1)))
+      finally { fb.unpersist(false); () }
     if (ftf.isEmpty) return probe(spark, indexPath, seedTerms, k, k1, b)
     // candidate df: one pushed-down slice, one row per (term, doc)
     val dfs = live.filter(col("term").isin(ftf.map(_._1): _*))

@@ -34,11 +34,8 @@ import graft.llm.Dedup
   */
 object ScalingAudit {
 
-  // Contract parameters, mirrored from SparkEntry's contract queries.
-  private val JacDfCap = 1000L
-  private val SubstrN = 12
-  private val SubstrDfCap = 16L
-  private val TcosDfCap = 64L
+  // the contract queries' own parameters
+  import graft.SparkEntry.{JacDfCap, SubstrDfCap, SubstrN, TcosDfCap}
 
   /** Temp-store registry + JVM shutdown-hook backstop: the fingerprint
     * section's hard `require`s (snapshot-moved, membership) and the

@@ -25,23 +25,20 @@ class DocCountsSpec extends AnyFunSuite with Matchers {
     }
   }
 
-  test("every contract key appears exactly twice in the SparkEntry source (query + oracle)") {
+  test("the registry builder rejects a contract name declared twice") {
     // Map literals collapse duplicate keys SILENTLY (last entry wins):
     // round 10 nearly shipped a new "q_funnel" that shadowed the
     // existing event-funnel query — both maps stayed consistent, the
     // gate stayed green, and a contract query vanished without any
-    // signal. A key's source count != 2 (one queries entry + one
-    // oracleSql entry) is that bug.
-    val src = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val counts = "\"([A-Za-z0-9_]+)\" ->".r.findAllMatchIn(src)
-      .map(_.group(1)).toList.groupBy(identity).view.mapValues(_.size).toMap
-    for (k <- SparkEntry.queries.keySet)
-      withClue(s"$k occurs ${counts.getOrElse(k, 0)}x in SparkEntry.scala: ") {
-        counts.getOrElse(k, 0) shouldBe 2
-      }
+    // signal. The one declaration list refuses the duplicate instead.
+    def decl(name: String) =
+      SparkEntry.line(name)((s, _) => s.emptyDataFrame, oracle = "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.declare(decl("q_a"), decl("q_b"), decl("q_a"))
+    }
+    e.getMessage should include("q_a")
+    (e.getMessage should not).include("q_b")
+    SparkEntry.queries.size shouldBe SparkEntry.lines.size
   }
 
   test("every contract query has an oracle mirror (or is documented in COVERAGE.md)") {

@@ -10,9 +10,12 @@ class PlanSpec extends SparkSpec {
 
   import org.apache.spark.sql.execution.ExplainMode
 
+  // the plan of the frame a line computes — for a store line, taken
+  // while its temp root exists, before the scope collects the rows
   private def plan(name: String, mode: String = "formatted"): String =
-    SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-      .queryExecution.explainString(ExplainMode.fromString(mode))
+    SparkEntry.lines.find(_.name == name).get
+      .withFrame(spark, sf0001)(
+        _.queryExecution.explainString(ExplainMode.fromString(mode)))
 
   test("p3_assign: null filters pushed to scan, schema pruned to 5 columns") {
     val p = plan("p3_assign")

@@ -8,6 +8,8 @@ import org.scalatest.matchers.should.Matchers
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val ref: String = "/root/reference"
+  /** The smallest contract scale factor's tables. */
+  lazy val sf0001: String = "/root/testdata/sf0.001"
 }
 
 object SparkSpec {

@@ -6,42 +6,31 @@ import org.scalatest.matchers.should.Matchers
 /** Pins Bench.WarmExempt — the contract rows skipped by the untimed
   * sf0.001 warm-suite pass — to the structural criterion it claims:
   * EXACTLY the store-lifecycle queries (bodies that build temp-dir
-  * stores via createTempDirectory before probing). Two failure modes
-  * this catches: a renamed/removed query leaves a stale exempt name
-  * (the skip silently stops applying), and a new lifecycle query is
-  * added without the exemption (the warm pass re-inflates toward the
-  * r18 driver-timeout regime, BENCH_r18 rc=124). */
+  * stores before probing). The set is derived from the lines declared
+  * through `SparkEntry.store`; what keeps it exact is that a temp
+  * directory can only be made by that scope. Two failure modes this
+  * catches: a stale exempt name (the skip silently stops applying),
+  * and a lifecycle query built outside the scope, so never exempt (the
+  * warm pass re-inflates toward the r18 driver-timeout regime,
+  * BENCH_r18 rc=124). */
 class WarmExemptSpec extends AnyFunSuite with Matchers {
 
-  private lazy val lifecycleQueries: Set[String] = {
-    val src = new String(
-      java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    // queries-map bodies only: segment the source at each key's FIRST
-    // occurrence (the queries entry; the second is its oracle mirror)
-    // and stop at the oracleSql map so the last segment can't swallow it
-    val end = src.indexOf("def oracleSql") match { case -1 => src.length; case i => i }
-    val firsts = "\"([A-Za-z0-9_]+)\" ->".r.findAllMatchIn(src)
-      .map(m => (m.group(1), m.start)).toList
-      .groupBy(_._1).map { case (k, v) => (k, v.map(_._2).min) }
-      .filter(_._2 < end).toSeq.sortBy(_._2)
-    firsts.zipWithIndex.collect { case ((name, pos), i)
-        if src.substring(pos, if (i + 1 < firsts.length) firsts(i + 1)._2 else end)
-          .contains("createTempDirectory") => name
-    }.toSet
-  }
+  private def source(f: String): String = new String(
+    java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"src/main/scala/graft/$f")),
+    java.nio.charset.StandardCharsets.UTF_8)
 
   test("every WarmExempt name is a live registry key") {
     (Bench.WarmExempt -- SparkEntry.queries.keySet) shouldBe empty
   }
 
   test("WarmExempt is exactly the temp-store lifecycle queries") {
-    withClue("exempt but not lifecycle (stale/over-broad skip): ") {
-      (Bench.WarmExempt -- lifecycleQueries) shouldBe empty
-    }
-    withClue("lifecycle but not exempt (warm pass re-inflating): ") {
-      (lifecycleQueries -- Bench.WarmExempt) shouldBe empty
-    }
+    def count(what: String, f: String) = what.r.findAllIn(source(f)).length
+    // the one temp-directory creation is SparkEntry.withTempRoot ...
+    count("createTempDirectory", "SparkEntry.scala") shouldBe 1
+    count("createTempDirectory", "Bench.scala") shouldBe 0
+    // ... and inside SparkEntry only the store scope calls it
+    count("withTempRoot\\b", "SparkEntry.scala") shouldBe 2
+    Bench.WarmExempt shouldBe SparkEntry.lines.filter(_.store).map(_.name).toSet
   }
 }
