@@ -78,12 +78,18 @@ object Bench {
     // clearCache drops them) and ConnectedComponents localCheckpoints
     // (RDD-level blocks, NOT in the CacheManager) — scrub both and report
     // what was found, so no sample ever reads a predecessor's blocks and
-    // min-of-samples provably measures the same work each time.
+    // min-of-samples provably measures the same work each time. The
+    // CacheManager entries are counted BEFORE the clear: clearCache
+    // unpersists their RDDs, so counting RDDs alone after it never sees
+    // a leaked Dataset.persist. (`numCachedEntries` is private[sql] to
+    // Scala but a public JVM method, hence the reflective call.)
     def scrubCaches(): Int = {
+      val cm = spark.sharedState.cacheManager
+      val frames = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
       spark.catalog.clearCache()
       val leftovers = spark.sparkContext.getPersistentRDDs
       leftovers.valuesIterator.foreach(_.unpersist(blocking = false))
-      leftovers.size
+      frames + leftovers.size
     }
 
     def time(thunk: () => Unit): (Double, Double, Double, Option[String]) = {
@@ -1156,7 +1162,7 @@ object Bench {
       val n = scrubCaches()
       if (n > 0) {
         cacheLeaks(name) = cacheLeaks.getOrElse(name, 0) + n
-        System.err.println(s"[bench] scrubbed $n persisted RDD(s) left by $name")
+        System.err.println(s"[bench] scrubbed $n cached frame(s)/persisted RDD(s) left by $name")
       }
       System.gc()
       val rt = Runtime.getRuntime

@@ -165,8 +165,8 @@ object SparkEntry {
   private val GopherMaxAvgLen = 10.0
   private val GopherMinStop = 2
   private val GopherMinAlphaFrac = 0.8
-  private[graft] val SubstrN = 12
-  private[graft] val SubstrDfCap = 16L
+  private val SubstrN = 12
+  private val SubstrDfCap = 16L
   private val SemDedupThreshold = 0.4
   private val SourceMaxDupFrac = 0.15
   /** Full-outer customer-side floor (makes both null regions non-empty),
@@ -203,7 +203,7 @@ object SparkEntry {
     * (64 keeps every bigram at the sf0.01 gate — max df there is 46 —
     * while pruning the dense tail at bench scale). */
   private val TcosThreshold = 0.5
-  private[graft] val TcosDfCap = 64L
+  private val TcosDfCap = 64L
   /** Contrastive mining: the hard-negative band's lower cosine bound
     * (pairs above it that are NOT near-dups are the hard negatives). */
   private val CtrNegThreshold = 0.2

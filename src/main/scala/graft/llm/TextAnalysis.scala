@@ -1468,30 +1468,17 @@ object TextAnalysis {
     * emit n_bigrams = 0 with NULL score via the final left join.
     * Output: (doc_id, n_bigrams, avg_logprob).
     *
-    * Persist decision, measured (ScalingAudit `bigram`, interleaved 3
-    * rounds at sf0.1, min-of-samples wall): bg persisted 2.06 s vs
+    * Persist decision, measured (SCALING.md §8: interleaved 3 rounds
+    * at sf0.1, min-of-samples wall): bg persisted 2.06 s vs
     * recomputed-by-both-consumers 2.24 s vs pre-aggregated (doc_id,
     * prev, cur) counts before the vocab joins 2.46 s — the cache keeps
     * its small edge (the tokens-sized write is cheaper than a second
     * explode pass), and pre-agg LOSES on this corpus: documents repeat
     * few bigrams internally, so the extra aggregate outweighs the join
-    * rows it saves (its output is round-4 grid-identical, so it stays
-    * available as `bigramLogProbImpl(preAgg = true)` for corpora where
-    * intra-doc repetition is heavy — adopting it would also be a
-    * contract change to the oracle's sum shape). */
-  def bigramLogProb(docs: DataFrame, lambda: Double): DataFrame =
-    bigramLogProbImpl(docs, lambda, persistBg = true, preAgg = false)
-
-  /** Measurement twin of [[bigramLogProb]] (ScalingAudit `bigram`
-    * mode): `persistBg` toggles the bigram-table cache (two consumers:
-    * the bigram-count aggregate and the scoring join); `preAgg`
-    * collapses the scoring rows to (doc_id, prev, cur, k) counts
-    * BEFORE the vocab joins and sums k·ln p — fewer join rows when
-    * documents repeat bigrams internally, but a DIFFERENT float-sum
-    * shape (k·lp in one multiply vs lp added k times), so adopting it
-    * would be a contract change, not a free swap. */
-  private[graft] def bigramLogProbImpl(docs: DataFrame, lambda: Double,
-                                       persistBg: Boolean, preAgg: Boolean): DataFrame = {
+    * rows it saves (adopting it would also be a contract change: k·lp
+    * in one multiply is a different float-sum shape from lp added k
+    * times). */
+  def bigramLogProb(docs: DataFrame, lambda: Double): DataFrame = {
     require(lambda > 0 && lambda < 1, s"need 0 < lambda < 1, got $lambda")
     val spread = docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
@@ -1505,30 +1492,21 @@ object TextAnalysis {
     // slices, without materializing the token array plus two sliced
     // copies plus the zipped structs per row — WordNGramStructsSpec
     // pins equality with the arrays_zip form
-    val bg0 = spread
+    val bg = spread
       .select(col("doc_id"),
         explode(graft.functions.WordNGramStructs(col("text"), 2)).as("b"))
       .select(col("doc_id"), col("b.w1").as("prev"), col("b.w2").as("cur"))
-    val bg =
-      if (persistBg) bg0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else bg0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bc = bg.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("cb"))
     val lp = log(
       lit(lambda) * (col("cb").cast("double") / col("cup").cast("double")) +
         lit(1.0 - lambda) * (col("cuc").cast("double") / lit(total.toDouble)))
-    def joined(base: DataFrame): DataFrame = base
+    val scored = bg
       .join(bc, Seq("prev", "cur"))
       .join(uni.select(col("w").as("prev"), col("cu").as("cup")), Seq("prev"))
       .join(uni.select(col("w").as("cur"), col("cu").as("cuc")), Seq("cur"))
-    val scored = (if (preAgg)
-      joined(bg.groupBy(col("doc_id"), col("prev"), col("cur")).agg(count(lit(1)).as("k")))
-        .groupBy(col("doc_id"))
-        .agg(sum(col("k")).as("n_bigrams"),
-          sum(col("k").cast("double") * lp).as("lp"))
-    else
-      joined(bg)
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"), sum(lp).as("lp")))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bigrams"), sum(lp).as("lp"))
       .select(col("doc_id"), col("n_bigrams"),
         round(col("lp") / col("n_bigrams"), 4).as("avg_logprob"))
     val out = docs.select(col("doc_id"))
@@ -1539,7 +1517,7 @@ object TextAnalysis {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     out.count()
     toks.unpersist(false)
-    if (persistBg) { bg.unpersist(false); () }
+    bg.unpersist(false)
     out
   }
 
@@ -1563,7 +1541,7 @@ object TextAnalysis {
     * Shape: model-side token/bigram/trigram aggregates (vocab-sized,
     * broadcast when small — the bigramLogProb caveat applies), the doc
     * trigram stream built by one native positional-struct explode
-    * ([[graft.functions.WordNGramStructs]]), five LEFT equi-joins whose
+    * ([[graft.functions.WordNGramStructs]]), LEFT equi-joins whose
     * null pattern IS the backoff ladder (a model trigram implies its
     * prefix bigram, a model bigram implies its unigrams — so each
     * branch's denominator is non-null by construction), one per-doc
@@ -1571,27 +1549,21 @@ object TextAnalysis {
     * identical literals and nesting (θ·(θ·x), never (θ·θ)·x) in both
     * engines, ln inside the branch; round-4 absorbs per-doc sum order
     * (the bigramLogProb argument). Output: (doc_id, n_trigrams,
-    * avg_logprob). */
+    * avg_logprob).
+    *
+    * Join shape: each backoff branch's value is pre-divided on the
+    * VOCAB-side table — S1 = ct/cb12 per distinct model trigram,
+    * S2 = θ·cb/cu per model bigram, S3 = θ²·cu/N per unigram — so the
+    * doc trigram stream takes THREE left joins instead of the oracle's
+    * five and the divisions run once per distinct n-gram instead of
+    * once per occurrence. Bit-identical by construction: each branch
+    * divides the SAME integer pair with the same nesting, so the
+    * per-row double (and its ln) is the same IEEE value the five-join
+    * oracle (`TextSql.trigramBackoffSql`) computes. Measured (SCALING.md §9: 3 interleaved rounds at
+    * sf0.1, min-of-samples): rate tables 19.7 CPU-s vs the direct
+    * five-join form 23.9 CPU-s, outputs bitwise identical every round. */
   def trigramBackoffScore(docs: DataFrame, model: DataFrame,
-                          theta: Double = 0.4): DataFrame =
-    trigramBackoffScoreImpl(docs, model, theta, rateTables = true)
-
-  /** Measurement twin (ScalingAudit `trigram` mode): `rateTables`
-    * pre-divides each backoff branch's value on the VOCAB-side table —
-    * S1 = ct/cb12 per distinct model trigram, S2 = θ·cb/cu per model
-    * bigram, S3 = θ²·cu/N per unigram — so the doc trigram stream
-    * takes THREE left joins instead of five and the divisions run once
-    * per distinct n-gram instead of once per occurrence. Bit-identical
-    * by construction: each branch divides the SAME integer pair with
-    * the same nesting, so the per-row double (and its ln) is the same
-    * IEEE value either way — the oracle doesn't change. false = the
-    * direct five-join form, kept for the interleaved A/B. Measured
-    * (ScalingAudit `trigram`, 3 interleaved rounds at sf0.1,
-    * min-of-samples): rate-tables 19.7 CPU-s vs direct 23.9 CPU-s
-    * (wall noise-level on this box), outputs bitwise identical every
-    * round — rate-tables is the shipped default. */
-  private[graft] def trigramBackoffScoreImpl(docs: DataFrame, model: DataFrame,
-                                             theta: Double, rateTables: Boolean): DataFrame = {
+                          theta: Double = 0.4): DataFrame = {
     require(theta > 0 && theta < 1, s"need 0 < theta < 1, got $theta")
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val mSpread = model.repartition(parts)
@@ -1616,50 +1588,29 @@ object TextAnalysis {
       docs.repartition(parts), Seq(col("doc_id")), 3)
     // OOV floor: same literals and nesting as every branch's SQL mirror
     val defaultLp = log(lit(theta) * (lit(theta) * (lit(1.0) / lit(total.toDouble))))
-    val joined =
-      if (rateTables) {
-        // vocab-side rate tables: one double per distinct n-gram; a
-        // model trigram always finds its prefix bigram (same corpus),
-        // so the inner join on (w1, w2) loses nothing
-        val s1 = mTg
-          .join(mBg.select(col("w1"), col("w2"), col("cb")), Seq("w1", "w2"))
-          .select(col("w1"), col("w2"), col("w3"),
-            (col("ct").cast("double") / col("cb").cast("double")).as("s1"))
-        val s2 = mBg
-          .join(uni.select(col("w").as("w1"), col("cu")), Seq("w1"))
-          .select(col("w1").as("w2"), col("w2").as("w3"),
-            (lit(theta) * (col("cb").cast("double") / col("cu").cast("double"))).as("s2"))
-        val s3 = uni.select(col("w").as("w3"),
-          (lit(theta) * (lit(theta) * (col("cu").cast("double") / lit(total.toDouble))))
-            .as("s3"))
-        dTg
-          .join(s1, Seq("w1", "w2", "w3"), "left")
-          .join(s2, Seq("w2", "w3"), "left")
-          .join(s3, Seq("w3"), "left")
-          .withColumn("lp",
-            when(col("s1").isNotNull, log(col("s1")))
-              .when(col("s2").isNotNull, log(col("s2")))
-              .when(col("s3").isNotNull, log(col("s3")))
-              .otherwise(defaultLp))
-      } else {
-        dTg
-          .join(mTg, Seq("w1", "w2", "w3"), "left")
-          .join(mBg.select(col("w1"), col("w2"), col("cb").as("cb12")),
-            Seq("w1", "w2"), "left")
-          .join(mBg.select(col("w1").as("w2"), col("w2").as("w3"), col("cb").as("cb23")),
-            Seq("w2", "w3"), "left")
-          .join(uni.select(col("w").as("w2"), col("cu").as("cu2")), Seq("w2"), "left")
-          .join(uni.select(col("w").as("w3"), col("cu").as("cu3")), Seq("w3"), "left")
-          .withColumn("lp",
-            when(col("ct").isNotNull,
-              log(col("ct").cast("double") / col("cb12").cast("double")))
-              .when(col("cb23").isNotNull,
-                log(lit(theta) * (col("cb23").cast("double") / col("cu2").cast("double"))))
-              .when(col("cu3").isNotNull,
-                log(lit(theta) * (lit(theta) * (col("cu3").cast("double") / lit(total.toDouble)))))
-              .otherwise(defaultLp))
-      }
-    val scored = joined
+    // vocab-side rate tables: one double per distinct n-gram; a model
+    // trigram always finds its prefix bigram (same corpus), so the
+    // inner join on (w1, w2) loses nothing
+    val s1 = mTg
+      .join(mBg.select(col("w1"), col("w2"), col("cb")), Seq("w1", "w2"))
+      .select(col("w1"), col("w2"), col("w3"),
+        (col("ct").cast("double") / col("cb").cast("double")).as("s1"))
+    val s2 = mBg
+      .join(uni.select(col("w").as("w1"), col("cu")), Seq("w1"))
+      .select(col("w1").as("w2"), col("w2").as("w3"),
+        (lit(theta) * (col("cb").cast("double") / col("cu").cast("double"))).as("s2"))
+    val s3 = uni.select(col("w").as("w3"),
+      (lit(theta) * (lit(theta) * (col("cu").cast("double") / lit(total.toDouble))))
+        .as("s3"))
+    val scored = dTg
+      .join(s1, Seq("w1", "w2", "w3"), "left")
+      .join(s2, Seq("w2", "w3"), "left")
+      .join(s3, Seq("w3"), "left")
+      .withColumn("lp",
+        when(col("s1").isNotNull, log(col("s1")))
+          .when(col("s2").isNotNull, log(col("s2")))
+          .when(col("s3").isNotNull, log(col("s3")))
+          .otherwise(defaultLp))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("lp"))
       .select(col("doc_id"), col("n_trigrams"),
@@ -1709,10 +1660,9 @@ object TextAnalysis {
     // corpus-universal shingle becomes one unsplittable window
     // partition. Local CPU measured a wash (the explode dominates); the
     // rewrite is kept for the removed full-stream exchange on the
-    // non-broadcast (large-corpus) regime, and ScalingAudit's
-    // `noveltyab` mode measures the hot-shingle straggler shape (decade
-    // corpus with a corpus-universal boilerplate shingle) before the
-    // scale claim is relied on.
+    // non-broadcast (large-corpus) regime. The hot-shingle straggler
+    // shape (decade corpus with a corpus-universal boilerplate shingle)
+    // was measured: the window still wins there (SCALING.md §6).
     val per = docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
       .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("s"))

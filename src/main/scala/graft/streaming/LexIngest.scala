@@ -420,14 +420,7 @@ object LexIngest {
   def vacuum(spark: SparkSession, indexPath: String): Int = {
     val n = StoreCompaction.vacuum(spark, s"$indexPath/postings") +
       StoreCompaction.vacuum(spark, s"$indexPath/stats")
-    StoreCompaction.watershed(spark, s"$indexPath/stats") match {
-      case None => n
-      case Some(StoreCompaction.Watershed(g, w)) =>
-        val fs = StoreCompaction.fsOf(spark, s"$indexPath/stats_agg")
-        val dead = StoreCompaction.batchDirs(spark, s"$indexPath/stats_agg")
-          .filter { case (_, v) => (v >= 0L && v <= w) || (v < 0L && v != -g) }
-        dead.foreach { case (p, _) => fs.delete(p, true) }
-        n + dead.size
-    }
+    n + StoreCompaction.watershed(spark, s"$indexPath/stats").fold(0)(ws =>
+      StoreCompaction.dropSuperseded(spark, s"$indexPath/stats_agg", ws).size)
   }
 }

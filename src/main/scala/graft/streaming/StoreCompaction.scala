@@ -513,14 +513,11 @@ object StoreCompaction {
   def vacuum(spark: SparkSession, path: String): Int =
     watershed(spark, path) match {
       case None => 0
-      case Some(Watershed(g, w)) =>
+      case Some(ws) =>
         val fs = fsOf(spark, path)
-        val dead = batchDirs(spark, path).filter { case (_, v) =>
-          (v >= 0L && v <= w) || (v < 0L && v != -g)
-        }
-        dead.foreach { case (p, _) => fs.delete(p, true) }
+        val dead = dropSuperseded(spark, path, ws)
         // a (cluster, ingest_batch) store may leave emptied cluster dirs
-        dead.map(_._1.getParent).distinct
+        dead.map(_.getParent).distinct
           .filter(p => p != null && p.getName.contains("=") &&
             Option(fs.listStatus(p)).forall(_.isEmpty))
           .foreach(fs.delete(_, true))
@@ -530,4 +527,19 @@ object StoreCompaction {
           .foreach(_.foreach(s => fs.delete(s.getPath, false)))
         dead.size
     }
+
+  /** Deletes the `ingest_batch` partitions watershed `ws` superseded —
+    * real batches ≤ its coveredThrough and generations other than its
+    * own — and returns them. The dead-batch rule shared by [[vacuum]]
+    * and `LexIngest.vacuum`'s `stats_agg` sweep. */
+  private[streaming] def dropSuperseded(spark: SparkSession, path: String,
+                                        ws: Watershed): Seq[Path] = {
+    val fs = fsOf(spark, path)
+    val dead = batchDirs(spark, path).collect {
+      case (p, v) if (v >= 0L && v <= ws.coveredThrough) ||
+        (v < 0L && v != -ws.generation) => p
+    }
+    dead.foreach(fs.delete(_, true))
+    dead
+  }
 }

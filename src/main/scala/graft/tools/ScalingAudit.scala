@@ -5,37 +5,36 @@ import org.apache.spark.sql.functions._
 
 import graft.llm.Dedup
 
-/** Durable repro for SCALING.md's deterministic candidate-count
-  * evidence (§2a, §3). Candidate volume — the number of pair rows a
-  * generator's join emits before any verification — is what decides
-  * whether a dedup operator survives 100 TB, and unlike CPU timings it
-  * is an exact row count: immune to the host-throttling noise this
-  * box's measurement notes document. The counts are computed with the
+/** The per-round scale tripwire: `scalejson` synthesizes the second
+  * decade (10 deterministic near-copies of sf0.1, SCALING.md §3) and
+  * writes one JSON line of exact counts, the `SCALE_r{N}.json`
+  * artifact. Candidate volume — the number of pair rows a generator's
+  * join emits before any verification — is what decides whether a
+  * dedup operator survives 100 TB, and unlike CPU timings it is an
+  * exact row count: immune to the host-throttling noise the
+  * measurement notes document. The counts are computed with the
   * operators' OWN building blocks (`Dedup.shingles`/`signatures`/
   * `simhash`/`simhashWide` and the contract caps from SparkEntry), so
   * a refactor of the banding layout shows up here as a changed number.
   *
-  * Modes:
-  *   candidates <sfDir> [<sfDir>...]   — SCALING.md §2a table per SF
-  *   sf1ish <sf0.1Dir>                 — §3: synthesize the 50k-doc
-  *     corpus (10 deterministic near-copies of sf0.1's 5000 docs) and
-  *     print candidate volumes + found-pair counts for the paths that
-  *     survive that decade
-  *   annprobe <sfDir>                  — §5: IVF probed-fraction /
-  *     recall / crossover probe on a 10x synthetic embedding corpus
+  * Run: spark-submit --driver-memory 8g --class graft.tools.ScalingAudit \
+  *        <jar> scalejson <sf0.1Dir> SCALE_r{N}.json
   *
-  * Run: spark-submit --class graft.tools.ScalingAudit <jar> candidates \
-  *        /root/testdata/sf0.01 /root/testdata/sf0.1
-  *
-  * `scalejson` needs `--driver-memory 8g`: spark-submit's default 1 GB
-  * driver heap (the builder's spark.driver.memory is too late to grow
-  * a local-mode JVM) OOMs in the round-18 decade-chunk ingest — 32
+  * `--driver-memory 8g` is needed: spark-submit's default 1 GB driver
+  * heap (a spark.driver.memory set in the session config is too late to
+  * grow a local-mode JVM) OOMs in the round-18 decade-chunk ingest — 32
   * concurrent hash-aggregate tasks over the ~10x chunk postings.
+  *
+  * The one-off measurement modes that answered a question once
+  * (`candidates`, `sf1ish`, `hotsource`, `annprobe`, `bigram`,
+  * `trigram`, `compactab`, `probeab`, `quantab`, `noveltyab`) are
+  * retired; SCALING.md keeps each answer and names the commit that
+  * still has its mode.
   */
 object ScalingAudit {
 
-  // the contract queries' own parameters
-  import graft.SparkEntry.{JacDfCap, SubstrDfCap, SubstrN, TcosDfCap}
+  // the contract queries' own parameter
+  import graft.SparkEntry.JacDfCap
 
   /** Temp-store registry + JVM shutdown-hook backstop: the fingerprint
     * section's hard `require`s (snapshot-moved, membership) and the
@@ -81,25 +80,6 @@ object ScalingAudit {
       .groupBy(col("h")).agg(count(lit(1)).as("g"))
       .filter(col("g") <= cap))
 
-  /** Word n-gram occurrence rows with 2 <= df <= cap (substringPairs'
-    * keep set), paired per gram. */
-  private def substringCandidates(docs: DataFrame, n: Int, cap: Long): Long =
-    pairsOf(docs
-      .select(col("doc_id"), explode(Dedup.ngramShingles(col("text"), n)).as("gram"))
-      .groupBy(col("gram")).agg(count(lit(1)).as("g"))
-      .filter(col("g") >= 2 && col("g") <= cap))
-
-  /** tfidfCosinePairs' pair terms: distinct (doc, bigram) rows whose
-    * term df is in [2, cap]. */
-  private def tfidfCandidates(docs: DataFrame, cap: Long): Long =
-    pairsOf(docs
-      .select(col("doc_id"),
-        explode(coalesce(graft.functions.WordNGrams(col("text"), 2, distinct = false),
-          array().cast("array<string>"))).as("tm"))
-      .groupBy(col("doc_id"), col("tm")).agg(count(lit(1)).as("tf"))
-      .groupBy(col("tm")).agg(count(lit(1)).as("g"))
-      .filter(col("g") >= 2 && col("g") <= cap)
-      .select(col("g")))
 
   /** LSH band-bucket collision rows: Σ over (band, key) buckets of
     * C(g, 2) — the join volume behind minhashPairs' candidates. */
@@ -144,38 +124,15 @@ object ScalingAudit {
     row.getLong(0) - row.getLong(1)
   }
 
-  private def candidateTable(spark: SparkSession, dir: String): Unit = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-      .persist()
-    val n = docs.count()
-    println(s"== $dir ($n docs) ==")
-    println(f"jaccard exact (df cap $JacDfCap):        ${jaccardCandidates(docs, JacDfCap)}%,d")
-    println(f"substring n=$SubstrN (df cap $SubstrDfCap):       ${substringCandidates(docs, SubstrN, SubstrDfCap)}%,d")
-    println(f"tfidf cosine (df cap $TcosDfCap):          ${tfidfCandidates(docs, TcosDfCap)}%,d")
-    println(f"minhash LSH (4x4 bands):          ${minhashCandidates(docs)}%,d")
-    println(f"simhash 20-bit (4x5-bit chunks):  ${simhashCandidates(Dedup.simhash(docs), 4, 5)}%,d")
-    println(f"simhash wide 60-bit (4x15-bit):   ${simhashCandidates(Dedup.simhashWide(docs), 4, 15)}%,d")
-    println(f"dup 10-token chunk occurrences:   ${dupChunks(docs, 10)}%,d")
-    println(f"winnow k=3 w=4 (df cap 64):       ${winnowCandidates(docs, 64L)}%,d")
-    docs.unpersist()
-  }
-
   /** §3 synthetic second decade: 10 copies of the given corpus, copy
     * r > 0 perturbed at every token position p with
     * (p + doc_id + r) mod 17 == 0 (replaced by a copy-specific token —
     * no RNG), giving each doc ~9 true near-dups at bigram-Jaccard
     * ≈ 0.75. Copy r's doc ids shift by r * 1_000_000 so ids stay
     * unique and packable. */
-  def synthesize10x(docs: DataFrame): DataFrame = synthesizeNx(docs, 10)
-
-  /** General form of [[synthesize10x]] — `n` deterministic perturbed
-    * copies (the hotsource probe uses larger factors to locate the
-    * trim crossover). */
-  def synthesizeNx(docs: DataFrame, n: Int): DataFrame = {
+  def synthesize10x(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    val copies = spark.range(0, n).select(col("id").cast("int").as("r"))
+    val copies = spark.range(0, 10).select(col("id").cast("int").as("r"))
     docs.crossJoin(broadcast(copies))
       .select(
         (col("doc_id") + col("r") * lit(1000000L)).as("doc_id"),
@@ -187,80 +144,6 @@ object ScalingAudit {
               (tok, p) => when((p + col("doc_id") + col("r")) % 17 === 0,
                 concat(lit("zq"), col("r").cast("string"), lit("x"), p.cast("string")))
                 .otherwise(tok)))).as("text"))
-  }
-
-  private def sf1ish(spark: SparkSession, dir: String): Unit = {
-    val base = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val big = synthesize10x(base).persist()
-    val n = big.count()
-    println(s"== sf1ish: $n docs synthesized from $dir ==")
-    println(f"jaccard exact UNCAPPED:           ${jaccardCandidates(big, Long.MaxValue)}%,d")
-    println(f"jaccard exact (df cap $JacDfCap):        ${jaccardCandidates(big, JacDfCap)}%,d")
-    println(f"minhash LSH (4x4 bands):          ${minhashCandidates(big)}%,d")
-    println(f"simhash 20-bit (4x5-bit chunks):  ${simhashCandidates(Dedup.simhash(big), 4, 5)}%,d")
-    println(f"simhash wide 60-bit (4x15-bit):   ${simhashCandidates(Dedup.simhashWide(big), 4, 15)}%,d")
-    def timed(label: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime()
-      val rows = f
-      println(f"$label: $rows%,d rows in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    timed("minhashPairs >= 0.5 end-to-end") {
-      Dedup.minhashPairs(big, 0.5).count()
-    }
-    timed("simhashPairsWide <= 2 end-to-end") {
-      Dedup.simhashPairsWide(big, 2).count()
-    }
-    timed("jaccardPairs cap 1000 end-to-end") {
-      Dedup.jaccardPairs(big, 0.5, JacDfCap).count()
-    }
-    big.unpersist()
-  }
-
-  /** §7 hot-source probe: the tokenBudgetSample vs
-    * tokenBudgetSampleTrimmed interleaved A/B on the corpus shape the
-    * trim exists for — EVERY document in one source (a pathologically
-    * hot crawl domain), so the exact operator's per-source window
-    * serializes over the full corpus while the trimmed twin's coarse
-    * bucket bound discards all but ≈ budget worth of documents before
-    * the serial pass. Interleaved rounds (the box's only trustworthy
-    * timing method), kept-set identity checked every round. */
-  private def hotsource(spark: SparkSession, dir: String, factor: Int): Unit = {
-    import graft.llm.TextAnalysis
-    val base = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    // repartition BEFORE persist: the synthesized frame inherits the
-    // base table's few file partitions, which would serialize BOTH
-    // pipelines' scans and mask the thing this probe measures (the
-    // exact operator's single-partition window pass)
-    val hot = synthesizeNx(base, factor).withColumn("source", lit("hot"))
-      .repartition(64).persist()
-    val n = hot.count()
-    val budget = 100000L
-    println(s"== hotsource: $n docs (factor $factor), ONE source, budget $budget tokens ==")
-    def keptIds(df: org.apache.spark.sql.DataFrame): (Double, Set[Long]) = {
-      val t0 = System.nanoTime()
-      val ids = df.filter(col("kept")).select(col("doc_id"))
-        .collect().map(_.getLong(0)).toSet
-      ((System.nanoTime() - t0) / 1e9, ids)
-    }
-    var exactWalls = List.empty[Double]
-    var trimWalls = List.empty[Double]
-    var identical = true
-    for (r <- 1 to 3) {
-      val (we, ide) = keptIds(TextAnalysis.tokenBudgetSample(hot, Map.empty, budget))
-      val (wt, idt) = keptIds(TextAnalysis.tokenBudgetSampleTrimmed(hot, Map.empty, budget))
-      exactWalls :+= we; trimWalls :+= wt
-      identical &&= (ide == idt)
-      println(f"round $r: exact $we%.2f s, trimmed $wt%.2f s, kept ${idt.size}%,d, identical=${ide == idt}")
-    }
-    val rowsExact = hot.count()
-    val rowsTrim = TextAnalysis.tokenBudgetSampleTrimmed(hot, Map.empty, budget).count()
-    println(f"window rows: exact $rowsExact%,d vs trimmed $rowsTrim%,d " +
-      f"(${rowsExact.toDouble / rowsTrim}%.0fx fewer through the serial pass)")
-    println(f"min wall: exact ${exactWalls.min}%.2f s vs trimmed ${trimWalls.min}%.2f s; " +
-      s"kept sets identical every round: $identical")
-    hot.unpersist()
   }
 
   /** Per-round scale artifact (SCALE_r{N}.json): the §3 second-decade
@@ -839,99 +722,9 @@ object ScalingAudit {
     ()
   }
 
-  /** §8 bigram-LM persist/pre-agg A/B: the one persist decision in the
-    * codebase that shipped without a measured note (r9 verdict nit #2).
-    * Three variants of `bigramLogProbImpl`, interleaved 3 rounds:
-    * current (bg persisted), no-persist (bg recomputed by both
-    * consumers), pre-agg ((doc_id, prev, cur) counts collapse before
-    * the vocab joins; different float-sum shape — adopting it would be
-    * a contract change). Output equality is checked every round
-    * (rounded grid for pre-agg). */
-  private def bigram(spark: SparkSession, dir: String): Unit = {
-    import graft.llm.TextAnalysis
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    def run(persistBg: Boolean, preAgg: Boolean): (Double, Map[Long, (Long, Option[Double])]) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val out = TextAnalysis.bigramLogProbImpl(docs, 0.9, persistBg, preAgg)
-      val m = out.collect().map(r => r.getLong(0) ->
-        (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-      out.unpersist(false)
-      ((System.nanoTime() - t0) / 1e9, m)
-    }
-    var walls = Map("persist" -> List.empty[Double], "nopersist" -> List.empty[Double],
-      "preagg" -> List.empty[Double])
-    var equalNoPersist = true
-    var equalPreAgg = true
-    for (r <- 1 to 3) {
-      val (wP, mP) = run(persistBg = true, preAgg = false)
-      val (wN, mN) = run(persistBg = false, preAgg = false)
-      val (wA, mA) = run(persistBg = true, preAgg = true)
-      walls = walls.map { case (k, v) => k -> (v :+ (k match {
-        case "persist" => wP; case "nopersist" => wN; case _ => wA })) }
-      equalNoPersist &&= (mP == mN)
-      equalPreAgg &&= (mP == mA)
-      println(f"round $r: persist $wP%.2f s, no-persist $wN%.2f s, pre-agg $wA%.2f s " +
-        s"(no-persist identical=${mP == mN}, pre-agg grid-identical=${mP == mA})")
-    }
-    println(f"min wall: persist ${walls("persist").min}%.2f s, " +
-      f"no-persist ${walls("nopersist").min}%.2f s, pre-agg ${walls("preagg").min}%.2f s; " +
-      s"no-persist identical every round: $equalNoPersist, " +
-      s"pre-agg rounded-grid identical every round: $equalPreAgg")
-  }
-
-  /** §9 trigram-LM join-shape A/B: rate-tables (3 joins, vocab-side
-    * divisions) vs the direct 5-join form, interleaved 3 rounds,
-    * outputs compared bitwise every round. */
-  private def trigram(spark: SparkSession, dir: String): Unit = {
-    import graft.llm.TextAnalysis
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val model = docs.filter(col("doc_id") % 2 === 0)
-    // task CPU is the load-invariant discriminator on this box (wall
-    // swings 3x; see Bench.scala's listener rationale)
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) { cpuNanos.addAndGet(m.executorCpuTime); () }
-      }
-    })
-    def cpuSnap(): Long = { Thread.sleep(300); cpuNanos.get() }
-    def run(rateTables: Boolean): (Double, Double, Map[Long, (Long, Option[Double])]) = {
-      spark.catalog.clearCache()
-      val c0 = cpuSnap()
-      val t0 = System.nanoTime()
-      val out = TextAnalysis.trigramBackoffScoreImpl(docs, model, 0.4, rateTables)
-      val m = out.collect().map(r => r.getLong(0) ->
-        (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-      out.unpersist(false)
-      ((System.nanoTime() - t0) / 1e9, (cpuSnap() - c0) / 1e9, m)
-    }
-    var rw = List.empty[(Double, Double)]; var dw = List.empty[(Double, Double)]
-    var same = true
-    for (r <- 1 to 3) {
-      val (wr, cr, mr) = run(rateTables = true)
-      val (wd, cd, md) = run(rateTables = false)
-      rw :+= ((wr, cr)); dw :+= ((wd, cd)); same &&= (mr == md)
-      println(f"round $r: rate-tables $wr%.2f s / $cr%.1f cpu-s, " +
-        f"direct $wd%.2f s / $cd%.1f cpu-s, identical=${mr == md}")
-    }
-    println(f"min: rate-tables ${rw.map(_._1).min}%.2f s / ${rw.map(_._2).min}%.1f cpu-s " +
-      f"vs direct ${dw.map(_._1).min}%.2f s / ${dw.map(_._2).min}%.1f cpu-s; " +
-      s"outputs identical every round: $same")
-  }
-
-  /** §5 ANN probe: 10 deterministic near-copies of the SF's embeddings
-    * (copy r > 0 shifts element j by a small id-and-dimension-keyed
-    * offset — no RNG), 32 coarse cells seeded from the 32 lowest base
-    * ids, nprobe 4, k 10, 3 queries. Reports the probed corpus
-    * fraction per query, recall@10 vs brute force, and end-to-end
-    * wall for both paths. */
   /** 10 deterministic near-copies of an embeddings frame (copy r > 0
     * shifts element j by a small id-and-dimension-keyed offset — no
-    * RNG). Shared by annprobe and the scaleJson semantic tripwire. */
+    * RNG): the embedding decade of the scaleJson vector tripwires. */
   private def synthesizeEmb10x(base: DataFrame): DataFrame = {
     val spark = base.sparkSession
     val copies = spark.range(0, 10).select(col("id").cast("int").as("r"))
@@ -945,297 +738,9 @@ object ScalingAudit {
           .as("embedding"))
   }
 
-  private def annprobe(spark: SparkSession, dir: String): Unit = {
-    import graft.llm.Similarity
-    val base = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val big = synthesizeEmb10x(base).persist()
-    val n = big.count()
-    println(s"== annprobe: $n vectors synthesized from $dir ==")
-    val coarseIds = base.select(col("vec_id")).orderBy(col("vec_id")).limit(32)
-      .collect().map(_.getLong(0)).toSeq
-    val queryIds = coarseIds.take(3).map(_ + 3000000L) // copy-3 twins, not seeds
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val out = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      out
-    }
-    val brute = timed("brute-force top-10 (3 queries) end-to-end") {
-      Similarity.bruteForceTopK(big, queryIds, 10)
-        .select(col("query_id"), col("neighbor_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    val ivf = timed("IVF top-10 (32 cells, nprobe 4) end-to-end") {
-      Similarity.ivfTopK(big, coarseIds, queryIds, nprobe = 4, k = 10)
-        .select(col("query_id"), col("neighbor_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    println(s"recall@10: ${(brute intersect ivf).size}/${brute.size}")
-    // probed fraction: corpus share of each query's nprobe nearest cells
-    val e = big.select(col("vec_id"), col("embedding").as("vec"))
-    val coarse = e.filter(col("vec_id").isin(coarseIds: _*))
-      .select(col("vec_id").as("cell_id"), col("vec").as("cvec"))
-    val assigned = Similarity.assignCells(e, coarse)
-      .groupBy(col("cell_id")).agg(count(lit(1)).as("csize"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val cvecs = coarse.collect().map(r =>
-      (r.getLong(0), r.getSeq[Double](1).toArray))
-    val qvecs = e.filter(col("vec_id").isin(queryIds: _*)).collect().map(r =>
-      (r.getLong(0), r.getSeq[Double](1).toArray))
-    qvecs.foreach { case (qid, qv) =>
-      val probed = cvecs.map { case (cid, cv) =>
-        val d2 = qv.zip(cv).map { case (a, b) => (a - b) * (a - b) }.sum
-        (d2, cid)
-      }.sorted.take(4).map(_._2)
-      val frac = probed.map(assigned.getOrElse(_, 0L)).sum.toDouble / n
-      println(f"query $qid probed fraction: ${frac * 100}%.1f%%")
-    }
-    big.unpersist()
-  }
-
-  /** Interleaved A/B of probe cost on a fragmented vs compacted
-    * streaming-built IVF-PQ store (the StoreCompaction existence
-    * measurement): two identical 64-batch ingests, one compacted +
-    * vacuumed, probes alternated A,B per round so host throttling hits
-    * both sides equally (the §1 lesson — never trust one-sided walls).
-    * File counts are the deterministic signal; walls are context. */
-  private def compactAb(spark: SparkSession, dir: String): Unit = {
-    import graft.llm.Similarity
-    import graft.streaming.{StoreCompaction, VectorIndexIngest}
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val quant = Similarity.trainIvfPqQuantizer(
-      e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-    val queries = Similarity.collectVectors(e, Seq(0L, 1L, 2L))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compactab").toString
-    try {
-      for (s <- Seq("a", "b"); b <- 0 until 64)
-        VectorIndexIngest.ingestBatch(
-          e.filter(col("vec_id") % 64 === b), s"$tmp/$s", quant, b.toLong)
-      StoreCompaction.compact(spark, s"$tmp/b", Seq("cell_id"))
-      StoreCompaction.vacuum(spark, s"$tmp/b")
-      def files(p: String): Int = {
-        val root = new org.apache.hadoop.fs.Path(p)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val it = fs.listFiles(root, true)
-        var n = 0
-        while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-        n
-      }
-      def probe(p: String): (Long, Double) = {
-        val t0 = System.nanoTime()
-        val hits = Similarity.ivfPqProbe(VectorIndexIngest.index(spark, p),
-          quant, queries, nprobe = 2, k = 10).count()
-        (hits, (System.nanoTime() - t0) / 1e9)
-      }
-      probe(s"$tmp/a"); probe(s"$tmp/b") // warm both code paths
-      val (wa, wb) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-      var (ha, hb) = (0L, 0L)
-      for (_ <- 1 to 5) {
-        val (h1, w1) = probe(s"$tmp/a"); ha = h1; wa += w1
-        val (h2, w2) = probe(s"$tmp/b"); hb = h2; wb += w2
-      }
-      require(ha == hb, s"probe results diverged: $ha vs $hb")
-      def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-      def d2(x: Double) = String.format(java.util.Locale.ROOT, "%.2f", x: java.lang.Double)
-      println(s"""{"artifact":"compactab","files_fragmented":${files(s"$tmp/a")},""" +
-        s""""files_compacted":${files(s"$tmp/b")},"probe_hits":$ha,""" +
-        s""""probe_med_fragmented_s":${d2(med(wa.result()))},""" +
-        s""""probe_med_compacted_s":${d2(med(wb.result()))},""" +
-        s""""probe_walls_fragmented":[${wa.result().map(d2).mkString(",")}],""" +
-        s""""probe_walls_compacted":[${wb.result().map(d2).mkString(",")}]}""")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  /** Multi-probe A/B (committed mode `probeab`): over an 8-batch
-    * compacted lexical store at the second decade, alternate ONE
-    * `bm25ProbeMany` for three query term sets against the THREE
-    * single-query probes it replaces, interleaved per round so host
-    * throttling hits both sides equally; rankings are checked equal
-    * (per query bitwise, the spec-pinned contract) every round. The
-    * claim under audit: N queries = one slice scan + one window, not N
-    * of each — at the job-floor-dominated local scale the win is the
-    * job count itself. */
-  private def probeAb(spark: SparkSession, dir: String): Unit = {
-    import graft.llm.TextAnalysis
-    import graft.streaming.LexIngest
-    val base = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val big = synthesize10x(base).repartition(64).persist()
-    big.count()
-    val queries = Seq(
-      0L -> Seq("spark", "window", "customer", "filter"),
-      1L -> Seq("join", "hash", "merge"),
-      2L -> Seq("scan", "sort", "stream", "filter"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_probeab").toString
-    try {
-      for (b <- 0 until 8)
-        LexIngest.ingestBatch(big.filter(col("doc_id") % 8 === b), tmp, b.toLong)
-      LexIngest.compact(spark, tmp)
-      LexIngest.vacuum(spark, tmp)
-      def multi(): (Seq[(Long, Long, Long)], Double) = {
-        val t0 = System.nanoTime()
-        val rows = LexIngest.probeMany(spark, tmp, queries, 10)
-          .orderBy("query_id", "rn").collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq
-        (rows.map(t => (t._1, t._2, t._3)), (System.nanoTime() - t0) / 1e9)
-      }
-      def singles(): (Seq[(Long, Long, Long)], Double) = {
-        val t0 = System.nanoTime()
-        val rows = queries.flatMap { case (qid, ts) =>
-          LexIngest.probe(spark, tmp, ts, 10).orderBy("rn").collect()
-            .map(r => (qid, r.getLong(0),
-              java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
-        }
-        (rows, (System.nanoTime() - t0) / 1e9)
-      }
-      multi(); singles() // warm both code paths
-      val (wm, ws) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-      for (_ <- 1 to 5) {
-        val (rm, w1) = multi(); wm += w1
-        val (rs, w2) = singles(); ws += w2
-        require(rm == rs, "multi-probe ranking diverged from the single probes")
-      }
-      def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
-      def d2(x: Double) = String.format(java.util.Locale.ROOT, "%.2f", x: java.lang.Double)
-      println(s"""{"artifact":"probeab","queries":${queries.size},""" +
-        s""""probe_med_multi_s":${d2(med(wm.result()))},""" +
-        s""""probe_med_singles_s":${d2(med(ws.result()))},""" +
-        s""""probe_walls_multi":[${wm.result().map(d2).mkString(",")}],""" +
-        s""""probe_walls_singles":[${ws.result().map(d2).mkString(",")}]}""")
-    } finally {
-      big.unpersist()
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  /** §17 quantizer-store A/B: what loading the PUBLISHED model buys a
-    * probe session over retraining from raw embeddings — interleaved 5
-    * rounds (the repo's A/B discipline), probe results checked
-    * bit-identical every round (they must be: the round-trip is exact).
-    * The structural point is bigger than the wall delta: the retrain
-    * arm needs the raw embeddings table MOUNTED at probe time (at
-    * 100 TB, a second copy of the corpus on the serving path); the
-    * stored arm reads two K-row parquet tables. */
-  private def quantAb(spark: SparkSession, dir: String): Unit = {
-    import graft.llm.Similarity
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-    val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-    val cbIds = Seq(11L, 57L, 201L, 401L)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_quantab").toString
-    try {
-      val trained = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, 4)
-      Similarity.writeIvfPqIndex(emb, trained, s"$tmp/idx")
-      Similarity.writeIvfPqQuantizer(spark, trained, s"$tmp/q")
-      // query vectors arrive with the request in a served deployment —
-      // collected once outside every timed arm
-      val queries = Similarity.collectVectors(emb, Seq(0L, 1L, 2L))
-      def probeSum(q: graft.llm.IvfPqQuantizer): Long =
-        Similarity.ivfPqProbe(Similarity.readIvfPqIndex(spark, s"$tmp/idx"),
-            q, queries, nprobe = 2, k = 10)
-          .agg(coalesce(sum(col("neighbor_id")), lit(0L))).head.getLong(0)
-      val wr = Seq.newBuilder[Double]; val ws = Seq.newBuilder[Double]
-      var equal = true
-      for (_ <- 1 to 5) {
-        val t0 = System.nanoTime()
-        val hr = probeSum(Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, 4))
-        wr += (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        val hs = probeSum(Similarity.readIvfPqQuantizer(spark, s"$tmp/q"))
-        ws += (System.nanoTime() - t1) / 1e9
-        equal &&= (hr == hs)
-      }
-      def d2(x: Double) = String.format(java.util.Locale.ROOT, "%.2f", x: java.lang.Double)
-      println(s"""{"artifact":"quantab","identical_every_round":$equal,""" +
-        s""""probe_min_retrain_s":${d2(wr.result().min)},""" +
-        s""""probe_min_stored_s":${d2(ws.result().min)},""" +
-        s""""walls_retrain":[${wr.result().map(d2).mkString(",")}],""" +
-        s""""walls_stored":[${ws.result().map(d2).mkString(",")}]}""")
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(tmp)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
-  /** §10 novelty window-vs-join-back skew probe (the r19 ADVICE item):
-    * the shipped `novelty` computes shingle df as a count WINDOW over
-    * the shingle key, which forgoes map-side partial aggregation and
-    * AQE skew splitting — a corpus-universal shingle is ONE unsplittable
-    * window partition. This measures that straggler shape where it
-    * would bite: the synthesized decade corpus with a boilerplate
-    * sentence APPENDED to every document (every one of its bigrams has
-    * df = n_docs). Interleaved 3 rounds vs the agg+join-back twin (the
-    * pre-r19 shape, rebuilt here tool-side), outputs compared exactly
-    * every round; the hot-group size (max df) is printed so the
-    * straggler claim is quantified, not asserted. */
-  private def noveltyAb(spark: SparkSession, dir: String): Unit = {
-    val base = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val boiler = "click here to subscribe to our newsletter terms apply"
-    val big = synthesize10x(base)
-      .select(col("doc_id"), concat(col("text"), lit(" " + boiler)).as("text"))
-      .repartition(64).persist()
-    val n = big.count()
-    val parts = big.sparkSession.sessionState.conf.numShufflePartitions
-    // the agg+join-back twin (pre-r19 shape): df aggregated then joined
-    // back onto the shingle stream — partial agg + AQE-splittable join
-    def joinBackNovelty(docs: DataFrame): DataFrame = {
-      val sh = docs.repartition(parts)
-        .select(col("doc_id"), explode(Dedup.shingles(col("text"))).as("s"))
-      val dfr = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      val per = sh.join(dfr, Seq("s"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_shingles"),
-          count(when(col("df") === 1, 1)).as("n_unique"))
-        .select(col("doc_id"), col("n_shingles"), col("n_unique"),
-          round(col("n_unique").cast("double") / col("n_shingles"), 4).as("novelty"))
-      docs.select(col("doc_id"))
-        .join(per, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
-          coalesce(col("n_unique"), lit(0L)).as("n_unique"), col("novelty"))
-    }
-    val maxDf = big
-      .select(explode(Dedup.shingles(col("text"))).as("s"))
-      .groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .agg(max(col("df"))).head.getLong(0)
-    println(s"== noveltyAb: $n docs, hottest shingle df = $maxDf " +
-      s"(one window group spanning ${100.0 * maxDf / n} pct of the corpus) ==")
-    // each arm releases only what it cached (`out`): the persisted
-    // corpus `big` stays cached across every timed arm
-    def run(df: => DataFrame): (Double, Map[Long, (Long, Long)]) = {
-      val t0 = System.nanoTime()
-      val out = df
-      val m = out.select(col("doc_id"), col("n_shingles"), col("n_unique"))
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      out.unpersist(false)
-      ((System.nanoTime() - t0) / 1e9, m)
-    }
-    var winWalls = List.empty[Double]
-    var jbWalls = List.empty[Double]
-    var identical = true
-    for (r <- 1 to 3) {
-      val (ww, mw) = run(graft.llm.TextAnalysis.novelty(big))
-      val (wj, mj) = run(joinBackNovelty(big))
-      winWalls :+= ww; jbWalls :+= wj
-      identical &&= (mw == mj)
-      println(f"round $r: window $ww%.2f s, join-back $wj%.2f s, identical=${mw == mj}")
-    }
-    println(f"min wall: window ${winWalls.min}%.2f s vs join-back ${jbWalls.min}%.2f s; " +
-      s"outputs identical every round: $identical")
-    big.unpersist()
-  }
-
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ScalingAudit " +
-      "candidates|sf1ish|annprobe|hotsource|bigram|trigram|scalejson|" +
-      "noveltyab|compactab|probeab|quantab <sfDir>... " +
-      "(hotsource takes an optional factor, scalejson an <outFile>)")
+    require(args.length >= 3 && args(0) == "scalejson",
+      "usage: ScalingAudit scalejson <sf0.1Dir> <outFile>")
     val spark = SparkSession.builder()
       .appName("graft-scaling-audit")
       .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
@@ -1243,24 +748,7 @@ object ScalingAudit {
       .config("spark.driver.memory", "16g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    args(0) match {
-      case "candidates" => args.drop(1).foreach(candidateTable(spark, _))
-      case "sf1ish"     => sf1ish(spark, args(1))
-      case "annprobe"   => annprobe(spark, args(1))
-      case "hotsource"  =>
-        hotsource(spark, args(1),
-          if (args.length > 2) args(2).toInt else 10)
-      case "bigram"     => bigram(spark, args(1))
-      case "trigram"    => trigram(spark, args(1))
-      case "scalejson"  =>
-        require(args.length >= 3, "usage: ScalingAudit scalejson <sf0.1Dir> <outFile>")
-        scaleJson(spark, args(1), args(2))
-      case "noveltyab"  => noveltyAb(spark, args(1))
-      case "compactab"  => compactAb(spark, args(1))
-      case "probeab"    => probeAb(spark, args(1))
-      case "quantab"    => quantAb(spark, args(1))
-      case other        => sys.error(s"unknown mode $other")
-    }
+    scaleJson(spark, args(1), args(2))
     spark.stop()
   }
 }

@@ -13,44 +13,44 @@ import org.apache.spark.sql.functions._
 class EventsReaderSpec extends SparkSpec {
   import spark.implicits._
 
-  private def writeDir(): String =
-    java.nio.file.Files.createTempDirectory("events_reader_spec").toString
-
   test("integral ts (nanos-as-long layout) becomes tus via div 1000") {
-    val dir = writeDir()
-    // 1.5 us worth of nanos truncates toward zero like the original
-    // `ts div 1000` reading path
-    Seq((1L, 1500L, 10L), (2L, 999L, 20L), (3L, 2000000L, 30L))
-      .toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.events(spark, dir)
-      .select(col("event_id"), col("tus")).orderBy(col("event_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    out.toSeq shouldBe Seq((1L, 1L), (2L, 0L), (3L, 2000L))
+    SparkEntry.withTempRoot(spark, "events_reader_spec") { dir =>
+      // 1.5 us worth of nanos truncates toward zero like the original
+      // `ts div 1000` reading path
+      Seq((1L, 1500L, 10L), (2L, 999L, 20L), (3L, 2000000L, 30L))
+        .toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = SparkEntry.events(spark, dir)
+        .select(col("event_id"), col("tus")).orderBy(col("event_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      out.toSeq shouldBe Seq((1L, 1L), (2L, 0L), (3L, 2000L))
+    }
   }
 
   test("timestamp ts (micros layout) becomes tus via unix_micros, UTC-exact") {
-    val dir = writeDir()
-    Seq((1L, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(3600L, 123456000L)), 10L),
-        (2L, java.sql.Timestamp.from(java.time.Instant.EPOCH), 20L))
-      .toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = SparkEntry.events(spark, dir)
-      .select(col("event_id"), col("tus")).orderBy(col("event_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    out.toSeq shouldBe Seq((1L, 3600L * 1000000L + 123456L), (2L, 0L))
+    SparkEntry.withTempRoot(spark, "events_reader_spec") { dir =>
+      Seq((1L, java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(3600L, 123456000L)), 10L),
+          (2L, java.sql.Timestamp.from(java.time.Instant.EPOCH), 20L))
+        .toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = SparkEntry.events(spark, dir)
+        .select(col("event_id"), col("tus")).orderBy(col("event_id"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      out.toSeq shouldBe Seq((1L, 3600L * 1000000L + 123456L), (2L, 0L))
+    }
   }
 
   test("an unknown third ts layout fails loudly, not via a fall-through cast") {
-    val dir = writeDir()
-    // the generator has shipped NANOS and MICROS; a string layout stands
-    // in for "any third thing" — the reader must name the observed type
-    Seq((1L, "2024-01-01 00:00:00", 10L))
-      .toDF("event_id", "ts", "user_id")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val e = intercept[IllegalStateException] { SparkEntry.events(spark, dir) }
-    e.getMessage should include("unsupported type")
-    e.getMessage should include("STRING")
+    SparkEntry.withTempRoot(spark, "events_reader_spec") { dir =>
+      // the generator has shipped NANOS and MICROS; a string layout stands
+      // in for "any third thing" — the reader must name the observed type
+      Seq((1L, "2024-01-01 00:00:00", 10L))
+        .toDF("event_id", "ts", "user_id")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val e = intercept[IllegalStateException] { SparkEntry.events(spark, dir) }
+      e.getMessage should include("unsupported type")
+      e.getMessage should include("STRING")
+    }
   }
 
   test("reader drops ts, keeps every other column, and matches the real testdata") {

@@ -759,33 +759,34 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import graft.llm.Similarity
     import graft.streaming.{VecStoreIngest, VectorIndexIngest}
-    val dir = java.nio.file.Files.createTempDirectory("plan_served").toString
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val quant = Similarity.trainIvfPqQuantizer(
-      emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-    VectorIndexIngest.ingestBatch(emb, s"$dir/idx", quant, 0L)
-    VecStoreIngest.ingestBatch(emb, s"$dir/vecs", 0L)
-    val vecs = VecStoreIngest.view(spark, s"$dir/vecs")
-    def fmt(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    // probe THROUGH the read-back model: the inlined probe lists still
-    // land in the scan's partition filters (directory pruning), and the
-    // store-served path plans no join
-    val probe = Similarity.ivfPqProbe(
-      VectorIndexIngest.index(spark, s"$dir/idx"),
-      VectorIndexIngest.quantizer(spark, s"$dir/idx"),
-      Similarity.collectVectors(vecs, Seq(0L, 1L, 2L)), nprobe = 2, k = 20)
-    val pp = fmt(probe)
-    pp should include regex "PartitionFilters: \\[[^\\]]*cell_id"
-    (pp should not).include("embeddings.parquet") // raw corpus never read
-    // the exact-rerank fetch: candidate ids broadcast against the store
-    // view — an id-keyed point fetch, never a corpus shuffle
-    val pf = fmt(Similarity.refineExact(vecs,
-      Seq((0L, 1L), (0L, 2L), (1L, 3L)).toDF("query_id", "neighbor_id"),
-      Seq(0L, 1L), k = 2))
-    pf should include("BroadcastHashJoin")
-    (pf should not).include("SortMergeJoin")
-    (pf should not).include("CartesianProduct")
-    (pf should not).include("embeddings.parquet")
+    SparkEntry.withTempRoot(spark, "plan_served") { dir =>
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val quant = Similarity.trainIvfPqQuantizer(
+        emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
+      VectorIndexIngest.ingestBatch(emb, s"$dir/idx", quant, 0L)
+      VecStoreIngest.ingestBatch(emb, s"$dir/vecs", 0L)
+      val vecs = VecStoreIngest.view(spark, s"$dir/vecs")
+      def fmt(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      // probe THROUGH the read-back model: the inlined probe lists still
+      // land in the scan's partition filters (directory pruning), and the
+      // store-served path plans no join
+      val probe = Similarity.ivfPqProbe(
+        VectorIndexIngest.index(spark, s"$dir/idx"),
+        VectorIndexIngest.quantizer(spark, s"$dir/idx"),
+        Similarity.collectVectors(vecs, Seq(0L, 1L, 2L)), nprobe = 2, k = 20)
+      val pp = fmt(probe)
+      pp should include regex "PartitionFilters: \\[[^\\]]*cell_id"
+      (pp should not).include("embeddings.parquet") // raw corpus never read
+      // the exact-rerank fetch: candidate ids broadcast against the store
+      // view — an id-keyed point fetch, never a corpus shuffle
+      val pf = fmt(Similarity.refineExact(vecs,
+        Seq((0L, 1L), (0L, 2L), (1L, 3L)).toDF("query_id", "neighbor_id"),
+        Seq(0L, 1L), k = 2))
+      pf should include("BroadcastHashJoin")
+      (pf should not).include("SortMergeJoin")
+      (pf should not).include("CartesianProduct")
+      (pf should not).include("embeddings.parquet")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Binary (Hamming) ANN family + hard-negative mining.
@@ -108,29 +108,30 @@ class HammingSpec extends SparkSpec {
 
   test("hammingProbe over the vec store's liveView composes forget") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft_ham_store").toString
-    try {
-      for (b <- 0 until 3)
-        graft.streaming.VecStoreIngest.ingestBatch(
-          e.filter($"vec_id" % 3 === b), s"$root/vecs", b.toLong)
-      val forget = Seq(5L, 18L, 42L, 999999L)
-      graft.streaming.VecStoreIngest.markDeleted(spark, s"$root/vecs", forget)
-      val stored = Similarity.hammingProbe(
-        Similarity.signSignature(
-          graft.streaming.VecStoreIngest.view(spark, s"$root/vecs")),
-        Seq(0L, 1L, 2L), 10)
-        .select($"query_id", $"neighbor_id", $"hamming", $"rn")
-        .as[(Long, Long, Long, Long)].collect().toSeq
-      val oneShot = Similarity.hammingTopK(
-        e.filter(!$"vec_id".isin(forget: _*)), Seq(0L, 1L, 2L), 10)
-        .select($"query_id", $"neighbor_id", $"hamming", $"rn")
-        .as[(Long, Long, Long, Long)].collect().toSeq
-      stored shouldBe oneShot
-      stored.map(_._2).toSet.intersect(forget.toSet) shouldBe empty
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
+    SparkEntry.withTempRoot(spark, "graft_ham_store") { root =>
+      try {
+        for (b <- 0 until 3)
+          graft.streaming.VecStoreIngest.ingestBatch(
+            e.filter($"vec_id" % 3 === b), s"$root/vecs", b.toLong)
+        val forget = Seq(5L, 18L, 42L, 999999L)
+        graft.streaming.VecStoreIngest.markDeleted(spark, s"$root/vecs", forget)
+        val stored = Similarity.hammingProbe(
+          Similarity.signSignature(
+            graft.streaming.VecStoreIngest.view(spark, s"$root/vecs")),
+          Seq(0L, 1L, 2L), 10)
+          .select($"query_id", $"neighbor_id", $"hamming", $"rn")
+          .as[(Long, Long, Long, Long)].collect().toSeq
+        val oneShot = Similarity.hammingTopK(
+          e.filter(!$"vec_id".isin(forget: _*)), Seq(0L, 1L, 2L), 10)
+          .select($"query_id", $"neighbor_id", $"hamming", $"rn")
+          .as[(Long, Long, Long, Long)].collect().toSeq
+        stored shouldBe oneShot
+        stored.map(_._2).toSet.intersect(forget.toSet) shouldBe empty
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        ()
+      }
     }
   }
 
@@ -177,59 +178,60 @@ class HammingSpec extends SparkSpec {
 
   test("store-complete binary pair: sig-store propose + vec-store refine, forget on both, compact keeps it bitwise") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft_sig_store").toString
-    try {
-      for (b <- 0 until 3) {
-        val part = e.filter($"vec_id" % 3 === b)
-        graft.streaming.SigStoreIngest.ingestBatch(part, s"$root/sigs", b.toLong)
-        graft.streaming.VecStoreIngest.ingestBatch(part, s"$root/vecs", b.toLong)
+    SparkEntry.withTempRoot(spark, "graft_sig_store") { root =>
+      try {
+        for (b <- 0 until 3) {
+          val part = e.filter($"vec_id" % 3 === b)
+          graft.streaming.SigStoreIngest.ingestBatch(part, s"$root/sigs", b.toLong)
+          graft.streaming.VecStoreIngest.ingestBatch(part, s"$root/vecs", b.toLong)
+        }
+        // the store holds ONLY (vec_id, sig) — the 32x-narrower layout
+        graft.streaming.SigStoreIngest.view(spark, s"$root/sigs")
+          .columns.toSeq shouldBe Seq("vec_id", "sig")
+
+        // pre-forget: stored pair == one-shot hammingRefined bitwise
+        def key(df: org.apache.spark.sql.DataFrame) =
+          df.orderBy($"query_id", $"rn").collect().map(r => (r.getLong(0),
+            r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+            r.getLong(3))).toSeq
+        def stored() = Similarity.hammingRefinedStored(
+          graft.streaming.SigStoreIngest.view(spark, s"$root/sigs"),
+          graft.streaming.VecStoreIngest.view(spark, s"$root/vecs"),
+          Seq(0L, 1L, 2L), 20, 5)
+        key(stored()) shouldBe key(Similarity.hammingRefined(e, Seq(0L, 1L, 2L), 20, 5))
+
+        // forget on BOTH stores: == one-shot over the surviving corpus,
+        // and the forgotten ids leave both stages
+        val forget = Seq(5L, 18L, 42L, 999999L)
+        graft.streaming.SigStoreIngest.markDeleted(spark, s"$root/sigs", forget)
+        graft.streaming.VecStoreIngest.markDeleted(spark, s"$root/vecs", forget)
+        val surviving = e.filter(!$"vec_id".isin(forget: _*))
+        val postForget = key(stored())
+        postForget shouldBe key(Similarity.hammingRefined(surviving, Seq(0L, 1L, 2L), 20, 5))
+        postForget.map(_._2).toSet.intersect(forget.toSet) shouldBe empty
+
+        // the as-of signature frame travels (retroactive forget composed)
+        graft.streaming.SigStoreIngest.viewAsOf(spark, s"$root/sigs", 1L)
+          .select($"vec_id").as[Long].collect().toSet shouldBe
+          e.filter($"vec_id" % 3 <= 1 && !$"vec_id".isin(forget: _*))
+            .select($"vec_id").as[Long].collect().toSet
+
+        // physical apply: compact both, probe bitwise unchanged
+        graft.streaming.SigStoreIngest.compact(spark, s"$root/sigs")
+        graft.streaming.VecStoreIngest.compact(spark, s"$root/vecs")
+        graft.streaming.StoreCompaction.vacuum(spark, s"$root/sigs")
+        graft.streaming.StoreCompaction.vacuum(spark, s"$root/vecs")
+        key(stored()) shouldBe postForget
+        // ...and the sig-store probe alone serves the Hamming ranking
+        graft.streaming.SigStoreIngest.probe(spark, s"$root/sigs", Seq(0L), 5)
+          .select($"neighbor_id").as[Long].collect().toSeq shouldBe
+          Similarity.hammingTopK(surviving, Seq(0L), 5)
+            .select($"neighbor_id").as[Long].collect().toSeq
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        ()
       }
-      // the store holds ONLY (vec_id, sig) — the 32x-narrower layout
-      graft.streaming.SigStoreIngest.view(spark, s"$root/sigs")
-        .columns.toSeq shouldBe Seq("vec_id", "sig")
-
-      // pre-forget: stored pair == one-shot hammingRefined bitwise
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy($"query_id", $"rn").collect().map(r => (r.getLong(0),
-          r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
-          r.getLong(3))).toSeq
-      def stored() = Similarity.hammingRefinedStored(
-        graft.streaming.SigStoreIngest.view(spark, s"$root/sigs"),
-        graft.streaming.VecStoreIngest.view(spark, s"$root/vecs"),
-        Seq(0L, 1L, 2L), 20, 5)
-      key(stored()) shouldBe key(Similarity.hammingRefined(e, Seq(0L, 1L, 2L), 20, 5))
-
-      // forget on BOTH stores: == one-shot over the surviving corpus,
-      // and the forgotten ids leave both stages
-      val forget = Seq(5L, 18L, 42L, 999999L)
-      graft.streaming.SigStoreIngest.markDeleted(spark, s"$root/sigs", forget)
-      graft.streaming.VecStoreIngest.markDeleted(spark, s"$root/vecs", forget)
-      val surviving = e.filter(!$"vec_id".isin(forget: _*))
-      val postForget = key(stored())
-      postForget shouldBe key(Similarity.hammingRefined(surviving, Seq(0L, 1L, 2L), 20, 5))
-      postForget.map(_._2).toSet.intersect(forget.toSet) shouldBe empty
-
-      // the as-of signature frame travels (retroactive forget composed)
-      graft.streaming.SigStoreIngest.viewAsOf(spark, s"$root/sigs", 1L)
-        .select($"vec_id").as[Long].collect().toSet shouldBe
-        e.filter($"vec_id" % 3 <= 1 && !$"vec_id".isin(forget: _*))
-          .select($"vec_id").as[Long].collect().toSet
-
-      // physical apply: compact both, probe bitwise unchanged
-      graft.streaming.SigStoreIngest.compact(spark, s"$root/sigs")
-      graft.streaming.VecStoreIngest.compact(spark, s"$root/vecs")
-      graft.streaming.StoreCompaction.vacuum(spark, s"$root/sigs")
-      graft.streaming.StoreCompaction.vacuum(spark, s"$root/vecs")
-      key(stored()) shouldBe postForget
-      // ...and the sig-store probe alone serves the Hamming ranking
-      graft.streaming.SigStoreIngest.probe(spark, s"$root/sigs", Seq(0L), 5)
-        .select($"neighbor_id").as[Long].collect().toSeq shouldBe
-        Similarity.hammingTopK(surviving, Seq(0L), 5)
-          .select($"neighbor_id").as[Long].collect().toSeq
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
     }
   }
 

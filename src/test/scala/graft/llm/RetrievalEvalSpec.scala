@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** retrievalEval: exact-grid IR metrics over any ranked frame. */
@@ -112,38 +112,39 @@ class RetrievalEvalSpec extends SparkSpec {
   test("as-of eval reproducibility: later ingests never move a snapshot's metrics; a later FORGET does (retroactive erasure)") {
     import graft.streaming.VecStoreIngest
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val root = java.nio.file.Files.createTempDirectory("graft_evalasof").toString
-    try {
-      def metricsAsOf(b: Long) =
-        Similarity.retrievalEval(
-          Similarity.bruteForceTopKRanked(
-            VecStoreIngest.viewAsOf(spark, s"$root/vecs", b), Seq(0L, 1L, 2L), 5),
-          Similarity.labelQrels(e.filter($"vec_id" % 3 <= b), Seq(0L, 1L, 2L)), 5)
-          .as[(Long, Long, Double, Double, Double)].collect().toSeq
-      for (b <- 0 until 2)
+    SparkEntry.withTempRoot(spark, "graft_evalasof") { root =>
+      try {
+        def metricsAsOf(b: Long) =
+          Similarity.retrievalEval(
+            Similarity.bruteForceTopKRanked(
+              VecStoreIngest.viewAsOf(spark, s"$root/vecs", b), Seq(0L, 1L, 2L), 5),
+            Similarity.labelQrels(e.filter($"vec_id" % 3 <= b), Seq(0L, 1L, 2L)), 5)
+            .as[(Long, Long, Double, Double, Double)].collect().toSeq
+        for (b <- 0 until 2)
+          VecStoreIngest.ingestBatch(
+            e.filter($"vec_id" % 3 === b), s"$root/vecs", b.toLong)
+        val before = metricsAsOf(1L)
+        before should not be empty
+        // batch 2 lands: the as-of-1 grade is bitwise unmoved — the
+        // "evaluate on the frozen snapshot" reproducibility primitive
         VecStoreIngest.ingestBatch(
-          e.filter($"vec_id" % 3 === b), s"$root/vecs", b.toLong)
-      val before = metricsAsOf(1L)
-      before should not be empty
-      // batch 2 lands: the as-of-1 grade is bitwise unmoved — the
-      // "evaluate on the frozen snapshot" reproducibility primitive
-      VecStoreIngest.ingestBatch(
-        e.filter($"vec_id" % 3 === 2), s"$root/vecs", 2L)
-      metricsAsOf(1L) shouldBe before
-      // a FORGET after the snapshot is retroactive by design (no
-      // snapshot may resurrect erased vectors), so it MAY move the
-      // as-of ranking; at minimum the erased id leaves it
-      val victim = Similarity.bruteForceTopKRanked(
-        VecStoreIngest.viewAsOf(spark, s"$root/vecs", 1L), Seq(0L), 1)
-        .select($"neighbor_id").as[Long].head()
-      VecStoreIngest.markDeleted(spark, s"$root/vecs", Seq(victim))
-      Similarity.bruteForceTopKRanked(
-          VecStoreIngest.viewAsOf(spark, s"$root/vecs", 1L), Seq(0L, 1L, 2L), 5)
-        .select($"neighbor_id").as[Long].collect() should not contain victim
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      ()
+          e.filter($"vec_id" % 3 === 2), s"$root/vecs", 2L)
+        metricsAsOf(1L) shouldBe before
+        // a FORGET after the snapshot is retroactive by design (no
+        // snapshot may resurrect erased vectors), so it MAY move the
+        // as-of ranking; at minimum the erased id leaves it
+        val victim = Similarity.bruteForceTopKRanked(
+          VecStoreIngest.viewAsOf(spark, s"$root/vecs", 1L), Seq(0L), 1)
+          .select($"neighbor_id").as[Long].head()
+        VecStoreIngest.markDeleted(spark, s"$root/vecs", Seq(victim))
+        Similarity.bruteForceTopKRanked(
+            VecStoreIngest.viewAsOf(spark, s"$root/vecs", 1L), Seq(0L, 1L, 2L), 5)
+          .select($"neighbor_id").as[Long].collect() should not contain victim
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+        ()
+      }
     }
   }
 

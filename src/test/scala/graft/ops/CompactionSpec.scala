@@ -1,9 +1,7 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
@@ -23,23 +21,24 @@ class CompactionSpec extends SparkSpec {
   }
 
   test("compact: a many-small-files directory collapses to few files, contents identical") {
-    val dir = Files.createTempDirectory("graft_compact").toString
-    val in = s"$dir/in"; val out = s"$dir/out"
-    val df = (0 until 1000).map(i => (i.toLong, s"row $i")).toDF("id", "s")
-    df.repartition(20).write.mode("overwrite").parquet(in) // 20 tiny files
-    val files = Compaction.listParquet(spark, in)
-    files.size shouldBe 20
-    val total = files.map(_._2).sum
-    val groups = Compaction.plan(files, targetBytes = total / 4 + 1)
-    val nOut = Compaction.compact(spark, in, groups, out)
-    nOut should be < files.size
-    nOut shouldBe groups.size
-    // contents survive exactly
-    val back = spark.read.parquet(s"$out/g*")
-    back.count() shouldBe 1000L
-    back.orderBy(col("id")).collect().map(_.getLong(0)) shouldBe (0L until 1000L).toArray
-    // and the rewrite really produced one file per group
-    for (i <- groups.indices)
-      Compaction.listParquet(spark, s"$out/g$i").size shouldBe 1
+    SparkEntry.withTempRoot(spark, "graft_compact") { dir =>
+      val in = s"$dir/in"; val out = s"$dir/out"
+      val df = (0 until 1000).map(i => (i.toLong, s"row $i")).toDF("id", "s")
+      df.repartition(20).write.mode("overwrite").parquet(in) // 20 tiny files
+      val files = Compaction.listParquet(spark, in)
+      files.size shouldBe 20
+      val total = files.map(_._2).sum
+      val groups = Compaction.plan(files, targetBytes = total / 4 + 1)
+      val nOut = Compaction.compact(spark, in, groups, out)
+      nOut should be < files.size
+      nOut shouldBe groups.size
+      // contents survive exactly
+      val back = spark.read.parquet(s"$out/g*")
+      back.count() shouldBe 1000L
+      back.orderBy(col("id")).collect().map(_.getLong(0)) shouldBe (0L until 1000L).toArray
+      // and the rewrite really produced one file per group
+      for (i <- groups.indices)
+        Compaction.listParquet(spark, s"$out/g$i").size shouldBe 1
+    }
   }
 }

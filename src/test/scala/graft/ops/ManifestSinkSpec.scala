@@ -1,83 +1,85 @@
 package graft.ops
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
-
-import java.nio.file.Files
 
 class ManifestSinkSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft_manifest").toString + "/tbl"
-
   test("publish/read round-trip; a republish swaps atomically; orphans are invisible") {
-    val dir = tmp()
-    val v0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    ManifestSink.publish(v0, dir) shouldBe 0L
-    ManifestSink.read(spark, dir).orderBy("id").collect().map(_.getLong(0)) shouldBe Array(1L, 2L)
-    // plant an ORPHAN parquet file in the live data dir (a failed later
-    // job's leftovers) — the manifest read must not see it
-    Seq((99L, "orphan")).toDF("id", "s").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/orphan_stage")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val orphanSrc = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/orphan_stage"))
-      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
-    fs.rename(orphanSrc, new org.apache.hadoop.fs.Path(s"$dir/data-v0/zz-orphan.parquet"))
-    ManifestSink.read(spark, dir).count() shouldBe 2L // manifest-listed files only
-    spark.read.parquet(s"$dir/data-v0").count() shouldBe 3L // the dir listing WOULD see it
-    // republish: readers of the new version see only the new data
-    val v1 = Seq((10L, "x"), (11L, "y"), (12L, "z")).toDF("id", "s")
-    ManifestSink.publish(v1, dir) shouldBe 1L
-    ManifestSink.currentVersion(spark, dir) shouldBe Some(1L)
-    ManifestSink.read(spark, dir).orderBy("id").collect().map(_.getLong(0)) shouldBe
-      Array(10L, 11L, 12L)
+    SparkEntry.withTempRoot(spark, "graft_manifest") { root =>
+      val dir = root + "/tbl"
+      val v0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+      ManifestSink.publish(v0, dir) shouldBe 0L
+      ManifestSink.read(spark, dir).orderBy("id").collect().map(_.getLong(0)) shouldBe Array(1L, 2L)
+      // plant an ORPHAN parquet file in the live data dir (a failed later
+      // job's leftovers) — the manifest read must not see it
+      Seq((99L, "orphan")).toDF("id", "s").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/orphan_stage")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val orphanSrc = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/orphan_stage"))
+        .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
+      fs.rename(orphanSrc, new org.apache.hadoop.fs.Path(s"$dir/data-v0/zz-orphan.parquet"))
+      ManifestSink.read(spark, dir).count() shouldBe 2L // manifest-listed files only
+      spark.read.parquet(s"$dir/data-v0").count() shouldBe 3L // the dir listing WOULD see it
+      // republish: readers of the new version see only the new data
+      val v1 = Seq((10L, "x"), (11L, "y"), (12L, "z")).toDF("id", "s")
+      ManifestSink.publish(v1, dir) shouldBe 1L
+      ManifestSink.currentVersion(spark, dir) shouldBe Some(1L)
+      ManifestSink.read(spark, dir).orderBy("id").collect().map(_.getLong(0)) shouldBe
+        Array(10L, 11L, 12L)
+    }
   }
 
   test("an uncommitted data directory (crashed publish) is invisible and vacuumed") {
-    val dir = tmp()
-    ManifestSink.publish(Seq((1L, "a")).toDF("id", "s"), dir)
-    // simulate a publish that wrote data but died before its manifest
-    Seq((50L, "ghost")).toDF("id", "s").write.parquet(s"$dir/data-v1")
-    ManifestSink.currentVersion(spark, dir) shouldBe Some(0L)
-    ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
-    // vacuum removes the ghost (and nothing live)
-    ManifestSink.vacuum(spark, dir) shouldBe 1
-    ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
-    // a NEXT publish lands at version 1... data dir name collision with
-    // the vacuumed ghost is fine because vacuum removed it
-    ManifestSink.publish(Seq((2L, "b")).toDF("id", "s"), dir) shouldBe 1L
-    ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
-    // vacuum now drops version 0's data + stale manifest
-    ManifestSink.vacuum(spark, dir) shouldBe 1
-    ManifestSink.currentVersion(spark, dir) shouldBe Some(1L)
-    ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
+    SparkEntry.withTempRoot(spark, "graft_manifest") { root =>
+      val dir = root + "/tbl"
+      ManifestSink.publish(Seq((1L, "a")).toDF("id", "s"), dir)
+      // simulate a publish that wrote data but died before its manifest
+      Seq((50L, "ghost")).toDF("id", "s").write.parquet(s"$dir/data-v1")
+      ManifestSink.currentVersion(spark, dir) shouldBe Some(0L)
+      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
+      // vacuum removes the ghost (and nothing live)
+      ManifestSink.vacuum(spark, dir) shouldBe 1
+      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
+      // a NEXT publish lands at version 1... data dir name collision with
+      // the vacuumed ghost is fine because vacuum removed it
+      ManifestSink.publish(Seq((2L, "b")).toDF("id", "s"), dir) shouldBe 1L
+      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
+      // vacuum now drops version 0's data + stale manifest
+      ManifestSink.vacuum(spark, dir) shouldBe 1
+      ManifestSink.currentVersion(spark, dir) shouldBe Some(1L)
+      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
+    }
   }
 
   test("explicit-version surface: publishAt rewrites torn attempts, refuses committed versions, readAt time-travels") {
-    val dir = tmp()
-    ManifestSink.publishAt(Seq((1L, "a")).toDF("id", "s"), dir, version = 5L)
-    ManifestSink.committedVersions(spark, dir) shouldBe Seq(5L)
-    // a torn LATER attempt (data written, manifest never renamed) is
-    // invisible, then deleted and rewritten by a publishAt at its version
-    Seq((66L, "torn")).toDF("id", "s").write.parquet(s"$dir/data-v9")
-    ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
-    ManifestSink.publishAt(Seq((2L, "b")).toDF("id", "s"), dir, version = 9L)
-    ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
-    // time travel reads a specific committed version
-    ManifestSink.readAt(spark, dir, 5L).collect().map(_.getLong(0)) shouldBe Array(1L)
-    // a committed version refuses a republish — replay must skip instead
-    intercept[IllegalArgumentException] {
-      ManifestSink.publishAt(Seq((3L, "c")).toDF("id", "s"), dir, version = 9L)
-    }.getMessage should include("already committed")
-    // retention-aware vacuum: keepLast = 2 preserves both versions for
-    // time travel; the default form then collapses to the latest only
-    ManifestSink.vacuum(spark, dir, keepLast = 2) shouldBe 0
-    ManifestSink.readAt(spark, dir, 5L).count() shouldBe 1L
-    ManifestSink.vacuum(spark, dir) shouldBe 1
-    ManifestSink.committedVersions(spark, dir) shouldBe Seq(9L)
-    intercept[java.io.FileNotFoundException] {
-      ManifestSink.readAt(spark, dir, 5L)
+    SparkEntry.withTempRoot(spark, "graft_manifest") { root =>
+      val dir = root + "/tbl"
+      ManifestSink.publishAt(Seq((1L, "a")).toDF("id", "s"), dir, version = 5L)
+      ManifestSink.committedVersions(spark, dir) shouldBe Seq(5L)
+      // a torn LATER attempt (data written, manifest never renamed) is
+      // invisible, then deleted and rewritten by a publishAt at its version
+      Seq((66L, "torn")).toDF("id", "s").write.parquet(s"$dir/data-v9")
+      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
+      ManifestSink.publishAt(Seq((2L, "b")).toDF("id", "s"), dir, version = 9L)
+      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
+      // time travel reads a specific committed version
+      ManifestSink.readAt(spark, dir, 5L).collect().map(_.getLong(0)) shouldBe Array(1L)
+      // a committed version refuses a republish — replay must skip instead
+      intercept[IllegalArgumentException] {
+        ManifestSink.publishAt(Seq((3L, "c")).toDF("id", "s"), dir, version = 9L)
+      }.getMessage should include("already committed")
+      // retention-aware vacuum: keepLast = 2 preserves both versions for
+      // time travel; the default form then collapses to the latest only
+      ManifestSink.vacuum(spark, dir, keepLast = 2) shouldBe 0
+      ManifestSink.readAt(spark, dir, 5L).count() shouldBe 1L
+      ManifestSink.vacuum(spark, dir) shouldBe 1
+      ManifestSink.committedVersions(spark, dir) shouldBe Seq(9L)
+      intercept[java.io.FileNotFoundException] {
+        ManifestSink.readAt(spark, dir, 5L)
+      }
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** exportAsOf (snapshot clone) + describe (DESCRIBE DETAIL) over the
@@ -19,18 +19,8 @@ class StoreLifecycleSpec extends SparkSpec {
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
     df.select($"doc_id", $"text").as[(Long, String)].collect().sortBy(_._1).toSeq
 
-  private def tmp() =
-    java.nio.file.Files.createTempDirectory("graft_lifecycle").toString
-
-  private def rm(root: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
-  }
-
   test("LexIngest.describe: per-component commit state, forget backlog counts requests, corpus_n tracks the stats live count across maintenance") {
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       val lexDocs = (0L until 30L)
         .map(i => (i, s"doc $i body" + (" pad" * (i % 3).toInt)))
         .toDF("doc_id", "text")
@@ -74,12 +64,11 @@ class StoreLifecycleSpec extends SparkSpec {
       after("stats")._8 shouldBe 28L
       after("stats")._9 shouldBe expectedDl
       after("postings")._3 shouldBe 1L // one generation dir
-    } finally rm(root)
+    }
   }
 
   test("exportAsOf: clone == liveViewAsOf, survives source compaction past retention") {
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       build(root)
       DocStoreIngest.markDeleted(spark, s"$root/docs", Seq(6L, 7L))
       val want = rowsOf(DocStoreIngest.viewAsOf(spark, s"$root/docs", 1L))
@@ -107,12 +96,11 @@ class StoreLifecycleSpec extends SparkSpec {
       // ...and clone-side forget never leaks back to the source
       rowsOf(DocStoreIngest.view(spark, s"$root/docs"))
         .map(_._1) should contain(0L)
-    } finally rm(root)
+    }
   }
 
   test("exportAsOf refuses an existing destination; a torn staging dir retries clean") {
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       build(root)
       // torn prior attempt: stale staging content must not leak into the export
       val fs = new org.apache.hadoop.fs.Path(root)
@@ -123,13 +111,12 @@ class StoreLifecycleSpec extends SparkSpec {
         rowsOf(corpus)
       an[IllegalArgumentException] should be thrownBy
         StoreCompaction.exportAsOf(spark, s"$root/docs", "doc_id", 2L, s"$root/snap")
-    } finally rm(root)
+    }
   }
 
   test("LexIngest.exportAsOf: frozen BM25 snapshot — clone probe bitwise the as-of ranking, immune to source compact/vacuum/forget") {
-    val root = tmp()
     val terms = Seq("doc", "body", "5")
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       val lexDocs = (0L until 30L)
         .map(i => (i, s"doc $i body" + (" filler" * (i % 4).toInt)))
         .toDF("doc_id", "text")
@@ -176,13 +163,12 @@ class StoreLifecycleSpec extends SparkSpec {
       // immutability + empty-snapshot refusals (the single-store rules)
       an[IllegalArgumentException] should be thrownBy
         LexIngest.exportAsOf(spark, s"$root/lex", 2L, s"$root/snap")
-    } finally rm(root)
+    }
   }
 
   test("VectorIndexIngest.exportAsOf: frozen ANN snapshot — clone probes through ITS OWN quantizer, immune to source compact/vacuum/forget; codes-only source refused") {
     import graft.llm.Similarity
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       val quant = Similarity.trainIvfPqQuantizer(
         e, Seq(11L, 57L, 201L, 401L), Seq(3L, 29L, 118L, 222L), 4)
@@ -228,12 +214,11 @@ class StoreLifecycleSpec extends SparkSpec {
         .write.partitionBy("ingest_batch").parquet(s"$root/bare")
       an[IllegalArgumentException] should be thrownBy
         VectorIndexIngest.exportAsOf(spark, s"$root/bare", 0L, s"$root/snap2")
-    } finally rm(root)
+    }
   }
 
   test("exportAsOf refuses an EMPTY as-of view (every row deletion-vectored)") {
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       build(root)
       // forget the whole corpus: the retroactive subtraction empties
       // every historical snapshot, and exporting one would publish a
@@ -246,12 +231,11 @@ class StoreLifecycleSpec extends SparkSpec {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.exists(new org.apache.hadoop.fs.Path(s"$root/snap")) shouldBe false
       fs.exists(new org.apache.hadoop.fs.Path(s"$root/snap.staging")) shouldBe false
-    } finally rm(root)
+    }
   }
 
   test("describe: fresh store values, then post-compact convergence") {
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       build(root)
       DocStoreIngest.markDeleted(spark, s"$root/docs", Seq(6L, 7L, 999L)) // 999 = ghost
       val before = StoreCompaction.describe(spark, s"$root/docs", "doc_id")
@@ -263,12 +247,11 @@ class StoreLifecycleSpec extends SparkSpec {
       val after = StoreCompaction.describe(spark, s"$root/docs", "doc_id")
         .as[(Long, Long, Long, Long, Long, Long, Long)].head()
       after shouldBe ((1L, 2L, 1L, 0L, 0L, 28L, 28L))
-    } finally rm(root)
+    }
   }
 
   test("describe: no-deletes path reports n_live == n_committed; new batches count as live") {
-    val root = tmp()
-    try {
+    SparkEntry.withTempRoot(spark, "graft_lifecycle") { root =>
       build(root)
       DocStoreIngest.compact(spark, s"$root/docs")
       // one fresh batch lands ABOVE the watershed
@@ -279,6 +262,6 @@ class StoreLifecycleSpec extends SparkSpec {
       // generation 1 covering <=2; dirs: batches 0,1,2 (unvacuumed), gen -1,
       // batch 3 => 5 parts, 1 live batch; 31 rows committed and live
       d shouldBe ((1L, 2L, 5L, 1L, 0L, 31L, 31L))
-    } finally rm(root)
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum}
 
@@ -47,125 +47,129 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("hourlyWindowedStats over a FILE stream equals the batch result") {
-    val dir = java.nio.file.Files.createTempDirectory("evstream").toString
-    val batch = Seq(
-      (ts("10:05:00"), "click", 1.0),
-      (ts("10:40:00"), "click", 2.0),
-      (ts("11:00:00"), "view", 3.0)).toDF("ts", "event_type", "value")
-    batch.write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(batch.schema).parquet(dir)
-    val q = EventStream.hourlyWindowedStats(stream)
-      .writeStream.format("memory").queryName("filewin").outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT * FROM filewin").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      val direct = EventStream.hourlyWindowedStats(batch).collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-      streamed shouldBe direct
-    } finally q.stop()
+    SparkEntry.withTempRoot(spark, "evstream") { dir =>
+      val batch = Seq(
+        (ts("10:05:00"), "click", 1.0),
+        (ts("10:40:00"), "click", 2.0),
+        (ts("11:00:00"), "view", 3.0)).toDF("ts", "event_type", "value")
+      batch.write.mode("overwrite").parquet(dir)
+      val stream = spark.readStream.schema(batch.schema).parquet(dir)
+      val q = EventStream.hourlyWindowedStats(stream)
+        .writeStream.format("memory").queryName("filewin").outputMode("complete").start()
+      try {
+        q.processAllAvailable()
+        val streamed = spark.sql("SELECT * FROM filewin").collect()
+          .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+        val direct = EventStream.hourlyWindowedStats(batch).collect()
+          .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+        streamed shouldBe direct
+      } finally q.stop()
+    }
   }
 
   test("streaming ingest dedup: near-dups of earlier batches never reach the corpus") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ingest").toString
-    val corpusPath = s"$dir/corpus"
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val mem = MemoryStream[(Long, String)]
-    val q = IngestDedup.start(mem.toDF.toDF("doc_id", "text"),
-      corpusPath, s"$dir/ck", threshold = 0.5)
-    try {
-      mem.addData((1L, a), (2L, "one two three four five six seven"))
-      q.processAllAvailable()
-      // batch 2: 10 dups batch 1's doc 1; 11/12 duplicate each other
-      mem.addData((10L, a),
-        (11L, "red green blue cyan magenta yellow black white"),
-        (12L, "red green blue cyan magenta yellow black white"))
-      q.processAllAvailable()
-      val corpus = spark.read.parquet(corpusPath)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      corpus shouldBe Set(1L, 2L, 11L) // 10 dropped vs corpus, 12 within batch
-      // idempotent sink: replaying a batch overwrites its partition, not appends
-      IngestDedup.ingestBatch(Seq((11L, "red green blue cyan magenta yellow black white"),
-        (12L, "red green blue cyan magenta yellow black white"))
-        .toDF("doc_id", "text"), corpusPath, batchId = 1L, threshold = 0.5)
-      val again = spark.read.parquet(corpusPath)
-        .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
-      again shouldBe Seq(1L, 2L, 11L) // same rows — no duplicate 11
-    } finally q.stop()
+    SparkEntry.withTempRoot(spark, "ingest") { dir =>
+      val corpusPath = s"$dir/corpus"
+      val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val mem = MemoryStream[(Long, String)]
+      val q = IngestDedup.start(mem.toDF.toDF("doc_id", "text"),
+        corpusPath, s"$dir/ck", threshold = 0.5)
+      try {
+        mem.addData((1L, a), (2L, "one two three four five six seven"))
+        q.processAllAvailable()
+        // batch 2: 10 dups batch 1's doc 1; 11/12 duplicate each other
+        mem.addData((10L, a),
+          (11L, "red green blue cyan magenta yellow black white"),
+          (12L, "red green blue cyan magenta yellow black white"))
+        q.processAllAvailable()
+        val corpus = spark.read.parquet(corpusPath)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        corpus shouldBe Set(1L, 2L, 11L) // 10 dropped vs corpus, 12 within batch
+        // idempotent sink: replaying a batch overwrites its partition, not appends
+        IngestDedup.ingestBatch(Seq((11L, "red green blue cyan magenta yellow black white"),
+          (12L, "red green blue cyan magenta yellow black white"))
+          .toDF("doc_id", "text"), corpusPath, batchId = 1L, threshold = 0.5)
+        val again = spark.read.parquet(corpusPath)
+          .select("doc_id").collect().map(_.getLong(0)).toSeq.sorted
+        again shouldBe Seq(1L, 2L, 11L) // same rows — no duplicate 11
+      } finally q.stop()
+    }
   }
 
   test("quality gate: failing batch quarantined whole, passing accepted, replay idempotent") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("qgate").toString
-    val (acc, quar, ver) = (s"$dir/accepted", s"$dir/quarantine", s"$dir/verdicts")
-    val rules = Seq[(String, org.apache.spark.sql.Column)](
-      "nonneg_value" -> (col("value") < 0))
-    val mem = MemoryStream[(Long, Double)]
-    val q = QualityGate.start(mem.toDF.toDF("doc_id", "value"),
-      rules, acc, quar, ver, s"$dir/ck")
-    try {
-      mem.addData((1L, 5.0), (2L, 3.0))   // clean batch -> accepted
-      q.processAllAvailable()
-      mem.addData((3L, 7.0), (4L, -1.0))  // one bad row -> batch quarantined WHOLE
-      q.processAllAvailable()
-      spark.read.parquet(acc).select("doc_id").collect()
-        .map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
-      spark.read.parquet(quar).select("doc_id").collect()
-        .map(_.getLong(0)).toSet shouldBe Set(3L, 4L) // clean row 3 NOT admitted
-      // verdict log carries both batches' check results
-      // gate_batch comes back from the partition directory as an int
-      val v = spark.read.parquet(ver)
-        .select(col("gate_batch").cast("long"), col("n_violations"), col("passed"))
-        .collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      v(0L) shouldBe ((0L, true))
-      v(1L) shouldBe ((1L, false))
-      // replay of the failing batch overwrites its own partitions: same verdict,
-      // same quarantine rows, nothing lands in accepted
-      QualityGate.gateBatch(Seq((3L, 7.0), (4L, -1.0)).toDF("doc_id", "value"),
-        rules, acc, quar, ver, batchId = 1L)
-      spark.read.parquet(quar).select("doc_id").collect()
-        .map(_.getLong(0)).toSeq.sorted shouldBe Seq(3L, 4L)
-      spark.read.parquet(acc).select("doc_id").collect()
-        .map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
-    } finally q.stop()
+    SparkEntry.withTempRoot(spark, "qgate") { dir =>
+      val (acc, quar, ver) = (s"$dir/accepted", s"$dir/quarantine", s"$dir/verdicts")
+      val rules = Seq[(String, org.apache.spark.sql.Column)](
+        "nonneg_value" -> (col("value") < 0))
+      val mem = MemoryStream[(Long, Double)]
+      val q = QualityGate.start(mem.toDF.toDF("doc_id", "value"),
+        rules, acc, quar, ver, s"$dir/ck")
+      try {
+        mem.addData((1L, 5.0), (2L, 3.0))   // clean batch -> accepted
+        q.processAllAvailable()
+        mem.addData((3L, 7.0), (4L, -1.0))  // one bad row -> batch quarantined WHOLE
+        q.processAllAvailable()
+        spark.read.parquet(acc).select("doc_id").collect()
+          .map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
+        spark.read.parquet(quar).select("doc_id").collect()
+          .map(_.getLong(0)).toSet shouldBe Set(3L, 4L) // clean row 3 NOT admitted
+        // verdict log carries both batches' check results
+        // gate_batch comes back from the partition directory as an int
+        val v = spark.read.parquet(ver)
+          .select(col("gate_batch").cast("long"), col("n_violations"), col("passed"))
+          .collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+        v(0L) shouldBe ((0L, true))
+        v(1L) shouldBe ((1L, false))
+        // replay of the failing batch overwrites its own partitions: same verdict,
+        // same quarantine rows, nothing lands in accepted
+        QualityGate.gateBatch(Seq((3L, 7.0), (4L, -1.0)).toDF("doc_id", "value"),
+          rules, acc, quar, ver, batchId = 1L)
+        spark.read.parquet(quar).select("doc_id").collect()
+          .map(_.getLong(0)).toSeq.sorted shouldBe Seq(3L, 4L)
+        spark.read.parquet(acc).select("doc_id").collect()
+          .map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
+      } finally q.stop()
+    }
   }
 
   test("indexed ingest: same corpus as the re-banding loop, index maintained, replay idempotent") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("idxingest").toString
-    val corpusPath = s"$dir/corpus"; val indexPath = s"$dir/index"
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val b2 = Seq((10L, a),
-      (11L, "red green blue cyan magenta yellow black white"),
-      (12L, "red green blue cyan magenta yellow black white"))
-    val mem = MemoryStream[(Long, String)]
-    val q = IndexedIngest.start(mem.toDF.toDF("doc_id", "text"),
-      corpusPath, indexPath, s"$dir/ck", threshold = 0.5)
-    try {
-      mem.addData((1L, a), (2L, "one two three four five six seven"))
-      q.processAllAvailable()
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      // identical POLICY outcome to IngestDedup's fixture: 10 dups the
-      // corpus, 12 dups 11 within the batch
-      spark.read.parquet(corpusPath)
-        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L)
-      // the index holds band rows for exactly the survivors, per batch
-      val idx = spark.read.parquet(indexPath)
-      idx.select("doc_id").distinct().collect().map(_.getLong(0)).toSet shouldBe
-        Set(1L, 2L, 11L)
-      idx.filter(col("ingest_batch") === 1L)
-        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet shouldBe Set(11L)
-      // replay batch 1: both stores overwrite their own partitions
-      val before = idx.orderBy("doc_id", "band").collect().toSeq
-      IndexedIngest.ingestBatch(b2.toDF("doc_id", "text"),
-        corpusPath, indexPath, batchId = 1L, threshold = 0.5)
-      spark.read.parquet(corpusPath)
-        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L)
-      spark.read.parquet(indexPath).orderBy("doc_id", "band").collect().toSeq shouldBe before
-    } finally q.stop()
+    SparkEntry.withTempRoot(spark, "idxingest") { dir =>
+      val corpusPath = s"$dir/corpus"; val indexPath = s"$dir/index"
+      val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+      val b2 = Seq((10L, a),
+        (11L, "red green blue cyan magenta yellow black white"),
+        (12L, "red green blue cyan magenta yellow black white"))
+      val mem = MemoryStream[(Long, String)]
+      val q = IndexedIngest.start(mem.toDF.toDF("doc_id", "text"),
+        corpusPath, indexPath, s"$dir/ck", threshold = 0.5)
+      try {
+        mem.addData((1L, a), (2L, "one two three four five six seven"))
+        q.processAllAvailable()
+        mem.addData(b2: _*)
+        q.processAllAvailable()
+        // identical POLICY outcome to IngestDedup's fixture: 10 dups the
+        // corpus, 12 dups 11 within the batch
+        spark.read.parquet(corpusPath)
+          .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L)
+        // the index holds band rows for exactly the survivors, per batch
+        val idx = spark.read.parquet(indexPath)
+        idx.select("doc_id").distinct().collect().map(_.getLong(0)).toSet shouldBe
+          Set(1L, 2L, 11L)
+        idx.filter(col("ingest_batch") === 1L)
+          .select("doc_id").distinct().collect().map(_.getLong(0)).toSet shouldBe Set(11L)
+        // replay batch 1: both stores overwrite their own partitions
+        val before = idx.orderBy("doc_id", "band").collect().toSeq
+        IndexedIngest.ingestBatch(b2.toDF("doc_id", "text"),
+          corpusPath, indexPath, batchId = 1L, threshold = 0.5)
+        spark.read.parquet(corpusPath)
+          .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L)
+        spark.read.parquet(indexPath).orderBy("doc_id", "band").collect().toSeq shouldBe before
+      } finally q.stop()
+    }
   }
 
   test("indexed ingest: torn first batch (corpus written, index missing) replays instead of wedging") {
@@ -173,30 +177,31 @@ class StreamingSpec extends SparkSpec {
     // corpusPath but indexPath was never created — the prior branch used
     // to read indexPath unconditionally and throw PATH_NOT_FOUND on
     // every replay, wedging the stream permanently
-    val dir = java.nio.file.Files.createTempDirectory("tornidx").toString
-    val corpusPath = s"$dir/corpus"; val indexPath = s"$dir/index"
-    val b0 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
-    IndexedIngest.ingestBatch(b0, corpusPath, indexPath, batchId = 0L, threshold = 0.5)
-    // simulate the torn state: corpus partition present, index gone
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true) shouldBe true
-    // replay of batch 0 must succeed and rebuild both stores
-    noException should be thrownBy
+    SparkEntry.withTempRoot(spark, "tornidx") { dir =>
+      val corpusPath = s"$dir/corpus"; val indexPath = s"$dir/index"
+      val b0 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
       IndexedIngest.ingestBatch(b0, corpusPath, indexPath, batchId = 0L, threshold = 0.5)
-    spark.read.parquet(corpusPath)
-      .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
-    spark.read.parquet(indexPath)
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
-    // and the stream continues normally afterwards
-    IndexedIngest.ingestBatch(
-      Seq((10L, "alpha beta gamma delta epsilon zeta eta theta"),
-        (11L, "nine ten eleven twelve thirteen fourteen fifteen sixteen"))
-        .toDF("doc_id", "text"),
-      corpusPath, indexPath, batchId = 1L, threshold = 0.5)
-    spark.read.parquet(corpusPath)
-      .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L)
+      // simulate the torn state: corpus partition present, index gone
+      val fs = new org.apache.hadoop.fs.Path(indexPath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(indexPath), true) shouldBe true
+      // replay of batch 0 must succeed and rebuild both stores
+      noException should be thrownBy
+        IndexedIngest.ingestBatch(b0, corpusPath, indexPath, batchId = 0L, threshold = 0.5)
+      spark.read.parquet(corpusPath)
+        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
+      spark.read.parquet(indexPath)
+        .select("doc_id").distinct().collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L)
+      // and the stream continues normally afterwards
+      IndexedIngest.ingestBatch(
+        Seq((10L, "alpha beta gamma delta epsilon zeta eta theta"),
+          (11L, "nine ten eleven twelve thirteen fourteen fifteen sixteen"))
+          .toDF("doc_id", "text"),
+        corpusPath, indexPath, batchId = 1L, threshold = 0.5)
+      spark.read.parquet(corpusPath)
+        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L)
+    }
   }
 
   test("indexed ingest: index lost beside PRIOR corpus batches raises instead of degrading") {
@@ -204,45 +209,47 @@ class StreamingSpec extends SparkSpec {
     // replay; if real prior batches exist and the index vanished
     // (external deletion, partial restore), silently proceeding would
     // degrade cross-batch near-dup to within-batch-only — must raise
-    val dir = java.nio.file.Files.createTempDirectory("lostidx").toString
-    val corpusPath = s"$dir/corpus"; val indexPath = s"$dir/index"
-    val b0 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
-      .toDF("doc_id", "text")
-    IndexedIngest.ingestBatch(b0, corpusPath, indexPath, batchId = 0L, threshold = 0.5)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true) shouldBe true
-    val ex = intercept[IllegalArgumentException] {
-      IndexedIngest.ingestBatch(
-        Seq((10L, "nine ten eleven twelve thirteen fourteen"))
-          .toDF("doc_id", "text"),
-        corpusPath, indexPath, batchId = 1L, threshold = 0.5)
+    SparkEntry.withTempRoot(spark, "lostidx") { dir =>
+      val corpusPath = s"$dir/corpus"; val indexPath = s"$dir/index"
+      val b0 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
+        .toDF("doc_id", "text")
+      IndexedIngest.ingestBatch(b0, corpusPath, indexPath, batchId = 0L, threshold = 0.5)
+      val fs = new org.apache.hadoop.fs.Path(indexPath)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(indexPath), true) shouldBe true
+      val ex = intercept[IllegalArgumentException] {
+        IndexedIngest.ingestBatch(
+          Seq((10L, "nine ten eleven twelve thirteen fourteen"))
+            .toDF("doc_id", "text"),
+          corpusPath, indexPath, batchId = 1L, threshold = 0.5)
+      }
+      ex.getMessage should include("band index missing")
+      ex.getMessage should include("prior batches 0")
     }
-    ex.getMessage should include("band index missing")
-    ex.getMessage should include("prior batches 0")
   }
 
   test("ingest failure paths release their caches: a store path that is a regular file leaves nothing cached") {
     // each write throws (the store path cannot become a directory); the
     // frames an ingest persisted on the way must not outlive the call
-    val dir = java.nio.file.Files.createTempDirectory("ingestfail").toString
-    val file = java.nio.file.Files.createFile(
-      java.nio.file.Paths.get(dir, "not-a-dir")).toString
-    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
-    val ingests: Seq[(String, () => Unit)] = Seq(
-      "IngestDedup" -> (() =>
-        IngestDedup.ingestBatch(docs, file, batchId = 0L, threshold = 0.5)),
-      "IndexedIngest" -> (() =>
-        IndexedIngest.ingestBatch(docs, s"$dir/idx-corpus", file,
-          batchId = 0L, threshold = 0.5)),
-      "SpanIngest" -> (() =>
-        SpanIngest.ingestBatch(docs, s"$dir/span-corpus", file,
-          batchId = 0L, n = 3)))
-    for ((name, ingest) <- ingests) withClue(s"$name: ") {
-      spark.catalog.clearCache()
-      an[Exception] should be thrownBy ingest()
-      spark.sharedState.cacheManager.isEmpty shouldBe true
+    SparkEntry.withTempRoot(spark, "ingestfail") { dir =>
+      val file = java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(dir, "not-a-dir")).toString
+      val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+        (2L, "one two three four five six seven eight")).toDF("doc_id", "text")
+      val ingests: Seq[(String, () => Unit)] = Seq(
+        "IngestDedup" -> (() =>
+          IngestDedup.ingestBatch(docs, file, batchId = 0L, threshold = 0.5)),
+        "IndexedIngest" -> (() =>
+          IndexedIngest.ingestBatch(docs, s"$dir/idx-corpus", file,
+            batchId = 0L, threshold = 0.5)),
+        "SpanIngest" -> (() =>
+          SpanIngest.ingestBatch(docs, s"$dir/span-corpus", file,
+            batchId = 0L, n = 3)))
+      for ((name, ingest) <- ingests) withClue(s"$name: ") {
+        spark.catalog.clearCache()
+        an[Exception] should be thrownBy ingest()
+        spark.sharedState.cacheManager.isEmpty shouldBe true
+      }
     }
   }
 
@@ -281,419 +288,430 @@ class StreamingSpec extends SparkSpec {
 
   test("corpusCardDiffStream: per-trigger drift vs the committed release card; equals the batch corpusCardDiff card columns on the release pair") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("carddiff").toString
-    val thr = (2, 100, 1.0, 10.0, 0, 0.5)
-    // the committed release: web-only, two docs
-    val release = Seq((1L, "the cat sat on the mat", "web", "en"),
-      (2L, "x", "web", "en"))
-    val releaseCard = graft.llm.TextAnalysis.datasheet(
-        release.toDF("doc_id", "text", "source", "lang"),
-        thr._1, thr._2, thr._3, thr._4, thr._5, thr._6)
-      .select("source", "n_docs", "n_tokens", "n_gopher_pass")
-    val mem = MemoryStream[(Long, String, String, String)]
-    val q = QualityGate.corpusCardDiffStream(
-      mem.toDF.toDF("doc_id", "text", "source", "lang"), releaseCard,
-      s"$dir/out", s"$dir/ck", thr._1, thr._2, thr._3, thr._4, thr._5, thr._6)
-    def latest() = {
-      val all = spark.read.parquet(s"$dir/out")
-      // monitor_batch is a partition column: round-trips as INT
-      val last = all.agg(org.apache.spark.sql.functions.max(
-        col("monitor_batch").cast("long"))).head().getLong(0)
-      all.filter(col("monitor_batch") === last).orderBy("source").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
-          r.getLong(8), r.getLong(9))).toSeq
+    SparkEntry.withTempRoot(spark, "carddiff") { dir =>
+      val thr = (2, 100, 1.0, 10.0, 0, 0.5)
+      // the committed release: web-only, two docs
+      val release = Seq((1L, "the cat sat on the mat", "web", "en"),
+        (2L, "x", "web", "en"))
+      val releaseCard = graft.llm.TextAnalysis.datasheet(
+          release.toDF("doc_id", "text", "source", "lang"),
+          thr._1, thr._2, thr._3, thr._4, thr._5, thr._6)
+        .select("source", "n_docs", "n_tokens", "n_gopher_pass")
+      val mem = MemoryStream[(Long, String, String, String)]
+      val q = QualityGate.corpusCardDiffStream(
+        mem.toDF.toDF("doc_id", "text", "source", "lang"), releaseCard,
+        s"$dir/out", s"$dir/ck", thr._1, thr._2, thr._3, thr._4, thr._5, thr._6)
+      def latest() = {
+        val all = spark.read.parquet(s"$dir/out")
+        // monitor_batch is a partition column: round-trips as INT
+        val last = all.agg(org.apache.spark.sql.functions.max(
+          col("monitor_batch").cast("long"))).head().getLong(0)
+        all.filter(col("monitor_batch") === last).orderBy("source").collect()
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7),
+            r.getLong(8), r.getLong(9))).toSeq
+      }
+      val b1 = Seq((1L, "the cat sat on the mat", "web", "en")) // re-ingest of release doc 1
+      val b2 = Seq((3L, "more words arrive here", "books", "en"),
+        (4L, "the 99 of 42", "web", "en"))
+      try {
+        mem.addData(b1: _*)
+        q.processAllAvailable()
+        // live: web(1 doc, 6 tok, 1 pass); release: web(2, 7, 1)
+        latest() shouldBe Seq(("web", 2L, 1L, -1L, 7L, 6L, -1L, 1L, 1L, 0L))
+        mem.addData(b2: _*)
+        q.processAllAvailable()
+        // books is live-only -> release side coalesces to 0
+        latest() shouldBe Seq(
+          ("books", 0L, 1L, 1L, 0L, 4L, 4L, 0L, 1L, 1L),
+          ("web", 2L, 2L, 0L, 7L, 10L, 3L, 1L, 2L, 1L))
+      } finally q.stop()
+      // the monitor's final row set equals the BATCH corpusCardDiff's card
+      // columns over the same (release, live) snapshot pair
+      val batchDiff = graft.analytics.DataQuality.corpusCardDiff(
+          release.toDF("doc_id", "text", "source", "lang"),
+          (b1 ++ b2).toDF("doc_id", "text", "source", "lang"),
+          thr._1, thr._2, thr._3, thr._4, thr._5, thr._6)
+        .orderBy("source").collect()
+        .map(r => (r.getString(0),
+          r.getAs[Long]("docs_old"), r.getAs[Long]("docs_new"),
+          r.getAs[Long]("tokens_old"), r.getAs[Long]("tokens_new"),
+          r.getAs[Long]("token_delta"),
+          r.getAs[Long]("pass_old"), r.getAs[Long]("pass_new"))).toSeq
+      latest().map(t => (t._1, t._2, t._3, t._5, t._6, t._7, t._8, t._9)) shouldBe batchDiff
     }
-    val b1 = Seq((1L, "the cat sat on the mat", "web", "en")) // re-ingest of release doc 1
-    val b2 = Seq((3L, "more words arrive here", "books", "en"),
-      (4L, "the 99 of 42", "web", "en"))
-    try {
-      mem.addData(b1: _*)
-      q.processAllAvailable()
-      // live: web(1 doc, 6 tok, 1 pass); release: web(2, 7, 1)
-      latest() shouldBe Seq(("web", 2L, 1L, -1L, 7L, 6L, -1L, 1L, 1L, 0L))
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      // books is live-only -> release side coalesces to 0
-      latest() shouldBe Seq(
-        ("books", 0L, 1L, 1L, 0L, 4L, 4L, 0L, 1L, 1L),
-        ("web", 2L, 2L, 0L, 7L, 10L, 3L, 1L, 2L, 1L))
-    } finally q.stop()
-    // the monitor's final row set equals the BATCH corpusCardDiff's card
-    // columns over the same (release, live) snapshot pair
-    val batchDiff = graft.analytics.DataQuality.corpusCardDiff(
-        release.toDF("doc_id", "text", "source", "lang"),
-        (b1 ++ b2).toDF("doc_id", "text", "source", "lang"),
-        thr._1, thr._2, thr._3, thr._4, thr._5, thr._6)
-      .orderBy("source").collect()
-      .map(r => (r.getString(0),
-        r.getAs[Long]("docs_old"), r.getAs[Long]("docs_new"),
-        r.getAs[Long]("tokens_old"), r.getAs[Long]("tokens_new"),
-        r.getAs[Long]("token_delta"),
-        r.getAs[Long]("pass_old"), r.getAs[Long]("pass_new"))).toSeq
-    latest().map(t => (t._1, t._2, t._3, t._5, t._6, t._7, t._8, t._9)) shouldBe batchDiff
   }
 
   test("span ingest: batches clean against the stored corpus, index follows the CLEANED text; replay rewrites identically; index loss raises") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("spaningest").toString
-    val (c, i) = (s"$dir/c", s"$dir/i")
-    def corpus(): Seq[(Long, Long, String)] =
-      spark.read.parquet(c).select("doc_id", "n_dropped", "text")
-        .orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = SpanIngest.start(mem.toDF.toDF("doc_id", "text"), c, i, s"$dir/ck", n = 3)
-    try {
-      mem.addData((1L, "a b c d"), (2L, "p q r"))
-      q.processAllAvailable()
-      mem.addData((10L, "x a b c y"), (11L, "m n o m n o"), (12L, "p q r"))
-      q.processAllAvailable()
-      corpus() shouldBe Seq(
-        (1L, 0L, "a b c d"), (2L, 0L, "p q r"),
-        (10L, 3L, "x y"),            // 'a b c' owned by batch 0
-        (11L, 0L, "m n o m n o"),    // batch-internal repeat: kept
-        (12L, 3L, ""))               // fully owned: empties, row kept
-      // the index follows CLEANED text: doc 10 contributed no 3-grams
-      // ("x y" is too short), doc 11 contributed its m/n/o grams — a new
-      // arrival repeating doc 11's content cleans against the STORE
-      mem.addData((20L, "m n o z"))
-      q.processAllAvailable()
-      corpus().last shouldBe ((20L, 3L, "z"))
-    } finally q.stop()
-    // replay of batch 1 (same input, same prior view) rewrites its own
-    // partitions byte-identically — corpus unchanged
-    val before = corpus()
-    SpanIngest.ingestBatch(
-      Seq((10L, "x a b c y"), (11L, "m n o m n o"), (12L, "p q r"))
-        .toDF("doc_id", "text"), c, i, batchId = 1L, n = 3)
-    corpus() shouldBe before
-    // index lost beside prior corpus batches: raise, never degrade
-    val fs = new org.apache.hadoop.fs.Path(i)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(i), true) shouldBe true
-    val ex = intercept[IllegalArgumentException] {
-      SpanIngest.ingestBatch(Seq((30L, "z z z")).toDF("doc_id", "text"),
-        c, i, batchId = 3L, n = 3)
+    SparkEntry.withTempRoot(spark, "spaningest") { dir =>
+      val (c, i) = (s"$dir/c", s"$dir/i")
+      def corpus(): Seq[(Long, Long, String)] =
+        spark.read.parquet(c).select("doc_id", "n_dropped", "text")
+          .orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+      val mem = MemoryStream[(Long, String)]
+      val q = SpanIngest.start(mem.toDF.toDF("doc_id", "text"), c, i, s"$dir/ck", n = 3)
+      try {
+        mem.addData((1L, "a b c d"), (2L, "p q r"))
+        q.processAllAvailable()
+        mem.addData((10L, "x a b c y"), (11L, "m n o m n o"), (12L, "p q r"))
+        q.processAllAvailable()
+        corpus() shouldBe Seq(
+          (1L, 0L, "a b c d"), (2L, 0L, "p q r"),
+          (10L, 3L, "x y"),            // 'a b c' owned by batch 0
+          (11L, 0L, "m n o m n o"),    // batch-internal repeat: kept
+          (12L, 3L, ""))               // fully owned: empties, row kept
+        // the index follows CLEANED text: doc 10 contributed no 3-grams
+        // ("x y" is too short), doc 11 contributed its m/n/o grams — a new
+        // arrival repeating doc 11's content cleans against the STORE
+        mem.addData((20L, "m n o z"))
+        q.processAllAvailable()
+        corpus().last shouldBe ((20L, 3L, "z"))
+      } finally q.stop()
+      // replay of batch 1 (same input, same prior view) rewrites its own
+      // partitions byte-identically — corpus unchanged
+      val before = corpus()
+      SpanIngest.ingestBatch(
+        Seq((10L, "x a b c y"), (11L, "m n o m n o"), (12L, "p q r"))
+          .toDF("doc_id", "text"), c, i, batchId = 1L, n = 3)
+      corpus() shouldBe before
+      // index lost beside prior corpus batches: raise, never degrade
+      val fs = new org.apache.hadoop.fs.Path(i)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(i), true) shouldBe true
+      val ex = intercept[IllegalArgumentException] {
+        SpanIngest.ingestBatch(Seq((30L, "z z z")).toDF("doc_id", "text"),
+          c, i, batchId = 3L, n = 3)
+      }
+      ex.getMessage should include("span index missing")
     }
-    ex.getMessage should include("span index missing")
   }
 
   test("span ingest: torn first batch (corpus written, index missing) replays instead of wedging") {
     // the IndexedIngest crash window on the span stores: batch 0's
     // corpus partition landed, its gram index never did
-    val dir = java.nio.file.Files.createTempDirectory("tornspan").toString
-    val (c, i) = (s"$dir/c", s"$dir/i")
-    val b0 = Seq((1L, "a b c d"), (2L, "p q r")).toDF("doc_id", "text")
-    SpanIngest.ingestBatch(b0, c, i, batchId = 0L, n = 3)
-    val fs = new org.apache.hadoop.fs.Path(i)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(i), true) shouldBe true
-    // replay of batch 0 must succeed and rebuild both stores
-    noException should be thrownBy SpanIngest.ingestBatch(b0, c, i, batchId = 0L, n = 3)
-    def corpus(): Seq[(Long, Long, String)] =
-      spark.read.parquet(c).select("doc_id", "n_dropped", "text")
-        .orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    corpus() shouldBe Seq((1L, 0L, "a b c d"), (2L, 0L, "p q r"))
-    def grams(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(col("g").cast("string")).collect().map(_.getString(0)).toSet
-    grams(spark.read.parquet(i)) shouldBe grams(graft.llm.Dedup.spanIndexRows(b0, 3))
-    // and the stream continues normally: batch 1 cleans against the
-    // rebuilt index
-    SpanIngest.ingestBatch(Seq((10L, "x a b c y")).toDF("doc_id", "text"),
-      c, i, batchId = 1L, n = 3)
-    corpus().last shouldBe ((10L, 3L, "x y"))
+    SparkEntry.withTempRoot(spark, "tornspan") { dir =>
+      val (c, i) = (s"$dir/c", s"$dir/i")
+      val b0 = Seq((1L, "a b c d"), (2L, "p q r")).toDF("doc_id", "text")
+      SpanIngest.ingestBatch(b0, c, i, batchId = 0L, n = 3)
+      val fs = new org.apache.hadoop.fs.Path(i)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(i), true) shouldBe true
+      // replay of batch 0 must succeed and rebuild both stores
+      noException should be thrownBy SpanIngest.ingestBatch(b0, c, i, batchId = 0L, n = 3)
+      def corpus(): Seq[(Long, Long, String)] =
+        spark.read.parquet(c).select("doc_id", "n_dropped", "text")
+          .orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+      corpus() shouldBe Seq((1L, 0L, "a b c d"), (2L, 0L, "p q r"))
+      def grams(df: org.apache.spark.sql.DataFrame): Set[String] =
+        df.select(col("g").cast("string")).collect().map(_.getString(0)).toSet
+      grams(spark.read.parquet(i)) shouldBe grams(graft.llm.Dedup.spanIndexRows(b0, 3))
+      // and the stream continues normally: batch 1 cleans against the
+      // rebuilt index
+      SpanIngest.ingestBatch(Seq((10L, "x a b c y")).toDF("doc_id", "text"),
+        c, i, batchId = 1L, n = 3)
+      corpus().last shouldBe ((10L, 3L, "x y"))
+    }
   }
 
   test("span ingest selfClean: a self-duplicating batch lands span-disjoint internally AND against the store; counts anchor to the raw batch") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("spanself").toString
-    val (c, i) = (s"$dir/c", s"$dir/i")
-    def corpus(): Seq[(Long, Long, Long, String)] =
-      spark.read.parquet(c).select("doc_id", "n_tokens", "n_dropped", "text")
-        .orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-    // batch 0 seeds the corpus with 'a b c'
-    SpanIngest.ingestBatch(Seq((1L, "a b c")).toDF("doc_id", "text"),
-      c, i, 0L, n = 3, selfClean = true)
-    // batch 1 duplicates WITHIN itself (docs 10/11 share 'k l m') and
-    // AGAINST the store (doc 11 also carries 'a b c'); doc 12 repeats a
-    // run inside ONE document (kept: ownership is by lowest doc_id)
-    SpanIngest.ingestBatch(Seq(
-        (10L, "k l m x"), (11L, "k l m y a b c"), (12L, "u v w u v w")
-      ).toDF("doc_id", "text"), c, i, 1L, n = 3, selfClean = true)
-    corpus() shouldBe Seq(
-      (1L, 3L, 0L, "a b c"),
-      (10L, 4L, 0L, "k l m x"),   // first occurrence owns
-      // 'k l m' self-dropped (3) + 'a b c' corpus-dropped (3)
-      (11L, 7L, 6L, "y"),
-      (12L, 6L, 0L, "u v w u v w"))
-    // the landed store matches the batch-wise composition exactly
-    val composed = graft.llm.Dedup.removeCorpusSpans(
-      graft.llm.Dedup.removeDuplicateSpans(
-          Seq((10L, "k l m x"), (11L, "k l m y a b c"), (12L, "u v w u v w"))
-            .toDF("doc_id", "text"), 3)
-        .select(col("doc_id"), col("text")),
-      graft.llm.Dedup.spanIndexRows(Seq((1L, "a b c")).toDF("doc_id", "text"), 3), 3)
-      .select("doc_id", "text").orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1)))
-    corpus().drop(1).map(t => (t._1, t._4)) shouldBe composed
-    // the index follows the FINAL text: a later arrival repeating doc
-    // 12's surviving run cleans against the store
-    SpanIngest.ingestBatch(Seq((20L, "u v w z")).toDF("doc_id", "text"),
-      c, i, 2L, n = 3, selfClean = true)
-    corpus().last shouldBe ((20L, 4L, 3L, "z"))
+    SparkEntry.withTempRoot(spark, "spanself") { dir =>
+      val (c, i) = (s"$dir/c", s"$dir/i")
+      def corpus(): Seq[(Long, Long, Long, String)] =
+        spark.read.parquet(c).select("doc_id", "n_tokens", "n_dropped", "text")
+          .orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+      // batch 0 seeds the corpus with 'a b c'
+      SpanIngest.ingestBatch(Seq((1L, "a b c")).toDF("doc_id", "text"),
+        c, i, 0L, n = 3, selfClean = true)
+      // batch 1 duplicates WITHIN itself (docs 10/11 share 'k l m') and
+      // AGAINST the store (doc 11 also carries 'a b c'); doc 12 repeats a
+      // run inside ONE document (kept: ownership is by lowest doc_id)
+      SpanIngest.ingestBatch(Seq(
+          (10L, "k l m x"), (11L, "k l m y a b c"), (12L, "u v w u v w")
+        ).toDF("doc_id", "text"), c, i, 1L, n = 3, selfClean = true)
+      corpus() shouldBe Seq(
+        (1L, 3L, 0L, "a b c"),
+        (10L, 4L, 0L, "k l m x"),   // first occurrence owns
+        // 'k l m' self-dropped (3) + 'a b c' corpus-dropped (3)
+        (11L, 7L, 6L, "y"),
+        (12L, 6L, 0L, "u v w u v w"))
+      // the landed store matches the batch-wise composition exactly
+      val composed = graft.llm.Dedup.removeCorpusSpans(
+        graft.llm.Dedup.removeDuplicateSpans(
+            Seq((10L, "k l m x"), (11L, "k l m y a b c"), (12L, "u v w u v w"))
+              .toDF("doc_id", "text"), 3)
+          .select(col("doc_id"), col("text")),
+        graft.llm.Dedup.spanIndexRows(Seq((1L, "a b c")).toDF("doc_id", "text"), 3), 3)
+        .select("doc_id", "text").orderBy("doc_id").collect()
+        .map(r => (r.getLong(0), r.getString(1)))
+      corpus().drop(1).map(t => (t._1, t._4)) shouldBe composed
+      // the index follows the FINAL text: a later arrival repeating doc
+      // 12's surviving run cleans against the store
+      SpanIngest.ingestBatch(Seq((20L, "u v w z")).toDF("doc_id", "text"),
+        c, i, 2L, n = 3, selfClean = true)
+      corpus().last shouldBe ((20L, 4L, 3L, "z"))
+    }
   }
 
   test("scd ingest: versioned SCD2 history per micro-batch; completed replay skips, torn replay rewrites identically") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("scdingest").toString
-    val hist = s"$dir/hist"
-    val mem = MemoryStream[(Long, String)]
-    val q = ScdIngest.start(mem.toDF.toDF("key", "seg"), hist, "key", Seq("seg"), s"$dir/ck")
-    def snapshot(): Array[(Long, String, Long, Long, Boolean)] =
-      ScdIngest.currentHistory(spark, hist).orderBy("key", "valid_from").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          if (r.isNullAt(3)) -1L else r.getLong(3), r.getBoolean(4)))
-    try {
-      mem.addData((1L, "a"), (2L, "x"))
-      q.processAllAvailable()
-      mem.addData((1L, "b"), (3L, "n"))
-      q.processAllAvailable()
-      val cur = snapshot()
-      cur shouldBe Array(
-        (1L, "a", 0L, 1L, false), (1L, "b", 1L, -1L, true),
-        (2L, "x", 0L, -1L, true), (3L, "n", 1L, -1L, true))
-      graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L, 1L)
-      // time travel: version 0 is the pre-merge snapshot, still readable
-      graft.ops.ManifestSink.readAt(spark, hist, 0L).count() shouldBe 2L
-      // completed replay: manifest-1 is durable, the batch skips whole
-      ScdIngest.ingestBatch(Seq((1L, "b"), (3L, "n")).toDF("key", "seg"),
-        hist, "key", Seq("seg"), batchId = 1L)
-      graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L, 1L)
-      snapshot() shouldBe cur
-      // torn replay: manifest-1 gone, data-v1 still on disk — the batch
-      // re-merges against version 0 and rewrites an identical snapshot
-      val fs = new org.apache.hadoop.fs.Path(hist)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$hist/manifest-1"), false) shouldBe true
-      ScdIngest.ingestBatch(Seq((1L, "b"), (3L, "n")).toDF("key", "seg"),
-        hist, "key", Seq("seg"), batchId = 1L)
-      graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L, 1L)
-      snapshot() shouldBe cur
-    } finally q.stop()
+    SparkEntry.withTempRoot(spark, "scdingest") { dir =>
+      val hist = s"$dir/hist"
+      val mem = MemoryStream[(Long, String)]
+      val q = ScdIngest.start(mem.toDF.toDF("key", "seg"), hist, "key", Seq("seg"), s"$dir/ck")
+      def snapshot(): Array[(Long, String, Long, Long, Boolean)] =
+        ScdIngest.currentHistory(spark, hist).orderBy("key", "valid_from").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+            if (r.isNullAt(3)) -1L else r.getLong(3), r.getBoolean(4)))
+      try {
+        mem.addData((1L, "a"), (2L, "x"))
+        q.processAllAvailable()
+        mem.addData((1L, "b"), (3L, "n"))
+        q.processAllAvailable()
+        val cur = snapshot()
+        cur shouldBe Array(
+          (1L, "a", 0L, 1L, false), (1L, "b", 1L, -1L, true),
+          (2L, "x", 0L, -1L, true), (3L, "n", 1L, -1L, true))
+        graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L, 1L)
+        // time travel: version 0 is the pre-merge snapshot, still readable
+        graft.ops.ManifestSink.readAt(spark, hist, 0L).count() shouldBe 2L
+        // completed replay: manifest-1 is durable, the batch skips whole
+        ScdIngest.ingestBatch(Seq((1L, "b"), (3L, "n")).toDF("key", "seg"),
+          hist, "key", Seq("seg"), batchId = 1L)
+        graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L, 1L)
+        snapshot() shouldBe cur
+        // torn replay: manifest-1 gone, data-v1 still on disk — the batch
+        // re-merges against version 0 and rewrites an identical snapshot
+        val fs = new org.apache.hadoop.fs.Path(hist)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.delete(new org.apache.hadoop.fs.Path(s"$hist/manifest-1"), false) shouldBe true
+        ScdIngest.ingestBatch(Seq((1L, "b"), (3L, "n")).toDF("key", "seg"),
+          hist, "key", Seq("seg"), batchId = 1L)
+        graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L, 1L)
+        snapshot() shouldBe cur
+      } finally q.stop()
+    }
   }
 
   test("scd ingest: a multi-change-per-key batch collapses to the key's last change with seqCol, fails loudly without") {
-    val dir = java.nio.file.Files.createTempDirectory("scdmulti").toString
-    val hist = s"$dir/hist"
-    // CDC trigger with THREE updates for key 1, in sequence order: the
-    // merged snapshot must show only the final value — one open row
-    val batch = Seq((1L, "a", 10L), (1L, "b", 20L), (1L, "c", 30L), (2L, "x", 15L))
-      .toDF("key", "seg", "lsn")
-    ScdIngest.ingestBatch(batch, hist, "key", Seq("seg"), batchId = 0L,
-      seqCol = Some("lsn"))
-    val snap = ScdIngest.currentHistory(spark, hist)
-      .orderBy("key").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getBoolean(4)))
-    snap shouldBe Array((1L, "c", true), (2L, "x", true))
-    // deterministic on seq ties: max(struct) breaks ties lexicographically
-    // by attr value, so replays rewrite byte-identically
-    val tied = ScdIngest.collapseToLastPerKey(
-      Seq((1L, "p", 5L), (1L, "q", 5L)).toDF("key", "seg", "lsn"),
-      "key", Seq("seg"), Some("lsn"), batchId = 1L).collect()
-    tied.map(r => (r.getLong(0), r.getString(1))) shouldBe Array((1L, "q"))
-    // without seqCol there is no defensible winner: the batch fails loudly
-    // (a task-level assert_true riding the merge's own key exchange — no
-    // extra pre-check job) instead of fanning out through the merge join
-    // and corrupting history
-    val ex = intercept[Exception] {
-      ScdIngest.ingestBatch(
-        Seq((3L, "m"), (3L, "n")).toDF("key", "seg"),
-        hist, "key", Seq("seg"), batchId = 1L)
+    SparkEntry.withTempRoot(spark, "scdmulti") { dir =>
+      val hist = s"$dir/hist"
+      // CDC trigger with THREE updates for key 1, in sequence order: the
+      // merged snapshot must show only the final value — one open row
+      val batch = Seq((1L, "a", 10L), (1L, "b", 20L), (1L, "c", 30L), (2L, "x", 15L))
+        .toDF("key", "seg", "lsn")
+      ScdIngest.ingestBatch(batch, hist, "key", Seq("seg"), batchId = 0L,
+        seqCol = Some("lsn"))
+      val snap = ScdIngest.currentHistory(spark, hist)
+        .orderBy("key").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getBoolean(4)))
+      snap shouldBe Array((1L, "c", true), (2L, "x", true))
+      // deterministic on seq ties: max(struct) breaks ties lexicographically
+      // by attr value, so replays rewrite byte-identically
+      val tied = ScdIngest.collapseToLastPerKey(
+        Seq((1L, "p", 5L), (1L, "q", 5L)).toDF("key", "seg", "lsn"),
+        "key", Seq("seg"), Some("lsn"), batchId = 1L).collect()
+      tied.map(r => (r.getLong(0), r.getString(1))) shouldBe Array((1L, "q"))
+      // without seqCol there is no defensible winner: the batch fails loudly
+      // (a task-level assert_true riding the merge's own key exchange — no
+      // extra pre-check job) instead of fanning out through the merge join
+      // and corrupting history
+      val ex = intercept[Exception] {
+        ScdIngest.ingestBatch(
+          Seq((3L, "m"), (3L, "n")).toDF("key", "seg"),
+          hist, "key", Seq("seg"), batchId = 1L)
+      }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      messages(ex).mkString("\n") should include("change rows for key")
+      // and the failed batch published nothing
+      graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L)
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    messages(ex).mkString("\n") should include("change rows for key")
-    // and the failed batch published nothing
-    graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L)
   }
 
   test("scd ingest with tombstones: deletes close open rows per trigger, re-inserts reopen, the snapshot equals the iterated mergeOps fold") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("scddel").toString
-    val hist = s"$dir/hist"
-    val mem = MemoryStream[(Long, String, String, Long)]
-    val q = ScdIngest.start(mem.toDF.toDF("key", "op", "seg", "lsn"),
-      hist, "key", Seq("seg"), s"$dir/ck",
-      seqCol = Some("lsn"), opCol = Some("op"))
-    val batches = Seq(
-      // trigger 0: two inserts
-      Seq((1L, "U", "a", 1L), (2L, "U", "x", 2L)),
-      // trigger 1: delete key 1, change key 2; key 3 inserts and deletes
-      // WITHIN the trigger — the (seq, op, attrs) collapse keeps the 'D'
-      Seq((1L, "D", "a", 3L), (2L, "U", "y", 4L),
-        (3L, "U", "m", 5L), (3L, "D", "m", 6L)),
-      // trigger 2: re-insert deleted key 1; delete key 2; ghost delete 9
-      Seq((1L, "U", "b", 7L), (2L, "D", "y", 8L), (9L, "D", "z", 9L)))
-    try {
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    def snap() = ScdIngest.currentHistory(spark, hist)
-      .orderBy("key", "valid_from").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
-    // the iterated batch fold over the same collapsed changes
-    import graft.ops.ScdMerge
-    var folded = Seq.empty[(Long, String, Long, Option[Long], Boolean)]
-      .toDF("key", "seg", "valid_from", "valid_to", "is_current")
-    val perTrigger = Seq(
-      Seq((1L, "U", "a"), (2L, "U", "x")),
-      Seq((1L, "D", "a"), (2L, "U", "y"), (3L, "D", "m")),
-      Seq((1L, "U", "b"), (2L, "D", "y"), (9L, "D", "z")))
-    for ((b, v) <- perTrigger.zipWithIndex)
-      folded = ScdMerge.mergeOps(folded, b.toDF("key", "op", "seg"),
-        "key", Seq("seg"), "op", v.toLong)
-    snap() shouldBe folded.orderBy("key", "valid_from").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
-    // shape sanity: key 1 re-opened with 'b'; key 2 all-closed; key 3
-    // (insert+delete in one trigger) and key 9 (ghost) never appear
-    snap() shouldBe Array(
-      (1L, "a", 0L, Some(1L), false), (1L, "b", 2L, None, true),
-      (2L, "x", 0L, Some(1L), false), (2L, "y", 1L, Some(2L), false))
+    SparkEntry.withTempRoot(spark, "scddel") { dir =>
+      val hist = s"$dir/hist"
+      val mem = MemoryStream[(Long, String, String, Long)]
+      val q = ScdIngest.start(mem.toDF.toDF("key", "op", "seg", "lsn"),
+        hist, "key", Seq("seg"), s"$dir/ck",
+        seqCol = Some("lsn"), opCol = Some("op"))
+      val batches = Seq(
+        // trigger 0: two inserts
+        Seq((1L, "U", "a", 1L), (2L, "U", "x", 2L)),
+        // trigger 1: delete key 1, change key 2; key 3 inserts and deletes
+        // WITHIN the trigger — the (seq, op, attrs) collapse keeps the 'D'
+        Seq((1L, "D", "a", 3L), (2L, "U", "y", 4L),
+          (3L, "U", "m", 5L), (3L, "D", "m", 6L)),
+        // trigger 2: re-insert deleted key 1; delete key 2; ghost delete 9
+        Seq((1L, "U", "b", 7L), (2L, "D", "y", 8L), (9L, "D", "z", 9L)))
+      try {
+        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      } finally q.stop()
+      def snap() = ScdIngest.currentHistory(spark, hist)
+        .orderBy("key", "valid_from").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
+      // the iterated batch fold over the same collapsed changes
+      import graft.ops.ScdMerge
+      var folded = Seq.empty[(Long, String, Long, Option[Long], Boolean)]
+        .toDF("key", "seg", "valid_from", "valid_to", "is_current")
+      val perTrigger = Seq(
+        Seq((1L, "U", "a"), (2L, "U", "x")),
+        Seq((1L, "D", "a"), (2L, "U", "y"), (3L, "D", "m")),
+        Seq((1L, "U", "b"), (2L, "D", "y"), (9L, "D", "z")))
+      for ((b, v) <- perTrigger.zipWithIndex)
+        folded = ScdMerge.mergeOps(folded, b.toDF("key", "op", "seg"),
+          "key", Seq("seg"), "op", v.toLong)
+      snap() shouldBe folded.orderBy("key", "valid_from").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
+      // shape sanity: key 1 re-opened with 'b'; key 2 all-closed; key 3
+      // (insert+delete in one trigger) and key 9 (ghost) never appear
+      snap() shouldBe Array(
+        (1L, "a", 0L, Some(1L), false), (1L, "b", 2L, None, true),
+        (2L, "x", 0L, Some(1L), false), (2L, "y", 1L, Some(2L), false))
+    }
   }
 
   test("scd enrichStream: streamed point-in-time enrichment equals the batch PIT; replay overwrites its own partition") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("scdenrich").toString
-    // a committed two-version history: key 1 re-segments at version 5
-    val hist = Seq(
-      (1L, "a", 0L, Option(5L), false), (1L, "b", 5L, Option.empty[Long], true),
-      (2L, "z", 3L, Option.empty[Long], true))
-      .toDF("key", "seg", "valid_from", "valid_to", "is_current")
-    graft.ops.ManifestSink.publishAt(hist, s"$dir/hist", 0L)
-    val facts = Seq((1L, 0L), (1L, 7L), (2L, 1L), (3L, 9L))
-    val mem = MemoryStream[(Long, Long)]
-    val q = ScdIngest.enrichStream(mem.toDF.toDF("key", "t"),
-      s"$dir/hist", s"$dir/out", "key", "t", Seq("seg"), s"$dir/ck")
-    try {
-      mem.addData(facts.take(2): _*)
-      q.processAllAvailable()
-      mem.addData(facts.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    def out() = spark.read.parquet(s"$dir/out")
-      .orderBy("key", "t").collect()
-      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
-    val batchPit = graft.ops.ScdMerge.pointInTime(hist,
-        facts.toDF("key", "t"), "key", "t", Seq("seg"))
-      .orderBy("key", "t").collect()
-      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
-    out() shouldBe batchPit
-    batchPit shouldBe Array(
-      (1L, 0L, Some("a")), (1L, 7L, Some("b")), // historical vs current attrs
-      (2L, 1L, None), (3L, 9L, None))
-    // replay of batch 1 overwrites its own partition, never appends
-    graft.ops.ScdMerge.pointInTime(hist,
-        facts.drop(2).toDF("key", "t"), "key", "t", Seq("seg"))
-      .withColumn("enrich_batch", lit(1L))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("enrich_batch").parquet(s"$dir/out")
-    out() shouldBe batchPit
+    SparkEntry.withTempRoot(spark, "scdenrich") { dir =>
+      // a committed two-version history: key 1 re-segments at version 5
+      val hist = Seq(
+        (1L, "a", 0L, Option(5L), false), (1L, "b", 5L, Option.empty[Long], true),
+        (2L, "z", 3L, Option.empty[Long], true))
+        .toDF("key", "seg", "valid_from", "valid_to", "is_current")
+      graft.ops.ManifestSink.publishAt(hist, s"$dir/hist", 0L)
+      val facts = Seq((1L, 0L), (1L, 7L), (2L, 1L), (3L, 9L))
+      val mem = MemoryStream[(Long, Long)]
+      val q = ScdIngest.enrichStream(mem.toDF.toDF("key", "t"),
+        s"$dir/hist", s"$dir/out", "key", "t", Seq("seg"), s"$dir/ck")
+      try {
+        mem.addData(facts.take(2): _*)
+        q.processAllAvailable()
+        mem.addData(facts.drop(2): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      def out() = spark.read.parquet(s"$dir/out")
+        .orderBy("key", "t").collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
+      val batchPit = graft.ops.ScdMerge.pointInTime(hist,
+          facts.toDF("key", "t"), "key", "t", Seq("seg"))
+        .orderBy("key", "t").collect()
+        .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2))))
+      out() shouldBe batchPit
+      batchPit shouldBe Array(
+        (1L, 0L, Some("a")), (1L, 7L, Some("b")), // historical vs current attrs
+        (2L, 1L, None), (3L, 9L, None))
+      // replay of batch 1 overwrites its own partition, never appends
+      graft.ops.ScdMerge.pointInTime(hist,
+          facts.drop(2).toDF("key", "t"), "key", "t", Seq("seg"))
+        .withColumn("enrich_batch", lit(1L))
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("enrich_batch").parquet(s"$dir/out")
+      out() shouldBe batchPit
+    }
   }
 
   test("bloom ingest: exact streaming dedup, replay idempotent, restart restores the bloom") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("bloomingest").toString
-    val corpusPath = s"$dir/corpus"
-    val ck = s"$dir/ck"
-    val mem = MemoryStream[(Long, String)]
-    val bi = new BloomIngest(expectedItems = 1000L, numBits = 8000L)
-    val q = bi.start(mem.toDF.toDF("doc_id", "text"), corpusPath, ck)
-    val b2 = Seq((10L, "alpha one"), (12L, "gamma three"), (11L, "gamma three"), (13L, "delta four"))
-    try {
-      mem.addData((1L, "alpha one"), (2L, "beta two"))
-      q.processAllAvailable()
-      // batch 1: 10 dups batch 0's "alpha one"; 11/12 duplicate each
-      // other within the batch (lowest id kept); 13 is new
-      mem.addData(b2: _*)
-      q.processAllAvailable()
-      val corpus = spark.read.parquet(corpusPath)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      corpus shouldBe Set(1L, 2L, 11L, 13L)
-      // replay batch 1 directly: partition overwrite + bloom bit-OR are
-      // both idempotent — the store must not change
-      bi.ingestBatch(b2.toDF("doc_id", "text"), corpusPath, batchId = 1L)
+    SparkEntry.withTempRoot(spark, "bloomingest") { dir =>
+      val corpusPath = s"$dir/corpus"
+      val ck = s"$dir/ck"
+      val mem = MemoryStream[(Long, String)]
+      val bi = new BloomIngest(expectedItems = 1000L, numBits = 8000L)
+      val q = bi.start(mem.toDF.toDF("doc_id", "text"), corpusPath, ck)
+      val b2 = Seq((10L, "alpha one"), (12L, "gamma three"), (11L, "gamma three"), (13L, "delta four"))
+      try {
+        mem.addData((1L, "alpha one"), (2L, "beta two"))
+        q.processAllAvailable()
+        // batch 1: 10 dups batch 0's "alpha one"; 11/12 duplicate each
+        // other within the batch (lowest id kept); 13 is new
+        mem.addData(b2: _*)
+        q.processAllAvailable()
+        val corpus = spark.read.parquet(corpusPath)
+          .select("doc_id").collect().map(_.getLong(0)).toSet
+        corpus shouldBe Set(1L, 2L, 11L, 13L)
+        // replay batch 1 directly: partition overwrite + bloom bit-OR are
+        // both idempotent — the store must not change
+        bi.ingestBatch(b2.toDF("doc_id", "text"), corpusPath, batchId = 1L)
+        spark.read.parquet(corpusPath)
+          .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L, 13L)
+      } finally q.stop()
+      // restart: a FRESH driver restores the committed bloom and still
+      // catches a duplicate of the pre-restart corpus (without restore it
+      // would re-admit "alpha one" as a bloom miss)
+      val bi2 = new BloomIngest(expectedItems = 1000L, numBits = 8000L)
+      bi2.restore(ck, spark.sparkContext.hadoopConfiguration)
+      bi2.ingestBatch(Seq((20L, "alpha one"), (21L, "zeta six")).toDF("doc_id", "text"),
+        corpusPath, batchId = 2L)
       spark.read.parquet(corpusPath)
-        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L, 13L)
-    } finally q.stop()
-    // restart: a FRESH driver restores the committed bloom and still
-    // catches a duplicate of the pre-restart corpus (without restore it
-    // would re-admit "alpha one" as a bloom miss)
-    val bi2 = new BloomIngest(expectedItems = 1000L, numBits = 8000L)
-    bi2.restore(ck, spark.sparkContext.hadoopConfiguration)
-    bi2.ingestBatch(Seq((20L, "alpha one"), (21L, "zeta six")).toDF("doc_id", "text"),
-      corpusPath, batchId = 2L)
-    spark.read.parquet(corpusPath)
-      .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L, 13L, 21L)
+        .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe Set(1L, 2L, 11L, 13L, 21L)
+    }
   }
 
   test("streaming CMS: batch-wise build + merge equals the one-shot batch sketch") {
     implicit val ctx = spark.sqlContext
     val b1 = Seq((1L, "a a a b c"), (2L, "a b d"))
     val b2 = Seq((3L, "c c e a"), (4L, "b b b f"))
-    val dir = java.nio.file.Files.createTempDirectory("cms_stream").toString
-    val mem = MemoryStream[(Long, String)]
-    val sk = new StreamingSketch(eps = 0.01, confidence = 0.99, seed = 42)
-    val q = sk.start(mem.toDF.toDF("doc_id", "text"), s"$dir/ck")
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    // the one-shot batch sketch over everything, same eps/conf/seed
-    val batch = (b1 ++ b2).toDF("doc_id", "text")
-      .selectExpr("explode(split(text, ' ')) AS w")
-      .stat.countMinSketch("w", 0.01, 0.99, 42)
-    val merged = sk.snapshot
-    merged.totalCount shouldBe batch.totalCount
-    for (w <- Seq("a", "b", "c", "d", "e", "f", "zz"))
-      withClue(s"$w: ") {
-        merged.estimateCount(w) shouldBe batch.estimateCount(w)
-      }
-    // and the estimates bound the true counts from above (a=5,b=5)
-    merged.estimateCount("a") should be >= 5L
-    merged.estimateCount("b") should be >= 5L
+    SparkEntry.withTempRoot(spark, "cms_stream") { dir =>
+      val mem = MemoryStream[(Long, String)]
+      val sk = new StreamingSketch(eps = 0.01, confidence = 0.99, seed = 42)
+      val q = sk.start(mem.toDF.toDF("doc_id", "text"), s"$dir/ck")
+      try {
+        mem.addData(b1: _*); q.processAllAvailable()
+        mem.addData(b2: _*); q.processAllAvailable()
+      } finally q.stop()
+      // the one-shot batch sketch over everything, same eps/conf/seed
+      val batch = (b1 ++ b2).toDF("doc_id", "text")
+        .selectExpr("explode(split(text, ' ')) AS w")
+        .stat.countMinSketch("w", 0.01, 0.99, 42)
+      val merged = sk.snapshot
+      merged.totalCount shouldBe batch.totalCount
+      for (w <- Seq("a", "b", "c", "d", "e", "f", "zz"))
+        withClue(s"$w: ") {
+          merged.estimateCount(w) shouldBe batch.estimateCount(w)
+        }
+      // and the estimates bound the true counts from above (a=5,b=5)
+      merged.estimateCount("a") should be >= 5L
+      merged.estimateCount("b") should be >= 5L
+    }
   }
 
   test("streaming CMS survives a restart: committed batches are never lost") {
     // a restarted query resumes PAST committed batches without replay;
     // the snapshot/restore path must carry their counts or the sketch
     // silently undercounts (inverting the one-sided CMS guarantee)
-    val dir = java.nio.file.Files.createTempDirectory("cms_restart").toString
-    val b1 = Seq((1L, "a a a b c"), (2L, "a b d"))
-    val b2 = Seq((3L, "c c e a"), (4L, "b b b f"))
-    val schema = b1.toDF("doc_id", "text").schema
-    b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/in")
-    val sk1 = new StreamingSketch(eps = 0.01, confidence = 0.99, seed = 42)
-    val q1 = sk1.start(
-      spark.readStream.schema(schema).parquet(s"$dir/in"), s"$dir/ck")
-    try { q1.processAllAvailable() } finally q1.stop()
-    // process crashes; a FRESH instance resumes from the same checkpoint
-    b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/in")
-    val sk2 = new StreamingSketch(eps = 0.01, confidence = 0.99, seed = 42)
-    val q2 = sk2.start(
-      spark.readStream.schema(schema).parquet(s"$dir/in"), s"$dir/ck")
-    try { q2.processAllAvailable() } finally q2.stop()
-    val batch = (b1 ++ b2).toDF("doc_id", "text")
-      .selectExpr("explode(split(text, ' ')) AS w")
-      .stat.countMinSketch("w", 0.01, 0.99, 42)
-    sk2.snapshot.totalCount shouldBe batch.totalCount
-    for (w <- Seq("a", "b", "c", "d", "e", "f"))
-      withClue(s"$w: ") {
-        sk2.snapshot.estimateCount(w) shouldBe batch.estimateCount(w)
-      }
+    SparkEntry.withTempRoot(spark, "cms_restart") { dir =>
+      val b1 = Seq((1L, "a a a b c"), (2L, "a b d"))
+      val b2 = Seq((3L, "c c e a"), (4L, "b b b f"))
+      val schema = b1.toDF("doc_id", "text").schema
+      b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/in")
+      val sk1 = new StreamingSketch(eps = 0.01, confidence = 0.99, seed = 42)
+      val q1 = sk1.start(
+        spark.readStream.schema(schema).parquet(s"$dir/in"), s"$dir/ck")
+      try { q1.processAllAvailable() } finally q1.stop()
+      // process crashes; a FRESH instance resumes from the same checkpoint
+      b2.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(s"$dir/in")
+      val sk2 = new StreamingSketch(eps = 0.01, confidence = 0.99, seed = 42)
+      val q2 = sk2.start(
+        spark.readStream.schema(schema).parquet(s"$dir/in"), s"$dir/ck")
+      try { q2.processAllAvailable() } finally q2.stop()
+      val batch = (b1 ++ b2).toDF("doc_id", "text")
+        .selectExpr("explode(split(text, ' ')) AS w")
+        .stat.countMinSketch("w", 0.01, 0.99, 42)
+      sk2.snapshot.totalCount shouldBe batch.totalCount
+      for (w <- Seq("a", "b", "c", "d", "e", "f"))
+        withClue(s"$w: ") {
+          sk2.snapshot.estimateCount(w) shouldBe batch.estimateCount(w)
+        }
+    }
   }
 
   test("stream-static join: a stream enriches against a static dimension") {
@@ -805,23 +823,24 @@ class StreamingSpec extends SparkSpec {
     val df = events.toDF("user_id", "ts", "event_id", "event_type")
     val views = df.filter($"event_type" === "view").drop("event_type")
     val clicks = df.filter($"event_type" === "click").drop("event_type")
-    val dir = java.nio.file.Files.createTempDirectory("attrstream").toString
-    views.write.mode("overwrite").parquet(s"$dir/v")
-    clicks.write.mode("overwrite").parquet(s"$dir/c")
-    val vs = spark.readStream.schema(views.schema).parquet(s"$dir/v")
-    val cs = spark.readStream.schema(clicks.schema).parquet(s"$dir/c")
-    val q = EventStream.clickAttribution(vs, cs, horizonSec = 1800)
-      .writeStream.format("memory").queryName("fattr").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT view_id, click_id FROM fattr").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val batch = EventStream.clickAttribution(views, clicks, horizonSec = 1800)
-        .select($"view_id", $"click_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      streamed should not be empty
-      streamed shouldBe batch
-    } finally q.stop()
+    SparkEntry.withTempRoot(spark, "attrstream") { dir =>
+      views.write.mode("overwrite").parquet(s"$dir/v")
+      clicks.write.mode("overwrite").parquet(s"$dir/c")
+      val vs = spark.readStream.schema(views.schema).parquet(s"$dir/v")
+      val cs = spark.readStream.schema(clicks.schema).parquet(s"$dir/c")
+      val q = EventStream.clickAttribution(vs, cs, horizonSec = 1800)
+        .writeStream.format("memory").queryName("fattr").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        val streamed = spark.sql("SELECT view_id, click_id FROM fattr").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        val batch = EventStream.clickAttribution(views, clicks, horizonSec = 1800)
+          .select($"view_id", $"click_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        streamed should not be empty
+        streamed shouldBe batch
+      } finally q.stop()
+    }
   }
 
   test("dedupStream: drops duplicate keys within the watermark horizon") {
@@ -1018,31 +1037,32 @@ class StreamingSpec extends SparkSpec {
     // checkpointLocation, stop it, add MORE input files, restart from
     // the same checkpoint — the final state must equal a one-shot batch
     // aggregation over all files (no double counting of batch 1)
-    val root = java.nio.file.Files.createTempDirectory("ckpt").toString
-    val inDir = s"$root/in"
-    val ckpt = s"$root/ckpt"
-    val first = Seq((ts("10:05:00"), "click", 1.0), (ts("10:40:00"), "click", 2.0))
-      .toDF("ts", "event_type", "value")
-    first.write.mode("append").parquet(inDir)
-    val schema = first.schema
-    def start() = EventStream.hourlyWindowedStats(
-      spark.readStream.schema(schema).parquet(inDir))
-      .writeStream.format("memory").queryName("ckwin").outputMode("complete")
-      .option("checkpointLocation", ckpt).start()
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    // more data arrives while the query is DOWN
-    Seq((ts("10:50:00"), "click", 4.0), (ts("11:10:00"), "view", 8.0))
-      .toDF("ts", "event_type", "value").write.mode("append").parquet(inDir)
-    val q2 = start()
-    try {
-      q2.processAllAvailable()
-      val got = spark.sql("SELECT * FROM ckwin").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1)) -> (r.getLong(2), r.getDouble(3)))
-        .toMap
-      got(("2024-01-01 10:00:00.0", "click")) shouldBe ((3L, 7.0)) // 1+2+4 once each
-      got(("2024-01-01 11:00:00.0", "view")) shouldBe ((1L, 8.0))
-    } finally q2.stop()
+    SparkEntry.withTempRoot(spark, "ckpt") { root =>
+      val inDir = s"$root/in"
+      val ckpt = s"$root/ckpt"
+      val first = Seq((ts("10:05:00"), "click", 1.0), (ts("10:40:00"), "click", 2.0))
+        .toDF("ts", "event_type", "value")
+      first.write.mode("append").parquet(inDir)
+      val schema = first.schema
+      def start() = EventStream.hourlyWindowedStats(
+        spark.readStream.schema(schema).parquet(inDir))
+        .writeStream.format("memory").queryName("ckwin").outputMode("complete")
+        .option("checkpointLocation", ckpt).start()
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      // more data arrives while the query is DOWN
+      Seq((ts("10:50:00"), "click", 4.0), (ts("11:10:00"), "view", 8.0))
+        .toDF("ts", "event_type", "value").write.mode("append").parquet(inDir)
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        val got = spark.sql("SELECT * FROM ckwin").collect()
+          .map(r => (r.getTimestamp(0).toString, r.getString(1)) -> (r.getLong(2), r.getDouble(3)))
+          .toMap
+        got(("2024-01-01 10:00:00.0", "click")) shouldBe ((3L, 7.0)) // 1+2+4 once each
+        got(("2024-01-01 11:00:00.0", "view")) shouldBe ((1L, 8.0))
+      } finally q2.stop()
+    }
   }
 
   test("sourceDriftUpdates: streamed TV and KS match the direct computation; a flooded source's drift climbs") {
@@ -1097,271 +1117,279 @@ class StreamingSpec extends SparkSpec {
   test("vector index ingest: streamed IVF-PQ index probes bitwise-equal to ivfPqSearch; replay rewrites identically") {
     implicit val ctx = spark.sqlContext
     import graft.llm.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("vecidx").toString
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-    val cbIds = Seq(11L, 57L, 201L, 401L)
-    val queryIds = Seq(0L, 1L, 2L)
-    val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
-    val queries = Similarity.collectVectors(emb, queryIds)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rn").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
-    val expected = key(
-      Similarity.ivfPqSearch(emb, coarseIds, cbIds, 4, queryIds, nprobe = 2, k = 10))
+    SparkEntry.withTempRoot(spark, "vecidx") { dir =>
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
+      val cbIds = Seq(11L, 57L, 201L, 401L)
+      val queryIds = Seq(0L, 1L, 2L)
+      val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
+      val queries = Similarity.collectVectors(emb, queryIds)
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("query_id", "rn").collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+      val expected = key(
+        Similarity.ivfPqSearch(emb, coarseIds, cbIds, 4, queryIds, nprobe = 2, k = 10))
 
-    // three arrival batches (vec_id mod 3) against the FROZEN quantizer
-    val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = VectorIndexIngest.start(
-      mem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck")
-    try {
-      for (b <- 0 until 3) {
-        mem.addData(rows.filter(_._1 % 3 == b).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // the appended index IS the batch encode of the whole corpus
-    val idx = VectorIndexIngest.index(spark, s"$dir/idx")
-    val batchEncode = Similarity.ivfPqIndexRows(emb, quant).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
-    idx.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-      .sortBy(_._1) shouldBe batchEncode
-    // probing the stored rows is bitwise the one-shot search
-    key(Similarity.ivfPqProbe(idx, quant, queries, nprobe = 2, k = 10)) shouldBe expected
-    // replay of batch 1: encode is deterministic, dynamic overwrite
-    // rewrites exactly its own (cell, batch) partitions — nothing changes
-    VectorIndexIngest.ingestBatch(
-      rows.filter(_._1 % 3 == 1).toSeq.toDF("vec_id", "embedding"),
-      s"$dir/idx", quant, batchId = 1L)
-    val replayed = VectorIndexIngest.index(spark, s"$dir/idx")
-    replayed.count() shouldBe rows.length.toLong
-    key(Similarity.ivfPqProbe(replayed, quant, queries, nprobe = 2, k = 10)) shouldBe expected
+      // three arrival batches (vec_id mod 3) against the FROZEN quantizer
+      val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      val mem = MemoryStream[(Long, Seq[Double])]
+      val q = VectorIndexIngest.start(
+        mem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck")
+      try {
+        for (b <- 0 until 3) {
+          mem.addData(rows.filter(_._1 % 3 == b).toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      // the appended index IS the batch encode of the whole corpus
+      val idx = VectorIndexIngest.index(spark, s"$dir/idx")
+      val batchEncode = Similarity.ivfPqIndexRows(emb, quant).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
+      idx.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+        .sortBy(_._1) shouldBe batchEncode
+      // probing the stored rows is bitwise the one-shot search
+      key(Similarity.ivfPqProbe(idx, quant, queries, nprobe = 2, k = 10)) shouldBe expected
+      // replay of batch 1: encode is deterministic, dynamic overwrite
+      // rewrites exactly its own (cell, batch) partitions — nothing changes
+      VectorIndexIngest.ingestBatch(
+        rows.filter(_._1 % 3 == 1).toSeq.toDF("vec_id", "embedding"),
+        s"$dir/idx", quant, batchId = 1L)
+      val replayed = VectorIndexIngest.index(spark, s"$dir/idx")
+      replayed.count() shouldBe rows.length.toLong
+      key(Similarity.ivfPqProbe(replayed, quant, queries, nprobe = 2, k = 10)) shouldBe expected
+    }
   }
 
   test("auto-compaction: a long vector ingest self-OPTIMIZEs at the batch threshold mid-stream; probes stay bitwise, the store stays bounded") {
     implicit val ctx = spark.sqlContext
     import graft.llm.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("vecauto").toString
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-    val cbIds = Seq(11L, 57L, 201L, 401L)
-    val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
-    val queries = Similarity.collectVectors(emb, Seq(0L, 1L, 2L))
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rn").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
-    val expected = key(Similarity.ivfPqSearch(
-      emb, coarseIds, cbIds, 4, Seq(0L, 1L, 2L), nprobe = 2, k = 10))
-    val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = VectorIndexIngest.start(
-      mem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck",
-      autoCompactEvery = Some(3))
-    try {
-      for (b <- 0 until 8) {
-        mem.addData(rows.filter(_._1 % 8 == b).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // the policy fired at least twice over 8 batches (thresholds at 3)
-    val ws = StoreCompaction.watershed(spark, s"$dir/idx")
-    ws should not be empty
-    ws.get.generation should be >= 2L
-    // live batch partitions above the watershed stay under the threshold
-    val live = spark.read.parquet(s"$dir/idx")
-      .filter(col("ingest_batch").cast("long") > ws.get.coveredThrough)
-      .select(col("ingest_batch").cast("long")).distinct().collect()
-      .map(_.getLong(0)).filter(_ >= 0L)
-    live.length should be < 3
-    // probes bitwise the one-shot search throughout
-    key(Similarity.ivfPqProbe(VectorIndexIngest.index(spark, s"$dir/idx"),
-      quant, queries, nprobe = 2, k = 10)) shouldBe expected
+    SparkEntry.withTempRoot(spark, "vecauto") { dir =>
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
+      val cbIds = Seq(11L, 57L, 201L, 401L)
+      val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
+      val queries = Similarity.collectVectors(emb, Seq(0L, 1L, 2L))
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("query_id", "rn").collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+      val expected = key(Similarity.ivfPqSearch(
+        emb, coarseIds, cbIds, 4, Seq(0L, 1L, 2L), nprobe = 2, k = 10))
+      val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      val mem = MemoryStream[(Long, Seq[Double])]
+      val q = VectorIndexIngest.start(
+        mem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck",
+        autoCompactEvery = Some(3))
+      try {
+        for (b <- 0 until 8) {
+          mem.addData(rows.filter(_._1 % 8 == b).toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      // the policy fired at least twice over 8 batches (thresholds at 3)
+      val ws = StoreCompaction.watershed(spark, s"$dir/idx")
+      ws should not be empty
+      ws.get.generation should be >= 2L
+      // live batch partitions above the watershed stay under the threshold
+      val live = spark.read.parquet(s"$dir/idx")
+        .filter(col("ingest_batch").cast("long") > ws.get.coveredThrough)
+        .select(col("ingest_batch").cast("long")).distinct().collect()
+        .map(_.getLong(0)).filter(_ >= 0L)
+      live.length should be < 3
+      // probes bitwise the one-shot search throughout
+      key(Similarity.ivfPqProbe(VectorIndexIngest.index(spark, s"$dir/idx"),
+        quant, queries, nprobe = 2, k = 10)) shouldBe expected
+    }
   }
 
   test("lex ingest dedup admission: re-sent and within-batch duplicate docs are filtered, never double-counting df/N/Sumdl") {
     import graft.llm.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("lexadm").toString
-    val docs = Seq(
-      1L -> "spark window spark filter",
-      2L -> "customer window filter here",
-      3L -> "spark customer customer data")
-    val clean = docs.toDF("doc_id", "text")
-    val terms = Seq("spark", "window", "customer", "filter")
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    // batch 1 re-sends doc 2 and carries doc 3 TWICE internally
-    val b0 = Seq(docs(0), docs(1)).toDF("doc_id", "text")
-    val b1 = Seq(docs(1), docs(2), docs(2)).toDF("doc_id", "text")
-    LexIngest.ingestBatch(b0, s"$dir/guarded", 0L, dedupAdmission = true)
-    LexIngest.ingestBatch(b1, s"$dir/guarded", 1L, dedupAdmission = true)
-    val st = TextAnalysis.lexStats(clean).head()
-    LexIngest.corpusStats(spark, s"$dir/guarded") shouldBe
-      ((st.getLong(0), st.getLong(1)))
-    key(LexIngest.probe(spark, s"$dir/guarded", terms, 10)) shouldBe
-      key(TextAnalysis.bm25TopDocs(clean, terms, 10))
-    // each doc owns exactly one postings partition's rows: no term's df
-    // can exceed the distinct doc count
-    StoreCompaction.committedView(spark, s"$dir/guarded/postings")
-      .groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"),
-        count(lit(1)).as("rows"))
-      .filter(col("df") =!= col("rows")).count() shouldBe 0L
-    // the unguarded twin DOES corrupt (the hazard the flag closes):
-    // doc 2 and the doubled doc 3 inflate N from 3 to 6
-    LexIngest.ingestBatch(b0, s"$dir/raw", 0L)
-    LexIngest.ingestBatch(b1, s"$dir/raw", 1L)
-    LexIngest.corpusStats(spark, s"$dir/raw")._1 shouldBe 5L
+    SparkEntry.withTempRoot(spark, "lexadm") { dir =>
+      val docs = Seq(
+        1L -> "spark window spark filter",
+        2L -> "customer window filter here",
+        3L -> "spark customer customer data")
+      val clean = docs.toDF("doc_id", "text")
+      val terms = Seq("spark", "window", "customer", "filter")
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      // batch 1 re-sends doc 2 and carries doc 3 TWICE internally
+      val b0 = Seq(docs(0), docs(1)).toDF("doc_id", "text")
+      val b1 = Seq(docs(1), docs(2), docs(2)).toDF("doc_id", "text")
+      LexIngest.ingestBatch(b0, s"$dir/guarded", 0L, dedupAdmission = true)
+      LexIngest.ingestBatch(b1, s"$dir/guarded", 1L, dedupAdmission = true)
+      val st = TextAnalysis.lexStats(clean).head()
+      LexIngest.corpusStats(spark, s"$dir/guarded") shouldBe
+        ((st.getLong(0), st.getLong(1)))
+      key(LexIngest.probe(spark, s"$dir/guarded", terms, 10)) shouldBe
+        key(TextAnalysis.bm25TopDocs(clean, terms, 10))
+      // each doc owns exactly one postings partition's rows: no term's df
+      // can exceed the distinct doc count
+      StoreCompaction.committedView(spark, s"$dir/guarded/postings")
+        .groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"),
+          count(lit(1)).as("rows"))
+        .filter(col("df") =!= col("rows")).count() shouldBe 0L
+      // the unguarded twin DOES corrupt (the hazard the flag closes):
+      // doc 2 and the doubled doc 3 inflate N from 3 to 6
+      LexIngest.ingestBatch(b0, s"$dir/raw", 0L)
+      LexIngest.ingestBatch(b1, s"$dir/raw", 1L)
+      LexIngest.corpusStats(spark, s"$dir/raw")._1 shouldBe 5L
+    }
   }
 
   test("span ingest auto-compaction: a self-OPTIMIZing stream lands the same corpus as the manual twin; both stores compact") {
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("spanauto").toString
-    val n = 3
-    val batches = Seq(
-      Seq((1L, "w1 w2 w3 w4 w5"), (2L, "p1 p2 p3 p4")),
-      Seq((3L, "x w1 w2 w3 w4 y"), (4L, "q1 q2 q3 q4 q5 q6")),
-      Seq((5L, "w3 w4 w5 z q1 q2 q3"), (6L, "fresh tokens only here")),
-      Seq((7L, "p1 p2 p3 p4 tail run")),
-      Seq((8L, "q4 q5 q6 and w1 w2 w3 again")),
-      Seq((9L, "all novel text at the end")))
-    val mem = MemoryStream[(Long, String)]
-    val q = SpanIngest.start(mem.toDF.toDF("doc_id", "text"),
-      s"$dir/a/corpus", s"$dir/a/index", s"$dir/a/ck", n,
-      autoCompactEvery = Some(2))
-    try {
-      batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-    } finally q.stop()
-    for ((b, i) <- batches.zipWithIndex)
-      SpanIngest.ingestBatch(b.toDF("doc_id", "text"),
-        s"$dir/b/corpus", s"$dir/b/index", i.toLong, n)
-    def corpus(root: String) =
-      StoreCompaction.committedView(spark, s"$root/corpus")
-        .select("doc_id", "text").orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1)))
-    corpus(s"$dir/a") shouldBe corpus(s"$dir/b")
-    StoreCompaction.watershed(spark, s"$dir/a/corpus") should not be empty
-    StoreCompaction.watershed(spark, s"$dir/a/index") should not be empty
+    SparkEntry.withTempRoot(spark, "spanauto") { dir =>
+      val n = 3
+      val batches = Seq(
+        Seq((1L, "w1 w2 w3 w4 w5"), (2L, "p1 p2 p3 p4")),
+        Seq((3L, "x w1 w2 w3 w4 y"), (4L, "q1 q2 q3 q4 q5 q6")),
+        Seq((5L, "w3 w4 w5 z q1 q2 q3"), (6L, "fresh tokens only here")),
+        Seq((7L, "p1 p2 p3 p4 tail run")),
+        Seq((8L, "q4 q5 q6 and w1 w2 w3 again")),
+        Seq((9L, "all novel text at the end")))
+      val mem = MemoryStream[(Long, String)]
+      val q = SpanIngest.start(mem.toDF.toDF("doc_id", "text"),
+        s"$dir/a/corpus", s"$dir/a/index", s"$dir/a/ck", n,
+        autoCompactEvery = Some(2))
+      try {
+        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
+      } finally q.stop()
+      for ((b, i) <- batches.zipWithIndex)
+        SpanIngest.ingestBatch(b.toDF("doc_id", "text"),
+          s"$dir/b/corpus", s"$dir/b/index", i.toLong, n)
+      def corpus(root: String) =
+        StoreCompaction.committedView(spark, s"$root/corpus")
+          .select("doc_id", "text").orderBy("doc_id").collect()
+          .map(r => (r.getLong(0), r.getString(1)))
+      corpus(s"$dir/a") shouldBe corpus(s"$dir/b")
+      StoreCompaction.watershed(spark, s"$dir/a/corpus") should not be empty
+      StoreCompaction.watershed(spark, s"$dir/a/index") should not be empty
+    }
   }
 
   test("vector ingest dedup admission: re-sent and within-batch duplicate ids are filtered; the index equals the distinct-corpus encode") {
     import graft.llm.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("vecadm").toString
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val quant = Similarity.trainIvfPqQuantizer(
-      emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), m = 4)
-    val half = emb.filter(col("vec_id") % 2 === 0)
-    // batch 1 re-sends the whole corpus (half of it a duplicate of batch
-    // 0) and doubles one row internally
-    val b1 = emb.union(emb.filter(col("vec_id") === 42L))
-    VectorIndexIngest.ingestBatch(half, s"$dir/guarded", quant, 0L,
-      dedupAdmission = true)
-    VectorIndexIngest.ingestBatch(b1, s"$dir/guarded", quant, 1L,
-      dedupAdmission = true)
-    val idx = VectorIndexIngest.index(spark, s"$dir/guarded")
-    idx.count() shouldBe emb.count()
-    idx.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-      .sortBy(_._1) shouldBe
-      Similarity.ivfPqIndexRows(emb, quant).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
-    // the unguarded twin lands the duplicates (the hazard the flag closes)
-    VectorIndexIngest.ingestBatch(half, s"$dir/raw", quant, 0L)
-    VectorIndexIngest.ingestBatch(b1, s"$dir/raw", quant, 1L)
-    VectorIndexIngest.index(spark, s"$dir/raw").count() should be > emb.count()
+    SparkEntry.withTempRoot(spark, "vecadm") { dir =>
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val quant = Similarity.trainIvfPqQuantizer(
+        emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), m = 4)
+      val half = emb.filter(col("vec_id") % 2 === 0)
+      // batch 1 re-sends the whole corpus (half of it a duplicate of batch
+      // 0) and doubles one row internally
+      val b1 = emb.union(emb.filter(col("vec_id") === 42L))
+      VectorIndexIngest.ingestBatch(half, s"$dir/guarded", quant, 0L,
+        dedupAdmission = true)
+      VectorIndexIngest.ingestBatch(b1, s"$dir/guarded", quant, 1L,
+        dedupAdmission = true)
+      val idx = VectorIndexIngest.index(spark, s"$dir/guarded")
+      idx.count() shouldBe emb.count()
+      idx.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+        .sortBy(_._1) shouldBe
+        Similarity.ivfPqIndexRows(emb, quant).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
+      // the unguarded twin lands the duplicates (the hazard the flag closes)
+      VectorIndexIngest.ingestBatch(half, s"$dir/raw", quant, 0L)
+      VectorIndexIngest.ingestBatch(b1, s"$dir/raw", quant, 1L)
+      VectorIndexIngest.index(spark, s"$dir/raw").count() should be > emb.count()
+    }
   }
 
   test("chunk-level streamed index: ragChunks batches through LexIngest probe bitwise the one-shot chunk retrieval") {
     import graft.llm.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("chunkidx").toString
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val terms = Seq("spark", "window", "customer", "filter")
-    // the retrieval units: chunk rows with the synthetic composite key
-    def chunksOf(docs: org.apache.spark.sql.DataFrame) =
-      TextAnalysis.ragChunks(docs, 30, 10)
-        .select((col("doc_id") * 100000L + col("chunk_id")).as("doc_id"),
-          col("chunk").as("text"))
-    // chunks arrive with their documents, three ingest batches
-    for (b <- 0 until 3)
-      LexIngest.ingestBatch(chunksOf(d.filter(col("doc_id") % 3 === b)),
-        dir, b.toLong)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    key(LexIngest.probe(spark, dir, terms, 10)) shouldBe
-      key(TextAnalysis.bm25TopDocs(chunksOf(d), terms, 10))
+    SparkEntry.withTempRoot(spark, "chunkidx") { dir =>
+      val d = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val terms = Seq("spark", "window", "customer", "filter")
+      // the retrieval units: chunk rows with the synthetic composite key
+      def chunksOf(docs: org.apache.spark.sql.DataFrame) =
+        TextAnalysis.ragChunks(docs, 30, 10)
+          .select((col("doc_id") * 100000L + col("chunk_id")).as("doc_id"),
+            col("chunk").as("text"))
+      // chunks arrive with their documents, three ingest batches
+      for (b <- 0 until 3)
+        LexIngest.ingestBatch(chunksOf(d.filter(col("doc_id") % 3 === b)),
+          dir, b.toLong)
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      key(LexIngest.probe(spark, dir, terms, 10)) shouldBe
+        key(TextAnalysis.bm25TopDocs(chunksOf(d), terms, 10))
+    }
   }
 
   test("lex ingest auto-compaction: the streamed store self-OPTIMIZEs at the threshold; probe bitwise, stats_agg rebuilt") {
     implicit val ctx = spark.sqlContext
     import graft.llm.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("lexauto").toString
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val terms = Seq("spark", "window", "customer", "filter")
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    val rows = d.collect().map(r => (r.getLong(0), r.getString(1)))
-    val mem = MemoryStream[(Long, String)]
-    val q = LexIngest.start(mem.toDF.toDF("doc_id", "text"),
-      s"$dir/idx", s"$dir/ck", autoCompactEvery = Some(3))
-    try {
-      for (b <- 0 until 6) {
-        mem.addData(rows.filter(_._1 % 6 == b).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    StoreCompaction.watershed(spark, s"$dir/idx/postings") should not be empty
-    StoreCompaction.watershed(spark, s"$dir/idx/stats") should not be empty
-    key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe
-      key(TextAnalysis.bm25TopDocs(d, terms, 10))
-    val st = TextAnalysis.lexStats(d).head()
-    LexIngest.corpusStats(spark, s"$dir/idx") shouldBe
-      ((st.getLong(0), st.getLong(1)))
+    SparkEntry.withTempRoot(spark, "lexauto") { dir =>
+      val d = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val terms = Seq("spark", "window", "customer", "filter")
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      val rows = d.collect().map(r => (r.getLong(0), r.getString(1)))
+      val mem = MemoryStream[(Long, String)]
+      val q = LexIngest.start(mem.toDF.toDF("doc_id", "text"),
+        s"$dir/idx", s"$dir/ck", autoCompactEvery = Some(3))
+      try {
+        for (b <- 0 until 6) {
+          mem.addData(rows.filter(_._1 % 6 == b).toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      StoreCompaction.watershed(spark, s"$dir/idx/postings") should not be empty
+      StoreCompaction.watershed(spark, s"$dir/idx/stats") should not be empty
+      key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe
+        key(TextAnalysis.bm25TopDocs(d, terms, 10))
+      val st = TextAnalysis.lexStats(d).head()
+      LexIngest.corpusStats(spark, s"$dir/idx") shouldBe
+        ((st.getLong(0), st.getLong(1)))
+    }
   }
 
   test("lex ingest: streamed BM25 index probes bitwise-equal to the one-shot scorer and the batch store; replay rewrites identically") {
     implicit val ctx = spark.sqlContext
     import graft.llm.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("lexingest").toString
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val terms = Seq("spark", "window", "customer", "filter")
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    val expected = key(TextAnalysis.bm25TopDocs(d, terms, 10))
+    SparkEntry.withTempRoot(spark, "lexingest") { dir =>
+      val d = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val terms = Seq("spark", "window", "customer", "filter")
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      val expected = key(TextAnalysis.bm25TopDocs(d, terms, 10))
 
-    val rows = d.collect().map(r => (r.getLong(0), r.getString(1)))
-    val mem = MemoryStream[(Long, String)]
-    val q = LexIngest.start(mem.toDF.toDF("doc_id", "text"),
-      s"$dir/idx", s"$dir/ck")
-    try {
-      for (b <- 0 until 3) {
-        mem.addData(rows.filter(_._1 % 3 == b).toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe expected
-    // and bitwise the batch-written store's probe
-    TextAnalysis.writeLexIndex(d, s"$dir/batchidx")
-    key(TextAnalysis.bm25Probe(spark, s"$dir/batchidx", terms, 10)) shouldBe expected
-    // replay of batch 1: the projection is batch-local and deterministic,
-    // dynamic overwrite rewrites exactly its own partitions
-    LexIngest.ingestBatch(
-      rows.filter(_._1 % 3 == 1).toSeq.toDF("doc_id", "text"),
-      s"$dir/idx", batchId = 1L)
-    key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe expected
-    // stats stayed additive: the per-doc rows aggregate to the corpus totals
-    val st = spark.read.parquet(s"$dir/idx/stats")
-      .agg(count(lit(1)), sum(col("dl"))).head()
-    val bt = TextAnalysis.lexStats(d).head()
-    (st.getLong(0), st.getLong(1)) shouldBe ((bt.getLong(0), bt.getLong(1)))
+      val rows = d.collect().map(r => (r.getLong(0), r.getString(1)))
+      val mem = MemoryStream[(Long, String)]
+      val q = LexIngest.start(mem.toDF.toDF("doc_id", "text"),
+        s"$dir/idx", s"$dir/ck")
+      try {
+        for (b <- 0 until 3) {
+          mem.addData(rows.filter(_._1 % 3 == b).toIndexedSeq: _*)
+          q.processAllAvailable()
+        }
+      } finally q.stop()
+      key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe expected
+      // and bitwise the batch-written store's probe
+      TextAnalysis.writeLexIndex(d, s"$dir/batchidx")
+      key(TextAnalysis.bm25Probe(spark, s"$dir/batchidx", terms, 10)) shouldBe expected
+      // replay of batch 1: the projection is batch-local and deterministic,
+      // dynamic overwrite rewrites exactly its own partitions
+      LexIngest.ingestBatch(
+        rows.filter(_._1 % 3 == 1).toSeq.toDF("doc_id", "text"),
+        s"$dir/idx", batchId = 1L)
+      key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe expected
+      // stats stayed additive: the per-doc rows aggregate to the corpus totals
+      val st = spark.read.parquet(s"$dir/idx/stats")
+        .agg(count(lit(1)), sum(col("dl"))).head()
+      val bt = TextAnalysis.lexStats(d).head()
+      (st.getLong(0), st.getLong(1)) shouldBe ((bt.getLong(0), bt.getLong(1)))
+    }
   }
 
   test("streamed hybrid retrieval: both stores fed by live foreachBatch queries fuse bitwise to the one-shot hybrid; forget composes through both") {
@@ -1371,380 +1399,388 @@ class StreamingSpec extends SparkSpec {
     // the production ingestion path end-to-end through the fused ranking
     implicit val ctx = spark.sqlContext
     import graft.llm.{Similarity, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("hybstream").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-    val cbIds = Seq(11L, 57L, 201L, 401L)
-    val terms = Seq("spark", "window", "customer", "filter")
-    val qid = 0L
-    val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
-    val docRows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val vecRows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val dmem = MemoryStream[(Long, String)]
-    val vmem = MemoryStream[(Long, Seq[Double])]
-    val dq = LexIngest.start(dmem.toDF.toDF("doc_id", "text"),
-      s"$dir/lex", s"$dir/dck")
-    val vq = VectorIndexIngest.start(vmem.toDF.toDF("vec_id", "embedding"),
-      s"$dir/vec", quant, s"$dir/vck")
-    try {
-      for (b <- 0 until 3) {
-        dmem.addData(docRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
-        vmem.addData(vecRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
-        dq.processAllAvailable(); vq.processAllAvailable()
-      }
-    } finally { dq.stop(); vq.stop() }
-    def fused() = Similarity.rrfFuse(
-      LexIngest.probe(spark, s"$dir/lex", terms, 10)
-        .select(lit(qid).as("query_id"), col("doc_id").as("neighbor_id"), col("rn")),
-      Similarity.ivfPqProbe(VectorIndexIngest.index(spark, s"$dir/vec"),
-          quant, Similarity.collectVectors(emb, Seq(qid)), nprobe = 3, k = 10)
-        .select(col("query_id"), col("neighbor_id"), col("rn")),
-      60, 5)
-    def oneShot(d: org.apache.spark.sql.DataFrame,
-                e: org.apache.spark.sql.DataFrame) = Similarity.rrfFuse(
-      TextAnalysis.bm25TopDocs(d, terms, 10)
-        .select(lit(qid).as("query_id"), col("doc_id").as("neighbor_id"), col("rn")),
-      Similarity.ivfPqSearch(e, coarseIds, cbIds, 4, Seq(qid), nprobe = 3, k = 10)
-        .select(col("query_id"), col("neighbor_id"), col("rn")),
-      60, 5)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
-    key(fused()) shouldBe key(oneShot(docs, emb))
-    val forget = Seq(87L, 102L)
-    LexIngest.markDeleted(spark, s"$dir/lex", forget)
-    StoreCompaction.markDeleted(spark, s"$dir/vec", forget)
-    key(fused()) shouldBe key(oneShot(
-      docs.filter(!col("doc_id").isin(forget: _*)),
-      emb.filter(!col("vec_id").isin(forget: _*))))
+    SparkEntry.withTempRoot(spark, "hybstream") { dir =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
+      val cbIds = Seq(11L, 57L, 201L, 401L)
+      val terms = Seq("spark", "window", "customer", "filter")
+      val qid = 0L
+      val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
+      val docRows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
+      val vecRows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      val dmem = MemoryStream[(Long, String)]
+      val vmem = MemoryStream[(Long, Seq[Double])]
+      val dq = LexIngest.start(dmem.toDF.toDF("doc_id", "text"),
+        s"$dir/lex", s"$dir/dck")
+      val vq = VectorIndexIngest.start(vmem.toDF.toDF("vec_id", "embedding"),
+        s"$dir/vec", quant, s"$dir/vck")
+      try {
+        for (b <- 0 until 3) {
+          dmem.addData(docRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
+          vmem.addData(vecRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
+          dq.processAllAvailable(); vq.processAllAvailable()
+        }
+      } finally { dq.stop(); vq.stop() }
+      def fused() = Similarity.rrfFuse(
+        LexIngest.probe(spark, s"$dir/lex", terms, 10)
+          .select(lit(qid).as("query_id"), col("doc_id").as("neighbor_id"), col("rn")),
+        Similarity.ivfPqProbe(VectorIndexIngest.index(spark, s"$dir/vec"),
+            quant, Similarity.collectVectors(emb, Seq(qid)), nprobe = 3, k = 10)
+          .select(col("query_id"), col("neighbor_id"), col("rn")),
+        60, 5)
+      def oneShot(d: org.apache.spark.sql.DataFrame,
+                  e: org.apache.spark.sql.DataFrame) = Similarity.rrfFuse(
+        TextAnalysis.bm25TopDocs(d, terms, 10)
+          .select(lit(qid).as("query_id"), col("doc_id").as("neighbor_id"), col("rn")),
+        Similarity.ivfPqSearch(e, coarseIds, cbIds, 4, Seq(qid), nprobe = 3, k = 10)
+          .select(col("query_id"), col("neighbor_id"), col("rn")),
+        60, 5)
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+      key(fused()) shouldBe key(oneShot(docs, emb))
+      val forget = Seq(87L, 102L)
+      LexIngest.markDeleted(spark, s"$dir/lex", forget)
+      StoreCompaction.markDeleted(spark, s"$dir/vec", forget)
+      key(fused()) shouldBe key(oneShot(
+        docs.filter(!col("doc_id").isin(forget: _*)),
+        emb.filter(!col("vec_id").isin(forget: _*))))
+    }
   }
 
   test("prfProbe: the store-served PRF loop is bitwise the one-shot bm25Prf; forget composes through every stage") {
     import graft.llm.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("prfprobe").toString
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val seed = Seq("spark", "window", "customer", "filter")
-    for (b <- 0 until 3)
-      LexIngest.ingestBatch(d.filter(col("doc_id") % 3 === b), s"$dir/lex", b.toLong)
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    key(LexIngest.prfProbe(spark, s"$dir/lex", seed, 5, 3, 10)) shouldBe
-      key(TextAnalysis.bm25Prf(d, seed, 5, 3, 10))
-    // forget: deleted docs leave the feedback ranking, the vote, the df
-    // counts AND the constants — the loop equals the one-shot PRF over
-    // the surviving corpus
-    val forget = Seq(87L, 102L)
-    LexIngest.markDeleted(spark, s"$dir/lex", forget)
-    key(LexIngest.prfProbe(spark, s"$dir/lex", seed, 5, 3, 10)) shouldBe
-      key(TextAnalysis.bm25Prf(
-        d.filter(!col("doc_id").isin(forget: _*)), seed, 5, 3, 10))
+    SparkEntry.withTempRoot(spark, "prfprobe") { dir =>
+      val d = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val seed = Seq("spark", "window", "customer", "filter")
+      for (b <- 0 until 3)
+        LexIngest.ingestBatch(d.filter(col("doc_id") % 3 === b), s"$dir/lex", b.toLong)
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      key(LexIngest.prfProbe(spark, s"$dir/lex", seed, 5, 3, 10)) shouldBe
+        key(TextAnalysis.bm25Prf(d, seed, 5, 3, 10))
+      // forget: deleted docs leave the feedback ranking, the vote, the df
+      // counts AND the constants — the loop equals the one-shot PRF over
+      // the surviving corpus
+      val forget = Seq(87L, 102L)
+      LexIngest.markDeleted(spark, s"$dir/lex", forget)
+      key(LexIngest.prfProbe(spark, s"$dir/lex", seed, 5, 3, 10)) shouldBe
+        key(TextAnalysis.bm25Prf(
+          d.filter(!col("doc_id").isin(forget: _*)), seed, 5, 3, 10))
+    }
   }
 
   test("vec store + stored quantizer: the store-complete tail (MMR + refine) is bitwise the one-shot; forget composes — an erased id cannot be fetched even as a rerank candidate") {
     import graft.llm.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("vecstore").toString
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-    val cbIds = Seq(11L, 57L, 201L, 401L)
-    val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
-    for (b <- 0 until 3) {
-      val part = emb.filter(col("vec_id") % 3 === b)
-      VectorIndexIngest.ingestBatch(part, s"$dir/idx", quant, b.toLong)
-      VecStoreIngest.ingestBatch(part, s"$dir/vecs", b.toLong)
-    }
-    // the view round-trips the corpus bit-exactly (drop-in emb frame)
-    def vbits(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)
-          .map(java.lang.Double.doubleToRawLongBits).toSeq)).sortBy(_._1)
-    val vecs = VecStoreIngest.view(spark, s"$dir/vecs")
-    vbits(vecs).toSeq shouldBe vbits(emb).toSeq
-    val storedQ = VectorIndexIngest.quantizer(spark, s"$dir/idx")
-    def mmrKey(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("sel_rank").collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
-    def refKey(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("query_id", "rn").collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
-    // store-only MMR ≡ one-shot over the same quantizer and corpus
-    val storeMmr = mmrKey(Similarity.mmrRerankStored(
-      VectorIndexIngest.index(spark, s"$dir/idx"), storedQ, vecs,
-      0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
-    storeMmr shouldBe mmrKey(Similarity.mmrRerankStored(
-      Similarity.ivfPqIndexRows(emb, quant), quant, emb,
-      0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
-    // store-only refined search ≡ one-shot ivfPqSearchRefined
-    val queryIds = Seq(0L, 1L, 2L)
-    def storeRefined() = {
-      val cands = Similarity.ivfPqProbe(
-          VectorIndexIngest.index(spark, s"$dir/idx"), storedQ,
-          Similarity.collectVectors(vecs, queryIds), nprobe = 2, k = 20)
-        .select(col("query_id"), col("neighbor_id"))
-      Similarity.refineExact(vecs, cands, queryIds, k = 5)
-    }
-    refKey(storeRefined()) shouldBe refKey(Similarity.ivfPqSearchRefined(
-      emb, coarseIds, cbIds, 4, queryIds, nprobe = 2, rerankR = 20, k = 5))
-    // forget an id the un-forgotten MMR actually selected: it leaves the
-    // candidate set (index liveView) AND becomes unfetchable (vec store
-    // liveView) — the tail equals the one-shot over the surviving corpus
-    val gone = storeMmr.map(_._2).filter(_ != 0L).head
-    StoreCompaction.markDeleted(spark, s"$dir/idx", Seq(gone))
-    VecStoreIngest.markDeleted(spark, s"$dir/vecs", Seq(gone))
-    VecStoreIngest.view(spark, s"$dir/vecs")
-      .filter(col("vec_id") === gone).count() shouldBe 0L
-    val survivors = emb.filter(col("vec_id") =!= gone)
-    mmrKey(Similarity.mmrRerankStored(
-      VectorIndexIngest.index(spark, s"$dir/idx"), storedQ,
-      VecStoreIngest.view(spark, s"$dir/vecs"),
-      0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7)) shouldBe
-      mmrKey(Similarity.mmrRerankStored(
-        Similarity.ivfPqIndexRows(survivors, quant), quant, survivors,
+    SparkEntry.withTempRoot(spark, "vecstore") { dir =>
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
+      val cbIds = Seq(11L, 57L, 201L, 401L)
+      val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
+      for (b <- 0 until 3) {
+        val part = emb.filter(col("vec_id") % 3 === b)
+        VectorIndexIngest.ingestBatch(part, s"$dir/idx", quant, b.toLong)
+        VecStoreIngest.ingestBatch(part, s"$dir/vecs", b.toLong)
+      }
+      // the view round-trips the corpus bit-exactly (drop-in emb frame)
+      def vbits(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("vec_id"), col("embedding").cast("array<double>"))
+          .collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1)
+            .map(java.lang.Double.doubleToRawLongBits).toSeq)).sortBy(_._1)
+      val vecs = VecStoreIngest.view(spark, s"$dir/vecs")
+      vbits(vecs).toSeq shouldBe vbits(emb).toSeq
+      val storedQ = VectorIndexIngest.quantizer(spark, s"$dir/idx")
+      def mmrKey(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("sel_rank").collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      def refKey(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("query_id", "rn").collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+      // store-only MMR ≡ one-shot over the same quantizer and corpus
+      val storeMmr = mmrKey(Similarity.mmrRerankStored(
+        VectorIndexIngest.index(spark, s"$dir/idx"), storedQ, vecs,
         0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
-    // compaction applies the delete physically; probes stay bitwise
-    VecStoreIngest.compact(spark, s"$dir/vecs")
-    StoreCompaction.vacuum(spark, s"$dir/vecs")
-    spark.read.parquet(s"$dir/vecs").filter(col("vec_id") === gone)
-      .count() shouldBe 0L
-    vbits(VecStoreIngest.view(spark, s"$dir/vecs")).toSeq shouldBe
-      vbits(survivors).toSeq
+      storeMmr shouldBe mmrKey(Similarity.mmrRerankStored(
+        Similarity.ivfPqIndexRows(emb, quant), quant, emb,
+        0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
+      // store-only refined search ≡ one-shot ivfPqSearchRefined
+      val queryIds = Seq(0L, 1L, 2L)
+      def storeRefined() = {
+        val cands = Similarity.ivfPqProbe(
+            VectorIndexIngest.index(spark, s"$dir/idx"), storedQ,
+            Similarity.collectVectors(vecs, queryIds), nprobe = 2, k = 20)
+          .select(col("query_id"), col("neighbor_id"))
+        Similarity.refineExact(vecs, cands, queryIds, k = 5)
+      }
+      refKey(storeRefined()) shouldBe refKey(Similarity.ivfPqSearchRefined(
+        emb, coarseIds, cbIds, 4, queryIds, nprobe = 2, rerankR = 20, k = 5))
+      // forget an id the un-forgotten MMR actually selected: it leaves the
+      // candidate set (index liveView) AND becomes unfetchable (vec store
+      // liveView) — the tail equals the one-shot over the surviving corpus
+      val gone = storeMmr.map(_._2).filter(_ != 0L).head
+      StoreCompaction.markDeleted(spark, s"$dir/idx", Seq(gone))
+      VecStoreIngest.markDeleted(spark, s"$dir/vecs", Seq(gone))
+      VecStoreIngest.view(spark, s"$dir/vecs")
+        .filter(col("vec_id") === gone).count() shouldBe 0L
+      val survivors = emb.filter(col("vec_id") =!= gone)
+      mmrKey(Similarity.mmrRerankStored(
+        VectorIndexIngest.index(spark, s"$dir/idx"), storedQ,
+        VecStoreIngest.view(spark, s"$dir/vecs"),
+        0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7)) shouldBe
+        mmrKey(Similarity.mmrRerankStored(
+          Similarity.ivfPqIndexRows(survivors, quant), quant, survivors,
+          0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
+      // compaction applies the delete physically; probes stay bitwise
+      VecStoreIngest.compact(spark, s"$dir/vecs")
+      StoreCompaction.vacuum(spark, s"$dir/vecs")
+      spark.read.parquet(s"$dir/vecs").filter(col("vec_id") === gone)
+        .count() shouldBe 0L
+      vbits(VecStoreIngest.view(spark, s"$dir/vecs")).toSeq shouldBe
+        vbits(survivors).toSeq
+    }
   }
 
   test("chunk-level persisted index: cascade forget removes EVERY chunk of a parent; the probe equals the one-shot chunk retrieval over surviving chunks") {
     import graft.llm.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("chunkidx").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val chunks = TextAnalysis.ragChunks(docs, 30, 10)
-      .select(col("doc_id").as("parent_id"),
-        (col("doc_id") * 100000L + col("chunk_id")).as("doc_id"),
-        col("chunk").as("text"))
-    for (b <- 0 until 3)
-      LexIngest.ingestBatch(
-        chunks.filter(col("parent_id") % 3 === b).select(col("doc_id"), col("text")),
-        s"$dir/lex", b.toLong)
-    val terms = Seq("spark", "window", "customer", "filter")
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    key(LexIngest.probe(spark, s"$dir/lex", terms, 10)) shouldBe
-      key(TextAnalysis.bm25TopDocs(chunks.select(col("doc_id"), col("text")),
-        terms, 10))
-    // cascade: both parents have multiple chunks; the ghost id marks none
-    val parents = Seq(87L, 102L, 999999L)
-    val parentChunks = chunks
-      .filter(col("parent_id").isin(parents: _*)).count()
-    parentChunks should be >= 4L
-    LexIngest.markDeletedCascade(spark, s"$dir/lex", parents, keyDiv = 100000L)
-    StoreCompaction.liveView(spark, s"$dir/lex/stats", "doc_id")
-      .filter(org.apache.spark.sql.functions.expr("doc_id div 100000")
-        .isin(parents: _*)).count() shouldBe 0L
-    // post-forget probe ≡ one-shot over the SURVIVING chunk corpus (the
-    // constants re-derive over surviving chunks)
-    val surviving = chunks.filter(!col("parent_id").isin(parents: _*))
-      .select(col("doc_id"), col("text"))
-    key(LexIngest.probe(spark, s"$dir/lex", terms, 10)) shouldBe
-      key(TextAnalysis.bm25TopDocs(surviving, terms, 10))
-    // idempotent: cascading again marks nothing new and changes nothing
-    LexIngest.markDeletedCascade(spark, s"$dir/lex", parents, keyDiv = 100000L)
-    key(LexIngest.probe(spark, s"$dir/lex", terms, 10)) shouldBe
-      key(TextAnalysis.bm25TopDocs(surviving, terms, 10))
+    SparkEntry.withTempRoot(spark, "chunkidx") { dir =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val chunks = TextAnalysis.ragChunks(docs, 30, 10)
+        .select(col("doc_id").as("parent_id"),
+          (col("doc_id") * 100000L + col("chunk_id")).as("doc_id"),
+          col("chunk").as("text"))
+      for (b <- 0 until 3)
+        LexIngest.ingestBatch(
+          chunks.filter(col("parent_id") % 3 === b).select(col("doc_id"), col("text")),
+          s"$dir/lex", b.toLong)
+      val terms = Seq("spark", "window", "customer", "filter")
+      def key(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      key(LexIngest.probe(spark, s"$dir/lex", terms, 10)) shouldBe
+        key(TextAnalysis.bm25TopDocs(chunks.select(col("doc_id"), col("text")),
+          terms, 10))
+      // cascade: both parents have multiple chunks; the ghost id marks none
+      val parents = Seq(87L, 102L, 999999L)
+      val parentChunks = chunks
+        .filter(col("parent_id").isin(parents: _*)).count()
+      parentChunks should be >= 4L
+      LexIngest.markDeletedCascade(spark, s"$dir/lex", parents, keyDiv = 100000L)
+      StoreCompaction.liveView(spark, s"$dir/lex/stats", "doc_id")
+        .filter(org.apache.spark.sql.functions.expr("doc_id div 100000")
+          .isin(parents: _*)).count() shouldBe 0L
+      // post-forget probe ≡ one-shot over the SURVIVING chunk corpus (the
+      // constants re-derive over surviving chunks)
+      val surviving = chunks.filter(!col("parent_id").isin(parents: _*))
+        .select(col("doc_id"), col("text"))
+      key(LexIngest.probe(spark, s"$dir/lex", terms, 10)) shouldBe
+        key(TextAnalysis.bm25TopDocs(surviving, terms, 10))
+      // idempotent: cascading again marks nothing new and changes nothing
+      LexIngest.markDeletedCascade(spark, s"$dir/lex", parents, keyDiv = 100000L)
+      key(LexIngest.probe(spark, s"$dir/lex", terms, 10)) shouldBe
+        key(TextAnalysis.bm25TopDocs(surviving, terms, 10))
+    }
   }
 
   test("vector index ingest refuses a quantizer that differs from the store's published model — mixed-model codes can never land silently") {
     import graft.llm.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("quantguard").toString
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val quant = Similarity.trainIvfPqQuantizer(
-      emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-    VectorIndexIngest.ingestBatch(
-      emb.filter(col("vec_id") % 2 === 0), s"$dir/idx", quant, 0L)
-    // the same (bitwise-equal) model ingests on: write-once is an
-    // equality contract, not an identity one
-    VectorIndexIngest.ingestBatch(
-      emb.filter(col("vec_id") % 2 === 1), s"$dir/idx",
-      Similarity.readIvfPqQuantizer(spark, s"$dir/idx/_quantizer"), 1L)
-    VectorIndexIngest.index(spark, s"$dir/idx").count() shouldBe emb.count()
-    // a DIFFERENT model (retrained pipeline against an old path) fails
-    // loudly before any row lands — probes would otherwise decode its
-    // codes with the published model and rank silently wrong
-    val other = Similarity.trainIvfPqQuantizer(
-      emb, Seq(3L, 17L, 29L, 101L, 211L), Seq(11L, 57L, 201L, 401L), 4)
-    val ex = intercept[IllegalStateException] {
-      VectorIndexIngest.ingestBatch(emb, s"$dir/idx", other, 2L)
+    SparkEntry.withTempRoot(spark, "quantguard") { dir =>
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val quant = Similarity.trainIvfPqQuantizer(
+        emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
+      VectorIndexIngest.ingestBatch(
+        emb.filter(col("vec_id") % 2 === 0), s"$dir/idx", quant, 0L)
+      // the same (bitwise-equal) model ingests on: write-once is an
+      // equality contract, not an identity one
+      VectorIndexIngest.ingestBatch(
+        emb.filter(col("vec_id") % 2 === 1), s"$dir/idx",
+        Similarity.readIvfPqQuantizer(spark, s"$dir/idx/_quantizer"), 1L)
+      VectorIndexIngest.index(spark, s"$dir/idx").count() shouldBe emb.count()
+      // a DIFFERENT model (retrained pipeline against an old path) fails
+      // loudly before any row lands — probes would otherwise decode its
+      // codes with the published model and rank silently wrong
+      val other = Similarity.trainIvfPqQuantizer(
+        emb, Seq(3L, 17L, 29L, 101L, 211L), Seq(11L, 57L, 201L, 401L), 4)
+      val ex = intercept[IllegalStateException] {
+        VectorIndexIngest.ingestBatch(emb, s"$dir/idx", other, 2L)
+      }
+      ex.getMessage should include("quantizer mismatch")
+      VectorIndexIngest.index(spark, s"$dir/idx").count() shouldBe emb.count()
     }
-    ex.getMessage should include("quantizer mismatch")
-    VectorIndexIngest.index(spark, s"$dir/idx").count() shouldBe emb.count()
   }
 
   test("vec/doc store admission arms: re-sent and within-batch duplicate ids are filtered — a rerank candidate can never fetch twice, a passage can never assemble twice") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("storeadm").toString
-    val vecs = Seq(
-      (1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(1.0, 1.0)))
-      .toDF("vec_id", "embedding")
-    // batch 0: id 1 doubled within the batch (collapses to min embedding)
-    VecStoreIngest.ingestBatch(
-      vecs.filter(col("vec_id") <= 2)
-        .union(Seq((1L, Seq(2.0, 2.0))).toDF("vec_id", "embedding")),
-      s"$dir/vecs", 0L, dedupAdmission = true)
-    // batch 1: id 2 re-sent (anti-joins away), id 3 new
-    VecStoreIngest.ingestBatch(
-      vecs.filter(col("vec_id") >= 2), s"$dir/vecs", 1L, dedupAdmission = true)
-    val got = VecStoreIngest.view(spark, s"$dir/vecs").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
-    got shouldBe Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(1.0, 1.0)))
-    // doc twin: duplicate doc collapses to min(text), re-sent doc drops
-    val docs = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")).toDF("doc_id", "text")
-    DocStoreIngest.ingestBatch(
-      docs.filter(col("doc_id") <= 2)
-        .union(Seq((1L, "zzz")).toDF("doc_id", "text")),
-      s"$dir/docs", 0L, dedupAdmission = true)
-    DocStoreIngest.ingestBatch(
-      docs.filter(col("doc_id") >= 2), s"$dir/docs", 1L, dedupAdmission = true)
-    DocStoreIngest.view(spark, s"$dir/docs").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
-      Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
-    // across a compacted generation: after compact + vacuum the registry
-    // is the lone ingest_batch=-1 partition, and a re-sent id 3 must
-    // still anti-join away while a new id lands
-    VecStoreIngest.compact(spark, s"$dir/vecs")
-    StoreCompaction.vacuum(spark, s"$dir/vecs")
-    StoreCompaction.batchDirs(spark, s"$dir/vecs").map(_._2) shouldBe Seq(-1L)
-    VecStoreIngest.ingestBatch(
-      Seq((3L, Seq(9.0, 9.0)), (4L, Seq(2.0, 0.0))).toDF("vec_id", "embedding"),
-      s"$dir/vecs", 2L, dedupAdmission = true)
-    VecStoreIngest.view(spark, s"$dir/vecs").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq shouldBe
-      got :+ ((4L, Seq(2.0, 0.0)))
-    DocStoreIngest.compact(spark, s"$dir/docs")
-    StoreCompaction.vacuum(spark, s"$dir/docs")
-    StoreCompaction.batchDirs(spark, s"$dir/docs").map(_._2) shouldBe Seq(-1L)
-    DocStoreIngest.ingestBatch(Seq((3L, "again"), (4L, "delta")).toDF("doc_id", "text"),
-      s"$dir/docs", 2L, dedupAdmission = true)
-    DocStoreIngest.view(spark, s"$dir/docs").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
-      Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"))
-    // without the flag the duplicate lands twice — the hazard the arm closes
-    DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
-      s"$dir/raw", 0L)
-    DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
-      s"$dir/raw", 1L)
-    DocStoreIngest.view(spark, s"$dir/raw").count() shouldBe 2L
+    SparkEntry.withTempRoot(spark, "storeadm") { dir =>
+      val vecs = Seq(
+        (1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(1.0, 1.0)))
+        .toDF("vec_id", "embedding")
+      // batch 0: id 1 doubled within the batch (collapses to min embedding)
+      VecStoreIngest.ingestBatch(
+        vecs.filter(col("vec_id") <= 2)
+          .union(Seq((1L, Seq(2.0, 2.0))).toDF("vec_id", "embedding")),
+        s"$dir/vecs", 0L, dedupAdmission = true)
+      // batch 1: id 2 re-sent (anti-joins away), id 3 new
+      VecStoreIngest.ingestBatch(
+        vecs.filter(col("vec_id") >= 2), s"$dir/vecs", 1L, dedupAdmission = true)
+      val got = VecStoreIngest.view(spark, s"$dir/vecs").collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
+      got shouldBe Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(1.0, 1.0)))
+      // doc twin: duplicate doc collapses to min(text), re-sent doc drops
+      val docs = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")).toDF("doc_id", "text")
+      DocStoreIngest.ingestBatch(
+        docs.filter(col("doc_id") <= 2)
+          .union(Seq((1L, "zzz")).toDF("doc_id", "text")),
+        s"$dir/docs", 0L, dedupAdmission = true)
+      DocStoreIngest.ingestBatch(
+        docs.filter(col("doc_id") >= 2), s"$dir/docs", 1L, dedupAdmission = true)
+      DocStoreIngest.view(spark, s"$dir/docs").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
+        Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
+      // across a compacted generation: after compact + vacuum the registry
+      // is the lone ingest_batch=-1 partition, and a re-sent id 3 must
+      // still anti-join away while a new id lands
+      VecStoreIngest.compact(spark, s"$dir/vecs")
+      StoreCompaction.vacuum(spark, s"$dir/vecs")
+      StoreCompaction.batchDirs(spark, s"$dir/vecs").map(_._2) shouldBe Seq(-1L)
+      VecStoreIngest.ingestBatch(
+        Seq((3L, Seq(9.0, 9.0)), (4L, Seq(2.0, 0.0))).toDF("vec_id", "embedding"),
+        s"$dir/vecs", 2L, dedupAdmission = true)
+      VecStoreIngest.view(spark, s"$dir/vecs").collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq shouldBe
+        got :+ ((4L, Seq(2.0, 0.0)))
+      DocStoreIngest.compact(spark, s"$dir/docs")
+      StoreCompaction.vacuum(spark, s"$dir/docs")
+      StoreCompaction.batchDirs(spark, s"$dir/docs").map(_._2) shouldBe Seq(-1L)
+      DocStoreIngest.ingestBatch(Seq((3L, "again"), (4L, "delta")).toDF("doc_id", "text"),
+        s"$dir/docs", 2L, dedupAdmission = true)
+      DocStoreIngest.view(spark, s"$dir/docs").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
+        Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"))
+      // without the flag the duplicate lands twice — the hazard the arm closes
+      DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
+        s"$dir/raw", 0L)
+      DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
+        s"$dir/raw", 1L)
+      DocStoreIngest.view(spark, s"$dir/raw").count() shouldBe 2L
+    }
   }
 
   test("doc-text store: verbatim round-trip, forgotten text unreturnable from the fetch view, replay skip, physical apply at compact") {
-    val dir = java.nio.file.Files.createTempDirectory("docstore").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    for (b <- 0 until 3)
+    SparkEntry.withTempRoot(spark, "docstore") { dir =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      for (b <- 0 until 3)
+        DocStoreIngest.ingestBatch(
+          docs.filter(col("doc_id") % 3 === b), s"$dir/docs", b.toLong)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      // byte-verbatim round-trip of the whole corpus
+      rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(docs)
+      // replay of batch 1 rewrites its own partition byte-identically
       DocStoreIngest.ingestBatch(
-        docs.filter(col("doc_id") % 3 === b), s"$dir/docs", b.toLong)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-    // byte-verbatim round-trip of the whole corpus
-    rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(docs)
-    // replay of batch 1 rewrites its own partition byte-identically
-    DocStoreIngest.ingestBatch(
-      docs.filter(col("doc_id") % 3 === 1), s"$dir/docs", 1L)
-    rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(docs)
-    // forget: the TEXT stops being returnable from the fetch view
-    // immediately (a stale candidate id point-joining the view gets
-    // nothing), and compact removes the bytes physically
-    val forget = Seq(87L, 102L, 999999L)
-    DocStoreIngest.markDeleted(spark, s"$dir/docs", forget)
-    DocStoreIngest.view(spark, s"$dir/docs")
-      .filter(col("doc_id").isin(forget: _*)).count() shouldBe 0L
-    val survivors = docs.filter(!col("doc_id").isin(forget: _*))
-    rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(survivors)
-    DocStoreIngest.compact(spark, s"$dir/docs")
-    StoreCompaction.vacuum(spark, s"$dir/docs")
-    spark.read.parquet(s"$dir/docs")
-      .filter(col("doc_id").isin(forget: _*)).count() shouldBe 0L
-    rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(survivors)
+        docs.filter(col("doc_id") % 3 === 1), s"$dir/docs", 1L)
+      rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(docs)
+      // forget: the TEXT stops being returnable from the fetch view
+      // immediately (a stale candidate id point-joining the view gets
+      // nothing), and compact removes the bytes physically
+      val forget = Seq(87L, 102L, 999999L)
+      DocStoreIngest.markDeleted(spark, s"$dir/docs", forget)
+      DocStoreIngest.view(spark, s"$dir/docs")
+        .filter(col("doc_id").isin(forget: _*)).count() shouldBe 0L
+      val survivors = docs.filter(!col("doc_id").isin(forget: _*))
+      rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(survivors)
+      DocStoreIngest.compact(spark, s"$dir/docs")
+      StoreCompaction.vacuum(spark, s"$dir/docs")
+      spark.read.parquet(s"$dir/docs")
+        .filter(col("doc_id").isin(forget: _*)).count() shouldBe 0L
+      rows(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe rows(survivors)
+    }
   }
 
   test("streamed serving twin: a foreachBatch-maintained store pair answers prfProbe and mmrRerankStored bitwise the one-shot at EVERY trigger") {
     implicit val ctx = spark.sqlContext
     import graft.llm.{Similarity, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("ragserve").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-    val cbIds = Seq(11L, 57L, 201L, 401L)
-    val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
-    val seed = Seq("spark", "window", "customer", "filter")
-    val docRows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val vecRows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val dmem = MemoryStream[(Long, String)]
-    val vmem = MemoryStream[(Long, Seq[Double])]
-    val lexQ = LexIngest.start(
-      dmem.toDF.toDF("doc_id", "text"), s"$dir/lex", s"$dir/ck1")
-    val idxQ = VectorIndexIngest.start(
-      vmem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck2")
-    val vecQ = VecStoreIngest.start(
-      vmem.toDF.toDF("vec_id", "embedding"), s"$dir/vecs", s"$dir/ck3")
-    val docQ = DocStoreIngest.start(
-      dmem.toDF.toDF("doc_id", "text"), s"$dir/docs", s"$dir/ck4")
-    val sigQ = SigStoreIngest.start(
-      vmem.toDF.toDF("vec_id", "embedding"), s"$dir/sigs", s"$dir/ck5")
-    def prfKey(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("rn").collect().map(r => (r.getLong(0),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-    def mmrKey(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("sel_rank").collect().map(r => (r.getLong(0), r.getLong(1),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
-        java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
-    try {
-      for (b <- 0 until 3) {
-        dmem.addData(docRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
-        vmem.addData(vecRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
-        lexQ.processAllAvailable()
-        idxQ.processAllAvailable()
-        vecQ.processAllAvailable()
-        docQ.processAllAvailable()
-        sigQ.processAllAvailable()
-        // the corpus SEEN so far (query id 0 arrives in trigger 0)
-        val seenDocs = docs.filter(col("doc_id") % 3 <= b)
-        val seenEmb = emb.filter(col("vec_id") % 3 <= b)
-        prfKey(LexIngest.prfProbe(spark, s"$dir/lex", seed, 5, 3, 10)) shouldBe
-          prfKey(TextAnalysis.bm25Prf(seenDocs, seed, 5, 3, 10))
-        val servedSel = Similarity.mmrRerankStored(
-          VectorIndexIngest.index(spark, s"$dir/idx"),
-          VectorIndexIngest.quantizer(spark, s"$dir/idx"),
-          VecStoreIngest.view(spark, s"$dir/vecs"),
-          0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7)
-        mmrKey(servedSel) shouldBe
-          mmrKey(Similarity.mmrRerankStored(
-            Similarity.ivfPqIndexRows(seenEmb, quant), quant, seenEmb,
-            0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
-        // …and the passage fetch: the doc store assembles the SAME
-        // answer text the seen corpus would, at every trigger
-        def answer(docsFrame: org.apache.spark.sql.DataFrame) = docsFrame
-          .join(org.apache.spark.sql.functions.broadcast(servedSel),
-            col("doc_id") === col("neighbor_id"))
-          .select(col("sel_rank"), col("neighbor_id"), col("text"))
-          .orderBy("sel_rank").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-        answer(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe answer(seenDocs)
-        // …and the binary proposer serves store-only: the STREAMED
-        // signature store (2 BIGINT words per vector on disk — batches
-        // signed at ingest) answers bitwise the one-shot over the seen
-        // corpus at every trigger (all-integer rows)
-        def hamKey(df: org.apache.spark.sql.DataFrame) = df.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        hamKey(SigStoreIngest.probe(spark, s"$dir/sigs", Seq(0L), 5)) shouldBe
-          hamKey(Similarity.hammingTopK(seenEmb, Seq(0L), 5))
-      }
-    } finally { lexQ.stop(); idxQ.stop(); vecQ.stop(); docQ.stop(); sigQ.stop() }
+    SparkEntry.withTempRoot(spark, "ragserve") { dir =>
+      val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+        .select(col("doc_id"), col("text"))
+      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
+      val cbIds = Seq(11L, 57L, 201L, 401L)
+      val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
+      val seed = Seq("spark", "window", "customer", "filter")
+      val docRows = docs.collect().map(r => (r.getLong(0), r.getString(1)))
+      val vecRows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+      val dmem = MemoryStream[(Long, String)]
+      val vmem = MemoryStream[(Long, Seq[Double])]
+      val lexQ = LexIngest.start(
+        dmem.toDF.toDF("doc_id", "text"), s"$dir/lex", s"$dir/ck1")
+      val idxQ = VectorIndexIngest.start(
+        vmem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck2")
+      val vecQ = VecStoreIngest.start(
+        vmem.toDF.toDF("vec_id", "embedding"), s"$dir/vecs", s"$dir/ck3")
+      val docQ = DocStoreIngest.start(
+        dmem.toDF.toDF("doc_id", "text"), s"$dir/docs", s"$dir/ck4")
+      val sigQ = SigStoreIngest.start(
+        vmem.toDF.toDF("vec_id", "embedding"), s"$dir/sigs", s"$dir/ck5")
+      def prfKey(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("rn").collect().map(r => (r.getLong(0),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
+      def mmrKey(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("sel_rank").collect().map(r => (r.getLong(0), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+      try {
+        for (b <- 0 until 3) {
+          dmem.addData(docRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
+          vmem.addData(vecRows.filter(_._1 % 3 == b).toIndexedSeq: _*)
+          lexQ.processAllAvailable()
+          idxQ.processAllAvailable()
+          vecQ.processAllAvailable()
+          docQ.processAllAvailable()
+          sigQ.processAllAvailable()
+          // the corpus SEEN so far (query id 0 arrives in trigger 0)
+          val seenDocs = docs.filter(col("doc_id") % 3 <= b)
+          val seenEmb = emb.filter(col("vec_id") % 3 <= b)
+          prfKey(LexIngest.prfProbe(spark, s"$dir/lex", seed, 5, 3, 10)) shouldBe
+            prfKey(TextAnalysis.bm25Prf(seenDocs, seed, 5, 3, 10))
+          val servedSel = Similarity.mmrRerankStored(
+            VectorIndexIngest.index(spark, s"$dir/idx"),
+            VectorIndexIngest.quantizer(spark, s"$dir/idx"),
+            VecStoreIngest.view(spark, s"$dir/vecs"),
+            0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7)
+          mmrKey(servedSel) shouldBe
+            mmrKey(Similarity.mmrRerankStored(
+              Similarity.ivfPqIndexRows(seenEmb, quant), quant, seenEmb,
+              0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
+          // …and the passage fetch: the doc store assembles the SAME
+          // answer text the seen corpus would, at every trigger
+          def answer(docsFrame: org.apache.spark.sql.DataFrame) = docsFrame
+            .join(org.apache.spark.sql.functions.broadcast(servedSel),
+              col("doc_id") === col("neighbor_id"))
+            .select(col("sel_rank"), col("neighbor_id"), col("text"))
+            .orderBy("sel_rank").collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+          answer(DocStoreIngest.view(spark, s"$dir/docs")) shouldBe answer(seenDocs)
+          // …and the binary proposer serves store-only: the STREAMED
+          // signature store (2 BIGINT words per vector on disk — batches
+          // signed at ingest) answers bitwise the one-shot over the seen
+          // corpus at every trigger (all-integer rows)
+          def hamKey(df: org.apache.spark.sql.DataFrame) = df.collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+          hamKey(SigStoreIngest.probe(spark, s"$dir/sigs", Seq(0L), 5)) shouldBe
+            hamKey(Similarity.hammingTopK(seenEmb, Seq(0L), 5))
+        }
+      } finally { lexQ.stop(); idxQ.stop(); vecQ.stop(); docQ.stop(); sigQ.stop() }
+    }
   }
 
   test("stepUpdates: the streamed K-Means step equals the batch step bitwise on every touched cell") {
