@@ -250,18 +250,18 @@ object Bench {
         require(covered > 0, "unigram encode covered no documents")
         enc.unpersist(false)
       }),
-      // the 100 TB-regime cell-assignment fallback (K > MaxInlineCells):
-      // 300 coarse cells force Similarity.assignCellsJoin — broadcast
-      // cells + one min(struct) exchange — so the large-K path carries a
-      // round timing alongside its PlanSpec pin instead of existing only
-      // as a spec-equal branch
+      // large-K cell assignment: 300 coarse cells through the same
+      // NearestCentroid projection as K=3 (no join, no exchange), timed
+      // beside its PlanSpec pin. The filter makes the count evaluate the
+      // kernel; a bare count() would prune the cell_id projection
       "ann_assign_largek" -> (() => {
         import org.apache.spark.sql.functions.col
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
         val coarse = e.filter(col("vec_id") < 300)
           .select(col("vec_id").as("cell_id"), col("vec").as("cvec"))
-        val n = graft.llm.Similarity.assignCells(e, coarse).count()
+        val n = graft.llm.Similarity.assignCells(e, coarse)
+          .filter(col("cell_id").isNotNull).count()
         require(n > 0, "no assignments from the large-K path")
       }),
       // the persisted-ANN-index query path: train the quantizer + write

@@ -1,5 +1,6 @@
 package graft.contract
 
+import graft.functions.NearestCentroid
 import graft.kmeans.Point
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -46,12 +47,12 @@ object PointSpace {
       (col("z") - c.z) * (col("z") - c.z)
 
   /** argmin cluster id over (id, centroid) pairs; ties -> lowest id.
-    * struct(d2, id) ordering compares d2 first, then id — same semantics
-    * as the SQL CASE chain / correlated ORDER BY d2, cluster LIMIT 1. */
+    * The kernel's L2² form is `distSq`'s exact arithmetic — same
+    * semantics as the SQL CASE chain / correlated ORDER BY d2, cluster
+    * LIMIT 1. */
   def clusterOf(cents: Seq[(Int, Point)]): Column =
-    array_min(array(cents.map { case (id, c) =>
-      struct(distSq(c).as("d2"), lit(id).as("id"))
-    }: _*)).getField("id")
+    NearestCentroid.nearestId(array(col("x"), col("y"), col("z")),
+      cents.map { case (id, c) => id -> Array(c.x, c.y, c.z) })
 
   def assign(pts: DataFrame, cents: Seq[(Int, Point)]): DataFrame =
     pts.withColumn("cluster", clusterOf(cents))

@@ -49,9 +49,12 @@ import org.apache.spark.sql.functions._
   */
 object Silhouette {
 
-  /** One kernel output row per cluster. */
-  private final case class ClusterSums(cluster: Int, n: Long, intra_sum: Double,
-                                       inter_sum: Double, neighbors: Long)
+  /** One kernel output row per cluster. Public on purpose: generated
+    * code reads its fields, and Janino cannot compile calls to the
+    * accessors of a `private` nested case class (SilhouetteSpec runs the
+    * kernel with code generation forced on). */
+  final case class ClusterSums(cluster: Int, n: Long, intra_sum: Double,
+                               inter_sum: Double, neighbors: Long)
 
   /** The pair-sum kernel over points sorted by cluster; clusters are the
     * runs of equal ids. Per point i it sums dist(i, j) over all j, split

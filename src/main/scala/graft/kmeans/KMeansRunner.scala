@@ -1,6 +1,6 @@
 package graft.kmeans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.storage.StorageLevel
 
 /** C1–C3, C5: the driver-side iteration loop.
@@ -36,6 +36,15 @@ object KMeansRunner {
       displacements: Seq[Double],
       history: Seq[Seq[(Int, Point)]])
 
+  /** Squared distance of the x, y, z columns to a fixed centroid, the
+    * seeding passes' `least` chain term (exact: multiplication, no pow). */
+  private def d2(c: Point): Column = {
+    import org.apache.spark.sql.functions.col
+    (col("x") - c.x) * (col("x") - c.x) +
+      (col("y") - c.y) * (col("y") - c.y) +
+      (col("z") - c.z) * (col("z") - c.z)
+  }
+
   /** Deterministic farthest-point (k-center greedy) seeding — an init
     * strategy beyond the reference's fixed seed file: the first centroid
     * is the lexicographically-largest point; each next one maximizes the
@@ -45,11 +54,7 @@ object KMeansRunner {
   def farthestPointInit(points: DataFrame, k: Int): Seq[Point] = {
     import org.apache.spark.sql.functions._
     require(k >= 1, "k must be >= 1")
-    def d2(c: Point) =
-      (col("x") - c.x) * (col("x") - c.x) +
-        (col("y") - c.y) * (col("y") - c.y) +
-        (col("z") - c.z) * (col("z") - c.z)
-    def pick(selector: org.apache.spark.sql.Column): (Point, Double) = {
+    def pick(selector: Column): (Point, Double) = {
       val row = points.select(max(selector).as("s")).collect().head
       require(!row.isNullAt(0), "farthestPointInit: no points")
       val r = row.getStruct(0)
@@ -109,10 +114,6 @@ object KMeansRunner {
     // (the aggregate passes cost the same either way). Callers that
     // already persisted their points keep that choice — and pay it.
     locally {
-      def d2(c: Point) =
-        (col("x") - c.x) * (col("x") - c.x) +
-          (col("y") - c.y) * (col("y") - c.y) +
-          (col("z") - c.z) * (col("z") - c.z)
       val first = points.select(max(struct(col("x"), col("y"), col("z"))).as("s"))
         .collect().head
       require(!first.isNullAt(0), "scalableInit: no points")

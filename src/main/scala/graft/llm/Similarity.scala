@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.NearestCentroid
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -515,64 +516,24 @@ object Similarity {
     * ties to lowest cell_id.
     *
     * Shuffle-free: the coarse cells are K rows — the engine's documented
-    * driver boundary — so they are collected once and inlined as literal
-    * centroids into `VectorKMeans.cellOf`, the same codegen'd expression
-    * argmin the vector K-Means core uses. The assignment becomes a pure
-    * projection over the corpus scan: no join, no window, no Exchange
-    * (the previous `row_number` window formulation shuffled and sorted
-    * corpus×K rows — an avoidable corpus-wide exchange at 100 TB scale).
-    * The per-cell L2² expressions are identical to the joined form, so
-    * distances — and therefore the argmin — are bit-identical; cells are
-    * inlined sorted by cell_id, so `cellOf`'s first-minimum tie-break
-    * lands on the lowest cell_id exactly like the window's
-    * (cd2, cell_id) ordering.
+    * driver boundary — so they are collected once and handed to the
+    * codegen'd [[graft.functions.NearestCentroid]] argmin as one table
+    * literal, the kernel the vector K-Means core uses. The assignment is
+    * a pure projection over the corpus scan at every K: no join, no
+    * window, no Exchange, and the generated code does not grow with K.
+    * Distances are `distSq`'s L2² accumulation, so the argmin is the
+    * joined (cd2, cell_id) form's bit for bit, ties to the lowest
+    * cell_id ([[NearestCentroid.nearestId]]).
     *
     * EAGER in `coarse` (collects the cells at call time) and requires a
     * non-empty cell table: an empty quantizer is a configuration error
-    * that should fail loudly here, not propagate an empty assignment.
-    *
-    * K cap: the inlined-literal projection generates K distance kernels
-    * per row — past a few hundred cells the generated method outgrows
-    * the JVM's 64KB limit and Spark silently falls back to interpreted
-    * eval, and the literal plan tree itself gets expensive to analyze.
-    * Above `MaxInlineCells` the assignment switches to a broadcast join
-    * + one min(struct) aggregation: same distances, same (cd2, cell_id)
-    * tie-break, at the cost of ONE corpus-wide exchange (map-side
-    * partials shrink it to a row per vector) — the right trade once K is
-    * large enough that the projection would run interpreted anyway. */
-  private[graft] val MaxInlineCells = 256
-
+    * that should fail loudly here, not propagate an empty assignment. */
   private[graft] def assignCells(e: DataFrame, coarse: DataFrame): DataFrame = {
-    // limit(K+1) bounds the driver collect: past the inline cap the
-    // rows are discarded anyway (the join path re-reads `coarse`), so
-    // a huge cell table must never be pulled to the driver just to
-    // discover it is huge
-    val rows = coarse.select(col("cell_id").cast("long"), col("cvec").cast("array<double>"))
-      .limit(MaxInlineCells + 1)
-      .collect()
-    require(rows.nonEmpty, "assignCells: empty coarse cell table")
-    if (rows.length <= MaxInlineCells) {
-      val cells = rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1)
-      val ids = array(cells.map { case (id, _) => lit(id) }: _*)
-      val idx = VectorKMeans.cellOf(col("vec"), cells.map(_._2).toSeq)
-      e.select(col("vec_id"), col("vec"),
-        element_at(ids, idx + 1).as("cell_id"))
-    } else assignCellsJoin(e, coarse)
+    val cells = coarse.select(col("cell_id").cast("long"), col("cvec").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    require(cells.nonEmpty, "assignCells: empty coarse cell table")
+    e.select(col("vec_id"), col("vec"), NearestCentroid.nearestId(col("vec"), cells).as("cell_id"))
   }
-
-  /** Large-K assignment: broadcast the cell table, score each (vec,
-    * cell) pair with the SAME codegen'd L2² kernel, argmin via
-    * min(struct(cd2, cell_id, vec)) — struct ordering compares cd2 then
-    * cell_id, so ties break to the lowest cell id exactly like the
-    * inline path (AssignCellsSpec pins equality of the two paths). */
-  private[graft] def assignCellsJoin(e: DataFrame, coarse: DataFrame): DataFrame =
-    e.join(broadcast(coarse.select(col("cell_id").cast("long").as("cell_id"),
-        col("cvec").cast("array<double>").as("cvec"))))
-      .select(col("vec_id"), col("vec"), col("cell_id"),
-        distSq(col("vec"), col("cvec")).as("cd2"))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("cd2"), col("cell_id"), col("vec"))).as("m"))
-      .select(col("vec_id"), col("m.vec").as("vec"), col("m.cell_id").as("cell_id"))
 
   /** NOTE: EAGER — composing this pipeline collects the coarse-cell
     * table (K driver rows) and, because the result is materialized to
@@ -632,9 +593,8 @@ object Similarity {
     * which new documents PARAPHRASE something already ingested — the
     * near-dups text-level MinHash scores near zero.
     *
-    * Shape: both sides coarse-quantize with the SAME literal-centroid
-    * argmin projection IVF uses (`assignCells` — shuffle-free below
-    * `MaxInlineCells`, tie-identical broadcast join above), so the
+    * Shape: both sides coarse-quantize with the SAME shuffle-free
+    * argmin projection IVF uses (`assignCells`), so the
     * corpus is scanned once and NEVER self-joined; the assigned batch
     * (small next to the corpus) broadcasts into a same-cell equi-join
     * against the corpus scan. Candidates = same-cell cross pairs only —
@@ -1092,13 +1052,13 @@ object Similarity {
     * subspace VectorKMeans fit is the production way to train them).
     *
     * The codebook is m·ncodes tiny arrays — the engine's documented
-    * driver-K-row boundary — collected once and inlined into codegen'd
-    * L2² kernels via `cellOf`, so encoding is a pure projection: one
-    * scan, no join, no shuffle (the IVF assignment argument, per
-    * subspace). Ties break to the lowest code (array_position's first
-    * minimum). Output: (vec_id, s, code, err) with s 0-based subspace,
-    * err = that slice's squared distance to its codeword rounded to 4
-    * decimals. */
+    * driver-K-row boundary — collected once and handed, one table
+    * literal per subspace, to the codegen'd [[NearestCentroid]] argmin,
+    * so encoding is a pure projection: one scan, no join, no shuffle
+    * (the IVF assignment argument, per subspace). Ties break to the
+    * lowest code (the kernel's first minimum). Output: (vec_id, s, code,
+    * err) with s 0-based subspace, err = that slice's squared distance to
+    * its codeword rounded to 4 decimals. */
   def pqEncode(emb: DataFrame, codebookIds: Seq[Long], m: Int): DataFrame = {
     require(m >= 1, s"need m >= 1, got $m")
     require(codebookIds.nonEmpty, "pqEncode: empty codebook")
@@ -1107,32 +1067,28 @@ object Similarity {
     val cbVecs = pqCodebook(e, codebookIds)
     val d = cbVecs.head.length
     require(d % m == 0, s"pqEncode: dim $d not divisible by m=$m")
-    require(codebookIds.length.toLong * d <= MaxInlineLiterals,
-      s"pqEncode: ${codebookIds.length} codewords x $d dims exceed the " +
-        s"codegen budget ($MaxInlineLiterals); use the broadcast-join argmin at this size")
     val dsub = d / m
     val perSub = (0 until m).map { s =>
       val sub = slice(col("vec"), s * dsub + 1, dsub)
-      val cents = cbVecs.map(cv => cv.slice(s * dsub, (s + 1) * dsub))
-      val code = VectorKMeans.cellOf(sub, cents)
-      val errs = array(cents.map(c => VectorKMeans.distSqTo(sub, c)): _*)
+      val table = NearestCentroid.table(cbVecs.map(cv => cv.slice(s * dsub, (s + 1) * dsub)))
+      val code = NearestCentroid.l2sqCol(sub, table)
       struct(lit(s.toLong).as("s"), code.cast("long").as("code"),
-        round(element_at(errs, code + 1), 4).as("err"))
+        round(distSq(sub, element_at(table, code + 1)), 4).as("err"))
     }
     e.select(col("vec_id"), explode(array(perSub: _*)).as("p"))
       .select(col("vec_id"), col("p.s").as("s"), col("p.code").as("code"),
         col("p.err").as("err"))
   }
 
-  /** Budget for literals inlined into one generated projection (sign
-    * matrices, PQ codeword kernels, ADC lookup tables). Past a few
-    * thousand literal doubles the generated method outgrows the JVM's
-    * 64KB limit and Spark silently falls back to interpreted eval —
-    * the same cliff `MaxInlineCells` guards. The PQ/RP operators
-    * REQUIRE below-budget configurations and fail loudly above it
-    * (the honest alternative to silently running 10x slower): a
-    * larger-than-budget deployment restructures to the broadcast-join
-    * formulation (`assignCellsJoin` pattern) instead. */
+  /** Budget for literals inlined into one generated projection (the RP
+    * sign matrix, the per-query ADC lookup tables): code that grows with
+    * d·outDim or Q·m outgrows the JVM's 64KB method limit past a few
+    * thousand terms, and Spark silently falls back to interpreted eval.
+    * These operators REQUIRE below-budget configurations and fail loudly
+    * above it (the honest alternative to silently running 10x slower).
+    * Centroid and codeword tables are not counted: the
+    * [[NearestCentroid]] argmin takes them as data, so its code does not
+    * grow with K. */
   private[graft] val MaxInlineLiterals = 1 << 13
 
   /** Collect vectors by id in the given order — the driver-K-row pull
@@ -1160,8 +1116,8 @@ object Similarity {
     * boundary), and every candidate's approximate distance is m TABLE
     * LOOKUPS on its codes — no candidate vector is ever read, which is
     * the entire point at 100 TB (the float corpus stays cold; only the
-    * m-byte code table scans). Here codes come from the same inlined
-    * argmin as `pqEncode`; the lookup is `element_at` on literal
+    * m-byte code table scans). Here codes come from the same table-
+    * literal argmin as `pqEncode`; the lookup is `element_at` on literal
     * per-query arrays, summed left-to-right over subspaces — a pure
     * codegen'd projection, one scan of the code table, top-k via the
     * same rounded-grid window as tfidf (adist rounds to 4 decimals
@@ -1176,10 +1132,9 @@ object Similarity {
     val qVecs = pqCodebook(e, queryIds) // same id->vector collect, for queries
     val d = cbVecs.head.length
     require(d % m == 0, s"pqSearch: dim $d not divisible by m=$m")
-    require(codebookIds.length.toLong * d +
-        queryIds.length.toLong * m * codebookIds.length <= MaxInlineLiterals,
-      s"pqSearch: codeword kernels + ${queryIds.length} query tables exceed the " +
-        s"codegen budget ($MaxInlineLiterals); shard the query set or use a broadcast join")
+    require(queryIds.length.toLong * m * codebookIds.length <= MaxInlineLiterals,
+      s"pqSearch: ${queryIds.length} query tables exceed the codegen budget " +
+        s"($MaxInlineLiterals); shard the query set or use a broadcast join")
     val dsub = d / m
     def sub(a: Array[Double], s: Int) = a.slice(s * dsub, (s + 1) * dsub)
     def l2(a: Array[Double], b: Array[Double]): Double = {
@@ -1188,7 +1143,7 @@ object Similarity {
       acc
     }
     // per-vector codes once (shared across queries): codes(s) via the
-    // inlined argmin, one array column
+    // table-literal argmin, one array column
     val codeCols = (0 until m).map { s =>
       val slc = slice(col("vec"), s * dsub + 1, dsub)
       VectorKMeans.cellOf(slc, cbVecs.map(cv => sub(cv, s))).cast("long")
@@ -1521,7 +1476,7 @@ object Similarity {
 
   /** The IVF-PQ index rows of a vector set: (vec_id, cell_id, codes) —
     * one coarse cell id + m PQ codes per vector, nothing float. Encode
-    * is a pure codegen'd projection (inlined argmin kernels, the
+    * is a pure codegen'd projection (table-literal argmins, the
     * `pqEncode` argument): one scan, no join, no shuffle — so a
     * streaming batch encodes independently of every other batch, which
     * is what makes the appended index exactly-once under replay. */
@@ -1529,16 +1484,7 @@ object Similarity {
     ivfPqIndexRowsOf(emb.select(col("vec_id"), v(col("embedding")).as("vec")), q)
 
   private def ivfPqIndexRowsOf(e: DataFrame, q: IvfPqQuantizer): DataFrame = {
-    require(q.cells.length.toLong * q.d + q.codebook.length.toLong * q.d
-        <= MaxInlineLiterals,
-      s"ivfPqIndexRows: ${q.cells.length} cells + ${q.codebook.length} codewords " +
-        s"x ${q.d} dims exceed the codegen budget ($MaxInlineLiterals); " +
-        "assign cells via assignCellsJoin at this size")
-    val cellCol = {
-      val ids = array(q.sortedCells.map(lit): _*)
-      val idx = VectorKMeans.cellOf(col("vec"), q.sortedCellVecs)
-      element_at(ids, idx + 1)
-    }
+    val cellCol = NearestCentroid.nearestId(col("vec"), q.cells)
     val codeCols = (0 until q.m).map { s =>
       VectorKMeans.cellOf(slice(col("vec"), s * q.dsub + 1, q.dsub),
         q.codebook.map(cv => q.sub(cv, s))).cast("long")
@@ -1560,15 +1506,13 @@ object Similarity {
                  k: Int): DataFrame = {
     require(k >= 1 && nprobe >= 1, s"need k, nprobe >= 1, got k=$k nprobe=$nprobe")
     require(queries.nonEmpty, "ivfPqProbe: empty query set")
-    require(q.cells.length.toLong * q.d + q.codebook.length.toLong * q.d +
-        queries.length.toLong * q.m * q.codebook.length <= MaxInlineLiterals,
-      s"ivfPqProbe: ${q.cells.length} cells + ${q.codebook.length} codewords " +
-        s"+ ${queries.length} query tables exceed the codegen budget " +
+    require(queries.length.toLong * q.m * q.codebook.length <= MaxInlineLiterals,
+      s"ivfPqProbe: ${queries.length} query tables exceed the codegen budget " +
         s"($MaxInlineLiterals); shard the query set")
     // driver-side probe lists: the nprobe nearest coarse cells per query
     // (K x Q tiny distances; ties to the lowest cell id like assignCells)
     val probes: Map[Long, Seq[Long]] = queries.map { case (qid, qv) =>
-      qid -> q.sortedCells.zip(q.sortedCellVecs)
+      qid -> q.cells
         .map { case (cid, cv) => (q.l2(qv, cv), cid) }
         .sortBy(identity).take(nprobe).map(_._2)
     }.toMap
@@ -1712,10 +1656,8 @@ object Similarity {
   * serializes once and ships into every encode, probe, and streaming-
   * ingest closure: K coarse cells (id, centroid) and a PQ codebook of
   * full-dimension codewords sliced into `m` subspaces. All sizes are
-  * driver-K-row by construction (the codegen literal budget enforces
-  * it at use sites). Cell argmin ties break to the LOWEST cell id —
-  * `sortedCells` fixes the kernel order so encode is deterministic for
-  * any `cells` ordering. */
+  * driver-K-row by construction. Cell argmin ties break to the LOWEST
+  * cell id for any `cells` ordering ([[NearestCentroid.nearestId]]). */
 case class IvfPqQuantizer(cells: Seq[(Long, Array[Double])],
                           codebook: Seq[Array[Double]], m: Int) {
   require(m >= 1, s"need m >= 1, got m=$m")
@@ -1726,11 +1668,6 @@ case class IvfPqQuantizer(cells: Seq[(Long, Array[Double])],
   require(cells.forall(_._2.length == d) && codebook.forall(_.length == d),
     "IvfPqQuantizer: cell/codeword dimensions disagree")
   val dsub: Int = d / m
-  private[llm] val sortedCells: Seq[Long] = cells.map(_._1).sorted
-  private[llm] val sortedCellVecs: Seq[Array[Double]] = {
-    val byId = cells.toMap
-    sortedCells.map(byId)
-  }
   private[llm] def sub(a: Array[Double], s: Int): Array[Double] =
     a.slice(s * dsub, (s + 1) * dsub)
   private[llm] def l2(a: Array[Double], b: Array[Double]): Double = {

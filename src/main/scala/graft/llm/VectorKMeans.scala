@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.functions.NearestCentroid
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -9,9 +10,9 @@ import org.apache.spark.sql.functions._
   * the IVF coarse quantizer instead of picking corpus vectors by id.
   *
   * Spark-first shape, mirroring graft.kmeans:
-  *   - assignment: argmin over K literal centroid arrays via a codegen'd
-  *     struct/array_min expression (K*dim literals inline; no UDF, no
-  *     shuffle, no broadcast round-trip)
+  *   - assignment: the codegen'd [[NearestCentroid]] argmin over the K
+  *     centroids as one table literal (no UDF, no shuffle, no broadcast
+  *     round-trip; the generated code is independent of the centroids)
   *   - re-centering: posexplode to (cell, dim, value) rows, ONE
   *     HashAggregate keyed (cell, dim) with map-side partial (sum,count),
   *     K*dim rows collected to the driver per iteration
@@ -46,21 +47,11 @@ object VectorKMeans {
   def gridOf(v: Double): Long =
     BigDecimal(v * GridScale).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
-  private def litVec(v: Array[Double]): Column = array(v.map(lit).toSeq: _*)
-
-  /** Squared L2 distance between a vector column and a literal centroid
-    * (native codegen'd kernel, same accumulation order as the HOF form). */
-  def distSqTo(vec: Column, c: Array[Double]): Column =
-    graft.functions.VectorOps.l2sqCol(vec, litVec(c))
-
-  /** Cell id (0-based position in `cents`) of the nearest centroid,
-    * ties to the lowest cell id (array_position finds the FIRST minimum;
-    * struct-based argmin is avoided because aliases on higher-order-
-    * function children get stripped during resolution). */
-  def cellOf(vec: Column, cents: Seq[Array[Double]]): Column = {
-    val d2s = array(cents.map(c => distSqTo(vec, c)): _*)
-    (array_position(d2s, array_min(d2s)) - 1).cast("int")
-  }
+  /** Cell id (0-based position in `cents`) of the nearest centroid by
+    * L2², ties to the lowest cell id: the [[NearestCentroid]] kernel over
+    * the centroids as one table literal. */
+  def cellOf(vec: Column, cents: Seq[Array[Double]]): Column =
+    NearestCentroid.l2sqCol(vec, NearestCentroid.table(cents))
 
   /** One assign+re-center step; returns the new centroid per cell (cells
     * that received no vectors keep their previous centroid, so K never
@@ -84,61 +75,8 @@ object VectorKMeans {
     cents.indices.map(i => means.getOrElse(i, cents(i)))
   }
 
-  /** Typed (sum-vector, count) Aggregator — the CentroidAggregator
-    * pattern lifted to arbitrary dimension. Partials are K×(dim+1)
-    * values, so the shuffle after map-side combine is K rows of dim
-    * sums, not rows×dim exploded cells. Sums are [[GridScale]]-gridded
-    * BIGINTs (see [[gridOf]]), so partials merge exactly in any order
-    * and `stepAgg` equals `step` bitwise, not just to merge-order ulps. */
-  class VectorSumAgg(dim: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        (Int, Seq[Double]), (Array[Long], Long), Seq[Double]] {
-    import org.apache.spark.sql.Encoder
-    override def zero: (Array[Long], Long) = (new Array[Long](dim), 0L)
-    override def reduce(b: (Array[Long], Long), a: (Int, Seq[Double])): (Array[Long], Long) = {
-      val v = a._2
-      require(v.length == dim, s"ragged vector: ${v.length} vs $dim")
-      var i = 0
-      while (i < dim) { b._1(i) += gridOf(v(i)); i += 1 }
-      (b._1, b._2 + 1)
-    }
-    override def merge(x: (Array[Long], Long), y: (Array[Long], Long)): (Array[Long], Long) = {
-      var i = 0
-      while (i < dim) { x._1(i) += y._1(i); i += 1 }
-      (x._1, x._2 + y._2)
-    }
-    override def finish(r: (Array[Long], Long)): Seq[Double] =
-      if (r._2 == 0L) Seq.empty else r._1.map(_.toDouble / (GridScale * r._2)).toSeq
-    override def bufferEncoder: Encoder[(Array[Long], Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-    override def outputEncoder: Encoder[Seq[Double]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
-  /** `step` via the typed Aggregator: same assignment expression, but
-    * re-centering shuffles K×(sum[dim], count) partials instead of
-    * posexploding rows×dim cells — the hardened 100 TB form (bitwise
-    * equal to `step` thanks to the shared integer grid; spec-pinned). */
-  def stepAgg(emb: DataFrame, vecCol: String, cents: Seq[Array[Double]]): Seq[Array[Double]] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val dim = cents.head.length
-    val agg = new VectorSumAgg(dim).toColumn
-    val means = emb
-      .select(cellOf(col(vecCol), cents).as("_1"), col(vecCol).as("_2"))
-      .as[(Int, Seq[Double])]
-      .groupByKey(_._1)
-      .agg(agg)
-      .collect()
-      .collect { case (cell, m) if m.nonEmpty => cell -> m.toArray }
-      .toMap
-    cents.indices.map(i => means.getOrElse(i, cents(i)))
-  }
-
-  /** Fit k centroids, seeded deterministically from corpus vectors.
-    * Iterates via `stepAgg` — the K×(sum[dim], count) partial form, so
-    * each iteration shuffles K rows instead of rows×dim exploded cells;
-    * bitwise-identical to `step` (shared integer grid, spec-pinned). */
+  /** Fit k centroids, seeded deterministically from corpus vectors,
+    * iterating [[step]]. */
   def fit(emb: DataFrame, vecCol: String, seedIds: Seq[Long], idCol: String = "vec_id",
           maxIter: Int = 10, tol: Double = 1e-4): Result = {
     val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
@@ -148,7 +86,7 @@ object VectorKMeans {
     var i = 0
     var converged = false
     while (i < maxIter && !converged) {
-      val next = stepAgg(e, "v", cents)
+      val next = step(e, "v", cents)
       val disp = cents.lazyZip(next).map { (a, b) =>
         math.sqrt(a.lazyZip(b).map((x, y) => (x - y) * (x - y)).sum)
       }.sum

@@ -20,10 +20,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   *     across engines by construction.
   *
   * Deliberately opt-in (via GraftExtensions / experimental methods, NOT
-  * always-on) because the reference-parity paths (`kmeans/Assign.dist`)
-  * pin Math.pow bit behavior for golden-file reproduction — enabling
-  * the rule changes those last-bit floats, which is exactly what the
-  * contract queries want and exactly what golden parity doesn't.
+  * always-on) because it changes the last-bit float of every `pow(x, 2)`
+  * a session's queries write, away from Spark's own StrictMath.pow
+  * semantics — exactly what the contract queries want, and not a
+  * session-wide default to impose. The reference-parity distance is
+  * out of its reach either way: `functions/NearestCentroid`'s Euclidean
+  * form (`kmeans/Assign`) calls StrictMath.pow inside the kernel, not
+  * through a Catalyst `Pow`.
   *
   * Duplicating `x` is safe: codegen's subexpression elimination computes
   * a deterministic x once; non-deterministic x is never rewritten (the

@@ -15,10 +15,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * loop's centroid handoff, at ingest latency.
   *
   * Exactness: the caller assigns cells with `VectorKMeans.cellOf`
-  * (the SAME literal-centroid argmin the batch step uses), state is
+  * (the SAME `NearestCentroid` argmin the batch step uses), state is
   * the [[VectorKMeans.GridScale]]-gridded integer sum vector + count —
-  * `gridOf` per coordinate, the `VectorSumAgg` buffer shape — and the
-  * emitted mean is the batch step's exact division, so the final
+  * `gridOf` per coordinate — and the emitted mean is the batch step's
+  * exact division, so the final
   * trigger's rows equal `VectorKMeans.step`'s computed cells BITWISE
   * (spec-pinned; cells the stream never saw are the batch
   * keep-previous branch, the caller's epoch-roll concern).

@@ -10,6 +10,17 @@ trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val ref: String = "/root/reference"
   /** The smallest contract scale factor's tables. */
   lazy val sf0001: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` on a child session (same SparkContext, own SQL conf)
+    * that compiles every plan and expression and never falls back to
+    * interpreted evaluation, so a failed compile fails the spec instead
+    * of only logging at ERROR. The shared session's conf is untouched. */
+  def codegenOnly[T](body: SparkSession => T): T = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    s.conf.set("spark.sql.codegen.fallback", "false")
+    body(s)
+  }
 }
 
 object SparkSpec {

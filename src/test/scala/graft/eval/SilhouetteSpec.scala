@@ -29,6 +29,17 @@ class SilhouetteSpec extends SparkSpec {
     c0.getDouble(4) shouldBe 0.9   // silhouette
   }
 
+  test("collectMetrics runs with code generation forced on") {
+    // the kernel's output rows are read by generated code; a class that
+    // fails to compile would otherwise only log and fall back
+    codegenOnly { s =>
+      val df = s.createDataFrame(Seq(
+        (0.0, 0.0, 0.0, 0), (2.0, 0.0, 0.0, 0),
+        (10.0, 0.0, 0.0, 1), (12.0, 0.0, 0.0, 1))).toDF("x", "y", "z", "cluster")
+      Silhouette.collectMetrics(df) shouldBe Seq((0, 2.0, 20.0, 0.9), (1, 2.0, 20.0, 0.9))
+    }
+  }
+
   test("guard: single-point clusters are skipped (SilhouetteEvaluation2 semantics)") {
     val df = Seq(
       (0.0, 0.0, 0.0, 0), (2.0, 0.0, 0.0, 0),

@@ -12,13 +12,16 @@ class KMeansCoreSpec extends SparkSpec {
   private val seeds = Seq(Point(0, 0, 0), Point(8, 0, 0))
 
   test("assign picks the nearest centroid, ties to the lowest index") {
-    val pts = Seq(
-      (1.0, 0.0, 0.0),   // nearest: c0 (d=1 vs 7)
-      (7.0, 0.0, 0.0),   // nearest: c1 (d=7 vs 1)
-      (4.0, 0.0, 0.0)    // tie (d=4 both) -> c0, reference strict '<'
-    ).toDF("x", "y", "z")
-    val out = Assign.assign(pts, seeds).select("x", "cluster").as[(Double, Int)].collect().toMap
-    out shouldBe Map(1.0 -> 0, 7.0 -> 1, 4.0 -> 0)
+    codegenOnly { s =>
+      val pts = s.createDataFrame(Seq(
+        (1.0, 0.0, 0.0),   // nearest: c0 (d=1 vs 7)
+        (7.0, 0.0, 0.0),   // nearest: c1 (d=7 vs 1)
+        (4.0, 0.0, 0.0)    // tie (d=4 both) -> c0, reference strict '<'
+      )).toDF("x", "y", "z")
+      val out = Assign.assign(pts, seeds).select("x", "cluster").collect()
+        .map(r => r.getDouble(0) -> r.getInt(1)).toMap
+      out shouldBe Map(1.0 -> 0, 7.0 -> 1, 4.0 -> 0)
+    }
   }
 
   test("recenter computes per-cluster means; empty clusters vanish") {

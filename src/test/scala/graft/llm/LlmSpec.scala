@@ -533,25 +533,34 @@ class LlmSpec extends SparkSpec {
     }
   }
 
-  test("assignCells: inline-literal and broadcast-join paths agree, incl. ties") {
-    // AssignCellsSpec (referenced from Similarity.assignCellsJoin's doc):
-    // the large-K join formulation must produce the identical assignment,
-    // including the ties-to-lowest-cell-id break, since it replaces the
-    // inline path silently above MaxInlineCells
+  test("assignCells matches a driver-side argmin at K=3 and K=300, incl. ties") {
+    // one path at every K: each vector's cell is the lowest-id minimum of
+    // the driver-side L2² (VectorOps.l2sq's accumulation) over the cells
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-    val coarse = e.filter(col("vec_id").isin(3L, 17L, 29L))
-      .select(col("vec_id").as("cell_id"), col("vec").as("cvec"))
-    val inline = Similarity.assignCells(e, coarse)
-      .select("vec_id", "cell_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val joined = Similarity.assignCellsJoin(e, coarse)
-      .select("vec_id", "cell_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    joined shouldBe inline
-    // tie fixture: equidistant vector must pick the LOWEST cell id on both paths
+    val vecs = e.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+    def l2(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      for (i <- a.indices) { val d = a(i) - b(i); acc += d * d }
+      acc
+    }
+    val byDistThenId = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
+    for (k <- Seq(3, 300)) withClue(s"K=$k: ") {
+      val coarse = if (k == 3) e.filter(col("vec_id").isin(3L, 17L, 29L))
+        else e.filter(col("vec_id") < 300)
+      val cells = coarse.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
+      cells should have size k.toLong
+      val want = vecs.map { case (id, v) =>
+        id -> cells.map { case (cid, c) => (l2(v, c), cid) }.min(byDistThenId)._2
+      }.toMap
+      val got = Similarity.assignCells(e, coarse.select(col("vec_id").as("cell_id"), col("vec").as("cvec")))
+        .select("vec_id", "cell_id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      got shouldBe want
+    }
+    // tie fixture: equidistant vector must pick the LOWEST cell id
     val te = Seq((100L, Seq(0.0, 0.0))).toDF("vec_id", "vec")
     val tc = Seq((5L, Seq(1.0, 0.0)), (2L, Seq(-1.0, 0.0))).toDF("cell_id", "cvec")
     Similarity.assignCells(te, tc).select("cell_id").collect().head.getLong(0) shouldBe 2L
-    Similarity.assignCellsJoin(te, tc).select("cell_id").collect().head.getLong(0) shouldBe 2L
   }
 
   test("writeIvfPqIndex: cell-partitioned store probes bitwise-equal to ivfPqSearch and partition-prunes to the probed cells") {

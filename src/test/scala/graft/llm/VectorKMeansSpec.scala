@@ -33,17 +33,16 @@ class VectorKMeansSpec extends SparkSpec {
     next(0) shouldBe Array(0.5, 0.5)
   }
 
-  test("stepAgg (typed (sum,count) partials) equals step bitwise (shared integer grid)") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .selectExpr("vec_id", "CAST(embedding AS array<double>) AS v")
-    val seeds = emb.filter(col2("vec_id").isin(3L, 17L, 29L))
-      .orderBy(col2("vec_id")).collect().map(_.getSeq[Double](1).toArray).toSeq
-    val viaExplode = VectorKMeans.step(emb, "v", seeds)
-    val viaAgg = VectorKMeans.stepAgg(emb, "v", seeds)
-    viaAgg.size shouldBe viaExplode.size
-    // both paths sum exact gridded BIGINTs, so the means are identical
-    // doubles, not merely close
-    viaAgg.map(_.toSeq) shouldBe viaExplode.map(_.toSeq)
+  test("fit: a cell emptied by a seed tie keeps its centroid (K never shrinks)") {
+    // seeds 0 and 1 are the same point, so the first step sends every
+    // vector to cell 0 (ties to the lowest id) and leaves cell 1 empty;
+    // had cell 1 vanished, fit would end with one centre at (2/3, 2/3)
+    val vecs = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(0.0, 0.0)), (2L, Seq(2.0, 2.0)))
+      .toDF("vec_id", "embedding")
+    val r = VectorKMeans.fit(vecs, "embedding", Seq(0L, 1L), maxIter = 10)
+    r.centers.map(_.toSeq) shouldBe Seq(Seq(2.0, 2.0), Seq(0.0, 0.0))
+    r.iterations shouldBe 3
+    r.converged shouldBe true
   }
 
   test("step is bitwise invariant to shuffle width and input partitioning") {
@@ -82,17 +81,6 @@ class VectorKMeansSpec extends SparkSpec {
       include("round(m, 4) + 0.0")
     graft.contract.TextSql.vkmeansIterateSql(Seq(1L, 2L), 2) should
       include(", 4) + 0.0")
-  }
-
-  test("stepAgg: empty cells keep their previous centroid") {
-    val vecs = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 1.0)))
-      .toDF("vec_id", "embedding")
-    val far = Array(1e6, 1e6)
-    val next = VectorKMeans.stepAgg(
-      vecs.selectExpr("vec_id", "CAST(embedding AS array<double>) AS v"), "v",
-      Seq(Array(0.0, 0.0), far))
-    next(1) shouldBe far
-    next(0) shouldBe Array(0.5, 0.5)
   }
 
   test("IVF with fitted coarse cells and nprobe=all equals brute force") {
