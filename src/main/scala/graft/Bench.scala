@@ -73,25 +73,6 @@ object Bench {
       cur
     }
 
-    // Cold-equivalent samples: operators internally persist shared
-    // subplans (Dataset.persist registers in the session CacheManager, so
-    // clearCache drops them) and ConnectedComponents localCheckpoints
-    // (RDD-level blocks, NOT in the CacheManager) — scrub both and report
-    // what was found, so no sample ever reads a predecessor's blocks and
-    // min-of-samples provably measures the same work each time. The
-    // CacheManager entries are counted BEFORE the clear: clearCache
-    // unpersists their RDDs, so counting RDDs alone after it never sees
-    // a leaked Dataset.persist. (`numCachedEntries` is private[sql] to
-    // Scala but a public JVM method, hence the reflective call.)
-    def scrubCaches(): Int = {
-      val cm = spark.sharedState.cacheManager
-      val frames = cm.getClass.getMethod("numCachedEntries").invoke(cm).asInstanceOf[Int]
-      spark.catalog.clearCache()
-      val leftovers = spark.sparkContext.getPersistentRDDs
-      leftovers.valuesIterator.foreach(_.unpersist(blocking = false))
-      frames + leftovers.size
-    }
-
     def time(thunk: () => Unit): (Double, Double, Double, Option[String]) = {
       val c0 = cpuSnapshot()
       val g0 = gcMillis.get()
@@ -1159,7 +1140,10 @@ object Bench {
     // is the discriminator the next time a sample goes slow.
     val heapAfterGc = scala.collection.mutable.LinkedHashMap[String, Double]()
     def isolate(name: String): Unit = {
-      val n = scrubCaches()
+      // cold-equivalent samples: no sample ever reads a predecessor's
+      // cached frames or localCheckpoint blocks, and what a line left
+      // is reported as its cache_leaks
+      val n = SessionCaches.scrub(spark)
       if (n > 0) {
         cacheLeaks(name) = cacheLeaks.getOrElse(name, 0) + n
         System.err.println(s"[bench] scrubbed $n cached frame(s)/persisted RDD(s) left by $name")

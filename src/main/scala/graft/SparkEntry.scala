@@ -357,6 +357,11 @@ object SparkEntry {
   private def emb(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
+  /** Driver-side rounding to the 4-decimal contract grid: HALF_UP on
+    * the double's decimal form. */
+  private def round4(x: Double): Double =
+    BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+
   /** The q_mmr_hybrid selection, shared with q_rag_answer (the passage
     * fetch extends THIS row's answer, so the two entries must select
     * identically by construction): BM25 ⊕ exact-cosine ranks fuse via
@@ -430,10 +435,15 @@ object SparkEntry {
     ls
   }
 
+  /** Part of every temp root's name that identifies this JVM, so a
+    * check over the shared temp dir can tell its own roots from those
+    * of other processes running beside it. */
+  private[graft] val TempRootTag: String = s"-jvm${ProcessHandle.current.pid}-"
+
   /** `f` on a fresh local temp directory, deleted afterwards whatever
     * `f` did (the store lines here, Bench's store extras). */
   private[graft] def withTempRoot[A](s: SparkSession, prefix: String)(f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    val root = java.nio.file.Files.createTempDirectory(prefix + TempRootTag).toString
     try f(root)
     finally {
       try {
@@ -586,9 +596,8 @@ object SparkEntry {
         val sd = seedMap(id)
         math.sqrt((cx - sd.x) * (cx - sd.x) + (cy - sd.y) * (cy - sd.y) + (cz - sd.z) * (cz - sd.z))
       }.sum
-      val rounded = BigDecimal(disp).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
       import s.implicits._
-      Seq((rounded, cents.length.toLong)).toDF("displacement", "k")
+      Seq((round4(disp), cents.length.toLong)).toDF("displacement", "k")
     },
       oracle = s"WITH pts AS ($pointsSql), d AS ($dCteBody), " +
         s"asg AS (SELECT *, $caseExpr AS cluster FROM d), " +
@@ -641,7 +650,7 @@ object SparkEntry {
     // C2/C3: 3 assignment rounds with 4-decimal centroid rounding between
     // iterations (contract semantics: keeps both engines bit-aligned)
     line("c2_iterate3")((s, dir) => {
-      val pts = points(s, dir).cache()
+      val pts = Cached.keep(points(s, dir))
       try {
         var cents = seeds
         for (_ <- 1 to 2) cents = roundedStep(pts, cents)
@@ -1681,15 +1690,10 @@ object SparkEntry {
       import s.implicits._
       val e = emb(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val cents = e.filter(col("vec_id").isin(PqCodebookIds: _*))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1).map(_._2).toSeq
+      val cents = Similarity.collectVectors(emb(s, dir), PqCodebookIds).map(_._2)
       val coarse = graft.llm.VectorKMeans.step(e, "vec", cents).zipWithIndex
-        .map { case (c, cell) => (cell.toLong, c.map(x =>
-          BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble).toSeq)
-        }.toDF("cell_id", "cvec")
+        .map { case (c, cell) => (cell.toLong, c.map(round4).toSeq) }
+        .toDF("cell_id", "cvec")
       Similarity.cellMedoids(emb(s, dir), coarse).orderBy(col("cell_id"))
     }, oracle = TextSql.cellMedoidSql(PqCodebookIds)),
 
@@ -4440,19 +4444,14 @@ object SparkEntry {
       import s.implicits._
       val e = emb(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val c0 = e.filter(col("vec_id").isin(PqCodebookIds: _*))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1).map(_._2).toSeq
+      val c0 = Similarity.collectVectors(emb(s, dir), PqCodebookIds).map(_._2)
       require(c0.map(_.toSeq).distinct.length == c0.length,
         "q_vkmeans_iterate2: duplicate seed vectors")
-      def r4(x: Double): Double =
-        BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val cached = e.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cached = Cached.keep(e)
       try {
         var cents = c0
         for (_ <- 1 to 2)
-          cents = graft.llm.VectorKMeans.step(cached, "vec", cents).map(_.map(r4))
+          cents = graft.llm.VectorKMeans.step(cached, "vec", cents).map(_.map(round4))
         cents.zipWithIndex.flatMap { case (c, cell) =>
           c.zipWithIndex.map { case (v, d) => (cell.toLong, (d + 1).toLong, v) }
         }.toDF("cell", "dim", "m").orderBy(col("cell"), col("dim"))
@@ -4463,10 +4462,7 @@ object SparkEntry {
       import s.implicits._
       val e = emb(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-      val cents = e.filter(col("vec_id").isin(PqCodebookIds: _*))
-        .collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        .sortBy(_._1).map(_._2).toSeq
+      val cents = Similarity.collectVectors(emb(s, dir), PqCodebookIds).map(_._2)
       // the non-empty-cells proof needs DISTINCT seed vectors: two
       // identical seeds would both tie-break to the lower cell, empty
       // the higher one, and fire step's keep-previous branch that the
@@ -4475,8 +4471,7 @@ object SparkEntry {
         "q_vkmeans_step: duplicate seed vectors would empty a cell")
       graft.llm.VectorKMeans.step(e, "vec", cents).zipWithIndex.flatMap {
         case (c, cell) => c.zipWithIndex.map { case (v, d) =>
-          (cell.toLong, (d + 1).toLong,
-            BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          (cell.toLong, (d + 1).toLong, round4(v))
         }
       }.toDF("cell", "dim", "m").orderBy(col("cell"), col("dim"))
     }, oracle = TextSql.vkmeansStepSql(PqCodebookIds))

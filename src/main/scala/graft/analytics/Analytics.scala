@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.Cached
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -142,12 +143,11 @@ object Analytics {
     * Output: (event_type, hour, n, total_value) — zeros where no
     * events landed.
     *
-    * NOTE: the returned frame is MATERIALIZED and persisted
-    * (MEMORY_AND_DISK) — the intermediate per-hour cache is released
+    * NOTE: the returned frame is MATERIALIZED and cached through
+    * `Cached.result` — the intermediate per-hour cache is released
     * before return, but the caller owns the result's release: call
-    * `unpersist()` once done with it (the Dedup.materialized contract;
-    * repeated calls without release accumulate cached frames for the
-    * session lifetime). */
+    * `unpersist()` once done with it (repeated calls without release
+    * accumulate cached frames for the session lifetime). */
   def resampleHourly(events: DataFrame): DataFrame = {
     val hourUs = 3600L * 1000 * 1000
     val ev = events.select(col("event_type"), expr(s"tus div $hourUs").as("hour"),
@@ -156,9 +156,8 @@ object Analytics {
     // per-hour aggregate, which is persisted because it feeds three
     // plan references (bounds, types, final join) — without the cache
     // each reference would re-run the corpus aggregate
-    val byHour = ev.groupBy(col("event_type"), col("hour"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total_value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val byHour = Cached.keep(ev.groupBy(col("event_type"), col("hour"))
+      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total_value")))
     val bounds = byHour.agg(min("hour").as("lo"), max("hour").as("hi"))
     val spine = byHour.select(col("event_type")).distinct()
       .crossJoin(broadcast(bounds))
@@ -167,9 +166,6 @@ object Analytics {
       .select(col("event_type"), col("hour"),
         coalesce(col("n"), lit(0L)).as("n"),
         coalesce(col("total_value"), lit(0.0)).as("total_value"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    byHour.unpersist(false)
-    out
+    Cached.result(out, byHour)
   }
 }

@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -162,14 +163,13 @@ object DataQuality {
                      minWords: Int, maxWords: Int,
                      minAvgLen: Double, maxAvgLen: Double,
                      minStopHits: Int, minAlphaFrac: Double): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // persist DEFENSIVE COPIES (a fresh Project node per snapshot), never
     // the caller's frames: persist() throws if the caller already cached
-    // a snapshot at a different level, and the unpersist below would
+    // a snapshot at a different level, and the release below would
     // silently evict a cache the caller owns
     def copy(df: DataFrame): DataFrame = df.select(df.columns.map(col): _*)
-    val o = copy(oldSnap).persist(lvl)
-    val n = copy(newSnap).persist(lvl)
+    val o = Cached.keep(copy(oldSnap))
+    val n = Cached.keep(copy(newSnap))
     def band(st: String, as: String) =
       coalesce(sum(when(col("status") === st, col("n_docs"))), lit(0L)).as(as)
     val bands = snapshotDiff(o, n).groupBy(col("source")).agg(
@@ -201,10 +201,6 @@ object DataQuality {
         coalesce(col("pass_new"), z).as("pass_new"),
         coalesce(col("dup_old"), z).as("dup_old"),
         coalesce(col("dup_new"), z).as("dup_new"))
-      .persist(lvl)
-    out.count()
-    o.unpersist(false)
-    n.unpersist(false)
-    out
+    Cached.result(out, o, n)
   }
 }

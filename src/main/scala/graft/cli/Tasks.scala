@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.Cached
 import graft.eval.Silhouette
 import graft.kmeans._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -34,8 +35,8 @@ object Tasks {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // single partition = reference's single-reducer accumulation order
-    val pts = Points.readCsv(spark, pointsCsv).coalesce(1).cache()
-    val raw = Points.readCsvWithRaw(spark, pointsCsv).coalesce(1).cache()
+    val pts = Cached.keep(Points.readCsv(spark, pointsCsv).coalesce(1))
+    val raw = Cached.keep(Points.readCsvWithRaw(spark, pointsCsv).coalesce(1))
     Ctx(spark, pts, raw, Points.readSeeds(seedsCsv), outDir)
   }
 

@@ -1,5 +1,6 @@
 package graft.kmeans
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.storage.StorageLevel
 
@@ -320,7 +321,7 @@ object KMeansRunner {
                   maxIter: Int, threshold: Option[Double],
                   hook: IterationHook = noHook): Result = {
     val managedCache = points.storageLevel == StorageLevel.NONE
-    if (managedCache) points.persist(StorageLevel.MEMORY_AND_DISK)
+    if (managedCache) Cached.keep(points)
     try {
       var prev = seeds
       var centers = Seq.empty[(Int, Point)]

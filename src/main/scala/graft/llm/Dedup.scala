@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -228,9 +229,8 @@ object Dedup {
     require(dfCap >= 2, s"need dfCap >= 2, got $dfCap")
     // persist: the exploded gram table feeds the df aggregate AND both
     // self-join sides — three scans of the explode subtree without it
-    val g = spread(docs)
-      .select(col("doc_id"), explode(ngramShingles(col("text"), n)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val g = Cached.keep(spread(docs)
+      .select(col("doc_id"), explode(ngramShingles(col("text"), n)).as("g")))
     // packed-key guard from a narrow one-column probe of the source —
     // NOT forceAndCheckPackable(g): unlike jaccard, this pipeline has a
     // single pre-join consumer (the df `keep` broadcast completes
@@ -261,7 +261,7 @@ object Dedup {
     // clusters where the exchange, not CPU, is the binding constraint.
     val joined = kept.as("a")
       .join(kept.as("b"), col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-    materialized(pairCount(joined, "n_shared", packable), Seq(g))
+    Cached.result(pairCount(joined, "n_shared", packable), g)
   }
 
   /** Winnowing near-dup pairs — the MOSS pipeline COMPLETED (Schleimer
@@ -287,8 +287,7 @@ object Dedup {
     require(dfCap >= 2, s"need dfCap >= 2, got $dfCap")
     // winnow() spreads + distincts internally; persist because the
     // fingerprint table feeds the df aggregate AND both join sides
-    val f = graft.llm.TextAnalysis.winnow(docs, k, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val f = Cached.keep(graft.llm.TextAnalysis.winnow(docs, k, w))
     val packable = idsPackable(docs)
     val keep = f.groupBy(col("fp")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= dfCap)
@@ -300,9 +299,8 @@ object Dedup {
     // join side)
     val joined = kept.as("a")
       .join(kept.as("b"), col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-    materialized(
-      pairCount(joined, "n_shared", packable).filter(col("n_shared") >= minShared),
-      Seq(f))
+    Cached.result(
+      pairCount(joined, "n_shared", packable).filter(col("n_shared") >= minShared), f)
   }
 
   /** Duplicated-SPAN removal — [[substringPairs]]' signal COMPLETED the
@@ -374,9 +372,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(sequence(col("p"), col("p") + lit(n - 1))).as("tpos"))
       .distinct()
-    val out = removeCovered(docs, dropped)
-    out.count()
-    out
+    Cached.result(removeCovered(docs, dropped))
   }
 
   /** Positional word n-gram table of a (doc_id, text) frame: (doc_id,
@@ -397,8 +393,8 @@ object Dedup {
     * struct array is a native GetArrayStructFields (the chunkDedup
     * reassembly discipline). The token and total passes re-derive from
     * the source scan (single-consumer each — caching the array
-    * projection is the measured r19 regression). Returns the PERSISTED
-    * (not yet materialized) output frame. */
+    * projection is the measured r19 regression). Returns the lazy
+    * output frame; callers force it through `Cached.result`. */
   private def removeCovered(docs: DataFrame, dropped: DataFrame): DataFrame = {
     val tok = spread(docs).select(col("doc_id"),
       posexplode(graft.llm.TextAnalysis.tokens(col("text"))).as(Seq("tpos", "tok")))
@@ -417,7 +413,6 @@ object Dedup {
         (coalesce(col("n_tokens"), lit(0L)) - coalesce(col("n_kept"), lit(0L)))
           .as("n_dropped"),
         coalesce(col("t"), lit("")).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** The persisted gram index behind incremental span removal: the
@@ -468,9 +463,7 @@ object Dedup {
       .select(col("doc_id"),
         explode(sequence(col("p"), col("p") + lit(n - 1))).as("tpos"))
       .distinct()
-    val out = removeCovered(newDocs, dropped)
-    out.count()
-    out
+    Cached.result(removeCovered(newDocs, dropped))
   }
 
   /** Per-source corpus report — the per-domain duplication/volume table
@@ -694,22 +687,6 @@ object Dedup {
   private def spread(docs: DataFrame): DataFrame =
     docs.repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** Exact Jaccard over the shingle sets of candidate (da, db) pairs.
-    * Shingle sets are computed only for docs appearing in a pair
-    * (left-semi pushdown), so verification cost tracks the candidate
-    * count, not the corpus. */
-  /** Forces `df` into its own (small) cache, then releases the given
-    * upstream caches. Operators return lazily-consumed DataFrames, so
-    * intermediates can't be unpersisted on return — materializing the
-    * compact final result lets every large upstream block go. Callers
-    * holding the result long-term may `unpersist()` it themselves. */
-  private def materialized(df: DataFrame, release: Seq[DataFrame]): DataFrame = {
-    val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    release.foreach(_.unpersist(false))
-    out
-  }
-
   /** Above this many candidate pairs the id-list broadcast falls back to
     * the shuffle formulation. Banded candidate sets are small BY DESIGN
     * (band collisions only), so the broadcast branch is the expected
@@ -724,13 +701,17 @@ object Dedup {
     * this is NOT derived from BroadcastVerifyLimit. */
   private val BroadcastSetDocsLimit = 1L << 16
 
+  /** Exact Jaccard over the shingle sets of candidate (da, db) pairs.
+    * Shingle sets are computed only for docs appearing in a pair
+    * (left-semi pushdown), so verification cost tracks the candidate
+    * count, not the corpus. */
   private def verifyJaccard(docs: DataFrame, candidates: DataFrame, threshold: Double,
                             release: Seq[DataFrame]): DataFrame = {
     // the candidate generation (band/index self-join) is the expensive
     // subtree and is referenced three times downstream — persist it,
     // force it with the ONE heavy job of this operator, and release the
     // upstream caches immediately (they are no longer needed)
-    val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = Cached.keep(candidates)
     val nCand = cand.count()
     release.foreach(_.unpersist(false))
     val candIds = cand.select(explode(array(col("da"), col("db"))).as("doc_id")).distinct()
@@ -740,9 +721,8 @@ object Dedup {
     // by both join sides below.
     val candIdsSized =
       if (nCand <= BroadcastVerifyLimit) broadcast(candIds) else candIds
-    val sets = docs.join(candIdsSized, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingles(col("text")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sets = Cached.keep(docs.join(candIdsSized, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingles(col("text")).as("sh")))
     // the set-table broadcast is gated on its OWN row count (documents
     // with their full shingle arrays), not the pair count: the count
     // also materializes the cache the two joins below share
@@ -760,7 +740,7 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
     // cheap second job: everything reads the cand/sets caches (broadcast
     // builds in the small regime), then both caches go
-    materialized(result, Seq(cand, sets))
+    Cached.result(result, cand, sets)
   }
 
   /** Near-duplicate pairs (da < db) with word-bigram Jaccard >= threshold.
@@ -839,8 +819,7 @@ object Dedup {
     // 73M-row self-join probe+aggregate would run on 2-3 tasks (the
     // broadcast join preserves the probe side's partitioning). A cheap
     // 5k-row shuffle buys full-width parallelism (17s -> 10s at sf0.1).
-    val sh = shingleRows(spread(docs)).select(col("doc_id"), shingleHash(col("s")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = Cached.keep(shingleRows(spread(docs)).select(col("doc_id"), shingleHash(col("s")).as("h")))
     // one job: force the cache before the fan-out + packed-key guard
     // (see forceAndCheckPackable)
     val packable = forceAndCheckPackable(sh)
@@ -976,8 +955,7 @@ object Dedup {
     * Jaccard over the shingle sets; returns (da, db, jaccard) with
     * jaccard >= threshold. */
   def minhashPairs(docs: DataFrame, threshold: Double): DataFrame = {
-    val bands = bandTable(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bands = Cached.keep(bandTable(docs))
     verifyJaccard(docs, bandCandidates(bands), threshold, release = Seq(bands))
   }
 
@@ -996,8 +974,7 @@ object Dedup {
   def minhashEstimatePairs(docs: DataFrame, minMatch: Int): DataFrame = {
     require(minMatch >= 1 && minMatch <= HashAB.length,
       s"need 1 <= minMatch <= ${HashAB.length}, got $minMatch")
-    val sigs = signatures(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sigs = Cached.keep(signatures(docs))
     val cand = bandCandidates(bandTableOf(sigs))
     val sa = sigs.select(col("doc_id").as("da") +:
       HashAB.indices.map(j => col(s"m$j").as(s"a$j")): _*)
@@ -1010,10 +987,7 @@ object Dedup {
       .select(col("da"), col("db"), nMatch.cast("long").as("n_match"),
         (nMatch.cast("double") / HashAB.length).as("est_jaccard"))
       .filter(col("n_match") >= minMatch)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sigs.unpersist(false)
-    out
+    Cached.result(out, sigs)
   }
 
   /** Incremental near-dup detection: pairs (batch_id, corpus_id,
@@ -1079,8 +1053,7 @@ object Dedup {
   def ingestDupIdsIndexed(newDocs: DataFrame,
                           corpus: Option[(DataFrame, DataFrame)],
                           threshold: Double): DataFrame = {
-    val batchBands = bandTable(newDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batchBands = Cached.keep(bandTable(newDocs))
     val withinPairs = verifyJaccard(newDocs, bandCandidates(batchBands),
       threshold, release = Nil)
     val vsCorpusPairs = corpus.map { case (ctexts, cbands) =>
@@ -1094,8 +1067,7 @@ object Dedup {
         .unionByName(vc.select(col("da").as("doc_id"))))
       .getOrElse(withinPairs.select(col("db").as("doc_id")))
       .distinct()
-    materialized(ids,
-      release = Seq(batchBands, withinPairs) ++ vsCorpusPairs.toSeq)
+    Cached.result(ids, Seq(batchBands, withinPairs) ++ vsCorpusPairs.toSeq: _*)
   }
 
   /** Right-to-be-forgotten cascade — the deletion sweep a training-data
@@ -1190,8 +1162,7 @@ object Dedup {
     * da < db, dist <= maxDist, ordered upstream of the contract. */
   def editPairs(docs: DataFrame, maxDist: Int): DataFrame = {
     require(maxDist >= 0, s"need maxDist >= 0, got $maxDist")
-    val bands = bandTable(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bands = Cached.keep(bandTable(docs))
     verifyEdit(docs, bandCandidates(bands), maxDist, release = Seq(bands))
   }
 
@@ -1222,8 +1193,7 @@ object Dedup {
     * the self-join and incremental paths cannot drift. */
   private def verifyEdit(docs: DataFrame, candidates: DataFrame, maxDist: Int,
                          release: Seq[DataFrame]): DataFrame = {
-    val cand = candidates
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = Cached.keep(candidates)
     val nCand = cand.count()
     release.foreach(_.unpersist(false))
     val candIds = cand.select(explode(array(col("da"), col("db"))).as("doc_id")).distinct()
@@ -1231,9 +1201,8 @@ object Dedup {
       if (nCand <= BroadcastVerifyLimit) broadcast(candIds) else candIds
     // texts only for docs appearing in a candidate pair; both join sides
     // share one cached narrow (doc_id, text) slice
-    val txt = docs.join(candIdsSized, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val txt = Cached.keep(docs.join(candIdsSized, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("text")))
     val nTxt = txt.count()
     def side(pairCol: String, alias: String) = {
       val s = txt.select(col("doc_id").as(pairCol), col("text").as(alias))
@@ -1255,7 +1224,7 @@ object Dedup {
         when(col("maxlen") === 0, lit(1.0))
           .otherwise((col("maxlen") - col("dist")).cast("double") /
             col("maxlen").cast("double")).as("edit_sim"))
-    materialized(out, release = Seq(cand, txt))
+    Cached.result(out, cand, txt)
   }
 
   /** Sparse TF-IDF cosine near-dup pairs — the SPARSE-vector similarity
@@ -1286,11 +1255,10 @@ object Dedup {
     // tfidfTopTerms, where repetition is ~2x and keys are shorter).
     val bigrams = coalesce(graft.functions.WordNGrams(col("text"), 2, distinct = false),
       array().cast("array<string>"))
-    val tf = spread(docs)
+    val tf = Cached.keep(spread(docs)
       .select(col("doc_id"), explode(bigrams).as("tm"))
       .groupBy(col("doc_id"), col("tm"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("tm")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap)
     // Weights land on the round-4 grid, so they scale EXACTLY to BIGINT
@@ -1312,11 +1280,10 @@ object Dedup {
     // final rounding. Long overflow would need a per-doc
     // sum((tf*idf*1e4)^2) >= 2^63 (~a 30k-token doc of high-idf
     // repeats); ANSI mode throws loudly rather than corrupting.
-    val w = tf.join(dfreq, Seq("tm"))
+    val w = Cached.keep(tf.join(dfreq, Seq("tm"))
       .select(col("doc_id"), col("tm"), col("df"),
         round(round(col("tf") * log(lit(n.toDouble) / col("df")), 4) * 1e4)
-          .cast("long").as("wl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .cast("long").as("wl")))
     val norms = w.groupBy(col("doc_id")).agg(sum(col("wl") * col("wl")).as("n2l"))
     val pairTerms = w.filter(col("df") >= 2)
     // integer sums regroup safely: the packed pair key applies (see
@@ -1350,7 +1317,7 @@ object Dedup {
         round(col("dotl").cast("double") /
           (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))), 4).as("sim"))
       .filter(col("sim") >= threshold)
-    materialized(result, Seq(tf, w))
+    Cached.result(result, tf, w)
   }
 
   /** Near-dup ids to DROP from an arriving batch (the streaming-ingest
@@ -1367,8 +1334,7 @@ object Dedup {
     * is released before returning (callers may unpersist the result). */
   def ingestDupIds(newDocs: DataFrame, corpus: Option[DataFrame],
                    threshold: Double): DataFrame = {
-    val batchBands = bandTable(newDocs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batchBands = Cached.keep(bandTable(newDocs))
     // both verifier arms are EAGER, read-only, and independent given a
     // WARM band table — overlap them on driver threads (r20, guide
     // §2.6: the r20 job-level decomposition showed the line is
@@ -1396,9 +1362,7 @@ object Dedup {
         .unionByName(vc.select(col("da").as("doc_id"))))
       .getOrElse(withinPairs.select(col("db").as("doc_id")))
       .distinct()
-    val out = materialized(ids,
-      release = Seq(batchBands, withinPairs) ++ vsCorpusPairs.toSeq)
-    out
+    Cached.result(ids, Seq(batchBands, withinPairs) ++ vsCorpusPairs.toSeq: _*)
   }
 
   // ---------- SimHash ----------
@@ -1476,10 +1440,9 @@ object Dedup {
       struct(lit(c).as("chunk"),
         shiftright(col("simhash"), c * chunkBits).bitwiseAND(lit(mask)).as("key"))
     }
-    val bands = sigs
+    val bands = Cached.keep(sigs
       .select(col("doc_id"), col("simhash"), explode(array(chunkStructs: _*)).as("b"))
-      .select(col("doc_id"), col("simhash"), col("b.chunk").as("chunk"), col("b.key").as("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("simhash"), col("b.chunk").as("chunk"), col("b.key").as("key")))
     val cand = bands.as("a")
       .join(bands.as("b"),
         col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
@@ -1490,7 +1453,7 @@ object Dedup {
     val result = cand
       .select(col("da"), col("db"), expr("bit_count(sa ^ sb)").cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-    materialized(result, Seq(bands))
+    Cached.result(result, bands)
   }
 
   // ---------- wide SimHash (the saturation fix, SCALING.md §2) ----------

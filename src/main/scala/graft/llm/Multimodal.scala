@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -154,18 +155,13 @@ object Multimodal {
                    stride: Int, dfCap: Long, minShared: Long): DataFrame = {
     require(dfCap >= 1 && minShared >= 1,
       s"need dfCap >= 1 and minShared >= 1, got $dfCap, $minShared")
-    val fr = frameSampleStub(media, idCol, payloadCol, stride)
-      .select(col("media_id"), col("frame_digest")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fr.count()
+    val fr = Cached.result(frameSampleStub(media, idCol, payloadCol, stride)
+      .select(col("media_id"), col("frame_digest")).distinct())
     // stop-frame guard: digests in more than dfCap media leave the space
     val keep = fr.groupBy(col("frame_digest"))
       .agg(count(lit(1)).as("df")).filter(col("df") <= dfCap)
       .select(col("frame_digest"))
-    val capped = fr.join(keep, Seq("frame_digest"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    capped.count()
-    fr.unpersist(false)
+    val capped = Cached.result(fr.join(keep, Seq("frame_digest"), "left_semi"), fr)
     val sizes = capped.groupBy(col("media_id")).agg(count(lit(1)).as("nset"))
     val pairs = capped.as("a")
       .join(capped.as("b"),
@@ -180,10 +176,7 @@ object Multimodal {
       .select(col("ma"), col("mb"), col("n_shared"),
         (col("n_shared").cast("double") /
           least(col("na"), col("nb")).cast("double")).as("containment"))
-    val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    mat.count()
-    capped.unpersist(false)
-    mat
+    Cached.result(out, capped)
   }
 
   /** Perceptual-hash signature per media — the banded-pHash layer of the
@@ -252,19 +245,14 @@ object Multimodal {
     def frames(df: DataFrame) =
       frameSampleStub(df, idCol, payloadCol, stride)
         .select(col("media_id"), col("frame_digest")).distinct()
-    val bf = frames(newMedia).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cf = frames(corpus).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bf.count(); cf.count()
+    val bf = Cached.result(frames(newMedia))
+    val cf = Cached.result(frames(corpus))
     // union-wide stop-frame guard (one aggregate over both frame sets)
     val keep = bf.unionByName(cf).groupBy(col("frame_digest"))
       .agg(count(lit(1)).as("df")).filter(col("df") <= dfCap)
       .select(col("frame_digest"))
-    val bk = bf.join(keep, Seq("frame_digest"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ck = cf.join(keep, Seq("frame_digest"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bk.count(); ck.count()
-    bf.unpersist(false); cf.unpersist(false)
+    val bk = Cached.result(bf.join(keep, Seq("frame_digest"), "left_semi"))
+    val ck = Cached.result(cf.join(keep, Seq("frame_digest"), "left_semi"), bf, cf)
     val bSizes = bk.groupBy(col("media_id")).agg(count(lit(1)).as("nb"))
     val cSizes = ck.groupBy(col("media_id")).agg(count(lit(1)).as("nc"))
     val pairs = broadcast(bk.withColumnRenamed("media_id", "batch_id"))
@@ -278,9 +266,6 @@ object Multimodal {
       .select(col("batch_id"), col("corpus_id"), col("n_shared"),
         (col("n_shared").cast("double") /
           least(col("nb"), col("nc")).cast("double")).as("containment"))
-    val mat = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    mat.count()
-    bk.unpersist(false); ck.unpersist(false)
-    mat
+    Cached.result(out, bk, ck)
   }
 }

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Cached
 import graft.functions.NearestCentroid
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
@@ -165,8 +166,7 @@ object Similarity {
     * EAGER (materializes the queries-row result, releases the pool).
     * Output: (query_id, n_exact, n_found, recall). */
   def hammingRecall(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = Cached.keep(emb.select(col("vec_id"), col("embedding")))
     val exact = bruteRanked(e, queryIds, k)
       .select(col("query_id"), col("neighbor_id"))
     val approx = hammingRanked(signSignature(e), queryIds, k)
@@ -179,10 +179,7 @@ object Similarity {
         (col("n_found").cast("double") / col("n_exact").cast("double"))
           .as("recall"))
       .orderBy(col("query_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    e.unpersist(false)
-    out
+    Cached.result(out, e)
   }
 
   /** lcm(1..k) — the exact-fraction denominator grid for rank-reciprocal
@@ -372,9 +369,8 @@ object Similarity {
     // persist: the exact top-k pool is the shared reference for EVERY
     // sweep point — unpersisted, each union arm re-plans bruteForceTopK
     // and therefore re-scans the corpus per nprobe. queries·k rows.
-    val exact = bruteForceTopK(emb, queryIds, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = Cached.keep(bruteForceTopK(emb, queryIds, k)
+      .select(col("query_id"), col("neighbor_id")))
     val out = nprobes.map { np =>
       val approx = ivfTopK(emb, coarseIds, queryIds, np, k)
         .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
@@ -385,11 +381,7 @@ object Similarity {
           (col("n_found").cast("double") / col("n_exact").cast("double"))
             .as("recall"))
     }.reduce(_ union _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the nprobes-row result, release the cached pool
-    out.count()
-    exact.unpersist(false)
-    out
+    Cached.result(out, exact)
   }
 
   /** Recall audit for the COMPRESSED-domain ANN paths — [[ivfRecall]]'s
@@ -413,9 +405,8 @@ object Similarity {
   def pqRecall(emb: DataFrame, coarseIds: Seq[Long], codebookIds: Seq[Long],
                m: Int, queryIds: Seq[Long], nprobes: Seq[Int], k: Int): DataFrame = {
     require(nprobes.nonEmpty, "need at least one nprobe")
-    val exact = l2Ranked(emb, queryIds, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = Cached.keep(l2Ranked(emb, queryIds, k)
+      .select(col("query_id"), col("neighbor_id")))
     def arm(method: String, np: Long, approx: DataFrame): DataFrame =
       exact.join(approx.select(col("query_id"), col("neighbor_id"), lit(1L).as("hit")),
           Seq("query_id", "neighbor_id"), "left")
@@ -429,10 +420,7 @@ object Similarity {
       nprobes.map(np => arm("ivf_pq", np.toLong,
         ivfPqSearch(emb, coarseIds, codebookIds, m, queryIds, np, k))))
       .reduce(_ union _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    exact.unpersist(false)
-    out
+    Cached.result(out, exact)
   }
 
   /** Recall audit for the REFINE stage — [[pqRecall]]'s counterpart for
@@ -449,9 +437,8 @@ object Similarity {
                    nprobe: Int, rerankRs: Seq[Int], k: Int): DataFrame = {
     require(rerankRs.nonEmpty && rerankRs.forall(_ >= k),
       s"need every rerankR >= k=$k, got $rerankRs")
-    val exact = l2Ranked(emb, queryIds, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val exact = Cached.keep(l2Ranked(emb, queryIds, k)
+      .select(col("query_id"), col("neighbor_id")))
     val out = rerankRs.map { r =>
       val approx = ivfPqSearchRefined(emb, coarseIds, codebookIds, m,
           queryIds, nprobe, r, k)
@@ -463,10 +450,7 @@ object Similarity {
           (col("n_found").cast("double") / col("n_exact").cast("double"))
             .as("recall"))
     }.reduce(_ union _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    exact.unpersist(false)
-    out
+    Cached.result(out, exact)
   }
 
   /** Exact L2² top-k per query (ascending distance, ties to lowest
@@ -546,9 +530,8 @@ object Similarity {
     // per VECTOR (n of them), not per pair (~n²/K of them) — same
     // sqrt(dot(v,v)) expression, so sim values are bit-identical, but the
     // pair loop does one fold instead of three
-    val assigned = assignCells(e, coarse)
-      .withColumn("nrm", sqrt(dot(col("vec"), col("vec"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = Cached.keep(assignCells(e, coarse)
+      .withColumn("nrm", sqrt(dot(col("vec"), col("vec")))))
     val result = assigned.as("a")
       .join(assigned.as("b"),
         col("a.cell_id") === col("b.cell_id") && col("a.vec_id") < col("b.vec_id"))
@@ -556,11 +539,7 @@ object Similarity {
         (dot(col("a.vec"), col("b.vec")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
       .filter(col("sim") >= threshold)
       .select(col("va"), col("vb"), round(col("sim"), 4).as("sim"))
-    // materialize the small pair set, release the cached assignment
-    val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    assigned.unpersist(false)
-    out
+    Cached.result(result, assigned)
   }
 
   /** SemDeDup (Abbas et al. 2023): semantic deduplication over the

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.Cached
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -153,14 +154,12 @@ object TextAnalysis {
     // lexPostings/tfidfTopTerms, where key bytes are shorter and the
     // explode+agg exchange was the dominant cost). The explode +
     // groupBy aggregate stands.
-    val dg = docs
+    val dg = Cached.result(docs
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .select(col("doc_id"), col("lang"),
         explode(coalesce(graft.functions.CharNGrams(col("text"), 3),
           array().cast("array<string>"))).as("g"))
-      .groupBy(col("doc_id"), col("lang"), col("g")).agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    dg.count()
+      .groupBy(col("doc_id"), col("lang"), col("g")).agg(count(lit(1)).as("n")))
     // per-language counts are the SUM of per-doc counts (exact BIGINT
     // addition — bit-identical to counting the raw gram stream)
     val wl = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("g"))
@@ -185,10 +184,7 @@ object TextAnalysis {
       .join(best, Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang"), col("pred_lang"), col("dist"),
         (col("pred_lang") === col("lang")).as("correct"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before releasing the shared gram cache
-    dg.unpersist(false)
-    out
+    Cached.result(out, dg)
   }
 
   /** BPE-ish tokenization regex (letters / digits / punctuation runs,
@@ -841,13 +837,12 @@ object TextAnalysis {
     require(batchSize >= 1, s"need batchSize >= 1, got $batchSize")
     require(lgConfigK >= 4 && lgConfigK <= 21,
       s"need 4 <= lgConfigK <= 21 (Datasketches HLL bounds), got $lgConfigK")
-    val perBatch = docs
+    val perBatch = Cached.keep(docs
       .select(expr(s"doc_id div $batchSize").as("batch"),
         explode(tokens(col("text"))).as("w"))
       .groupBy(col("batch"))
       .agg(hll_sketch_agg(col("w"), lit(lgConfigK)).as("sk"),
-        count(lit(1)).as("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).as("n_tokens")))
     val cum = perBatch.as("a")
       .join(perBatch.as("b"), col("b.batch") <= col("a.batch"))
       .groupBy(col("a.batch").as("batch"))
@@ -859,10 +854,7 @@ object TextAnalysis {
           coalesce(lag(col("cum_vocab_est"), 1).over(Window.orderBy(col("batch"))),
             lit(0L)))
       .select(col("batch"), col("n_tokens"), col("n_new_est"), col("cum_vocab_est"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    perBatch.unpersist(false)
-    out
+    Cached.result(out, perBatch)
   }
 
   /** Bursting terms per ingestion batch — the freshness/contamination
@@ -898,11 +890,10 @@ object TextAnalysis {
     require(batchSize >= 1, s"need batchSize >= 1, got $batchSize")
     require(minCount >= 1, s"need minCount >= 1, got $minCount")
     require(factor >= 1, s"need factor >= 1, got $factor")
-    val bw = docs
+    val bw = Cached.keep(docs
       .select(expr(s"doc_id div $batchSize").as("batch"),
         explode(tokens(col("text"))).as("w"))
-      .groupBy(col("batch"), col("w")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col("batch"), col("w")).agg(count(lit(1)).as("c")))
     val ww = bw.withColumn("cw", sum(col("c")).over(Window.partitionBy(col("w"))))
     val nb = bw.groupBy(col("batch")).agg(sum(col("c")).as("n_batch"))
       .withColumn("nt", sum(col("n_batch")).over(Window.partitionBy()))
@@ -916,10 +907,7 @@ object TextAnalysis {
         when(col("c_rest") * col("n_batch") > 0,
           (col("c") * col("n_rest")).cast("double") /
             (col("c_rest") * col("n_batch")).cast("double")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    bw.unpersist(false)
-    out
+    Cached.result(out, bw)
   }
 
   /** Token-share Gini across sources — the one-number answer to "is my
@@ -937,10 +925,8 @@ object TextAnalysis {
     * ONE division. Output: one row (n_sources, total_tokens, gini_num,
     * gini). */
   def tokenGini(docs: DataFrame): DataFrame = {
-    val per = docs.select(col("source"), size(tokens(col("text"))).cast("long").as("nt"))
-      .groupBy(col("source")).agg(sum(col("nt")).as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    per.count()
+    val per = Cached.result(docs.select(col("source"), size(tokens(col("text"))).cast("long").as("nt"))
+      .groupBy(col("source")).agg(sum(col("nt")).as("x")))
     val out = per.as("a").crossJoin(per.as("b"))
       .agg(countDistinct(col("a.source")).as("n_sources"),
         sum(abs(col("a.x") - col("b.x"))).as("gini_num"),
@@ -950,10 +936,7 @@ object TextAnalysis {
         col("gini_num"),
         (col("gini_num").cast("double") /
           (lit(2L) * col("nt_total")).cast("double")).as("gini"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    per.unpersist(false)
-    out
+    Cached.result(out, per)
   }
 
   /** Vocabulary coverage curve — the Zipf planning numbers behind every
@@ -1012,9 +995,7 @@ object TextAnalysis {
     val binned = docs.select(col("source"),
       expr(s"least(CAST(size(split(text, ' ')) AS BIGINT) div $binWidth, " +
         s"CAST(${nbins - 1} AS BIGINT))").as("bin"))
-    val perSrc = binned.groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perSrc.count()
+    val perSrc = Cached.result(binned.groupBy(col("source"), col("bin")).agg(count(lit(1)).as("c")))
     val bins = perSrc.select(col("bin")).distinct()
     val srcN = perSrc.groupBy(col("source")).agg(sum(col("c")).as("n_docs"))
     val dense = srcN.crossJoin(bins)
@@ -1038,10 +1019,7 @@ object TextAnalysis {
       .select(col("source"), col("n_docs"), col("ks_num"),
         (col("ks_num").cast("double") /
           (col("n_docs") * col("nn")).cast("double")).as("ks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    perSrc.unpersist(false)
-    out
+    Cached.result(out, perSrc)
   }
 
   /** Interleaved curriculum order — the deterministic sequencing step
@@ -1222,12 +1200,11 @@ object TextAnalysis {
     // lexPostings rationale — WordCounts): same (doc_id, term, tf)
     // rows as the old explode + corpus-wide groupBy(doc_id, term)
     // hash aggregate (WordCountsSpec pins row equality)
-    val tf = docs
+    val tf = Cached.keep(docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
       .select(col("doc_id"),
         explode(graft.functions.WordCounts(col("text"), 1)).as("tc"))
-      .select(col("doc_id"), col("tc.term").as("term"), col("tc.tf").as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("tc.term").as("term"), col("tc.tf").as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf.join(dfreq, Seq("term"))
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
@@ -1237,10 +1214,7 @@ object TextAnalysis {
       .filter(col("rn") <= k)
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"),
         col("rn").cast("long").as("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tf.unpersist(false)
-    out
+    Cached.result(out, tf)
   }
 
   /** Masks every whole-word occurrence of `terms` with `mask` — the
@@ -1356,22 +1330,16 @@ object TextAnalysis {
     * Output: (doc_id, n_chunks, n_kept, text). */
   def chunkDedup(docs: DataFrame, chunkTokens: Int): DataFrame = {
     require(chunkTokens >= 1, s"need chunkTokens >= 1, got $chunkTokens")
-    val ch = chunkTable(docs, chunkTokens)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // force before the fan-out: keepers' broadcast build, the semi-join
     // probe and the reassembly branches start concurrently, and on a
     // cold cache each recomputes the chunk explode from parquet
     // (measured r19: three ~8-10 CPU-s stages re-reading the source)
-    ch.count()
+    val ch = Cached.result(chunkTable(docs, chunkTokens))
     val keepers = ch.groupBy(col("chunk_text"))
       .agg(min(struct(col("doc_id"), col("chunk_id"))).as("m"))
       .select(col("m.doc_id").as("doc_id"), col("m.chunk_id").as("chunk_id"))
     val kept = ch.join(keepers, Seq("doc_id", "chunk_id"), "left_semi")
-    val out = reassemble(docs, ch, kept)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ch.unpersist(false)
-    out
+    Cached.result(reassemble(docs, ch, kept), ch)
   }
 
   /** Boilerplate-chunk removal — the C4 "discard any line seen more
@@ -1387,22 +1355,16 @@ object TextAnalysis {
   def dropBoilerplateChunks(docs: DataFrame, chunkTokens: Int, minDocs: Long): DataFrame = {
     require(chunkTokens >= 1, s"need chunkTokens >= 1, got $chunkTokens")
     require(minDocs >= 2, s"need minDocs >= 2, got $minDocs")
-    val ch = chunkTable(docs, chunkTokens)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // force before the fan-out (the chunkDedup rationale: three cold-
     // cache consumers re-ran the chunk explode — measured ~14-16 CPU-s
     // per duplicate stage on q_boilerplate at sf0.1)
-    ch.count()
+    val ch = Cached.result(chunkTable(docs, chunkTokens))
     val boiler = ch.groupBy(col("chunk_text"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") >= minDocs)
       .select(col("chunk_text"))
     val kept = ch.join(boiler, Seq("chunk_text"), "left_anti")
-    val out = reassemble(docs, ch, kept)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ch.unpersist(false)
-    out
+    Cached.result(reassemble(docs, ch, kept), ch)
   }
 
   /** Unigram language-model quality score: each document's average
@@ -1423,10 +1385,9 @@ object TextAnalysis {
     * ulp and the per-doc sum order is the gram-matrix margin argument.
     * Output: (doc_id, n_tokens, avg_logprob). */
   def unigramLogProb(docs: DataFrame): DataFrame = {
-    val toks = docs
+    val toks = Cached.keep(docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), explode(tokens(col("text"))).as("w")))
     val total = toks.count()
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("c"))
     val out = toks.join(vocab, Seq("w"))
@@ -1435,10 +1396,7 @@ object TextAnalysis {
         sum(log(col("c").cast("double") / total.toDouble)).as("lp"))
       .select(col("doc_id"), col("n_tokens"),
         round(col("lp") / col("n_tokens"), 4).as("avg_logprob"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    toks.unpersist(false)
-    out
+    Cached.result(out, toks)
   }
 
   /** Interpolated bigram language-model score — the next step up from
@@ -1482,9 +1440,8 @@ object TextAnalysis {
     require(lambda > 0 && lambda < 1, s"need 0 < lambda < 1, got $lambda")
     val spread = docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
-    val toks = spread
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = Cached.keep(spread
+      .select(col("doc_id"), explode(tokens(col("text"))).as("w")))
     val total = toks.count()
     val uni = toks.groupBy(col("w")).agg(count(lit(1)).as("cu"))
     // one native positional-struct pass (r20, the CharNGrams
@@ -1492,11 +1449,10 @@ object TextAnalysis {
     // slices, without materializing the token array plus two sliced
     // copies plus the zipped structs per row — WordNGramStructsSpec
     // pins equality with the arrays_zip form
-    val bg = spread
+    val bg = Cached.keep(spread
       .select(col("doc_id"),
         explode(graft.functions.WordNGramStructs(col("text"), 2)).as("b"))
-      .select(col("doc_id"), col("b.w1").as("prev"), col("b.w2").as("cur"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("doc_id"), col("b.w1").as("prev"), col("b.w2").as("cur")))
     val bc = bg.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("cb"))
     val lp = log(
       lit(lambda) * (col("cb").cast("double") / col("cup").cast("double")) +
@@ -1514,11 +1470,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         col("avg_logprob"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    toks.unpersist(false)
-    bg.unpersist(false)
-    out
+    Cached.result(out, toks, bg)
   }
 
   /** Trigram stupid-backoff LM score (Brants et al., EMNLP 2007 —
@@ -1567,9 +1519,8 @@ object TextAnalysis {
     require(theta > 0 && theta < 1, s"need 0 < theta < 1, got $theta")
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
     val mSpread = model.repartition(parts)
-    val mToks = mSpread
-      .select(explode(tokens(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val mToks = Cached.keep(mSpread
+      .select(explode(tokens(col("text"))).as("w")))
     val total = mToks.count()
     val uni = mToks.groupBy(col("w")).agg(count(lit(1)).as("cu"))
     // one native positional-struct pass per gram stream (r20): same
@@ -1620,10 +1571,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         coalesce(col("n_trigrams"), lit(0L)).as("n_trigrams"),
         col("avg_logprob"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    mToks.unpersist(false)
-    out
+    Cached.result(out, mToks)
   }
 
   /** Cross-document novelty score — the diversity signal curation runs
@@ -1679,9 +1627,7 @@ object TextAnalysis {
         coalesce(col("n_shingles"), lit(0L)).as("n_shingles"),
         coalesce(col("n_unique"), lit(0L)).as("n_unique"),
         col("novelty"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
+    Cached.result(out)
   }
 
   /** Heavy hitters by count-min sketch — completes the sketch triad
@@ -1700,10 +1646,9 @@ object TextAnalysis {
                    confidence: Double, seed: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val toks = docs
+    val toks = Cached.keep(docs
       .repartition(spark.sessionState.conf.numShufflePartitions)
-      .select(explode(tokens(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(explode(tokens(col("text"))).as("w")))
     val n = toks.count()
     val cms = toks.stat.countMinSketch("w", eps, confidence, seed)
     val top = toks.groupBy(col("w")).agg(count(lit(1)).as("n_exact"))
@@ -1922,10 +1867,9 @@ object TextAnalysis {
       s"need 1 <= k <= capacity, got k=$k capacity=$capacity")
     val spark = docs.sparkSession
     import spark.implicits._
-    val toks = docs
+    val toks = Cached.keep(docs
       .repartition(spark.sessionState.conf.numShufflePartitions)
-      .select(explode(tokens(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(explode(tokens(col("text"))).as("w")))
     val cms = toks.stat.countMinSketch("w", eps, confidence, seed)
     val candidates = toks.as[String].mapPartitions { it =>
       val counts = scala.collection.mutable.HashMap.empty[String, Long]
@@ -2068,8 +2012,7 @@ object TextAnalysis {
     require(k >= 1, s"need k >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
     val (edgesRaw, und) = textrankEdges(docs, Seq.empty)
-    val edges = edgesRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Cached.keep(edgesRaw)
     val (pr, cache) = textrankWalk(edges, Seq.empty, iterations)
     // TakeOrderedAndProject trims the vocab to k rows BEFORE the
     // (k-row, single-partition) ranking window — never a global sort
@@ -2078,12 +2021,7 @@ object TextAnalysis {
       .withColumn("rn",
         row_number().over(Window.orderBy(col("pr").desc, col("w"))).cast("long"))
       .select(col("w"), col("pr"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    edges.unpersist(false)
-    und.unpersist(false)
-    cache.foreach(_.unpersist(false))
-    out
+    Cached.result(out, Seq(edges, und) ++ cache: _*)
   }
 
   /** Per-document TextRank keywords — the product form (each document
@@ -2099,20 +2037,14 @@ object TextAnalysis {
     require(k >= 1, s"need k >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
     val (edgesRaw, und) = textrankEdges(docs, Seq("doc_id"))
-    val edges = edgesRaw
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = Cached.keep(edgesRaw)
     val (pr, cache) = textrankWalk(edges, Seq("doc_id"), iterations)
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pr").desc, col("w"))
     val out = pr
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
       .select(col("doc_id"), col("w"), col("pr"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    edges.unpersist(false)
-    und.unpersist(false)
-    cache.foreach(_.unpersist(false))
-    out
+    Cached.result(out, Seq(edges, und) ++ cache: _*)
   }
 
   /** Symmetrized DISTINCT word-adjacency edges, optionally keyed
@@ -2145,12 +2077,10 @@ object TextAnalysis {
         graft.functions.WordNGramStructs(col("text"), 2)).as("g")): _*)
       .select((kc :+ col("g.w1").as("w1") :+ col("g.w2").as("w2")): _*)
       .filter(col("w1") =!= col("w2"))
-    val und = bg
+    val und = Cached.result(bg
       .select((kc :+ least(col("w1"), col("w2")).as("src")
         :+ greatest(col("w1"), col("w2")).as("dst")): _*)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    und.count()
+      .distinct())
     val edges = und.unionAll(
       und.select((kc :+ col("dst").as("src") :+ col("src").as("dst")): _*))
     (edges, und)
@@ -2187,25 +2117,21 @@ object TextAnalysis {
     // iteration, and an unpersisted 2-join decoration would re-execute
     // per reference (the multi-reference-subplan trap — measured 94 vs
     // 54 CPU-s on q_textrank_doc before this persist)
-    val edgesD = edges
+    val edgesD = Cached.result(edges
       .join(deg.withColumnRenamed("deg", "deg_src"), keys :+ "src")
-      .join(degDst, keys :+ "dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edgesD.count()
+      .join(degDst, keys :+ "dst"))
     var pr = deg.select(
       (kc :+ col("src").as("w") :+ lit(s).as("pr") :+ col("deg")): _*)
     var prev: Option[DataFrame] = None
     for (_ <- 1 to iterations) {
-      val next = edgesD
+      val next = Cached.result(edgesD
         .join(pr.select((kc :+ col("w").as("src") :+ col("pr")): _*), keys :+ "src")
         .withColumn("sh", expr("pr div deg_src"))
         .groupBy((kc :+ col("dst")): _*)
         .agg(sum(col("sh")).as("sc"), max(col("deg_dst")).as("deg"))
         .withColumn("pr2", expr(s"${15L * s / 100} + (85 * sc) div 100"))
-        .select((kc :+ col("dst").as("w") :+ col("pr2").as("pr") :+ col("deg")): _*)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count()
-      prev.foreach(_.unpersist(false))
+        .select((kc :+ col("dst").as("w") :+ col("pr2").as("pr") :+ col("deg")): _*),
+        prev.toSeq: _*)
       prev = Some(next)
       pr = next
     }
@@ -2376,13 +2302,12 @@ object TextAnalysis {
     // persist: tf feeds BOTH the df aggregate and the scoring join —
     // without it the corpus explode runs twice (the tfidfTopTerms
     // pattern; the cached table is |matching docs|·|Q| rows, tiny)
-    val tf = docs
+    val tf = Cached.keep(docs
       .repartition(spark.sessionState.conf.numShufflePartitions)
       .select(col("doc_id"), size(toks).cast("long").as("dl"), explode(toks).as("term"))
       .join(broadcast(termsDf.select(col("term"))), Seq("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("tf"), first(col("dl")).as("dl")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = docs.agg(count(lit(1)).as("n"),
       sum(size(toks).cast("long")).as("sumdl"))
@@ -2398,10 +2323,7 @@ object TextAnalysis {
     val out = scored.withColumn("rn", row_number().over(win).cast("long"))
       .filter(col("rn") <= k)
       .select(col("doc_id"), col("score"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tf.unpersist(false)
-    out
+    Cached.result(out, tf)
   }
 
   /** Pseudo-relevance-feedback expansion terms (the RM3 mechanism,
@@ -2555,9 +2477,8 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     require(queryTerms.nonEmpty, "bm25 probe: empty query")
     require(k >= 1, s"need k >= 1, got $k")
-    val tf = postings
-      .filter(col("term").isin(queryTerms: _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = Cached.keep(postings
+      .filter(col("term").isin(queryTerms: _*)))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val avgdl = lit(sumdl).cast("double") / lit(n)
     val idf = log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
@@ -2570,10 +2491,7 @@ object TextAnalysis {
     val out = scored.withColumn("rn", row_number().over(win).cast("long"))
       .filter(col("rn") <= k)
       .select(col("doc_id"), col("score"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tf.unpersist(false)
-    out
+    Cached.result(out, tf)
   }
 
   /** RAG chunking: split every document into OVERLAPPING token windows
@@ -2631,9 +2549,8 @@ object TextAnalysis {
     val spark = postings.sparkSession
     import spark.implicits._
     val allTerms = queries.flatMap(_._2).distinct
-    val tf = postings
-      .filter(col("term").isin(allTerms: _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = Cached.keep(postings
+      .filter(col("term").isin(allTerms: _*)))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val avgdl = lit(sumdl).cast("double") / lit(n)
     val idf = log((lit(n) - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
@@ -2650,10 +2567,7 @@ object TextAnalysis {
     val out = scored.withColumn("rn", row_number().over(win).cast("long"))
       .filter(col("rn") <= k)
       .select(col("query_id"), col("doc_id"), col("score"), col("rn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tf.unpersist(false)
-    out
+    Cached.result(out, tf)
   }
 
   /** [[bm25Probe]] for a batch of queries over a [[writeLexIndex]]
@@ -2794,10 +2708,7 @@ object TextAnalysis {
       .join(sub, Seq("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_subtokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before the vocab cache under it unpersists
-    cache.unpersist(false)
-    out
+    Cached.result(out, cache)
   }
 
   /** Shared trainer state: (ranked merges, final vocab table (w, wc, s)
@@ -2806,7 +2717,7 @@ object TextAnalysis {
   private def bpeState(docs: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, Long)], DataFrame, DataFrame) = {
     require(nMerges >= 1, s"need nMerges >= 1, got $nMerges")
-    val base = docs
+    val base = Cached.result(docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
@@ -2815,9 +2726,7 @@ object TextAnalysis {
       // apply with no per-round re-wrapping); (.) char-at-a-time
       // replacement agrees between Java regex and RE2 on non-astral
       // text, and corpus symbols never contain spaces
-      .withColumn("s", concat(lit("  "), regexp_replace(col("w"), "(.)", "$1  ")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
+      .withColumn("s", concat(lit("  "), regexp_replace(col("w"), "(.)", "$1  "))))
     var words = base
     val merges = Vector.newBuilder[(Long, String, String, Long)]
     var exhausted = false
@@ -2912,10 +2821,7 @@ object TextAnalysis {
       .join(sub, Seq("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_words"), sum(col("n_sub")).as("n_subtokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize before the vocab cache under it unpersists
-    cache.unpersist(false)
-    out
+    Cached.result(out, cache)
   }
 
   /** Piece → cost table: cost = ln(total) − ln(effective), effective =
@@ -2975,26 +2881,23 @@ object TextAnalysis {
     require(iters >= 1, s"need iters >= 1, got $iters")
     val spark = docs.sparkSession
     import spark.implicits._
-    val base = docs
+    val base = Cached.result(docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
       .select(explode(tokens(col("text"))).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("wc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count()
+      .groupBy(col("w")).agg(count(lit(1)).as("wc")))
     val maxLen = maxPieceLen
     // seed: every substring up to maxLen, corpus-weighted — PRUNED IN
     // SPARK before anything reaches the driver (the seed substring
     // table is corpus-vocabulary-sized; only the vocab-sized winners
     // and the charset-sized single-char floor ever collect)
-    val seedAgg = base.select(col("w"), col("wc")).as[(String, Long)]
+    val seedAgg = Cached.keep(base.select(col("w"), col("wc")).as[(String, Long)]
       .flatMap { case (w, wc) =>
         for {
           i <- 0 until w.length
           l <- 1 to math.min(maxLen, w.length - i)
         } yield (w.substring(i, i + l), wc)
       }
-      .toDF("piece", "wcc").groupBy(col("piece")).agg(sum(col("wcc")).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("piece", "wcc").groupBy(col("piece")).agg(sum(col("wcc")).as("n")))
     val singlePieces: Seq[(String, Long)] = seedAgg
       .filter(length(col("piece")) === 1)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq.sortBy(_._1)
@@ -3144,10 +3047,7 @@ object TextAnalysis {
     val out = perDoc
       .withColumn("selected",
         row_number().over(Window.orderBy(col("dsir_score").desc, col("doc_id"))) <= topN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    perDoc.unpersist(false)
-    out
+    Cached.result(out, perDoc)
   }
 
   /** 100 TB scale twin of [[dsirScores]]: the exact form ranks the
@@ -3188,25 +3088,20 @@ object TextAnalysis {
     val out = perDoc.crossJoin(broadcast(thr))
       .select(col("doc_id"), col("n_tokens"), col("dsir_score"),
         (col("dsir_score") >= col("t")).as("selected"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    perDoc.unpersist(false)
-    out
+    Cached.result(out, perDoc)
   }
 
   /** The shared DSIR scoring pipeline: (doc_id, n_tokens, dsir_score),
     * returned PERSISTED and materialized (token/vocab caches already
     * released) — callers overlay their selection policy and unpersist. */
   private def dsirPerDoc(docs: DataFrame, targetLang: String): DataFrame = {
-    val toks = docs
+    val toks = Cached.keep(docs
       .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions)
       .select(col("doc_id"), (col("lang") === targetLang).as("tgt"),
-        explode(tokens(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vocab = toks.groupBy(col("w"))
+        explode(tokens(col("text"))).as("w")))
+    val vocab = Cached.keep(toks.groupBy(col("w"))
       .agg(count(lit(1)).as("cr"),
-        sum(when(col("tgt"), lit(1L)).otherwise(lit(0L))).as("ct"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(when(col("tgt"), lit(1L)).otherwise(lit(0L))).as("ct")))
     val totals = vocab.agg(sum(col("cr")), sum(col("ct")), count(lit(1))).head()
     val (nRaw, nTgt, v) = (totals.getLong(0), totals.getLong(1), totals.getLong(2))
     val lp = log(((col("ct") + lit(1L)) * lit(nRaw + v)).cast("double") /
@@ -3214,10 +3109,6 @@ object TextAnalysis {
     val perDoc = toks.join(vocab, Seq("w"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), round(sum(lp), 4).as("dsir_score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    perDoc.count()
-    toks.unpersist(false)
-    vocab.unpersist(false)
-    perDoc
+    Cached.result(perDoc, toks, vocab)
   }
 }

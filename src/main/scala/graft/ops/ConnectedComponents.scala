@@ -1,8 +1,8 @@
 package graft.ops
 
+import graft.Cached
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable
 
@@ -97,10 +97,9 @@ object ConnectedComponents {
                  maxRounds: Int = 50,
                  localEdgeThreshold: Long = DefaultLocalEdgeThreshold): DataFrame = {
     val spark = edges.sparkSession
-    val e2 = edges
+    val e2 = Cached.keep(edges
       .select(col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .filter(col("a") =!= col("b")))
     val rawEdges = e2.count()
     try {
       if (rawEdges <= localEdgeThreshold) localComponents(spark, e2)
@@ -140,10 +139,9 @@ object ConnectedComponents {
     // own conf): sizing spark.sql.shuffle.partitions on the caller's
     // session would resize any query another thread plans concurrently
     val s2 = spark.newSession()
-    val sym = s2.createDataFrame(e2.rdd, e2.schema)
+    val sym = Cached.keep(s2.createDataFrame(e2.rdd, e2.schema)
       .union(s2.createDataFrame(e2.select(col("b").as("a"), col("a").as("b")).rdd, e2.schema))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // materializes sym AND sizes the loop's shuffles to the graph
     val edgeCount = sym.count()
     val sessionParts = spark.sessionState.conf.numShufflePartitions
@@ -163,11 +161,10 @@ object ConnectedComponents {
           .groupBy(sym("a").as("node")).agg(min("label").as("nl"))
         // left join keeps nodes with no neighbor update AND carries the
         // previous label along as `old` for the convergence metric
-        val prop = labels.select(col("node"), col("label").as("old"))
+        val prop = Cached.keep(labels.select(col("node"), col("label").as("old"))
           .join(nbrMin, Seq("node"), "left")
           .select(col("node"), col("old"),
-            least(col("old"), coalesce(col("nl"), col("old"))).as("label"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+            least(col("old"), coalesce(col("nl"), col("old"))).as("label")))
         // pointer jump: labels are node ids, so label(label(n)) is defined
         val jmap = prop.select(col("node").as("jn"), col("label").as("jl"))
         val jumped = prop.join(jmap, prop("label") === jmap("jn"), "left")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cached
 import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -43,7 +44,7 @@ object IndexedIngest {
           .select(col("doc_id"), col("text")),
         index.select(col("doc_id"), col("band"), col("key"))))
     val dropIds = Dedup.ingestDupIdsIndexed(batchDocs, prior, threshold)
-    val survivors = batchDocs.join(dropIds, Seq("doc_id"), "left_anti").persist()
+    val survivors = Cached.keep(batchDocs.join(dropIds, Seq("doc_id"), "left_anti"))
     // force the survivor cache with one job, then land corpus and index
     // CONCURRENTLY (guide-§2.6 driver overlap): both are deterministic
     // projections of the same cached survivors into their own batch

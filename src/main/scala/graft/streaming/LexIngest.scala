@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cached
 import graft.llm.TextAnalysis
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -59,8 +60,7 @@ object LexIngest {
       else raw
     // three writes read this plan (postings, stats, stats_agg) — persist
     // once or the admission anti-join re-runs per consumer
-    val batchDocs = admitted
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batchDocs = Cached.keep(admitted)
     try {
       if (dedupAdmission && batchDocs.isEmpty) return
       // materialize the shared batch cache with ONE cheap job before the

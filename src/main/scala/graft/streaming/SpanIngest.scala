@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Cached
 import graft.llm.Dedup
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
@@ -71,17 +72,12 @@ object SpanIngest {
         try {
           val cc = Dedup.removeCorpusSpans(
             sc.select(col("doc_id"), col("text")), priorGrams, n)
-          try {
-            val merged = cc
-              .select(col("doc_id"), col("n_dropped").as("_cd"), col("text"))
-              .join(sc.select(col("doc_id"), col("n_tokens"),
-                col("n_dropped").as("_sd")), Seq("doc_id"))
-              .select(col("doc_id"), col("n_tokens"),
-                (col("_sd") + col("_cd")).as("n_dropped"), col("text"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try { merged.count(); merged }
-            catch { case t: Throwable => merged.unpersist(false); throw t }
-          } finally cc.unpersist(false)
+          Cached.result(cc
+            .select(col("doc_id"), col("n_dropped").as("_cd"), col("text"))
+            .join(sc.select(col("doc_id"), col("n_tokens"),
+              col("n_dropped").as("_sd")), Seq("doc_id"))
+            .select(col("doc_id"), col("n_tokens"),
+              (col("_sd") + col("_cd")).as("n_dropped"), col("text")), cc)
         } finally sc.unpersist(false)
       }
     // cleaned is already persisted + materialized, so both writes are

@@ -53,9 +53,7 @@ object QueryProfile {
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(dir, s"$name.txt"), plan)
           println(s"[plan] wrote $dir/$name.txt (${plan.length} chars)")
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
+          graft.SessionCaches.scrub(spark)
         }
       case None =>
         // per-stage attribution: stage id -> (wall from stage submit to
@@ -90,9 +88,7 @@ object QueryProfile {
         val warmDir = "/root/testdata/sf0.001"
         for ((_, fn) <- matched)
           try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
+        graft.SessionCaches.scrub(spark)
 
         for ((name, fn) <- matched) {
           for (r <- 1 to reps) {
@@ -105,9 +101,7 @@ object QueryProfile {
             println(f"== $name rep $r: wall $wall%.2f s, stage-cpu $cpuTot%.2f s, ${stages.size} stages")
             for (s <- stages.sortBy(-_.cpuNs).take(14))
               println(f"   cpu ${s.cpuNs / 1e9}%7.2f  wall ${s.wallMs / 1e3}%6.2f  tasks ${s.nTasks}%4d  in ${s.inputB / 1e6}%8.1fMB  sr ${s.shufReadB / 1e6}%7.1fMB  sw ${s.shufWriteB / 1e6}%7.1fMB  ${s.name}")
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.valuesIterator
-              .foreach(_.unpersist(blocking = false))
+            graft.SessionCaches.scrub(spark)
           }
         }
     }

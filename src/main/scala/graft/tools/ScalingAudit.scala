@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Cached
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -160,7 +161,7 @@ object ScalingAudit {
     import graft.llm.TextAnalysis
     val base = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val big = synthesize10x(base).repartition(64).persist()
+    val big = Cached.keep(synthesize10x(base).repartition(64))
     val n = big.count()
     def timedCount(mk: => org.apache.spark.sql.DataFrame)(cnt: org.apache.spark.sql.DataFrame => Long): (Long, Double) = {
       val t0 = System.nanoTime()
@@ -218,7 +219,7 @@ object ScalingAudit {
     // scale — counted, not asserted, so the invariant is a bit in the
     // artifact diff rather than an exception.
     val ssT0 = System.nanoTime()
-    val ssPairs = Dedup.minhashPairs(big, 0.5).select(col("da"), col("db")).persist()
+    val ssPairs = Cached.keep(Dedup.minhashPairs(big, 0.5).select(col("da"), col("db")))
     val ssSplit = Dedup.leakageSafeSplit(big,
       graft.ops.ConnectedComponents.dedupClusters(ssPairs))
     val ssA = ssSplit.select(col("doc_id").as("da"), col("split").as("sa"))
@@ -246,8 +247,7 @@ object ScalingAudit {
     // The pair count tripwires the cell assignment + same-cell pruning.
     val embBase = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
-    val embBig = synthesizeEmb10x(embBase).persist()
-    embBig.count()
+    val embBig = Cached.result(synthesizeEmb10x(embBase))
     val semCoarse = embBase.select(col("vec_id")).orderBy(col("vec_id"))
       .collect().map(_.getLong(0)).filter(_ % 5 != 0).take(32).toSeq
     val isT0 = System.nanoTime()

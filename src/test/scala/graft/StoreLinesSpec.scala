@@ -8,8 +8,11 @@ package graft
 class StoreLinesSpec extends SparkSpec {
 
   private val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+  // only roots this JVM created: other processes sharing the temp dir
+  // (a concurrent graft.Verify) create and delete their own
   private def roots: Set[String] =
-    Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_")).toSet
+    Option(tmp.list()).toSeq.flatten
+      .filter(n => n.startsWith("graft_") && n.contains(SparkEntry.TempRootTag)).toSet
 
   test("every store line leaves nothing cached and no temp root, and its result outlives both") {
     SparkEntry.storeLines should not be empty

@@ -1,12 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.kmeans.{CentroidAggregator, Point}
-import org.apache.spark.sql.functions._
 
 class AggregatorsSpec extends SparkSpec {
-  import spark.implicits._
-
   test("TopKAgg equals the window row_number top-k on real embeddings") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queryIds = Seq(0L, 1L, 2L)
@@ -27,14 +23,5 @@ class AggregatorsSpec extends SparkSpec {
       a.foldLeft(agg.zero)(agg.reduce),
       b.foldLeft(agg.zero)(agg.reduce))
     agg.finish(merged) shouldBe Seq((0.9, 1L), (0.9, 2L), (0.7, 4L))
-  }
-
-  test("CentroidAggregator computes typed per-cluster means with (sum,count) partials") {
-    val pts = Seq(Point(0, 0, 2), Point(2, 4, 6), Point(8, 2, 0)).toDS()
-    val out = pts.groupByKey(p => if (p.x < 5) 0 else 1)
-      .agg(CentroidAggregator.toColumn)
-      .collect().toMap
-    out(0) shouldBe Point(1, 2, 4)
-    out(1) shouldBe Point(8, 2, 0)
   }
 }
