@@ -24,16 +24,20 @@ import org.apache.spark.sql.functions._
   * evaluates a few thousand points (the reference's 5,000; `sil_lineitem`
   * ~600; the bench's 1% sample), and at that size the cost is the number
   * of Spark jobs, not the arithmetic: on 5,000 points the whole call —
-  * scan, assignment and 25 M distance evaluations — is one task of
-  * 0.15–0.18 CPU-s. The plan is therefore one lazy global aggregate plus
-  * one kernel:
+  * scan, assignment and 12.5 M pairs, each evaluated once — is one task
+  * of 0.04–0.05 CPU-s (0.09–0.10 when every ordered pair was evaluated;
+  * traced `lloyd_reference` on 4 cores). The plan is therefore one lazy
+  * global aggregate plus one kernel:
   *   - `sort_array(collect_list(struct(cluster, x, y, z)))` gathers the
   *     points into one row. The sort makes every sum a function of the
   *     point multiset alone, never of the partition layout.
-  *   - `pairSums`, exploded, does the nested loop over primitive arrays
+  *   - `pairSums`, exploded, does the pair loop over primitive arrays
   *     and emits one row per cluster: (cluster, n, intra_sum, inter_sum,
-  *     neighbors). Self-pairs add dist(i,i) = 0, so the i≠j exclusion is
-  *     free; `neighbors` is the number of other non-empty clusters.
+  *     neighbors). It evaluates each unordered pair once, yet folds every
+  *     point's distances in the all-pairs order, so the sums are bitwise
+  *     those of the full nested loop. Self-pairs add dist(i,i), which is
+  *     0 for finite coordinates, so the i≠j exclusion is free;
+  *     `neighbors` is the number of other non-empty clusters.
   *   - the averages, the score, the guards and the ordering stay Spark
   *     columns, so null, NaN and ANSI behaviour is Spark's.
   * The same sums as distributed self-joins (intra on `=`, inter on `<>`
@@ -57,47 +61,68 @@ object Silhouette {
                                inter_sum: Double, neighbors: Long)
 
   /** The pair-sum kernel over points sorted by cluster; clusters are the
-    * runs of equal ids. Per point i it sums dist(i, j) over all j, split
-    * by same or other cluster, then adds the per-point sums into the
-    * cluster totals in array order. Squares by multiplication (never pow)
-    * per the cross-engine float discipline — the DuckDB oracle mirrors
-    * `(a-b)*(a-b)` literally. Ids and coordinates must be non-null, as
-    * `Points.readCsv` + `Assign.assign` guarantee; a null fails the job. */
-  private def pairSums(pts: Seq[Row]): Seq[ClusterSums] = {
-    val n = pts.size
-    val ids = new Array[Int](n)
-    val xs = new Array[Double](n)
-    val ys = new Array[Double](n)
-    val zs = new Array[Double](n)
-    val group = new Array[Int](n)
+    * runs of equal ids. Per point i it folds dist(i, j) over j = 0 … n−1
+    * in ascending order into a same-cluster and an other-cluster sum,
+    * then adds the per-point sums into the cluster totals in array order.
+    * Squares by multiplication (never pow) per the cross-engine float
+    * discipline — the DuckDB oracle mirrors `(a-b)*(a-b)` literally.
+    *
+    * Each unordered pair i < j is evaluated once and the distance goes to
+    * two places: point i's running fold, which continues over j > i, and
+    * point j's column accumulator, which rows i = 0, 1, … reach in
+    * ascending order and so holds the j < i prefix of j's own fold. Since
+    * `(a-b)*(a-b)` and `(b-a)*(b-a)` are the same double (only a NaN's
+    * payload can differ, when both coordinates are NaN), every fold
+    * receives the same values in the same order as the all-pairs loop,
+    * and the sums are bitwise equal to it. The self pair keeps its place
+    * between prefix and continuation: dist(i, i) is NaN, not 0, when a
+    * coordinate is ±Inf or NaN. */
+  private[eval] def pairSums(ids: Array[Int], xs: Array[Double], ys: Array[Double],
+                             zs: Array[Double]): Seq[ClusterSums] = {
+    val n = ids.length
     val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
     var i = 0
     while (i < n) {
-      val r = pts(i)
-      ids(i) = r.getInt(0)
-      xs(i) = r.getDouble(1); ys(i) = r.getDouble(2); zs(i) = r.getDouble(3)
       if (i == 0 || ids(i) != ids(i - 1)) starts += i
-      group(i) = starts.size - 1
       i += 1
     }
+    val colSame = new Array[Double](n)
+    val colOther = new Array[Double](n)
     val intra = new Array[Double](starts.size)
     val inter = new Array[Double](starts.size)
-    i = 0
-    while (i < n) {
-      var same = 0.0
-      var other = 0.0
-      var j = 0
-      while (j < n) {
-        val dx = xs(i) - xs(j)
-        val dy = ys(i) - ys(j)
-        val dz = zs(i) - zs(j)
-        val d = math.sqrt(dx * dx + dy * dy + dz * dz)
-        if (group(j) == group(i)) same += d else other += d
-        j += 1
+    var g = 0
+    while (g < starts.size) {
+      val end = if (g + 1 < starts.size) starts(g + 1) else n
+      i = starts(g)
+      while (i < end) {
+        val xi = xs(i); val yi = ys(i); val zi = zs(i)
+        val sx = xi - xi; val sy = yi - yi; val sz = zi - zi
+        var same = colSame(i) + math.sqrt(sx * sx + sy * sy + sz * sz)
+        var j = i + 1
+        while (j < end) {
+          val dx = xi - xs(j)
+          val dy = yi - ys(j)
+          val dz = zi - zs(j)
+          val d = math.sqrt(dx * dx + dy * dy + dz * dz)
+          same += d
+          colSame(j) += d
+          j += 1
+        }
+        var other = colOther(i)
+        while (j < n) {
+          val dx = xi - xs(j)
+          val dy = yi - ys(j)
+          val dz = zi - zs(j)
+          val d = math.sqrt(dx * dx + dy * dy + dz * dz)
+          other += d
+          colOther(j) += d
+          j += 1
+        }
+        intra(g) += same
+        inter(g) += other
+        i += 1
       }
-      intra(group(i)) += same
-      inter(group(i)) += other
-      i += 1
+      g += 1
     }
     starts.indices.map { g =>
       val end = if (g + 1 < starts.size) starts(g + 1) else n
@@ -105,7 +130,26 @@ object Silhouette {
     }
   }
 
-  private val pairSumsUdf = udf(pairSums _)
+  /** The UDF body: decodes the gathered `(cluster, x, y, z)` rows. Ids
+    * and coordinates must be non-null, as `Points.readCsv` +
+    * `Assign.assign` guarantee; a null fails the job. */
+  private def pairSumsOfRows(pts: Seq[Row]): Seq[ClusterSums] = {
+    val n = pts.size
+    val ids = new Array[Int](n)
+    val xs = new Array[Double](n)
+    val ys = new Array[Double](n)
+    val zs = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val r = pts(i)
+      ids(i) = r.getInt(0)
+      xs(i) = r.getDouble(1); ys(i) = r.getDouble(2); zs(i) = r.getDouble(3)
+      i += 1
+    }
+    pairSums(ids, xs, ys, zs)
+  }
+
+  private val pairSumsUdf = udf(pairSumsOfRows _)
 
   /** Computes per-cluster (cluster, n, avg_intra, avg_inter, silhouette)
     * from an assigned DataFrame with double columns x, y, z and the int

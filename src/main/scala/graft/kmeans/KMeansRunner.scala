@@ -299,7 +299,8 @@ object KMeansRunner {
   /** C4: per-iteration hook — called after each iteration with
     * (iterationIndex, centers, assignedDataFrame). The reference runs its
     * silhouette evaluation here (reference `SilhouetteEvaluation2.java:275-278`);
-    * sinks can snapshot `iteration_i` files. No-op by default. */
+    * sinks can snapshot `iteration_i` files. No-op by default; with
+    * `noHook` the loop never builds the assigned frame. */
   type IterationHook = (Int, Seq[(Int, Point)], DataFrame) => Unit
   val noHook: IterationHook = (_, _, _) => ()
 
@@ -332,7 +333,7 @@ object KMeansRunner {
       while (i < maxIter && !converged) {
         centers = step(points, prev)
         history :+= centers
-        hook(i, centers, Assign.assign(points, prev))
+        if (hook ne noHook) hook(i, centers, Assign.assign(points, prev))
         val curr = centers.map(_._2)
         val d = displacement(prev, curr)
         displacements :+= d

@@ -273,18 +273,25 @@ object StoreCompaction {
       .parquet(s"$path/_deletes")
   }
 
+  /** The un-applied delete files — one directory listing, no Spark job. */
+  private def pendingDeleteFiles(spark: SparkSession, path: String): Seq[Path] =
+    Option(fsOf(spark, path).globStatus(new Path(s"$path/_deletes", "*.parquet")))
+      .map(_.toSeq.map(_.getPath)).getOrElse(Seq.empty)
+
   /** Whether any logically-deleted ids are pending (un-applied delete
     * files exist) — one directory listing, no Spark job. Probes use this
     * to skip the subtraction entirely on the common no-deletes path. */
   def hasPendingDeletes(spark: SparkSession, path: String): Boolean =
-    Option(fsOf(spark, path).globStatus(new Path(s"$path/_deletes", "*.parquet")))
-      .exists(_.nonEmpty)
+    pendingDeleteFiles(spark, path).nonEmpty
 
-  /** The distinct logically-deleted ids (empty frame when none). */
+  /** The distinct logically-deleted ids (empty frame when none). Reads
+    * the listed files, not the `_deletes` directory: Spark ignores a
+    * path whose leaf name starts with `_` and warns on every such read. */
   def deletedIds(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    if (hasPendingDeletes(spark, path))
-      spark.read.parquet(s"$path/_deletes").select(col("_del_id")).distinct()
+    val files = pendingDeleteFiles(spark, path)
+    if (files.nonEmpty)
+      spark.read.parquet(files.map(_.toString): _*).select(col("_del_id")).distinct()
     else Seq.empty[Long].toDF("_del_id")
   }
 
@@ -434,11 +441,9 @@ object StoreCompaction {
     // compact without its id column: silently carrying the rows forward
     // would turn "forgotten" into "still on disk".
     val fs0 = fsOf(spark, path)
-    val pendingDeleteFiles = Option(
-      fs0.globStatus(new Path(s"$path/_deletes", "*.parquet")))
-      .map(_.toSeq.map(_.getPath)).getOrElse(Seq.empty)
-    require(pendingDeleteFiles.isEmpty || deleteIdCol.isDefined,
-      s"$path has ${pendingDeleteFiles.size} pending delete file(s) but " +
+    val deleteFiles = pendingDeleteFiles(spark, path)
+    require(deleteFiles.isEmpty || deleteIdCol.isDefined,
+      s"$path has ${deleteFiles.size} pending delete file(s) but " +
         "compact() was not given deleteIdCol — pass the id column so the " +
         "rewrite can apply them physically")
     // a TORN prior attempt at this generation may have left −gen
@@ -454,7 +459,7 @@ object StoreCompaction {
     batchDirs(spark, path).filter(_._2 == -gen)
       .foreach { case (p, _) => fs0.delete(p, true) }
     val base = deleteIdCol match {
-      case Some(idc) if pendingDeleteFiles.nonEmpty => liveView(spark, path, idc)
+      case Some(idc) if deleteFiles.nonEmpty => liveView(spark, path, idc)
       case _ => committedView(spark, path)
     }
     val packed =
@@ -479,7 +484,7 @@ object StoreCompaction {
     // AFTER the listing stay pending (liveView keeps them logical until
     // the next compaction). Torn-before-this-point is safe: the files
     // remain, liveView still subtracts, re-applying is a no-op.
-    pendingDeleteFiles.foreach(fs0.delete(_, false))
+    deleteFiles.foreach(fs0.delete(_, false))
     Watershed(gen, covered)
   }
 

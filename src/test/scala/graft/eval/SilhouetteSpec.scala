@@ -146,6 +146,91 @@ class SilhouetteSpec extends SparkSpec {
     bits(Silhouette.metrics(df.repartition(7), guards = false)) shouldBe one
   }
 
+  /** The kernel as it was before it evaluated each pair once, kept
+    * verbatim as the bitwise oracle: per point i, one fold over every
+    * j = 0 … n−1, self pair included. */
+  private def allPairs(ids: Array[Int], xs: Array[Double], ys: Array[Double],
+                       zs: Array[Double]): Seq[Silhouette.ClusterSums] = {
+    val n = ids.length
+    val group = new Array[Int](n)
+    val starts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var i = 0
+    while (i < n) {
+      if (i == 0 || ids(i) != ids(i - 1)) starts += i
+      group(i) = starts.size - 1
+      i += 1
+    }
+    val intra = new Array[Double](starts.size)
+    val inter = new Array[Double](starts.size)
+    i = 0
+    while (i < n) {
+      var same = 0.0
+      var other = 0.0
+      var j = 0
+      while (j < n) {
+        val dx = xs(i) - xs(j)
+        val dy = ys(i) - ys(j)
+        val dz = zs(i) - zs(j)
+        val d = math.sqrt(dx * dx + dy * dy + dz * dz)
+        if (group(j) == group(i)) same += d else other += d
+        j += 1
+      }
+      intra(group(i)) += same
+      inter(group(i)) += other
+      i += 1
+    }
+    starts.indices.map { g =>
+      val end = if (g + 1 < starts.size) starts(g + 1) else n
+      Silhouette.ClusterSums(ids(starts(g)), (end - starts(g)).toLong, intra(g), inter(g), starts.size - 1L)
+    }
+  }
+
+  private type Pt = (Double, Double, Double, Int)
+
+  /** Kernel output with the sums as raw bits, over points sorted by
+    * cluster as the gather delivers them. */
+  private def kernelBits(pts: Seq[Pt], kernel: (Array[Int], Array[Double], Array[Double],
+      Array[Double]) => Seq[Silhouette.ClusterSums]): Seq[(Int, Long, Long, Long, Long)] = {
+    val sorted = pts.sortBy(_._4)
+    kernel(sorted.map(_._4).toArray, sorted.map(_._1).toArray, sorted.map(_._2).toArray,
+      sorted.map(_._3).toArray).map { c =>
+      (c.cluster, c.n, java.lang.Double.doubleToRawLongBits(c.intra_sum),
+        java.lang.Double.doubleToRawLongBits(c.inter_sum), c.neighbors)
+    }
+  }
+
+  private def seeded(seed: Long, n: Int, clusters: Int): Seq[Pt] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)((rnd.nextDouble() * 9999.0, rnd.nextDouble() * 1000.0,
+      rnd.nextDouble() * 1000.0, rnd.nextInt(clusters)))
+  }
+
+  private val infPoint: Pt = (Double.PositiveInfinity, 3.0, 4.0, 1)
+  private val nanPoint: Pt = (Double.NaN, 5.0, 6.0, 2)
+
+  private lazy val bitwiseFixtures: Seq[(String, Seq[Pt])] = Seq(
+    "5,000 reference-range points in 5 clusters" -> seeded(20261019L, 5000, 5),
+    "ids {0, 2, 3} with a singleton" -> oraclePoints,
+    "one cluster" -> seeded(7L, 61, 1),
+    "duplicate points" -> {
+      val base = seeded(11L, 9, 3)
+      base ++ base ++ base.map(p => p.copy(_4 = (p._4 + 1) % 3))
+    },
+    "clusters of 3, 6 and 5 points" -> (
+      seeded(13L, 3, 1) ++ seeded(17L, 6, 1).map(_.copy(_4 = 1)) ++
+        seeded(19L, 5, 1).map(_.copy(_4 = 2))),
+    // dist(p, p) = sqrt((Inf - Inf)²) is NaN: a kernel that skipped the
+    // self pair would leave cluster 1's intra sum at +Inf. The two
+    // points sit in different clusters, so no sum adds NaNs of two
+    // payloads (which one survives such an add is not specified).
+    "an +Inf and a NaN coordinate" -> (seeded(23L, 30, 3) :+ infPoint :+ nanPoint)
+  ) ++ Seq(0, 1, 2, 3, 5, 7).map(n => s"n = $n in up to two clusters" -> seeded(29L + n, n, 2))
+
+  for ((name, pts) <- bitwiseFixtures)
+    test(s"pair-sum kernel is bitwise the all-pairs loop: $name") {
+      kernelBits(pts, Silhouette.pairSums) shouldBe kernelBits(pts, allPairs)
+    }
+
   test("collectMetrics leaves nothing cached in the session") {
     spark.catalog.clearCache()
     Silhouette.collectMetrics(microAssigned) should have size 2

@@ -583,6 +583,24 @@ class StoreCompactionSpec extends SparkSpec {
     }
   }
 
+  test("deletedIds reads exactly the listed delete files: two marks read back as the union of their ids") {
+    import spark.implicits._
+    SparkEntry.withTempRoot(spark, "delread") { dir =>
+      val store = s"$dir/store"
+      StoreCompaction.markDeleted(spark, store, Seq(1L, 2L))
+      StoreCompaction.markDeleted(spark, store, Seq(2L, 5L))
+      val ids = StoreCompaction.deletedIds(spark, store)
+      ids.as[Long].collect().sorted shouldBe Array(1L, 2L, 5L)
+      val deletes = new org.apache.hadoop.fs.Path(s"$store/_deletes")
+      val fs = deletes.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def local(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+      val listed = fs.globStatus(new org.apache.hadoop.fs.Path(deletes, "*.parquet"))
+        .map(s => local(s.getPath.toString)).toSet
+      listed should have size 2
+      ids.inputFiles.map(local).toSet shouldBe listed
+    }
+  }
+
   test("torn clustered retry cannot resurrect forgotten rows: a cluster emptied by deletes between the torn attempt and the retry leaves no stale -g partition") {
     import spark.implicits._
     SparkEntry.withTempRoot(spark, "cmptornclu") { dir =>
