@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   * ~600; the bench's 1% sample), and at that size the cost is the number
   * of Spark jobs, not the arithmetic: on 5,000 points the whole call —
   * scan, assignment and 12.5 M pairs, each evaluated once — is one task
-  * of 0.04–0.05 CPU-s (0.09–0.10 when every ordered pair was evaluated;
-  * traced `lloyd_reference` on 4 cores). The plan is therefore one lazy
-  * global aggregate plus one kernel:
+  * of 0.04–0.05 CPU-s (traced `lloyd_reference` on 4 cores). The plan
+  * is therefore one lazy global aggregate plus one kernel:
   *   - `sort_array(collect_list(struct(cluster, x, y, z)))` gathers the
   *     points into one row. The sort makes every sum a function of the
   *     point multiset alone, never of the partition layout.

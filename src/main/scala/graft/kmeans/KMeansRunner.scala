@@ -299,8 +299,7 @@ object KMeansRunner {
   /** C4: per-iteration hook — called after each iteration with
     * (iterationIndex, centers, assignedDataFrame). The reference runs its
     * silhouette evaluation here (reference `SilhouetteEvaluation2.java:275-278`);
-    * sinks can snapshot `iteration_i` files. No-op by default; with
-    * `noHook` the loop never builds the assigned frame. */
+    * sinks can snapshot `iteration_i` files. No-op by default. */
   type IterationHook = (Int, Seq[(Int, Point)], DataFrame) => Unit
   val noHook: IterationHook = (_, _, _) => ()
 
@@ -333,7 +332,7 @@ object KMeansRunner {
       while (i < maxIter && !converged) {
         centers = step(points, prev)
         history :+= centers
-        if (hook ne noHook) hook(i, centers, Assign.assign(points, prev))
+        hook(i, centers, Assign.assign(points, prev))
         val curr = centers.map(_._2)
         val d = displacement(prev, curr)
         displacements :+= d

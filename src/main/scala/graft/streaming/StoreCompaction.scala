@@ -285,13 +285,19 @@ object StoreCompaction {
     pendingDeleteFiles(spark, path).nonEmpty
 
   /** The distinct logically-deleted ids (empty frame when none). Reads
-    * the listed files, not the `_deletes` directory: Spark ignores a
-    * path whose leaf name starts with `_` and warns on every such read. */
+    * the listed files, not the `_deletes` directory: Spark warns on every
+    * read of a path whose leaf name starts with `_`. Past
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` files it
+    * reads the directory after all, since Spark lists that many root
+    * paths with an extra Spark job but lists one directory on the driver. */
   def deletedIds(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val files = pendingDeleteFiles(spark, path)
-    if (files.nonEmpty)
-      spark.read.parquet(files.map(_.toString): _*).select(col("_del_id")).distinct()
+    val maxRoots =
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val roots =
+      if (files.size <= maxRoots) files.map(_.toString) else Seq(s"$path/_deletes")
+    if (files.nonEmpty) spark.read.parquet(roots: _*).select(col("_del_id")).distinct()
     else Seq.empty[Long].toDF("_del_id")
   }
 

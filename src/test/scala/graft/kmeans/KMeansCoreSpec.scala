@@ -73,13 +73,6 @@ class KMeansCoreSpec extends SparkSpec {
     calls shouldBe Vector((0, 2L), (1, 2L))
   }
 
-  test("a hookless run returns what a hooked run returns") {
-    val pts = Seq((0.0, 0.0, 0.0), (2.0, 0.0, 0.0), (8.0, 0.0, 0.0), (10.0, 0.0, 0.0))
-      .toDF("x", "y", "z")
-    KMeansRunner.converge(pts, seeds, maxIter = 30, threshold = 0.5) shouldBe
-      KMeansRunner.converge(pts, seeds, maxIter = 30, threshold = 0.5, (_, _, _) => ())
-  }
-
   test("finalCentersLines prints positional indices, not stored cluster ids") {
     val res = KMeansRunner.Result(
       centers = Seq(0 -> Point(1, 1, 1), 3 -> Point(2, 2, 2)), // id 3: gap

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{SparkEntry, SparkSpec}
 import graft.llm.Similarity
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.JobCount
 
 /** OPTIMIZE over ingest-built stores: probes and incremental cleans
   * must be BITWISE identical before and after compaction + vacuum, the
@@ -583,21 +584,27 @@ class StoreCompactionSpec extends SparkSpec {
     }
   }
 
-  test("deletedIds reads exactly the listed delete files: two marks read back as the union of their ids") {
+  test("deletedIds reads back the union of every mark, with the same jobs for 2 delete files as for 33") {
     import spark.implicits._
     SparkEntry.withTempRoot(spark, "delread") { dir =>
-      val store = s"$dir/store"
-      StoreCompaction.markDeleted(spark, store, Seq(1L, 2L))
-      StoreCompaction.markDeleted(spark, store, Seq(2L, 5L))
-      val ids = StoreCompaction.deletedIds(spark, store)
-      ids.as[Long].collect().sorted shouldBe Array(1L, 2L, 5L)
-      val deletes = new org.apache.hadoop.fs.Path(s"$store/_deletes")
-      val fs = deletes.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def local(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
-      val listed = fs.globStatus(new org.apache.hadoop.fs.Path(deletes, "*.parquet"))
-        .map(s => local(s.getPath.toString)).toSet
-      listed should have size 2
-      ids.inputFiles.map(local).toSet shouldBe listed
+      // 33 root paths is one past Spark's parallel-listing threshold
+      val jobs = Seq(2, 33).map { n =>
+        val store = s"$dir/store$n"
+        (0 until n).foreach(k => StoreCompaction.markDeleted(spark, store, Seq(k.toLong, k + 1L)))
+        val deletes = new org.apache.hadoop.fs.Path(s"$store/_deletes")
+        val fs = deletes.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val listed = fs.globStatus(new org.apache.hadoop.fs.Path(deletes, "*.parquet"))
+          .map(s => local(s.getPath.toString)).toSet
+        listed should have size n.toLong
+        val (ids, nJobs) = JobCount.of(spark.sparkContext) {
+          StoreCompaction.deletedIds(spark, store).as[Long].collect().sorted
+        }
+        ids shouldBe (0L to n.toLong).toArray
+        StoreCompaction.deletedIds(spark, store).inputFiles.map(local).toSet shouldBe listed
+        nJobs
+      }
+      jobs(1) shouldBe jobs(0)
     }
   }
 
