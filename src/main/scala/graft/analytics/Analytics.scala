@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * epoch-micros) — funnel and cohort retention. These are BATCH
   * operators (funnel folds to a K-row driver result; retention joins a
   * distinct activity grid), so they live here rather than in
-  * `graft.streaming`: the streaming-capable funnel twin is
-  * `EventStream.funnelStageUpdates`, which maintains per-user stage
-  * progress as explicit state and works on unbounded streams.
+  * `graft.streaming`: the retention matrix's streaming twin is
+  * `EventStream.retentionCellUpdates`, which keeps per-user state and
+  * works on unbounded streams.
   */
 object Analytics {
 

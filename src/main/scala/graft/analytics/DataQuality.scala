@@ -87,30 +87,6 @@ object DataQuality {
         (col("n_violations") === 0L).as("passed"))
   }
 
-  /** True iff every check in a [[suite]] output passed — the boolean a
-    * publish gate branches on. Collects the suite (checks-sized, a few
-    * rows by construction). */
-  def passedAll(suiteDf: DataFrame): Boolean =
-    suiteDf.agg(min(col("passed"))).head.get(0) == true
-
-  /** Quality-gated publish: run the constraint suite against the
-    * candidate snapshot and commit it through [[graft.ops.ManifestSink]]
-    * ONLY if every check passes — the composition that turns the suite
-    * from a report into an enforcement point. Readers of the manifest
-    * dir never observe a snapshot that failed its checks (the manifest
-    * IS the commit, so a rejected candidate leaves no trace readers can
-    * resolve). Returns the published version, or None when rejected.
-    *
-    * The suite frame evaluates TWICE over the candidate (gate, then
-    * publish scan) — callers publishing an expensive derivation should
-    * persist it first; for the common case (gating a staged parquet
-    * snapshot) the double scan is two columnar reads, cheaper than a
-    * persist at 100 TB. */
-  def publishGated(candidate: DataFrame, suiteDf: DataFrame,
-                   dir: String): Option[Long] =
-    if (passedAll(suiteDf)) Some(graft.ops.ManifestSink.publish(candidate, dir))
-    else None
-
   /** Snapshot diff — the change report between two published corpus
     * versions (what a ManifestSink-style versioned pipeline reviews
     * before promoting v(N+1)): per source, how many documents were

@@ -58,33 +58,9 @@ object Sinks {
     )).as[String]
   }
 
-  /** S4/A3: clustered-data rows `(cluster, line)` where line is
-    * `cx,cy,cz; p1x,p1y,p1z; p2x,...` (reference
-    * `SilhouetteEvaluation2.java:105-131`). Member order inside a group is
-    * partition order; pin the input to one partition for byte parity with
-    * the single-reducer reference.
-    */
-  /** S4 scale path: one `(cluster, member)` text row per point,
-    * `clusterId\tx,y,z` — fully distributed, no per-cluster row collapse.
-    * At 100 TB the parity sink above would materialize a whole cluster
-    * (~n/K points) as ONE string row; this variant keeps rows point-sized
-    * and lets the writer fan out. Rows arrive clustered by the shuffle
-    * (repartition on cluster), so downstream consumers can stream a
-    * cluster's members contiguously like the reference's file layout. */
-  def writeClusteredDataDistributed(path: String, assigned: DataFrame): Unit = {
-    val pointStr =
-      if (assigned.columns.contains("_raw")) col("_raw")
-      else concat_ws(",", col("x"), col("y"), col("z"))
-    assigned
-      .repartition(col("cluster"))
-      .sortWithinPartitions(col("cluster"))
-      .select(concat_ws("\t", col("cluster"), pointStr).as("value"))
-      .write.mode("overwrite").text(path)
-  }
-
   /** S4 parity sink: writes the clustered-data lines as a single
     * `part-r-00000` in the reference's layout (driver-side; reference
-    * scale only — use writeClusteredDataDistributed beyond that). */
+    * scale only: every line is collected). */
   def writeClusteredDataFile(path: String, assigned: DataFrame): Unit = {
     val lines = clusteredDataLines(assigned).collect()
       .map(r => s"${r.getInt(0)}\t${r.getString(1)}")
@@ -93,6 +69,12 @@ object Sinks {
     Files.writeString(p, lines.map(_ + "\n").mkString)
   }
 
+  /** S4/A3: clustered-data rows `(cluster, line)` where line is
+    * `cx,cy,cz; p1x,p1y,p1z; p2x,...` (reference
+    * `SilhouetteEvaluation2.java:105-131`). Member order inside a group is
+    * partition order; pin the input to one partition for byte parity with
+    * the single-reducer reference.
+    */
   def clusteredDataLines(assigned: DataFrame): DataFrame = {
     // members render as the raw input line when available (see
     // Points.readCsvWithRaw), else re-rendered from the parsed doubles

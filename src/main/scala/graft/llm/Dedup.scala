@@ -66,7 +66,7 @@ object Dedup {
     * content + one batch-local groupBy — the corpus is only ever probed,
     * never re-aggregated, so cost tracks the BATCH size, not the corpus.
     * At 100 TB the anti join's corpus side is a bucketed-by-content
-    * table (ops/Bucketing), making the probe exchange-free.
+    * table (Spark `bucketBy`), making the probe exchange-free.
     * Output: (doc_id, text_md5, n_batch_copies). */
   def incremental(newDocs: DataFrame, corpus: DataFrame): DataFrame =
     newDocs
@@ -430,10 +430,6 @@ object Dedup {
 
   def writeSpanIndex(corpus: DataFrame, n: Int, path: String): Unit =
     spanIndexRows(corpus, n).write.mode("overwrite").parquet(path)
-
-  def readSpanIndex(spark: org.apache.spark.sql.SparkSession,
-                    path: String): DataFrame =
-    spark.read.parquet(path).select(col("g"))
 
   /** Incremental duplicated-span removal — [[removeDuplicateSpans]]'
     * batch-vs-corpus twin (the pattern every dedup signal here ships:
@@ -1016,9 +1012,11 @@ object Dedup {
     * small), while a saved band index pays that cost ONCE at corpus
     * build and lets every future batch probe the stored (doc_id, band,
     * key) rows — a columnar scan of three narrow columns instead of the
-    * full text pipeline. This is the production shape of streaming
-    * ingest at 100 TB: the index appends with the corpus (band rows of
-    * admitted docs — [[bandTable]] of the survivors), so no rebuild.
+    * full text pipeline ([[ingestDupIdsIndexed]], which
+    * `streaming.IndexedIngest` runs per micro-batch). This is the
+    * production shape of streaming ingest at 100 TB: the index appends
+    * with the corpus (band rows of admitted docs — [[bandTable]] of the
+    * survivors), so no rebuild.
     *
     * The layout is the shared [[bandTableOf]] definition, so an index
     * written today is probe-compatible with every banded operator. */
@@ -1028,23 +1026,6 @@ object Dedup {
   /** Band rows of `docs` in the index layout — what an ingest loop
     * appends to the index for the documents it admits. */
   def bandIndexRows(docs: DataFrame): DataFrame = bandTable(docs)
-
-  /** [[incrementalMinhash]] probing a PERSISTED band index instead of
-    * re-banding the corpus: identical output (spec-pinned), corpus text
-    * is touched only to verify candidates (the semi-join pushdown
-    * inside verification). `corpus` must be the same document set the
-    * index was built from. */
-  def incrementalMinhashIndexed(newDocs: DataFrame, corpus: DataFrame,
-                                indexPath: String, threshold: Double): DataFrame = {
-    val spark = newDocs.sparkSession
-    val idx = spark.read.parquet(indexPath)
-      .select(col("doc_id"), col("band"), col("key"))
-    val both = newDocs.select(col("doc_id"), col("text"))
-      .unionByName(corpus.select(col("doc_id"), col("text")))
-    verifyJaccard(both, probeCandidatesOf(bandTable(newDocs), idx),
-      threshold, release = Nil)
-      .select(col("da").as("batch_id"), col("db").as("corpus_id"), col("jaccard"))
-  }
 
   /** [[ingestDupIds]] against a PREBUILT corpus band-index frame plus
     * the corpus texts (candidate verification only) — the batch kernel

@@ -467,34 +467,6 @@ object Similarity {
     scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)
   }
 
-  /** Embedding-cosine near-duplicate pairs, cell-pruned: vectors are
-    * coarse-quantized (same assignment as IVF) and only SAME-CELL pairs
-    * are scored — the pair space shrinks by ~K and the quantization is
-    * part of the operator's contract (the oracle mirrors it), so the
-    * output is deterministic. Returns (va, vb, sim) with va < vb and
-    * cosine >= threshold. */
-  /** Exact top-k via the bounded-heap Aggregator instead of a window
-    * sort: each partition keeps at most k candidates per query and
-    * partials merge by re-trim, so no full sort of the scored pair space
-    * ever happens — the 100 TB formulation of bruteForceTopK (identical
-    * output; the window path remains the oracle-mirrored contract
-    * query). Output: (query_id, neighbor_id, sim). */
-  def bruteForceTopKAgg(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), v(col("embedding")).as("vec"))
-    val q = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("vec").as("qvec"))
-    val topk = udaf(new graft.functions.TopKAgg(k))
-    e.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), cosine(col("qvec"), col("vec")).as("sim"),
-        col("vec_id").as("neighbor_id"))
-      .groupBy(col("query_id"))
-      .agg(topk(col("sim"), col("neighbor_id")).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t._2").as("neighbor_id"),
-        round(col("t._1"), 4).as("sim"))
-      .orderBy(col("query_id"), col("neighbor_id"))
-  }
-
   /** argmin-cell assignment shared by IVF and near-dup pruning:
     * (vec_id, vec, cell_id) with cell = nearest coarse centroid by L2²,
     * ties to lowest cell_id.
@@ -519,7 +491,14 @@ object Similarity {
     e.select(col("vec_id"), col("vec"), NearestCentroid.nearestId(col("vec"), cells).as("cell_id"))
   }
 
-  /** NOTE: EAGER — composing this pipeline collects the coarse-cell
+  /** Embedding-cosine near-duplicate pairs, cell-pruned: vectors are
+    * coarse-quantized (same assignment as IVF) and only SAME-CELL pairs
+    * are scored — the pair space shrinks by ~K and the quantization is
+    * part of the operator's contract (the oracle mirrors it), so the
+    * output is deterministic. Returns (va, vb, sim) with va < vb and
+    * cosine >= threshold.
+    *
+    * NOTE: EAGER — composing this pipeline collects the coarse-cell
     * table (K driver rows) and, because the result is materialized to
     * release its caches, runs the scoring jobs at call time. */
   def cosineNearDupPairs(emb: DataFrame, coarseIds: Seq[Long], threshold: Double): DataFrame = {
@@ -544,7 +523,7 @@ object Similarity {
 
   /** SemDeDup (Abbas et al. 2023): semantic deduplication over the
     * embedding space — cluster the corpus (here: the same coarse-cell
-    * quantization IVF uses; production fits VectorKMeans), then within
+    * quantization IVF uses; production fits it with `VectorKMeans.step`), then within
     * each cluster drop every vector that has a LOWER-id neighbor at
     * cosine ≥ `threshold` (the paper's keep-lowest-index policy, which
     * needs no transitive closure: any member of a near-dup group other
@@ -931,7 +910,8 @@ object Similarity {
   }
 
   /** IVF top-k against an explicit coarse-cell table (cell_id, cvec) —
-    * e.g. centroids fitted by VectorKMeans, the production quantizer.
+    * e.g. centroids fitted by iterating `VectorKMeans.step`, the
+    * production quantizer.
     * EAGER in `coarse` (see `ivfTopK`). */
   def ivfTopKWith(emb: DataFrame, coarse: DataFrame, queryIds: Seq[Long],
                   nprobe: Int, k: Int): DataFrame =
@@ -1027,8 +1007,9 @@ object Similarity {
     * nearest sub-codeword — the compressed-domain representation a
     * 100 TB ANN index actually stores (d floats → m byte codes; query
     * scoring becomes m table lookups per candidate). Codewords here are
-    * corpus vectors selected by id (deterministic contract; a per-
-    * subspace VectorKMeans fit is the production way to train them).
+    * corpus vectors selected by id (deterministic contract; per-subspace
+    * K-Means, iterating `VectorKMeans.step`, is the production way to
+    * train them).
     *
     * The codebook is m·ncodes tiny arrays — the engine's documented
     * driver-K-row boundary — collected once and handed, one table
@@ -1442,8 +1423,8 @@ object Similarity {
   }
 
   /** Train an [[IvfPqQuantizer]] from corpus vectors selected by id —
-    * the deterministic-contract counterpart of a per-subspace
-    * VectorKMeans fit (the production trainer). The quantizer is a
+    * the deterministic-contract counterpart of per-subspace K-Means
+    * iterating `VectorKMeans.step` (the production trainer). The quantizer is a
     * driver-side value (K + ncodes tiny arrays): train once, serialize
     * into every encode/probe/streaming-ingest closure. */
   def trainIvfPqQuantizer(emb: DataFrame, coarseIds: Seq[Long],

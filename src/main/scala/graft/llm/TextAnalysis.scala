@@ -486,14 +486,6 @@ object TextAnalysis {
       .agg(dims.head, dims.tail: _*)
   }
 
-  /** [[hashedTf]] as an `array<double>` embedding column — the exact
-    * integer counts cast for the dense-vector operators' input shape. */
-  def hashedTfVectors(docs: DataFrame, dim: Int): DataFrame = {
-    val v = hashedTf(docs, dim)
-    v.select(col("doc_id").as("vec_id"),
-      array((0 until dim).map(j => col(s"d$j").cast("double")): _*).as("embedding"))
-  }
-
   /** Per-source robust length-outlier gate — median/MAD instead of
     * mean/stddev, because crawl length distributions are exactly where
     * mean/stddev breaks: one 10 MB concatenation dump inflates the mean

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 /** General-dimension Lloyd's K-Means over an `array<double>` vector
   * column — the engine's 3-D K-Means core (assign -> re-center ->
   * driver collect of K rows) generalized to embedding space, used to FIT
-  * the IVF coarse quantizer instead of picking corpus vectors by id.
+  * coarse cells (`q_cell_medoids`), by the `q_vkmeans_step` and
+  * `q_vkmeans_iterate2` contract lines, and by the streaming twin
+  * `VectorKMeansStream`, all through [[step]].
   *
   * Spark-first shape, mirroring graft.kmeans:
   *   - assignment: the codegen'd [[NearestCentroid]] argmin over the K
@@ -22,8 +24,6 @@ import org.apache.spark.sql.functions._
   * identical in structure to the 3-D runner.
   */
 object VectorKMeans {
-
-  case class Result(centers: Seq[Array[Double]], iterations: Int, converged: Boolean)
 
   /** Fixed grid for the re-centering mean: each element is rounded onto
     * a 1e-6 grid and scaled to BIGINT *before* the cross-partition sum,
@@ -73,37 +73,5 @@ object VectorKMeans {
         cell -> arr
       }
     cents.indices.map(i => means.getOrElse(i, cents(i)))
-  }
-
-  /** Fit k centroids, seeded deterministically from corpus vectors,
-    * iterating [[step]]. */
-  def fit(emb: DataFrame, vecCol: String, seedIds: Seq[Long], idCol: String = "vec_id",
-          maxIter: Int = 10, tol: Double = 1e-4): Result = {
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-    var cents: Seq[Array[Double]] = e.filter(col(idCol).isin(seedIds: _*))
-      .orderBy(col(idCol)).collect().map(_.getSeq[Double](1).toArray).toSeq
-    require(cents.nonEmpty, "no seed vectors found")
-    var i = 0
-    var converged = false
-    while (i < maxIter && !converged) {
-      val next = step(e, "v", cents)
-      val disp = cents.lazyZip(next).map { (a, b) =>
-        math.sqrt(a.lazyZip(b).map((x, y) => (x - y) * (x - y)).sum)
-      }.sum
-      cents = next
-      converged = disp < tol
-      i += 1
-    }
-    Result(cents, i, converged)
-  }
-
-  /** The fitted centroids as a (cell_id, cvec) DataFrame — the coarse
-    * side expected by Similarity.ivfTopKWith. */
-  def asCells(emb: DataFrame, result: Result): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    result.centers.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toSeq) }
-      .toDF("cell_id", "cvec")
   }
 }

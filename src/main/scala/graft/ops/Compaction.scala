@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   *     of at most `targetBytes` (a file larger than the target stays a
   *     singleton group; it is already "compact"). Planning over
   *     metadata is O(files) driver work, exactly like the footer reads
-  *     in [[LayoutStats]] — the data never moves to decide.
+  *     of a layout audit — the data never moves to decide.
   *   - [[compact]] executes a plan: each multi-file group is read and
   *     rewritten as ONE file into `outDir`; singleton groups are
   *     rewritten as-is (one job per group, each group's cost bounded

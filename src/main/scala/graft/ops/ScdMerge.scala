@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   * with null placeholders filtered after the generator
   * (`when`+`array`+`explode` stay codegen'd; a `filter()` higher-order
   * function would not). At 100 TB the stored history is bucketed/
-  * range-partitioned by key (the `ops/Bucketing` layout), which removes
+  * range-partitioned by key (Spark's `bucketBy` layout), which removes
   * the history-side exchange — the merge then shuffles only the change
   * batch, and the rewrite touches only partitions holding changed keys.
   * That claim is PINNED, not just argued: BucketingSpec runs this merge

@@ -78,23 +78,4 @@ object StoreAudit {
     import spark.implicits._
     rows.toDF("store", "n_serving")
   }
-
-  /** The ids behind one divergence class — everything NOT matching the
-    * consistent all-present pattern, with its membership flags: the
-    * repair worklist [[presence]] summarizes. Same join shape; output
-    * (id, in_<name>…, ordered by id) sized by the divergence, not the
-    * corpus. */
-  def divergentIds(stores: Seq[(String, DataFrame)], idCol: String): DataFrame = {
-    require(stores.size >= 2, s"need >= 2 stores, got ${stores.size}")
-    val flagged = stores.map { case (name, df) =>
-      df.select(col(idCol)).distinct()
-        .withColumn(s"in_$name", lit(true))
-    }
-    val joined = flagged.reduce((a, b) => a.join(b, Seq(idCol), "full_outer"))
-    val flags: Seq[Column] =
-      stores.map { case (name, _) => coalesce(col(s"in_$name"), lit(false)).as(s"in_$name") }
-    joined.select(col(idCol) +: flags: _*)
-      .filter(!stores.map { case (name, _) => col(s"in_$name") }.reduce(_ && _))
-      .orderBy(col(idCol))
-  }
 }

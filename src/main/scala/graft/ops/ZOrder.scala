@@ -132,7 +132,7 @@ object ZOrder {
   /** OPTIMIZE ZORDER as a write: cluster `df` by the Morton key of
     * `dims` (2-4 integer columns) and write it so row-group min/max
     * stats are tight on EVERY dimension (ZOrderSkipSpec measures the
-    * resulting pruning; [[LayoutStats]] audits it).
+    * resulting pruning from the parquet footers).
     *
     *   - `repartitionByRange` on the key balances output files by key
     *     RANGE (each file owns a contiguous Morton interval — exactly

@@ -5,33 +5,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 /** Structured Streaming operators over the `events` stream shape
-  * (ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, ...).
+  * (user_id BIGINT, event_id BIGINT, event_type STRING, tus/ts, ...).
   *
   * The reference is pure batch — this module is the engine's streaming
-  * surface for the same aggregations: `hourlyWindowedStats` is the
-  * streaming twin of the `events_window` contract query (identical
-  * grouping/aggregates, plus a watermark so state is bounded), and
-  * `runningUserTotals` shows the custom-state path via
-  * mapGroupsWithState.
+  * surface for the same analytics: `sessionWindowStats` is the
+  * streaming-capable twin of `sessionize`, `clickAttribution` the
+  * stream-stream interval join, and the `flatMapGroupsWithState`
+  * operators (`retentionCellUpdates`, `transitionCellUpdates`,
+  * `streamingAsofWithin`) keep per-user state whose updates reproduce
+  * the batch contract queries.
   *
-  * Scale notes: the windowed aggregate shuffles once per trigger on
-  * (window, event_type) with partial aggregation map-side; the watermark
-  * evicts windows older than the lateness bound, so state size is
-  * O(active windows x event types), independent of stream length. The
-  * stateful per-user operator partitions by user_id — state is sharded
-  * across executors and survives through the checkpoint location.
+  * Scale notes: every stateful operator partitions by user_id — state
+  * is sharded across executors and survives through the checkpoint
+  * location; each operator's doc states its per-user state bound.
   */
 object EventStream {
-
-  /** Tumbling 1-hour window counts/sums per event type. Works on a
-    * streaming OR batch DataFrame with (ts, event_type, value). */
-  def hourlyWindowedStats(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
 
   /** Gap-based sessionization (batch form): a new session starts when a
     * user's inter-event gap exceeds `gapMicros`. Input needs
@@ -112,68 +100,6 @@ object EventStream {
         col("click_ts") <= col("view_ts") + expr(s"INTERVAL $horizonSec SECONDS"))
       .select(col("user_id"), col("view_id"), col("click_id"),
         col("view_ts"), col("click_ts"))
-  }
-
-  /** Streaming exact dedup on `keyCols` with bounded state: duplicates
-    * arriving within the watermark horizon are dropped; state for keys
-    * older than the watermark is evicted, so memory is O(keys per
-    * horizon), independent of stream length — the streaming twin of
-    * `Dedup.exact`. Works on a streaming DataFrame with an event-time
-    * column `tsCol`. */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-                  tsCol: String = "ts", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCols)
-
-  case class StageEvent(user_id: Long, event_type: String, tus: Long)
-  case class StageTimes(times: Seq[Long])
-  case class UserStage(user_id: Long, stage: Int)
-
-  /** STREAMING funnel twin of `graft.analytics.Analytics.funnel`:
-    * maintains each user's first-seen time per stage as explicit state
-    * (flatMapGroupsWithState) and emits (user_id, stage) whenever the
-    * user's furthest IN-ORDER stage prefix advances — `stage` is the
-    * 0-based index of the furthest stage reached with strictly
-    * increasing first-times, or -1 while the user hasn't hit stage 0.
-    * Out-of-order arrival is handled by keeping per-stage MINIMUM times
-    * in state, so once the stream drains the final update per user
-    * matches the batch funnel exactly (spec-pinned); per-stage counts
-    * are a downstream aggregate over the latest update per user.
-    *
-    * Scale: state is `stages.length` longs per user, sharded by user_id
-    * across the state store — O(users), independent of stream length,
-    * the same bound as any per-user stateful operator. */
-  def funnelStageUpdates(events: Dataset[StageEvent],
-                         stages: Seq[String]): Dataset[UserStage] = {
-    require(stages.nonEmpty, "funnel needs at least one stage")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val None_ = Long.MaxValue
-    val stageIdx = stages.zipWithIndex.toMap
-    def furthest(t: Seq[Long]): Int = {
-      var i = 0
-      while (i < t.length && t(i) != None_ && (i == 0 || t(i - 1) < t(i))) i += 1
-      i - 1
-    }
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[StageEvent], state: GroupState[StageTimes]) =>
-          val times = state.getOption.map(_.times.toArray)
-            .getOrElse(Array.fill(stages.length)(None_))
-          val before = furthest(times.toSeq)
-          it.foreach { e =>
-            stageIdx.get(e.event_type).foreach { i =>
-              if (e.tus < times(i)) times(i) = e.tus
-            }
-          }
-          state.update(StageTimes(times.toSeq))
-          val after = furthest(times.toSeq)
-          if (after != before) Iterator(UserStage(user, after)) else Iterator.empty
-      }
   }
 
   case class HourEvent(user_id: Long, hour: Long)
@@ -341,117 +267,31 @@ object EventStream {
         org.apache.spark.sql.streaming.OutputMode.Update(),
         GroupStateTimeout.NoTimeout()) {
         (user: Long, it: Iterator[AsofEvent], state: GroupState[AsofState]) =>
-          val (st, out) = asofWalk(user, it.toSeq, state.getOption,
-            leftType, rightType, toleranceMicros)
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  /** The shared per-trigger walk: fold the group's (re-sorted) events
-    * into the two-long state, emitting one [[AsofMatch]] per left. */
-  private def asofWalk(user: Long, arrived: Seq[AsofEvent],
-                       prior: Option[AsofState], leftType: String,
-                       rightType: String,
-                       toleranceMicros: Long): (AsofState, Seq[AsofMatch]) = {
-    var st = prior.getOrElse(AsofState(Long.MinValue, Long.MinValue, seen = false))
-    val out = Seq.newBuilder[AsofMatch]
-    // the trigger's iterator is NOT time-ordered (DebounceStream trap)
-    for (e <- arrived.sortBy(e => (e.tus, e.event_id))) {
-      if (e.event_type == rightType) {
-        if (!st.seen || e.tus > st.vLatest)
-          st = AsofState(e.tus,
-            if (st.seen) st.vLatest else Long.MinValue, seen = true)
-        // e.tus == vLatest: a duplicate time changes nothing
-      } else if (e.event_type == leftType) {
-        val cand =
-          if (st.seen && st.vLatest < e.tus) Some(st.vLatest)
-          else if (st.vPrevDistinct != Long.MinValue) Some(st.vPrevDistinct)
-          else None
-        // c < e.tus re-checked on the FALLBACK arm too: an
-        // out-of-contract late left (e.tus ≤ vPrevDistinct) must
-        // fail safe to null, never emit a match from the left's
-        // FUTURE (e.tus − c would be negative and pass the
-        // tolerance bound alone)
-        out += AsofMatch(user, e.event_id, e.tus,
-          cand.filter(c => c < e.tus && e.tus - c <= toleranceMicros))
-      }
-    }
-    (st, out.result())
-  }
-
-  case class AsofEventTs(user_id: Long, event_id: Long, event_type: String,
-                         tus: Long, ts: java.sql.Timestamp)
-
-  /** [[streamingAsofWithin]] with EVENT-TIME EVICTION — the bounded-state
-    * production shape: a user whose latest right event has aged past
-    * `watermark − tolerance` is dropped from the store (event-time
-    * timeout). Eviction is SOUND under the operator's own contract: the
-    * timeout fires only once the watermark passes `vLatest + tolerance`
-    * (+1 ms rounding margin), and the watermark also filters older
-    * lefts, so any left the operator still processes satisfies
-    * `e.tus − vLatest > tolerance` — its match was stale → null with or
-    * without the state. Dropping the state changes no output, it only
-    * caps the store at the ACTIVE-user count instead of the ever-seen
-    * count (the unbounded variant's price for watermark-free matching).
-    * Rights arriving after eviction simply re-seed fresh state — the
-    * two-long state only ever serves FUTURE lefts. A user with no right
-    * seen stores nothing at all. Same ordered-trigger contract on late
-    * lefts; `watermarkDelay` is the lateness the walk tolerates before
-    * the filter (and eviction clock) engages. */
-  def streamingAsofWithinEvicting(events: Dataset[AsofEvent], leftType: String,
-                                  rightType: String, toleranceMicros: Long,
-                                  watermarkDelay: String = "0 seconds")
-      : Dataset[AsofMatch] = {
-    require(toleranceMicros >= 0L, s"need tolerance >= 0, got $toleranceMicros")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.toDF()
-      .withColumn("ts", timestamp_micros(col("tus")))
-      .withWatermark("ts", watermarkDelay)
-      .as[AsofEventTs]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        org.apache.spark.sql.streaming.OutputMode.Update(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (user: Long, it: Iterator[AsofEventTs], state: GroupState[AsofState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val (st, out) = asofWalk(user,
-              it.map(e => AsofEvent(e.user_id, e.event_id, e.event_type, e.tus)).toSeq,
-              state.getOption, leftType, rightType, toleranceMicros)
-            if (st.seen) {
-              state.update(st)
-              // ceil-to-ms + 1 ms margin: never evict EARLY (a boundary
-              // left at exactly vLatest + tolerance still matches)
-              val evictAtMs = (st.vLatest + toleranceMicros) / 1000L + 2L
-              state.setTimeoutTimestamp(
-                math.max(evictAtMs, state.getCurrentWatermarkMs + 1L))
-            } else if (state.exists) state.remove()
-            out.iterator
+          var st = state.getOption.getOrElse(AsofState(Long.MinValue, Long.MinValue, seen = false))
+          val out = Seq.newBuilder[AsofMatch]
+          // the trigger's iterator is NOT time-ordered (DebounceStream trap)
+          for (e <- it.toSeq.sortBy(e => (e.tus, e.event_id))) {
+            if (e.event_type == rightType) {
+              if (!st.seen || e.tus > st.vLatest)
+                st = AsofState(e.tus,
+                  if (st.seen) st.vLatest else Long.MinValue, seen = true)
+              // e.tus == vLatest: a duplicate time changes nothing
+            } else if (e.event_type == leftType) {
+              val cand =
+                if (st.seen && st.vLatest < e.tus) Some(st.vLatest)
+                else if (st.vPrevDistinct != Long.MinValue) Some(st.vPrevDistinct)
+                else None
+              // c < e.tus re-checked on the FALLBACK arm too: an
+              // out-of-contract late left (e.tus ≤ vPrevDistinct) must
+              // fail safe to null, never emit a match from the left's
+              // FUTURE (e.tus − c would be negative and pass the
+              // tolerance bound alone)
+              out += AsofMatch(user, e.event_id, e.tus,
+                cand.filter(c => c < e.tus && e.tus - c <= toleranceMicros))
+            }
           }
-      }
-  }
-
-  case class UserEvent(user_id: Long, event_type: String, value: Double)
-  case class UserTotals(user_id: Long, events: Long, total: Double)
-
-  /** Running per-user event count + value sum, maintained as explicit
-    * state across triggers (KeyValueGroupedDataset.mapGroupsWithState). */
-  def runningUserTotals(events: Dataset[UserEvent]): Dataset[UserTotals] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (user: Long, it: Iterator[UserEvent], state: GroupState[UserTotals]) =>
-          val prev = state.getOption.getOrElse(UserTotals(user, 0L, 0.0))
-          var n = prev.events
-          var tot = prev.total
-          it.foreach { e => n += 1; tot += e.value }
-          val next = UserTotals(user, n, tot)
-          state.update(next)
-          next
+          state.update(st)
+          out.result().iterator
       }
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming admission through the declarative constraint suite — the
-  * per-micro-batch twin of the batch publish gate (`q_dq_checks` /
-  * `DataQuality.publishGated`): every arriving batch is evaluated
+  * per-micro-batch twin of the batch suite (`q_dq_checks` /
+  * `DataQuality.suite`): every arriving batch is evaluated
   * against the suite's per-row rules; a PASSING batch lands in the
   * accepted corpus, a FAILING batch is quarantined WHOLE (its rows plus
   * a per-check verdict log), never silently dropped and never mixed

@@ -284,7 +284,9 @@ object StoreCompaction {
   def hasPendingDeletes(spark: SparkSession, path: String): Boolean =
     pendingDeleteFiles(spark, path).nonEmpty
 
-  /** The distinct logically-deleted ids (empty frame when none). Reads
+  /** The distinct logically-deleted ids (empty frame when none), read
+    * with the one-column schema [[markDeleted]] writes, so building the
+    * frame runs no schema-inference job. Reads
     * the listed files, not the `_deletes` directory: Spark warns on every
     * read of a path whose leaf name starts with `_`. Past
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` files it
@@ -297,7 +299,7 @@ object StoreCompaction {
       spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     val roots =
       if (files.size <= maxRoots) files.map(_.toString) else Seq(s"$path/_deletes")
-    if (files.nonEmpty) spark.read.parquet(roots: _*).select(col("_del_id")).distinct()
+    if (files.nonEmpty) spark.read.schema("_del_id BIGINT").parquet(roots: _*).distinct()
     else Seq.empty[Long].toDF("_del_id")
   }
 

@@ -1317,7 +1317,7 @@ class LlmSpec extends SparkSpec {
       (6L, "v1.2.3 is not an ip word"))
   }
 
-  test("incrementalMinhashIndexed: probing the persisted index is bitwise incrementalMinhash") {
+  test("writeBandIndex: probing the persisted index drops exactly ingestDupIds' ids") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
     val batch = docs.filter(col("doc_id") % 5 === 0)
@@ -1325,16 +1325,16 @@ class LlmSpec extends SparkSpec {
     SparkEntry.withTempRoot(spark, "graft_bandidx") { root =>
       val idxPath = root + "/idx"
       Dedup.writeBandIndex(corpus, idxPath)
-      def norm(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy(col("batch_id"), col("corpus_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val direct = norm(Dedup.incrementalMinhash(batch, corpus, 0.5))
-      val indexed = norm(Dedup.incrementalMinhashIndexed(batch, corpus, idxPath, 0.5))
+      val idx = spark.read.parquet(idxPath)
+      idx.columns.toSeq shouldBe Seq("doc_id", "band", "key")
+      def ids(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.getLong(0)).toSet
+      val direct = ids(Dedup.ingestDupIds(batch, Some(corpus), 0.5))
+      val indexed = ids(Dedup.ingestDupIdsIndexed(batch, Some((corpus, idx)), 0.5))
       direct should not be empty
       indexed shouldBe direct
       // the append path: index rows of a new batch use the same layout
-      val appended = Dedup.bandIndexRows(batch)
-      appended.columns.toSeq shouldBe Seq("doc_id", "band", "key")
+      Dedup.bandIndexRows(batch).columns.toSeq shouldBe idx.columns.toSeq
     }
   }
 
@@ -2093,10 +2093,12 @@ class LlmSpec extends SparkSpec {
       Seq(0L, 2L, 1L, 0L, 0L, 0L, 0L, 0L)
     // the bridge: hashed vectors feed bruteForceTopK unchanged — an exact
     // text duplicate is its twin's cosine-1.0 nearest neighbor
-    val vecs = TextAnalysis.hashedTfVectors(docsDF(
+    val vecs = TextAnalysis.hashedTf(docsDF(
       1L -> "the cat sat on the mat",
       2L -> "the cat sat on the mat",
       3L -> "completely different words entirely"), 8)
+      .select(col("doc_id").as("vec_id"),
+        array((0 until 8).map(j => col(s"d$j").cast("double")): _*).as("embedding"))
     val nn = Similarity.bruteForceTopK(vecs, Seq(1L), k = 1).collect().head
     nn.getLong(1) shouldBe 2L
     nn.getDouble(2) shouldBe 1.0
@@ -2665,7 +2667,7 @@ class LlmSpec extends SparkSpec {
     // the persisted index is the same rows: write, read back, same output
     SparkEntry.withTempRoot(spark, "spanidx") { dir =>
       Dedup.writeSpanIndex(corpus, 3, s"$dir/idx")
-      run(Dedup.readSpanIndex(spark, s"$dir/idx")) shouldBe expect
+      run(spark.read.parquet(s"$dir/idx").select("g")) shouldBe expect
     }
   }
 

@@ -5,23 +5,6 @@ import graft.SparkSpec
 class VectorKMeansSpec extends SparkSpec {
   import spark.implicits._
 
-  test("fit recovers two well-separated synthetic blobs") {
-    val rnd = new scala.util.Random(7)
-    def blob(center: Array[Double], n: Int) =
-      Seq.fill(n)(center.map(_ + rnd.nextGaussian() * 0.1).toSeq)
-    val a = Array(0.0, 0.0, 0.0, 0.0)
-    val b = Array(10.0, 10.0, 10.0, 10.0)
-    val vecs = (blob(a, 50) ++ blob(b, 50)).zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding")
-    // seed from one vector of each blob
-    val r = VectorKMeans.fit(vecs, "embedding", Seq(0L, 50L), maxIter = 10)
-    r.centers should have size 2
-    // each fitted center within 0.1 of its blob center
-    math.sqrt(r.centers(0).zip(a).map { case (x, y) => (x - y) * (x - y) }.sum) should be < 0.1
-    math.sqrt(r.centers(1).zip(b).map { case (x, y) => (x - y) * (x - y) }.sum) should be < 0.1
-    r.converged shouldBe true
-  }
-
   test("empty cells keep their previous centroid (K never shrinks)") {
     val vecs = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(1.0, 1.0)))
       .toDF("vec_id", "embedding")
@@ -31,18 +14,6 @@ class VectorKMeansSpec extends SparkSpec {
       Seq(Array(0.0, 0.0), far))
     next(1) shouldBe far // untouched
     next(0) shouldBe Array(0.5, 0.5)
-  }
-
-  test("fit: a cell emptied by a seed tie keeps its centroid (K never shrinks)") {
-    // seeds 0 and 1 are the same point, so the first step sends every
-    // vector to cell 0 (ties to the lowest id) and leaves cell 1 empty;
-    // had cell 1 vanished, fit would end with one centre at (2/3, 2/3)
-    val vecs = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(0.0, 0.0)), (2L, Seq(2.0, 2.0)))
-      .toDF("vec_id", "embedding")
-    val r = VectorKMeans.fit(vecs, "embedding", Seq(0L, 1L), maxIter = 10)
-    r.centers.map(_.toSeq) shouldBe Seq(Seq(2.0, 2.0), Seq(0.0, 0.0))
-    r.iterations shouldBe 3
-    r.converged shouldBe true
   }
 
   test("step is bitwise invariant to shuffle width and input partitioning") {
@@ -85,9 +56,13 @@ class VectorKMeansSpec extends SparkSpec {
 
   test("IVF with fitted coarse cells and nprobe=all equals brute force") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val fitted = VectorKMeans.fit(emb, "embedding", Seq(3L, 17L, 29L), maxIter = 5)
-    val cells = VectorKMeans.asCells(emb, fitted)
-    val ivf = Similarity.ivfTopKWith(emb, cells.select(col2("cell_id"), col2("cvec")), Seq(0L), nprobe = 3, k = 5)
+    val e = emb.selectExpr("vec_id", "CAST(embedding AS array<double>) AS v")
+    val seeds = e.filter(col2("vec_id").isin(3L, 17L, 29L))
+      .orderBy(col2("vec_id")).collect().map(_.getSeq[Double](1).toArray).toSeq
+    val fitted = Iterator.iterate(seeds)(VectorKMeans.step(e, "v", _)).drop(5).next()
+    val cells = fitted.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
+      .toDF("cell_id", "cvec")
+    val ivf = Similarity.ivfTopKWith(emb, cells, Seq(0L), nprobe = 3, k = 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet
     val bf = Similarity.bruteForceTopK(emb, Seq(0L), 5)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet

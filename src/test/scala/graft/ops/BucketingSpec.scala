@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class BucketingSpec extends SparkSpec {
   import spark.implicits._
@@ -16,35 +15,6 @@ class BucketingSpec extends SparkSpec {
     }
   }
 
-  test("join of two co-bucketed tables runs with NO exchange") {
-    val a = (1L to 1000L).map(i => (i, s"a$i")).toDF("k", "va")
-    val b = (1L to 1000L).map(i => (i, i * 2.0)).toDF("k", "vb")
-    Bucketing.writeBucketed(a, "bkt_a", Seq("k"), buckets = 4)
-    Bucketing.writeBucketed(b, "bkt_b", Seq("k"), buckets = 4)
-    try withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val joined = Bucketing.readBucketed(spark, "bkt_a")
-        .join(Bucketing.readBucketed(spark, "bkt_b"), "k")
-      val plan = joined.queryExecution.executedPlan.toString()
-      (plan should not).include("Exchange hashpartitioning")
-      joined.count() shouldBe 1000L
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_a")
-      spark.sql("DROP TABLE IF EXISTS bkt_b")
-    }
-  }
-
-  test("aggregation on the bucket key also skips the exchange") {
-    val a = (1L to 100L).map(i => (i % 10, i.toDouble)).toDF("k", "v")
-    Bucketing.writeBucketed(a, "bkt_agg", Seq("k"), buckets = 4)
-    try {
-      val agg = Bucketing.readBucketed(spark, "bkt_agg")
-        .groupBy(col("k")).agg(sum("v").as("s"))
-      val plan = agg.queryExecution.executedPlan.toString()
-      (plan should not).include("Exchange hashpartitioning")
-      agg.count() shouldBe 10L
-    } finally spark.sql("DROP TABLE IF EXISTS bkt_agg")
-  }
-
   test("SCD2 merge over a bucketed history: the history-side exchange disappears (the scaladoc's 100 TB story, pinned)") {
     // ScdMerge.merge's scale claim: bucket the stored history by key and
     // the full-outer MERGE shuffles only the change batch. The per-key
@@ -54,11 +24,12 @@ class BucketingSpec extends SparkSpec {
     val hist = (1L to 1000L).map(i =>
         (i, s"seg$i", 0L, Option.empty[Long], true))
       .toDF("key", "seg", "valid_from", "valid_to", "is_current")
-    Bucketing.writeBucketed(hist, "bkt_scd_hist", Seq("key"), buckets = 4)
+    hist.write.mode("overwrite").bucketBy(4, "key").sortBy("key")
+      .format("parquet").saveAsTable("bkt_scd_hist")
     try withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
       val changes = Seq((1L, "zz"), (5000L, "new")).toDF("key", "seg")
       val merged = ScdMerge.merge(
-        Bucketing.readBucketed(spark, "bkt_scd_hist"), changes,
+        spark.table("bkt_scd_hist"), changes,
         "key", Seq("seg"), version = 7L)
       val plan = merged.queryExecution.executedPlan.toString()
       "Exchange hashpartitioning".r.findAllIn(plan).size shouldBe 1

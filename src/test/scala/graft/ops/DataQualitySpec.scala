@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkSpec}
+import graft.SparkSpec
 import graft.analytics.DataQuality
 import org.apache.spark.sql.functions._
 
@@ -39,21 +39,6 @@ class DataQualitySpec extends SparkSpec {
       DataQuality.fkViolations(clean, "ck", cust, "c", "fk")))
       .collect().map(r => (r.getLong(1), r.getBoolean(2)))
     all(ok) shouldBe ((0L, true))
-  }
-
-  test("publishGated: failing suite publishes nothing, passing suite commits a version") {
-    SparkEntry.withTempRoot(spark, "gated") { dir =>
-      val bad = Seq((1L, -5.0), (2L, 3.0)).toDF("k", "price")
-      val badSuite = DataQuality.suite(Seq(
-        DataQuality.ruleViolations(bad, Seq("nonneg" -> (col("price") < 0)))))
-      DataQuality.publishGated(bad, badSuite, dir) shouldBe None
-      graft.ops.ManifestSink.currentVersion(spark, dir) shouldBe None // no trace
-      val good = Seq((1L, 5.0), (2L, 3.0)).toDF("k", "price")
-      val goodSuite = DataQuality.suite(Seq(
-        DataQuality.ruleViolations(good, Seq("nonneg" -> (col("price") < 0)))))
-      DataQuality.publishGated(good, goodSuite, dir) shouldBe Some(0L)
-      graft.ops.ManifestSink.read(spark, dir).count() shouldBe 2L
-    }
   }
 
   test("snapshotDiff: added/removed/changed/unchanged per source, hand fixture") {

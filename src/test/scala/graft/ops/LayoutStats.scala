@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Parquet row-group statistics audit — the measurement half of the
-  * Z-order story. `ZOrder.key`/`keyN` only pay off if writing sorted by
+  * Z-order story, kept beside the spec that uses it (ZOrderSkipSpec
+  * measures the live `ZOrder` and `Compaction.compactClustered` layouts
+  * with it). `ZOrder.key`/`keyN` only pay off if writing sorted by
   * the key gives row groups tight min/max bounds on EVERY interleaved
   * dimension, so a range predicate on any one of them skips row groups
   * at scan time. This reads the footers back and counts, per layout,

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class StoreAuditSpec extends SparkSpec {
   import spark.implicits._
@@ -43,19 +42,6 @@ class StoreAuditSpec extends SparkSpec {
       StoreAudit.presence(Seq("a" -> ids(1L), "a" -> ids(2L)), "id")
   }
 
-  test("divergentIds: the repair worklist — every non-all-true id with its flags") {
-    val a = ids(1L, 2L, 3L)
-    val b = ids(2L, 3L, 4L)
-    val got = StoreAudit.divergentIds(Seq("a" -> a, "b" -> b), "id")
-      .as[(Long, Boolean, Boolean)].collect().toSeq
-    got shouldBe Seq((1L, true, false), (4L, false, true))
-    // counts agree with presence's non-all-true rows
-    val p = StoreAudit.presence(Seq("a" -> a, "b" -> b), "id")
-      .filter(!col("in_a") || !col("in_b"))
-      .agg(sum(col("n"))).as[Long].head()
-    p shouldBe got.size.toLong
-  }
-
   test("forgetCompliance: per-store counts of still-served requested ids, ghosts compliant") {
     val compliant = ids(1L, 2L, 3L)              // 4, 5 already erased
     val hole = ids(1L, 2L, 3L, 4L, 5L)           // forget never reached it
@@ -72,11 +58,5 @@ class StoreAuditSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq shouldBe Seq(("a", 1L))
     an[IllegalArgumentException] should be thrownBy
       StoreAudit.forgetCompliance(Seq(1L), Seq("a" -> ids(1L), "a" -> ids(2L)), "id")
-  }
-
-  test("divergentIds is empty on consistent stores") {
-    StoreAudit.divergentIds(
-      Seq("a" -> ids(7L, 8L), "b" -> ids(8L, 7L)), "id")
-      .count() shouldBe 0L
   }
 }

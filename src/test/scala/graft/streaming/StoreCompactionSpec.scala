@@ -597,6 +597,8 @@ class StoreCompactionSpec extends SparkSpec {
         val listed = fs.globStatus(new org.apache.hadoop.fs.Path(deletes, "*.parquet"))
           .map(s => local(s.getPath.toString)).toSet
         listed should have size n.toLong
+        // the known schema: building the frame runs no inference job
+        JobCount.of(spark.sparkContext)(StoreCompaction.deletedIds(spark, store))._2 shouldBe 0
         val (ids, nJobs) = JobCount.of(spark.sparkContext) {
           StoreCompaction.deletedIds(spark, store).as[Long].collect().sorted
         }

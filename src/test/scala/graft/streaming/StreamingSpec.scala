@@ -4,68 +4,12 @@ import java.sql.Timestamp
 
 import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum}
+import org.apache.spark.sql.functions.{col, count, countDistinct, lit, sum, window}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $s")
-
-  test("hourlyWindowedStats: windowed counts/sums over a memory stream") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val q = EventStream.hourlyWindowedStats(mem.toDF.toDF("ts", "event_type", "value"))
-      .writeStream.format("memory").queryName("win").outputMode("complete").start()
-    try {
-      mem.addData(
-        (ts("10:05:00"), "click", 1.0),
-        (ts("10:40:00"), "click", 2.0),
-        (ts("10:59:59"), "view", 5.0),
-        (ts("11:00:00"), "click", 7.0))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT * FROM win ORDER BY window_start, event_type")
-        .collect()
-        .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3)))
-      rows.toSeq shouldBe Seq(
-        ("2024-01-01 10:00:00.0", "click", 2L, 3.0),
-        ("2024-01-01 10:00:00.0", "view", 1L, 5.0),
-        ("2024-01-01 11:00:00.0", "click", 1L, 7.0))
-    } finally q.stop()
-  }
-
-  test("hourlyWindowedStats agrees with the batch events_window grouping") {
-    // the streaming operator on a BATCH frame must equal the batch query
-    val batch = Seq(
-      (ts("10:05:00"), "click", 1.0),
-      (ts("10:40:00"), "click", 2.0),
-      (ts("11:00:00"), "view", 3.0)).toDF("ts", "event_type", "value")
-    val out = EventStream.hourlyWindowedStats(batch)
-      .collect().map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2))).toSet
-    out shouldBe Set(
-      ("2024-01-01 10:00:00.0", "click", 2L),
-      ("2024-01-01 11:00:00.0", "view", 1L))
-  }
-
-  test("hourlyWindowedStats over a FILE stream equals the batch result") {
-    SparkEntry.withTempRoot(spark, "evstream") { dir =>
-      val batch = Seq(
-        (ts("10:05:00"), "click", 1.0),
-        (ts("10:40:00"), "click", 2.0),
-        (ts("11:00:00"), "view", 3.0)).toDF("ts", "event_type", "value")
-      batch.write.mode("overwrite").parquet(dir)
-      val stream = spark.readStream.schema(batch.schema).parquet(dir)
-      val q = EventStream.hourlyWindowedStats(stream)
-        .writeStream.format("memory").queryName("filewin").outputMode("complete").start()
-      try {
-        q.processAllAvailable()
-        val streamed = spark.sql("SELECT * FROM filewin").collect()
-          .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-        val direct = EventStream.hourlyWindowedStats(batch).collect()
-          .map(r => (r.getTimestamp(0).toString, r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-        streamed shouldBe direct
-      } finally q.stop()
-    }
-  }
 
   test("streaming ingest dedup: near-dups of earlier batches never reach the corpus") {
     implicit val ctx = spark.sqlContext
@@ -750,7 +694,8 @@ class StreamingSpec extends SparkSpec {
     // the pipelineFilter GATE (lang + quality expressions) is pure
     // per-row compute, so the same Column expressions drive a streaming
     // ingest filter with no watermark/state; only the dedup aggregate
-    // stays batch-side (its streaming twin is dedupStream)
+    // stays batch-side (Spark's dropDuplicatesWithinWatermark is its
+    // streaming form)
     implicit val ctx = spark.sqlContext
     import org.apache.spark.sql.functions._
     import graft.llm.TextAnalysis
@@ -841,25 +786,6 @@ class StreamingSpec extends SparkSpec {
         streamed shouldBe batch
       } finally q.stop()
     }
-  }
-
-  test("dedupStream: drops duplicate keys within the watermark horizon") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val q = EventStream.dedupStream(
-      mem.toDF.toDF("ts", "event_id", "event_type"), keyCols = Seq("event_id"))
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    try {
-      mem.addData(
-        (ts("10:00:00"), 1L, "click"),
-        (ts("10:01:00"), 1L, "click"), // duplicate id within horizon
-        (ts("10:02:00"), 2L, "view"))
-      q.processAllAvailable()
-      mem.addData((ts("10:03:00"), 1L, "click")) // still within horizon
-      q.processAllAvailable()
-      val ids = spark.sql("SELECT event_id FROM dedup").collect().map(_.getLong(0)).sorted
-      ids.toSeq shouldBe Seq(1L, 2L)
-    } finally q.stop()
   }
 
   test("sessionWindowStats: exact-gap event MERGES (end-inclusive), one tick past splits") {
@@ -985,40 +911,6 @@ class StreamingSpec extends SparkSpec {
     out.toSeq shouldBe Seq((0L, "view", 3L), (1L, "click", 2L), (2L, "purchase", 1L))
   }
 
-  test("funnelStageUpdates: streaming stage counts equal the batch funnel") {
-    implicit val ctx = spark.sqlContext
-    val stages = Seq("view", "click", "purchase")
-    val rows = Seq(
-      (1L, "view", 10L), (1L, "click", 20L), (1L, "purchase", 30L),
-      (2L, "click", 5L), (2L, "view", 10L),
-      (3L, "view", 1L), (3L, "click", 2L), (3L, "error", 3L),
-      (4L, "purchase", 9L))
-    val mem = MemoryStream[(Long, String, Long)]
-    val q = EventStream.funnelStageUpdates(
-        mem.toDF.toDF("user_id", "event_type", "tus")
-          .as[EventStream.StageEvent], stages)
-      .writeStream.format("memory").queryName("fun").outputMode("update").start()
-    try {
-      // two triggers; u2's batch contains a click that precedes its view
-      // (stays at stage 0), u4 never views (no update at all)
-      mem.addData(rows.take(5): _*)
-      q.processAllAvailable()
-      mem.addData(rows.drop(5): _*)
-      q.processAllAvailable()
-      // no user regresses in this fixture, so the max stage per user is
-      // its final state (the memory sink does not expose trigger order)
-      val fin = spark.sql(
-        "SELECT user_id, max(stage) AS stage FROM fun GROUP BY user_id")
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val batchCounts = graft.analytics.Analytics.funnel(
-          rows.toDF("user_id", "event_type", "tus"), stages)
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      val streamCounts = stages.indices
-        .map(i => i.toLong -> fin.values.count(_ >= i).toLong).toMap
-      streamCounts shouldBe batchCounts
-    } finally q.stop()
-  }
-
   test("retention: cohort = first-seen hour, offsets count comeback hours once") {
     val h = 3600L * 1000 * 1000
     val ev = Seq(
@@ -1044,8 +936,11 @@ class StreamingSpec extends SparkSpec {
         .toDF("ts", "event_type", "value")
       first.write.mode("append").parquet(inDir)
       val schema = first.schema
-      def start() = EventStream.hourlyWindowedStats(
-        spark.readStream.schema(schema).parquet(inDir))
+      def start() = spark.readStream.schema(schema).parquet(inDir)
+        .withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+        .agg(count(lit(1)).as("n"), sum("value").as("total_value"))
+        .select(col("window.start"), col("event_type"), col("n"), col("total_value"))
         .writeStream.format("memory").queryName("ckwin").outputMode("complete")
         .option("checkpointLocation", ckpt).start()
       val q1 = start()
@@ -1995,25 +1890,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("runningUserTotals: state accumulates across triggers") {
-    implicit val ctx = spark.sqlContext
-    val mem = MemoryStream[EventStream.UserEvent]
-    val q = EventStream.runningUserTotals(mem.toDS())
-      .writeStream.format("memory").queryName("totals").outputMode("update").start()
-    try {
-      mem.addData(EventStream.UserEvent(1L, "click", 2.0), EventStream.UserEvent(2L, "view", 5.0))
-      q.processAllAvailable()
-      mem.addData(EventStream.UserEvent(1L, "click", 3.0))
-      q.processAllAvailable()
-      // update mode: latest row per user wins
-      val last = spark.sql("SELECT * FROM totals").collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
-        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).maxBy(_._1) }
-      last(1L) shouldBe ((2L, 5.0))
-      last(2L) shouldBe ((1L, 5.0))
-    } finally q.stop()
-  }
-
   test("retentionCellUpdates: summed deltas equal the batch matrix, late event rebases") {
     implicit val ctx = spark.sqlContext
     val mem = MemoryStream[EventStream.HourEvent]
@@ -2128,54 +2004,6 @@ class StreamingSpec extends SparkSpec {
     streamed.toMap.apply(7L) shouldBe ((1L, 250L, Some(200L)))
     streamed.toMap.apply(3L) shouldBe ((2L, 60L, None))
     streamed.toMap.apply(8L) shouldBe ((2L, 290L, Some(210L)))
-  }
-
-  test("streamingAsofWithinEvicting: outputs equal the unbounded twin on in-horizon data; aged-out users leave the state store and later lefts null") {
-    implicit val ctx = spark.sqlContext
-    import EventStream.AsofEvent
-    val tol = 100L
-    // in-horizon replay of the batch-equality fixture: eviction must be
-    // output-invisible while every user stays active
-    val triggers = Seq(
-      Seq(AsofEvent(1L, 2L, "click", 50L), AsofEvent(1L, 1L, "view", 10L),
-        AsofEvent(2L, 3L, "click", 60L)),
-      Seq(AsofEvent(1L, 5L, "click", 200L), AsofEvent(1L, 4L, "view", 200L),
-        AsofEvent(2L, 6L, "view", 210L)),
-      Seq(AsofEvent(1L, 7L, "click", 250L), AsofEvent(2L, 8L, "click", 290L)))
-    def run(name: String, data: Seq[Seq[AsofEvent]],
-            f: org.apache.spark.sql.Dataset[AsofEvent] => org.apache.spark.sql.Dataset[EventStream.AsofMatch]) = {
-      val mem = MemoryStream[AsofEvent]
-      val q = f(mem.toDS()).writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try data.foreach { t => mem.addData(t: _*); q.processAllAvailable() }
-      finally q.stop()
-      (spark.table(name).collect()
-        .map(r => (r.getLong(1), (r.getLong(0), r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3))))).sortBy(_._1),
-        q.recentProgress.flatMap(_.stateOperators.map(_.numRowsTotal)).toSeq)
-    }
-    val (evicted, _) = run("asofev1", triggers,
-      ds => EventStream.streamingAsofWithinEvicting(ds, "click", "view", tol))
-    val (unbounded, _) = run("asofev2", triggers,
-      ds => EventStream.streamingAsofWithin(ds, "click", "view", tol))
-    evicted shouldBe unbounded
-    // eviction: user 1's state (view@1000) ages past watermark - tol when
-    // user 2 pushes event time to 10s; the store drops to the ACTIVE
-    // count, and a later in-watermark left for user 1 nulls — exactly
-    // what the stale match would have produced anyway
-    val evictTriggers = Seq(
-      Seq(AsofEvent(1L, 1L, "view", 1000L), AsofEvent(1L, 2L, "click", 1050L)),
-      Seq(AsofEvent(2L, 3L, "view", 10000000L)),
-      Seq(AsofEvent(2L, 4L, "click", 10000050L)), // watermark passes 1100us; user 1 times out
-      Seq(AsofEvent(1L, 5L, "click", 10000200L))) // evicted user: fresh walk, null
-    val (out, stateRows) = run("asofev3", evictTriggers,
-      ds => EventStream.streamingAsofWithinEvicting(ds, "click", "view", tol))
-    out.toMap.apply(2L) shouldBe ((1L, 1050L, Some(1000L)))
-    out.toMap.apply(4L) shouldBe ((2L, 10000050L, Some(10000000L)))
-    out.toMap.apply(5L) shouldBe ((1L, 10000200L, None))
-    // the store shrank when user 1 aged out (2 users seen, 1 retained)
-    stateRows.max shouldBe 2L
-    stateRows.last should be < 2L
   }
 
   test("streamingAsofWithin: an out-of-contract late left fails safe to null, never a match from its own future") {
