@@ -2,7 +2,10 @@ package graft
 
 import graft.contract.PointSpace
 import graft.kmeans.KMeansRunner
-import org.apache.spark.sql.SparkSession
+import graft.llm.{Similarity, TextAnalysis}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Benchmark main: times every SparkEntry contract query plus the full
   * iterative K-Means loop on SPARK_GRAFT_SF_DIR, printing one JSON line.
@@ -21,6 +24,71 @@ object Bench {
     * scope helper, so a temp store cannot be built outside it.
     */
   val WarmExempt: Set[String] = SparkEntry.storeLines
+
+  /** The harness of the `stream_*` lines: feeds `input` to `body` as a
+    * 4-batch file stream. A fresh session (8 shuffle partitions, UTC)
+    * reads `input` back from parquet under a temp root, one file per
+    * trigger (`maxFilesPerTrigger = 1`), with `input`'s schema. The
+    * files are `repartition(4)`'s four slices, or with `partitioned`
+    * one directory per value of the `part` column, stamped so the
+    * triggers follow part order ([[stampPartOrder]]). `body` starts the
+    * line's queries on the stream and returns its guard: every query the
+    * session started is drained and then stopped, also when the body
+    * throws, and the guard runs on the stopped outputs before the root
+    * is deleted. */
+  private[graft] def fileStream(spark: SparkSession, input: DataFrame,
+                                partitioned: Boolean = false)(
+      body: (SparkSession, DataFrame, String) => () => Unit): Unit = {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.session.timeZone", "UTC")
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    SparkEntry.withTempRoot(spark, "graft_stream_bench") { tmp =>
+      val in = s"$tmp/in"
+      if (partitioned) {
+        input.repartition(1).write.partitionBy("part").mode("overwrite").parquet(in)
+        stampPartOrder(spark, in)
+      } else input.repartition(4).write.mode("overwrite").parquet(in)
+      val src = s2.readStream.schema(input.schema)
+        .option("maxFilesPerTrigger", 1).parquet(in)
+      val guard = drained(s2)(body(s2, src, tmp))
+      guard()
+    }
+  }
+
+  /** Runs `start`, drains every query `session` then has active, and
+    * stops them all in `finally`: a start that throws leaves none
+    * running. */
+  private def drained[A](session: SparkSession)(start: => A): A =
+    try {
+      val a = start
+      session.streams.active.foreach(_.processAllAvailable())
+      a
+    } finally session.streams.active.foreach(_.stop())
+
+  /** FileStreamSource orders triggers by file modification time, and one
+    * partitionBy write lands every part file in the same clock tick, so
+    * a tie could fire a later part first. Stamps the parquet files of
+    * each `part=` directory under `dir` with strictly increasing mtimes
+    * in part order. */
+  private def stampPartOrder(spark: SparkSession, dir: String): Unit = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = System.currentTimeMillis()
+    fs.listStatus(root).filter(_.getPath.getName.startsWith("part="))
+      .sortBy(_.getPath.getName.stripPrefix("part=").toLong)
+      .zipWithIndex.foreach { case (part, i) =>
+        fs.listStatus(part.getPath)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .foreach(st => fs.setTimes(st.getPath, base + (i + 1) * 2000L, -1L))
+      }
+  }
+
+  /** Starts `out` into the memory table `name`, checkpointed under `root`. */
+  private def toMemory(out: Dataset[_], name: String, mode: String, root: String): Unit = {
+    out.writeStream.format("memory").queryName(name).outputMode(mode)
+      .option("checkpointLocation", s"$root/ck").start()
+    ()
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -167,10 +235,9 @@ object Bench {
       // keeps the exact+flags contract form; this line tracks the twin
       // that avoids the corpus-wide exact aggregate round-over-round)
       "heavy_hitters_sketched" -> (() => {
-        import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
-        val n = graft.llm.TextAnalysis.heavyHittersSketched(
+        val n = TextAnalysis.heavyHittersSketched(
           docs, k = 10, capacity = 4096, eps = 0.001,
           confidence = 0.99, seed = 42).count()
         require(n == 10, s"expected 10 sketched heavy hitters, got $n")
@@ -179,10 +246,9 @@ object Bench {
       // prefix union — never the vocab × batches first-seen table
       // (q_vocab_growth keeps the exact contract form)
       "vocab_growth_sketched" -> (() => {
-        import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
-        val out = graft.llm.TextAnalysis.vocabGrowthSketched(docs, 50L)
+        val out = TextAnalysis.vocabGrowthSketched(docs, 50L)
         val rows = out.orderBy(col("batch")).collect()
         out.unpersist(false)
         require(rows.nonEmpty && rows.forall(_.getLong(3) > 0L) &&
@@ -194,7 +260,6 @@ object Bench {
       // + scan-side compare — zero sorts (q_quality_quantile keeps the
       // exact percent_rank contract form; this twin is the 100 TB path)
       "quality_quantile_sketched" -> (() => {
-        import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val n = graft.llm.TextAnalysis
           .qualityQuantileFilterSketched(docs, 0.2)
@@ -205,7 +270,6 @@ object Bench {
       // compare — no global rank sort (q_dsir keeps the exact top-N
       // contract form; this twin is the 100 TB selection path)
       "dsir_sketched" -> (() => {
-        import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         val n = graft.llm.TextAnalysis
           .dsirScoresSketched(docs, "en", keepFrac = 0.2)
@@ -218,14 +282,13 @@ object Bench {
       // a full vocab trains and every doc encodes (n_subtokens >= n_words
       // can't hold for subwords - the right invariant is coverage)
       "unigram_train" -> (() => {
-        import org.apache.spark.sql.functions.col
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
-        val v = graft.llm.TextAnalysis.unigramLmTrain(
+        val v = TextAnalysis.unigramLmTrain(
           docs, vocabSize = 500, maxPieceLen = 4, iters = 2)
         val n = v.count()
         require(n > 0 && n <= 500, s"unigram vocab has $n pieces")
-        val enc = graft.llm.TextAnalysis.unigramLmEncode(
+        val enc = TextAnalysis.unigramLmEncode(
           docs, vocabSize = 500, maxPieceLen = 4, iters = 2)
         val covered = enc.count()
         require(covered > 0, "unigram encode covered no documents")
@@ -236,12 +299,11 @@ object Bench {
       // beside its PlanSpec pin. The filter makes the count evaluate the
       // kernel; a bare count() would prune the cell_id projection
       "ann_assign_largek" -> (() => {
-        import org.apache.spark.sql.functions.col
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
         val coarse = e.filter(col("vec_id") < 300)
           .select(col("vec_id").as("cell_id"), col("vec").as("cvec"))
-        val n = graft.llm.Similarity.assignCells(e, coarse)
+        val n = Similarity.assignCells(e, coarse)
           .filter(col("cell_id").isNotNull).count()
         require(n > 0, "no assignments from the large-K path")
       }),
@@ -253,7 +315,6 @@ object Bench {
       // equality with the one-shot ivfPqSearch is spec-pinned. Guard:
       // non-empty probe over a full-corpus index.
       "ann_indexed_probe" -> (() => {
-        import graft.llm.Similarity
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
         val quant = Similarity.trainIvfPqQuantizer(
           e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
@@ -269,9 +330,9 @@ object Bench {
       // table (views/clicks split to parquet, consumed as streams, the
       // watermarked interval join drained to completion). Equality with
       // the batch join is spec-pinned (StreamingSpec); here the guard is
-      // rows > 0 so a state regression can't silently pass as fast
+      // rows > 0 so a state regression can't silently pass as fast.
+      // Hand-written: two inputs and a shuffle width sized to the rows
       "stream_click_attribution" -> (() => {
-        import org.apache.spark.sql.functions._
         val s2 = spark.newSession()
         s2.conf.set("spark.sql.session.timeZone", "UTC")
         // schema-adaptive reader (NANOS or MICROS layout) → canonical
@@ -295,93 +356,73 @@ object Bench {
           val vs = s2.readStream.schema(views.schema).parquet(s"$tmp/v")
           val cs = s2.readStream.schema(clicks.schema).parquet(s"$tmp/c")
           var pairs = 0L
-          val q = graft.streaming.EventStream.clickAttribution(vs, cs, horizonSec = 3600)
-            .writeStream
-            .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-                           _: Long) => { pairs += batch.count(); () })
-            .start()
-          q.processAllAvailable()
-          q.stop()
+          drained(s2) {
+            graft.streaming.EventStream.clickAttribution(vs, cs, horizonSec = 3600)
+              .writeStream
+              .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                             _: Long) => { pairs += batch.count(); () })
+              .start()
+          }
           require(pairs > 0, "no attribution pairs from the stream")
         }
       }),
-      // streaming corpus ingestion with near-dup suppression: the full
-      // documents table fed as a 4-batch file stream, each micro-batch
-      // LSH-banded against the partitions ingested before it, survivors
-      // landed with the idempotent dynamic-overwrite sink. Equality
-      // with the sequential batch run is spec-pinned (StreamingSpec);
-      // here the guard is a non-trivial surviving corpus so a state or
-      // sink regression can't pass as fast
+      // streaming corpus ingestion with near-dup suppression: each
+      // micro-batch LSH-banded against the partitions ingested before
+      // it, survivors landed with the idempotent dynamic-overwrite sink.
+      // Equality with the sequential batch run is spec-pinned
+      // (StreamingSpec); the guard is a non-trivial surviving corpus
       "stream_ingest_dedup" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        SparkEntry.withTempRoot(spark, "graft_ingest_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.IngestDedup.start(
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          graft.streaming.IngestDedup.start(
             src, s"$tmp/corpus", s"$tmp/ck", threshold = 0.5)
-          q.processAllAvailable()
-          q.stop()
-          val survived = s2.read.parquet(s"$tmp/corpus").count()
-          require(survived > 0 && survived <= nDocs,
-            s"ingest stream kept $survived of $nDocs docs")
+          () => {
+            val survived = s2.read.parquet(s"$tmp/corpus").count()
+            require(survived > 0 && survived <= nDocs,
+              s"ingest stream kept $survived of $nDocs docs")
+          }
+        }
+      }),
+      // streaming quality gate: per-batch constraint-suite admission —
+      // rules fold into one aggregate per batch, no state store. Guard:
+      // every input row lands in exactly one of accepted/quarantine.
+      "stream_quality_gate" -> (() => {
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("text"), col("n_chars"))
+        val nDocs = docs.count()
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          // a length-cap rule some batches violate: partitions carrying a
+          // long doc quarantine whole, the rest are admitted
+          val rules = Seq[(String, org.apache.spark.sql.Column)](
+            "len_cap" -> (col("n_chars") > 400L))
+          graft.streaming.QualityGate.start(src, rules,
+            s"$tmp/acc", s"$tmp/quar", s"$tmp/ver", s"$tmp/ck")
+          () => {
+            def cnt(p: String) =
+              try s2.read.parquet(p).count() catch { case _: Throwable => 0L }
+            require(cnt(s"$tmp/acc") + cnt(s"$tmp/quar") == nDocs,
+              "gate lost or duplicated rows")
+          }
         }
       }),
       // streaming EXACT ingest dedup with constant driver state: the
       // bloom twin of stream_ingest_dedup — misses admit with no store
       // read, only bloom hits verify against already-written partitions
-      // streaming quality gate: per-batch constraint-suite admission —
-      // rules fold into one aggregate per batch, no state store. Guard:
-      // every input row lands in exactly one of accepted/quarantine.
-      "stream_quality_gate" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
-        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"), col("n_chars"))
-        val nDocs = docs.count()
-        SparkEntry.withTempRoot(spark, "graft_qgate_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          // a length-cap rule some batches violate: partitions carrying a
-          // long doc quarantine whole, the rest are admitted
-          val rules = Seq[(String, org.apache.spark.sql.Column)](
-            "len_cap" -> (col("n_chars") > 400L))
-          val q = graft.streaming.QualityGate.start(src, rules,
-            s"$tmp/acc", s"$tmp/quar", s"$tmp/ver", s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          def cnt(p: String) =
-            try s2.read.parquet(p).count() catch { case _: Throwable => 0L }
-          require(cnt(s"$tmp/acc") + cnt(s"$tmp/quar") == nDocs,
-            "gate lost or duplicated rows")
-        }
-      }),
       "stream_bloom_ingest" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        SparkEntry.withTempRoot(spark, "graft_bloom_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
+        fileStream(spark, docs) { (s2, src, tmp) =>
           val bi = new graft.streaming.BloomIngest(
             expectedItems = 1000000L, numBits = 8000000L)
-          val q = bi.start(src, s"$tmp/corpus", s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          val survived = s2.read.parquet(s"$tmp/corpus").count()
-          require(survived > 0 && survived <= nDocs,
-            s"bloom ingest kept $survived of $nDocs docs")
+          bi.start(src, s"$tmp/corpus", s"$tmp/ck")
+          () => {
+            val survived = s2.read.parquet(s"$tmp/corpus").count()
+            require(survived > 0 && survived <= nDocs,
+              s"bloom ingest kept $survived of $nDocs docs")
+          }
         }
       }),
       // index-maintaining streaming ingest: the amortized twin of
@@ -394,57 +435,42 @@ object Bench {
       // times, while the corpus whose re-banding it saves is only 5k
       // docs — the trade inverts where corpus >> batch (SCALING.md §12)
       "stream_indexed_ingest" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        SparkEntry.withTempRoot(spark, "graft_idxingest_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.IndexedIngest.start(
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          graft.streaming.IndexedIngest.start(
             src, s"$tmp/corpus", s"$tmp/index", s"$tmp/ck", threshold = 0.5)
-          q.processAllAvailable()
-          q.stop()
-          val survived = s2.read.parquet(s"$tmp/corpus")
-            .select("doc_id").distinct().count()
-          val indexed = s2.read.parquet(s"$tmp/index")
-            .select("doc_id").distinct().count()
-          require(survived > 0 && survived <= nDocs && indexed == survived,
-            s"indexed ingest kept $survived of $nDocs docs, index covers $indexed")
+          () => {
+            val survived = s2.read.parquet(s"$tmp/corpus")
+              .select("doc_id").distinct().count()
+            val indexed = s2.read.parquet(s"$tmp/index")
+              .select("doc_id").distinct().count()
+            require(survived > 0 && survived <= nDocs && indexed == survived,
+              s"indexed ingest kept $survived of $nDocs docs, index covers $indexed")
+          }
         }
       }),
-      // live corpus card: the documents table fed as a 4-batch file
-      // stream through the per-source additive-integer streaming
+      // live corpus card: the per-source additive-integer streaming
       // aggregate. Guard: the final complete-mode table equals the batch
       // datasheet's (n_docs, n_tokens, n_gopher_pass) exactly
       "stream_corpus_card" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("source"), col("lang"))
-        val batch = graft.llm.TextAnalysis.datasheet(
+        val batch = TextAnalysis.datasheet(
             docs, 30, 100000, 4.0, 10.0, 2, 0.8)
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(4),
             r.getLong(6))).sortBy(_._1).toSeq
-        SparkEntry.withTempRoot(spark, "graft_card_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.QualityGate.corpusCard(
-              src, 30, 100000, 4.0, 10.0, 2, 0.8)
-            .writeStream.format("memory").queryName("card_bench")
-            .outputMode("complete").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val streamed = s2.sql("SELECT * FROM card_bench").collect()
-            .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-            .sortBy(_._1).toSeq
-          require(streamed == batch,
-            s"live card has ${streamed.size} sources, batch ${batch.size}")
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          toMemory(graft.streaming.QualityGate.corpusCard(
+            src, 30, 100000, 4.0, 10.0, 2, 0.8), "card_bench", "complete", tmp)
+          () => {
+            val streamed = s2.sql("SELECT * FROM card_bench").collect()
+              .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+              .sortBy(_._1).toSeq
+            require(streamed == batch,
+              s"live card has ${streamed.size} sources, batch ${batch.size}")
+          }
         }
       }),
       // streaming drift-since-last-publish: the live card stitched
@@ -452,13 +478,10 @@ object Bench {
       // trigger. Guard: the final monitor partition equals the batch
       // corpusCardDiff's card columns over the same snapshot pair
       "stream_corpus_card_diff" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("source"), col("lang"))
         val release = docs.filter(col("doc_id") % 2 === 0)
-        val releaseCard = graft.llm.TextAnalysis.datasheet(
+        val releaseCard = TextAnalysis.datasheet(
             release, 30, 100000, 4.0, 10.0, 2, 0.8)
           .select(col("source"), col("n_docs"), col("n_tokens"),
             col("n_gopher_pass"))
@@ -469,112 +492,87 @@ object Bench {
             r.getAs[Long]("tokens_old"), r.getAs[Long]("tokens_new"),
             r.getAs[Long]("pass_old"), r.getAs[Long]("pass_new")))
           .sortBy(_._1).toSeq
-        SparkEntry.withTempRoot(spark, "graft_cdiff_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.QualityGate.corpusCardDiffStream(
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          graft.streaming.QualityGate.corpusCardDiffStream(
             src, releaseCard, s"$tmp/out", s"$tmp/ck",
             30, 100000, 4.0, 10.0, 2, 0.8)
-          q.processAllAvailable()
-          q.stop()
-          val out = s2.read.parquet(s"$tmp/out")
-          val last = out.agg(max(col("monitor_batch").cast("long"))).head().getLong(0)
-          val got = out.filter(col("monitor_batch") === last)
-            .collect().map(r => (r.getString(0),
-              r.getAs[Long]("docs_release"), r.getAs[Long]("docs_live"),
-              r.getAs[Long]("tokens_release"), r.getAs[Long]("tokens_live"),
-              r.getAs[Long]("pass_release"), r.getAs[Long]("pass_live")))
-            .sortBy(_._1).toSeq
-          require(got == expected,
-            s"drift monitor has ${got.size} sources, batch diff ${expected.size}")
+          () => {
+            val out = s2.read.parquet(s"$tmp/out")
+            val last = out.agg(max(col("monitor_batch").cast("long"))).head().getLong(0)
+            val got = out.filter(col("monitor_batch") === last)
+              .collect().map(r => (r.getString(0),
+                r.getAs[Long]("docs_release"), r.getAs[Long]("docs_live"),
+                r.getAs[Long]("tokens_release"), r.getAs[Long]("tokens_live"),
+                r.getAs[Long]("pass_release"), r.getAs[Long]("pass_live")))
+              .sortBy(_._1).toSeq
+            require(got == expected,
+              s"drift monitor has ${got.size} sources, batch diff ${expected.size}")
+          }
         }
       }),
-      // streaming span-cleaning ingest: the documents table fed as a
-      // 4-batch file stream, each batch stripping token runs already in
-      // the stored corpus via the maintained gram index (corpus text
-      // never read on the ingest path). Guard: every doc lands exactly
-      // once and later batches actually dropped tokens (the corpus has
-      // cross-doc duplication by construction)
+      // streaming span-cleaning ingest: each batch strips token runs
+      // already in the stored corpus via the maintained gram index
+      // (corpus text never read on the ingest path). Guard: every doc
+      // lands exactly once and later batches actually dropped tokens
+      // (the corpus has cross-doc duplication by construction)
       "stream_span_ingest" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        SparkEntry.withTempRoot(spark, "graft_spaning_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.SpanIngest.start(
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          graft.streaming.SpanIngest.start(
             src, s"$tmp/corpus", s"$tmp/index", s"$tmp/ck", n = 12)
-          q.processAllAvailable()
-          q.stop()
-          val out = s2.read.parquet(s"$tmp/corpus")
-          val landed = out.count()
-          val dropped = out.agg(coalesce(sum(col("n_dropped")), lit(0L)))
-            .head().getLong(0)
-          require(landed == nDocs && dropped > 0,
-            s"span ingest landed $landed of $nDocs docs, dropped $dropped tokens")
+          () => {
+            val out = s2.read.parquet(s"$tmp/corpus")
+            val landed = out.count()
+            val dropped = out.agg(coalesce(sum(col("n_dropped")), lit(0L)))
+              .head().getLong(0)
+            require(landed == nDocs && dropped > 0,
+              s"span ingest landed $landed of $nDocs docs, dropped $dropped tokens")
+          }
         }
       }),
-      // streaming vector-index ingest: the embeddings table fed as a
-      // 4-batch file stream, each micro-batch encoded against the frozen
-      // quantizer and appended as (cell, batch) partitions. Bitwise probe
-      // equality with ivfPqSearch is spec-pinned; guard here: the index
-      // covers every ingested vector and probes non-trivially
+      // streaming vector-index ingest: each micro-batch encoded against
+      // the frozen quantizer and appended as (cell, batch) partitions.
+      // Bitwise probe equality with ivfPqSearch is spec-pinned; guard
+      // here: the index covers every ingested vector and probes
+      // non-trivially
       "stream_vector_ingest" -> (() => {
-        import org.apache.spark.sql.functions._
-        import graft.llm.Similarity
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
         val nVecs = e.count()
         val quant = Similarity.trainIvfPqQuantizer(
           e, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), 4)
-        SparkEntry.withTempRoot(spark, "graft_vecing_bench") { tmp =>
-          e.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.VectorIndexIngest.start(
-            src, s"$tmp/idx", quant, s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          val idx = graft.streaming.VectorIndexIngest.index(s2, s"$tmp/idx")
-          val indexed = idx.count()
-          val hits = Similarity.ivfPqProbe(idx, quant,
-            Similarity.collectVectors(e, Seq(0L, 1L, 2L)), nprobe = 2, k = 10).count()
-          require(indexed == nVecs && hits > 0,
-            s"vector ingest indexed $indexed of $nVecs vectors, $hits probe hits")
+        fileStream(spark, e) { (s2, src, tmp) =>
+          graft.streaming.VectorIndexIngest.start(src, s"$tmp/idx", quant, s"$tmp/ck")
+          () => {
+            val idx = graft.streaming.VectorIndexIngest.index(s2, s"$tmp/idx")
+            val indexed = idx.count()
+            val hits = Similarity.ivfPqProbe(idx, quant,
+              Similarity.collectVectors(e, Seq(0L, 1L, 2L)), nprobe = 2, k = 10).count()
+            require(indexed == nVecs && hits > 0,
+              s"vector ingest indexed $indexed of $nVecs vectors, $hits probe hits")
+          }
         }
       }),
-      // streaming lexical-index ingest: the documents table fed as a
-      // 4-batch file stream, each batch landing its own postings + stats
-      // partitions (batch-local projection, no cross-batch read); probe
-      // the stored rows. Guard: probe equals the one-shot scorer's count
-      // and the summed stats equal the corpus totals
+      // streaming lexical-index ingest: each batch lands its own postings
+      // + stats partitions (batch-local projection, no cross-batch read);
+      // probe the stored rows. Guard: every doc has its stats row and the
+      // probe ranks
       "stream_lex_ingest" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nDocs = docs.count()
-        SparkEntry.withTempRoot(spark, "graft_lexing_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-          val q = graft.streaming.LexIngest.start(src, s"$tmp/idx", s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          // stats are per-DOCUMENT rows (the deletion-subtractable layout)
-          val n = s2.read.parquet(s"$tmp/idx/stats").count()
-          val hits = graft.streaming.LexIngest.probe(s2, s"$tmp/idx",
-            Seq("spark", "window", "customer", "filter"), 10).count()
-          require(n == nDocs && hits > 0,
-            s"lex ingest indexed $n of $nDocs docs, $hits ranked")
+        fileStream(spark, docs) { (s2, src, tmp) =>
+          graft.streaming.LexIngest.start(src, s"$tmp/idx", s"$tmp/ck")
+          () => {
+            // stats are per-DOCUMENT rows (the deletion-subtractable layout)
+            val n = s2.read.parquet(s"$tmp/idx/stats").count()
+            val hits = graft.streaming.LexIngest.probe(s2, s"$tmp/idx",
+              Seq("spark", "window", "customer", "filter"), 10).count()
+            require(n == nDocs && hits > 0,
+              s"lex ingest indexed $n of $nDocs docs, $hits ranked")
+          }
         }
       }),
       // the STREAMED SERVING tail end-to-end: docs and vectors file-
@@ -585,9 +583,8 @@ object Bench {
       // fetch against the vec store's liveView; the raw corpus frames
       // are never read on the query path (bitwise twin is spec-pinned).
       // Guard: each probe returns its full k and the MMR ids exist.
+      // Hand-written: two 2-file inputs feeding three queries
       "stream_rag_serve" -> (() => {
-        import org.apache.spark.sql.functions._
-        import graft.llm.Similarity
         val s2 = spark.newSession()
         s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -602,16 +599,11 @@ object Bench {
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/din")
           val vsrc = s2.readStream.schema(emb.schema)
             .option("maxFilesPerTrigger", 1).parquet(s"$tmp/vin")
-          val lexQ = graft.streaming.LexIngest.start(
-            dsrc, s"$tmp/lex", s"$tmp/ck1")
-          val idxQ = graft.streaming.VectorIndexIngest.start(
-            vsrc, s"$tmp/idx", quant, s"$tmp/ck2")
-          val vecQ = graft.streaming.VecStoreIngest.start(
-            vsrc, s"$tmp/vecs", s"$tmp/ck3")
-          try {
-            lexQ.processAllAvailable(); idxQ.processAllAvailable()
-            vecQ.processAllAvailable()
-          } finally { lexQ.stop(); idxQ.stop(); vecQ.stop() }
+          drained(s2) {
+            graft.streaming.LexIngest.start(dsrc, s"$tmp/lex", s"$tmp/ck1")
+            graft.streaming.VectorIndexIngest.start(vsrc, s"$tmp/idx", quant, s"$tmp/ck2")
+            graft.streaming.VecStoreIngest.start(vsrc, s"$tmp/vecs", s"$tmp/ck3")
+          }
           val prf = graft.streaming.LexIngest.prfProbe(s2, s"$tmp/lex",
             Seq("spark", "window", "customer", "filter"), 5, 3, 10).count()
           val mmr = Similarity.mmrRerankStored(
@@ -630,12 +622,11 @@ object Bench {
       // amortization claim is the probe reading |Q| term slices instead of
       // re-exploding the corpus per query
       "bm25_indexed" -> (() => {
-        import org.apache.spark.sql.functions._
         val d = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         SparkEntry.withTempRoot(spark, "graft_lex_bench") { tmp =>
-          graft.llm.TextAnalysis.writeLexIndex(d, tmp)
-          val hits = graft.llm.TextAnalysis.bm25Probe(spark, tmp,
+          TextAnalysis.writeLexIndex(d, tmp)
+          val hits = TextAnalysis.bm25Probe(spark, tmp,
             Seq("spark", "window", "customer", "filter"), 10).count()
           require(hits > 0, "empty BM25 ranking over the persisted index")
         }
@@ -646,8 +637,6 @@ object Bench {
       // guard: the fused top-k is non-empty and carries both modalities'
       // candidates (a dead retriever can't silently pass as fast)
       "hybrid_indexed" -> (() => {
-        import org.apache.spark.sql.functions._
-        import graft.llm.{Similarity, TextAnalysis}
         val d = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -676,8 +665,6 @@ object Bench {
       // store; the probe must stay correct (rows>0 and full coverage) and
       // the store must collapse to one generation
       "store_compaction" -> (() => {
-        import org.apache.spark.sql.functions._
-        import graft.llm.Similarity
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), col("embedding"))
         val nVecs = e.count()
@@ -698,124 +685,75 @@ object Bench {
             s"compacted store holds $indexed of $nVecs vectors, $hits probe hits")
         }
       }),
-      // streaming count-min sketch: the documents table fed as a 4-batch
-      // file stream, per-batch distributed CMS builds merged into driver
-      // state (cell-for-cell equality with the batch build is spec-
-      // pinned). Guard: the merged sketch's totalCount — an EXACT sum
-      // even in a CMS — equals the corpus token count
+      // streaming count-min sketch: per-batch distributed CMS builds
+      // merged into driver state (cell-for-cell equality with the batch
+      // build is spec-pinned). Guard: the merged sketch's totalCount — an
+      // EXACT sum even in a CMS — equals the corpus token count
       "stream_cms" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"))
         val nToks = docs.select(explode(
-          graft.llm.TextAnalysis.tokens(col("text"))).as("w")).count()
-        SparkEntry.withTempRoot(spark, "graft_cms_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
+          TextAnalysis.tokens(col("text"))).as("w")).count()
+        fileStream(spark, docs) { (_, src, tmp) =>
           val sk = new graft.streaming.StreamingSketch(
             eps = 0.001, confidence = 0.99, seed = 42)
-          val q = sk.start(src, s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          require(sk.snapshot.totalCount() == nToks,
+          sk.start(src, s"$tmp/ck")
+          () => require(sk.snapshot.totalCount() == nToks,
             s"streamed CMS saw ${sk.snapshot.totalCount()} tokens, corpus has $nToks")
         }
       }),
-      // streaming transition-matrix twin: the events table fed as a
-      // 4-batch file stream in ARBITRARY order — retraction makes the
-      // summed deltas order-independent. Guard: the summed cell deltas
-      // equal the batch transitionMatrix counts exactly
+      // streaming transition-matrix twin: the events fed in ARBITRARY
+      // order — retraction makes the summed deltas order-independent.
+      // Guard: the summed cell deltas equal the batch transitionMatrix
+      // counts exactly
       "stream_transitions" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val ev = graft.SparkEntry.events(spark, sfDir)
           .select(col("user_id"), col("event_id"), col("event_type"), col("tus"))
         val batch = graft.analytics.Analytics.transitionMatrix(ev).collect()
           .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-        SparkEntry.withTempRoot(spark, "graft_trans_bench") { tmp =>
-          ev.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
+        fileStream(spark, ev) { (s2, src, tmp) =>
           import s2.implicits._
-          val src = s2.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .as[graft.streaming.EventStream.SeqEvent]
-          val q = graft.streaming.EventStream.transitionCellUpdates(src)
-            .writeStream.format("memory").queryName("trans_bench")
-            .outputMode("update").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val streamed = s2.sql(
-            "SELECT prev_type, next_type, sum(delta) AS n FROM trans_bench " +
-              "GROUP BY 1, 2 HAVING sum(delta) <> 0").collect()
-            .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-          require(streamed == batch,
-            s"streamed transition matrix has ${streamed.size} cells, batch ${batch.size}")
+          toMemory(graft.streaming.EventStream.transitionCellUpdates(
+            src.as[graft.streaming.EventStream.SeqEvent]), "trans_bench", "update", tmp)
+          () => {
+            val streamed = s2.sql(
+              "SELECT prev_type, next_type, sum(delta) AS n FROM trans_bench " +
+                "GROUP BY 1, 2 HAVING sum(delta) <> 0").collect()
+              .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+            require(streamed == batch,
+              s"streamed transition matrix has ${streamed.size} cells, batch ${batch.size}")
+          }
         }
       }),
-      // streaming debounce: the events table fed as a 4-batch file
-      // stream in event-time order; state = ONE long per (user, type).
-      // Guard: the streamed kept set size equals the batch operator's
-      // (bitwise row equality is spec-pinned)
+      // streaming debounce: the events split into 4 event-time quarters,
+      // one trigger each in time order; state = ONE long per (user,
+      // type). Guard: the streamed kept set size equals the batch
+      // operator's (bitwise row equality is spec-pinned)
       "stream_debounce" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val gap = 86400L * 1000000L
         val ev = graft.SparkEntry.events(spark, sfDir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("tus"))
         val nBatch = graft.analytics.Analytics.debounceEvents(ev, gap).count()
-        SparkEntry.withTempRoot(spark, "graft_deb_bench") { tmp =>
-          // event-time-ordered 4-way split so triggers respect time
-          ev.withColumn("part", ntile(4).over(
-              org.apache.spark.sql.expressions.Window.orderBy(col("tus"), col("event_id"))))
-            .repartition(1).write.partitionBy("part")
-            .mode("overwrite").parquet(s"$tmp/in")
-          // FileStreamSource orders triggers by file MODIFICATION TIME, and
-          // one partitionBy write lands all four part files within the same
-          // clock tick — an mtime tie would let a later-part file fire first
-          // and compare a late event against newer state. Stamp strictly
-          // increasing mtimes in part order so trigger order is the event-
-          // time order by construction.
-          locally {
-            val inPath = new org.apache.hadoop.fs.Path(s"$tmp/in")
-            val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val base = System.currentTimeMillis()
-            for (p <- 1 to 4) {
-              val dir = new org.apache.hadoop.fs.Path(s"$tmp/in/part=$p")
-              fs.listStatus(dir)
-                .filter(_.getPath.getName.endsWith(".parquet"))
-                .foreach(st => fs.setTimes(st.getPath, base + p * 2000L, -1L))
-            }
-          }
+        val quarters = ev.withColumn("part", ntile(4).over(
+          org.apache.spark.sql.expressions.Window.orderBy(col("tus"), col("event_id"))))
+        fileStream(spark, quarters, partitioned = true) { (s2, src, tmp) =>
           import s2.implicits._
-          val src = s2.readStream
-            .schema("event_id LONG, user_id LONG, event_type STRING, tus LONG, part INT")
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .select(col("event_id"), col("user_id"), col("event_type"), col("tus"))
-            .as[graft.streaming.DebounceStream.Ev]
-          val q = graft.streaming.DebounceStream.debounceUpdates(src, gap)
-            .writeStream.format("memory").queryName("deb_bench")
-            .outputMode("append").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val kept = s2.sql("SELECT count(*) FROM deb_bench").head().getLong(0)
-          require(kept == nBatch,
-            s"streamed debounce kept $kept, batch kept $nBatch")
+          toMemory(graft.streaming.DebounceStream.debounceUpdates(
+            src.select(col("event_id"), col("user_id"), col("event_type"), col("tus"))
+              .as[graft.streaming.DebounceStream.Ev], gap), "deb_bench", "append", tmp)
+          () => {
+            val kept = s2.sql("SELECT count(*) FROM deb_bench").head().getLong(0)
+            require(kept == nBatch, s"streamed debounce kept $kept, batch kept $nBatch")
+          }
         }
       }),
-      // streaming as-of enrichment: the events table fed as a 4-batch
-      // event-time-ordered file stream; every click emits once with its
-      // latest prior view within the 1h horizon, state = TWO longs per
-      // user (vs the interval join's per-horizon pair buffer). Guard:
-      // the streamed match set equals the batch lastBeforeWithin
-      // (bitwise equality is spec-pinned on a tie/stale fixture)
+      // streaming as-of enrichment: the events split into 4 event-time
+      // quarters; every click emits once with its latest prior view
+      // within the 1h horizon, state = TWO longs per user (vs the
+      // interval join's per-horizon pair buffer). Guard: the streamed
+      // match set equals the batch lastBeforeWithin (bitwise equality is
+      // spec-pinned on a tie/stale fixture)
       "stream_asof_within" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val tol = 3600L * 1000000L
         val ev = graft.SparkEntry.events(spark, sfDir)
           .select(col("event_id"), col("user_id"), col("event_type"), col("tus"))
@@ -828,81 +766,51 @@ object Bench {
             Seq("user_id"), "tus", Seq("vtus"), tol)
           .agg(count(lit(1)), count(col("asof_vtus"))).head()
         val (nClicks, nMatched) = (batch.getLong(0), batch.getLong(1))
-        SparkEntry.withTempRoot(spark, "graft_asof_bench") { tmp =>
-          ev.withColumn("part", ntile(4).over(
-              org.apache.spark.sql.expressions.Window.orderBy(col("tus"), col("event_id"))))
-            .repartition(1).write.partitionBy("part")
-            .mode("overwrite").parquet(s"$tmp/in")
-          locally { // strictly increasing mtimes = event-time trigger order
-            val inPath = new org.apache.hadoop.fs.Path(s"$tmp/in")
-            val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val base = System.currentTimeMillis()
-            for (p <- 1 to 4) {
-              val dir = new org.apache.hadoop.fs.Path(s"$tmp/in/part=$p")
-              fs.listStatus(dir)
-                .filter(_.getPath.getName.endsWith(".parquet"))
-                .foreach(st => fs.setTimes(st.getPath, base + p * 2000L, -1L))
-            }
-          }
+        val quarters = ev.withColumn("part", ntile(4).over(
+          org.apache.spark.sql.expressions.Window.orderBy(col("tus"), col("event_id"))))
+        fileStream(spark, quarters, partitioned = true) { (s2, src, tmp) =>
           import s2.implicits._
-          val src = s2.readStream
-            .schema("event_id LONG, user_id LONG, event_type STRING, tus LONG, part INT")
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .select(col("user_id"), col("event_id"), col("event_type"), col("tus"))
-            .as[graft.streaming.EventStream.AsofEvent]
-          val q = graft.streaming.EventStream
-            .streamingAsofWithin(src, "click", "view", tol)
-            .writeStream.format("memory").queryName("asof_bench")
-            .outputMode("update").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val got = s2.sql("SELECT count(*), count(recent_view_us) FROM asof_bench").head()
-          require(got.getLong(0) == nClicks && got.getLong(1) == nMatched,
-            s"streamed as-of emitted ${got.getLong(0)}/${got.getLong(1)} " +
-              s"vs batch $nClicks/$nMatched")
+          toMemory(graft.streaming.EventStream.streamingAsofWithin(
+            src.select(col("user_id"), col("event_id"), col("event_type"), col("tus"))
+              .as[graft.streaming.EventStream.AsofEvent], "click", "view", tol),
+            "asof_bench", "update", tmp)
+          () => {
+            val got = s2.sql("SELECT count(*), count(recent_view_us) FROM asof_bench").head()
+            require(got.getLong(0) == nClicks && got.getLong(1) == nMatched,
+              s"streamed as-of emitted ${got.getLong(0)}/${got.getLong(1)} " +
+                s"vs batch $nClicks/$nMatched")
+          }
         }
       }),
-      // streaming SCD2 dimension maintenance: a 4-batch change stream
-      // derived from customer (each batch re-segments a disjoint key
-      // quarter) merges into a manifest-versioned history. Guard: 4
-      // committed versions, final history covers every key with exactly
-      // one open row (replay/torn semantics are spec-pinned)
+      // streaming SCD2 dimension maintenance: a change stream derived
+      // from customer (each batch re-segments a disjoint key quarter)
+      // merges into a manifest-versioned history. Guard: 4 committed
+      // versions, final history covers every key with exactly one open
+      // row (replay/torn semantics are spec-pinned)
       "stream_scd_ingest" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val changes = spark.read.parquet(s"$sfDir/customer.parquet")
           .select(col("c_custkey").as("key"),
             concat(col("c_mktsegment"), lit("_"), col("c_custkey") % 4).as("seg"),
             (col("c_custkey") % 4).as("part"))
         val nKeys = changes.count()
-        SparkEntry.withTempRoot(spark, "graft_scd_bench") { tmp =>
-          // one file per key quarter => exactly 4 micro-batches
-          changes.repartition(1).write.partitionBy("part")
-            .mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .select(col("key"), col("seg"))
-          val q = graft.streaming.ScdIngest.start(
-            src, s"$tmp/hist", "key", Seq("seg"), s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          val vs = graft.ops.ManifestSink.committedVersions(s2, s"$tmp/hist")
-          val hist = graft.streaming.ScdIngest.currentHistory(s2, s"$tmp/hist")
-          val open = hist.filter(col("is_current")).count()
-          require(vs.length == 4 && open == nKeys,
-            s"scd ingest committed ${vs.length} versions, $open/$nKeys open rows")
+        fileStream(spark, changes, partitioned = true) { (s2, src, tmp) =>
+          graft.streaming.ScdIngest.start(src.select(col("key"), col("seg")),
+            s"$tmp/hist", "key", Seq("seg"), s"$tmp/ck")
+          () => {
+            val vs = graft.ops.ManifestSink.committedVersions(s2, s"$tmp/hist")
+            val hist = graft.streaming.ScdIngest.currentHistory(s2, s"$tmp/hist")
+            val open = hist.filter(col("is_current")).count()
+            require(vs.length == 4 && open == nKeys,
+              s"scd ingest committed ${vs.length} versions, $open/$nKeys open rows")
+          }
         }
       }),
       // streaming point-in-time enrichment: the SCD read side live — a
-      // 4-batch fact stream resolves historical attrs against a
-      // committed 2-version history; streamed ≡ batch PIT is
+      // fact stream in 4 key quarters resolves historical attrs against
+      // a committed 2-version history; streamed ≡ batch PIT is
       // spec-pinned, the guard is full fact coverage with the
       // pre-version null region present
       "stream_scd_enrich" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val c = spark.read.parquet(s"$sfDir/customer.parquet")
           .select(col("c_custkey").as("key"), col("c_mktsegment").as("seg"))
         val hist = c.select(explode(array(
@@ -916,70 +824,53 @@ object Bench {
         val facts = c.select(col("key"), (col("key") % 12).as("t"),
           (col("key") % 4).as("part"))
         val nFacts = facts.count()
-        SparkEntry.withTempRoot(spark, "graft_enrich_bench") { tmp =>
+        fileStream(spark, facts, partitioned = true) { (s2, src, tmp) =>
           graft.ops.ManifestSink.publishAt(hist, s"$tmp/hist", 0L)
-          facts.repartition(1).write.partitionBy("part")
-            .mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream
-            .schema("key LONG, t LONG, part INT")
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .select(col("key"), col("t"))
-          val q = graft.streaming.ScdIngest.enrichStream(src, s"$tmp/hist",
-            s"$tmp/out", "key", "t", Seq("seg"), s"$tmp/ck")
-          q.processAllAvailable()
-          q.stop()
-          val out = s2.read.parquet(s"$tmp/out")
-          val n = out.count()
-          val v2 = out.filter(col("asof_seg").endsWith("_V2")).count()
-          val v1 = out.filter(col("asof_seg").isNotNull &&
-            !col("asof_seg").endsWith("_V2")).count()
-          val pre = out.filter(col("asof_seg").isNull).count()
-          require(n == nFacts && v1 > 0 && v2 > 0 && pre > 0,
-            s"enrich covered $n/$nFacts facts (v1=$v1, v2=$v2, pre=$pre)")
+          graft.streaming.ScdIngest.enrichStream(src.select(col("key"), col("t")),
+            s"$tmp/hist", s"$tmp/out", "key", "t", Seq("seg"), s"$tmp/ck")
+          () => {
+            val out = s2.read.parquet(s"$tmp/out")
+            val n = out.count()
+            val v2 = out.filter(col("asof_seg").endsWith("_V2")).count()
+            val v1 = out.filter(col("asof_seg").isNotNull &&
+              !col("asof_seg").endsWith("_V2")).count()
+            val pre = out.filter(col("asof_seg").isNull).count()
+            require(n == nFacts && v1 > 0 && v2 > 0 && pre > 0,
+              s"enrich covered $n/$nFacts facts (v1=$v1, v2=$v2, pre=$pre)")
+          }
         }
       }),
-      // streaming per-source token-budget gate: the documents table fed
-      // as a 4-batch file stream; per-source running totals live in
-      // flatMapGroupsWithState state (ONE long per source). Guard: every
-      // source admits at least one doc and no source exceeds its budget
-      // among kept rows (single-batch equality with the batch sampler is
-      // spec-pinned in StreamingSpec)
+      // streaming per-source token-budget gate: per-source running totals
+      // live in flatMapGroupsWithState state (ONE long per source).
+      // Guard: every source admits at least one doc and no source exceeds
+      // its budget among kept rows (single-batch equality with the batch
+      // sampler is spec-pinned in StreamingSpec)
       "stream_budget_gate" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("source"), col("text"))
-        SparkEntry.withTempRoot(spark, "graft_budget_bench") { tmp =>
-          docs.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
-          val src = s2.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .select(col("doc_id"), col("source"),
-              expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_toks"),
-              graft.llm.TextAnalysis.fingerprint(col("text")).as("fp"))
+        val budget = 2000L
+        fileStream(spark, docs) { (s2, src, tmp) =>
           import s2.implicits._
-          val budget = 2000L
-          val q = graft.streaming.BudgetIngest.tokenBudgetUpdates(
-              src.as[graft.streaming.BudgetIngest.BudgetDoc], Map.empty, budget)
-            .writeStream.format("memory").queryName("budget_bench")
-            .outputMode("update").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val kept = s2.sql("SELECT source, count(*) AS n, max(cum_toks) AS mx " +
-            "FROM budget_bench WHERE kept GROUP BY source").collect()
-          require(kept.nonEmpty && kept.forall(_.getLong(2) <= budget),
-            s"budget gate: ${kept.length} sources, max cum ${kept.map(_.getLong(2)).maxOption}")
+          val sized = src.select(col("doc_id"), col("source"),
+              expr("CAST(size(split(text, ' ')) AS BIGINT)").as("n_toks"),
+              TextAnalysis.fingerprint(col("text")).as("fp"))
+            .as[graft.streaming.BudgetIngest.BudgetDoc]
+          toMemory(graft.streaming.BudgetIngest.tokenBudgetUpdates(sized, Map.empty, budget),
+            "budget_bench", "update", tmp)
+          () => {
+            val kept = s2.sql("SELECT source, count(*) AS n, max(cum_toks) AS mx " +
+              "FROM budget_bench WHERE kept GROUP BY source").collect()
+            require(kept.nonEmpty && kept.forall(_.getLong(2) <= budget),
+              s"budget gate: ${kept.length} sources, max cum ${kept.map(_.getLong(2)).maxOption}")
+          }
         }
       }),
       // streaming drift monitor: TV + KS emitted per trigger from ONE
-      // per-source histogram state, documents fed as a 4-batch file
-      // stream against a corpus-derived reference histogram. Streamed
-      // values ≡ direct recomputation is spec-pinned (StreamingSpec);
-      // the guard here is non-empty output with every tv/ks in [0, 1]
+      // per-source histogram state against a corpus-derived reference
+      // histogram. Streamed values ≡ direct recomputation is spec-pinned
+      // (StreamingSpec); the guard here is non-empty output with every
+      // tv/ks in [0, 1]
       "stream_drift_monitor" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val nbins = 20
         val width = 10L
         val binned = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -989,33 +880,26 @@ object Bench {
         val ref = Array.fill(nbins)(0L)
         binned.groupBy(col("bin")).count().collect()
           .foreach(r => ref(r.getInt(0)) = r.getLong(1))
-        SparkEntry.withTempRoot(spark, "graft_drift_bench") { tmp =>
-          binned.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
+        fileStream(spark, binned) { (s2, src, tmp) =>
           import s2.implicits._
-          val src = s2.readStream.schema(binned.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .as[graft.streaming.DriftMonitor.BinnedDoc]
-          val q = graft.streaming.DriftMonitor.sourceDriftUpdates(src, ref.toSeq)
-            .writeStream.format("memory").queryName("drift_bench")
-            .outputMode("update").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val rows = s2.sql("SELECT tv, ks FROM drift_bench").collect()
-          require(rows.nonEmpty && rows.forall(r =>
-            r.getDouble(0) >= 0.0 && r.getDouble(0) <= 1.0 &&
-              r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0),
-            s"drift monitor emitted ${rows.length} rows with out-of-range stats")
+          toMemory(graft.streaming.DriftMonitor.sourceDriftUpdates(
+              src.as[graft.streaming.DriftMonitor.BinnedDoc], ref.toSeq),
+            "drift_bench", "update", tmp)
+          () => {
+            val rows = s2.sql("SELECT tv, ks FROM drift_bench").collect()
+            require(rows.nonEmpty && rows.forall(r =>
+              r.getDouble(0) >= 0.0 && r.getDouble(0) <= 1.0 &&
+                r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0),
+              s"drift monitor emitted ${rows.length} rows with out-of-range stats")
+          }
         }
       }),
       // streaming K-Means step: the engine core live — per-cell gridded
       // sufficient statistics in state (dim+1 longs per cell), the
-      // embeddings table fed as a 4-batch file stream against 4 fixed
-      // epoch centroids. Final-trigger ≡ batch step bitwise is
-      // spec-pinned; the guard is full corpus coverage across cells
+      // embeddings against 4 fixed epoch centroids. Final-trigger ≡
+      // batch step bitwise is spec-pinned; the guard is full corpus
+      // coverage across cells
       "stream_vkmeans_step" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
         val cents = e.filter(col("vec_id").isin(11L, 57L, 201L, 401L))
@@ -1025,81 +909,60 @@ object Bench {
         val assigned = e.select(
           graft.llm.VectorKMeans.cellOf(col("vec"), cents).as("cell"), col("vec"))
         val nVecs = assigned.count()
-        SparkEntry.withTempRoot(spark, "graft_vkstream_bench") { tmp =>
-          assigned.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
+        fileStream(spark, assigned) { (s2, src, tmp) =>
           import s2.implicits._
-          val src = s2.readStream.schema(assigned.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .as[graft.streaming.VectorKMeansStream.AssignedVec]
-          val q = graft.streaming.VectorKMeansStream.stepUpdates(src, dim)
-            .writeStream.format("memory").queryName("vkstep_bench")
-            .outputMode("update").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          // last emission per cell: counts must cover the whole corpus
-          val covered = s2.sql("SELECT cell, max(n_vecs) FROM vkstep_bench GROUP BY cell")
-            .collect().map(_.getLong(1)).sum
-          require(covered == nVecs,
-            s"streamed step covered $covered of $nVecs vectors")
+          toMemory(graft.streaming.VectorKMeansStream.stepUpdates(
+              src.as[graft.streaming.VectorKMeansStream.AssignedVec], dim),
+            "vkstep_bench", "update", tmp)
+          () => {
+            // last emission per cell: counts must cover the whole corpus
+            val covered = s2.sql("SELECT cell, max(n_vecs) FROM vkstep_bench GROUP BY cell")
+              .collect().map(_.getLong(1)).sum
+            require(covered == nVecs, s"streamed step covered $covered of $nVecs vectors")
+          }
         }
       }),
       // streaming per-label embedding drift: int8 code sums per label in
-      // flatMapGroupsWithState state (dim+1 longs per label, constant),
-      // the embeddings table fed as a 4-batch file stream against the
-      // corpus-global reference sums. Streamed ≡ batch labelDrift
-      // bitwise is spec-pinned; the guard here is full label coverage
-      // with every cosine in [-1, 1]
+      // flatMapGroupsWithState state (dim+1 longs per label, constant)
+      // against the corpus-global reference sums. Streamed ≡ batch
+      // labelDrift bitwise is spec-pinned; the guard here is full label
+      // coverage with every cosine in [-1, 1]
       "stream_label_drift" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
-        val coded = graft.llm.Similarity.int8CodeRows(
+        val coded = Similarity.int8CodeRows(
           spark.read.parquet(s"$sfDir/embeddings.parquet"))
         val reference = coded
           .select(posexplode(col("codes")).as(Seq("pos", "code")))
           .groupBy(col("pos")).agg(sum(col("code")).as("s"))
           .orderBy(col("pos")).collect().map(_.getLong(1)).toSeq
         val nLabels = coded.select(col("label")).distinct().count()
-        SparkEntry.withTempRoot(spark, "graft_ldrift_bench") { tmp =>
-          coded.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
+        fileStream(spark, coded) { (s2, src, tmp) =>
           import s2.implicits._
-          val src = s2.readStream.schema(coded.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .as[graft.streaming.LabelDriftMonitor.CodedVec]
-          val q = graft.streaming.LabelDriftMonitor.labelDriftUpdates(src, reference)
-            .writeStream.format("memory").queryName("ldrift_bench")
-            .outputMode("update").option("checkpointLocation", s"$tmp/ck").start()
-          q.processAllAvailable()
-          q.stop()
-          val rows = s2.sql("SELECT DISTINCT label FROM ldrift_bench").collect()
-          val cos = s2.sql("SELECT cos_drift FROM ldrift_bench WHERE cos_drift IS NOT NULL")
-            .collect().map(_.getDouble(0))
-          require(rows.length == nLabels && cos.nonEmpty &&
-            cos.forall(c => c >= -1.0 && c <= 1.0),
-            s"label drift covered ${rows.length}/$nLabels labels")
+          toMemory(graft.streaming.LabelDriftMonitor.labelDriftUpdates(
+              src.as[graft.streaming.LabelDriftMonitor.CodedVec], reference),
+            "ldrift_bench", "update", tmp)
+          () => {
+            val rows = s2.sql("SELECT DISTINCT label FROM ldrift_bench").collect()
+            val cos = s2.sql("SELECT cos_drift FROM ldrift_bench WHERE cos_drift IS NOT NULL")
+              .collect().map(_.getDouble(0))
+            require(rows.length == nLabels && cos.nonEmpty &&
+              cos.forall(c => c >= -1.0 && c <= 1.0),
+              s"label drift covered ${rows.length}/$nLabels labels")
+          }
         }
       }),
       // streaming retention-matrix deltas (flatMapGroupsWithState with
-      // retraction on late cohort rebases): the events table fed as a
-      // 4-batch file stream of (user_id, hour); summed deltas must
-      // reproduce the batch matrix (spec-pinned; here the guard is
-      // non-empty positive cells). State shards by user — the shuffle
-      // width IS the state-store count, sized to the stream
+      // retraction on late cohort rebases) over (user_id, hour); summed
+      // deltas must reproduce the batch matrix (spec-pinned; here the
+      // guard is non-empty positive cells). State shards by user — the
+      // shuffle width IS the state-store count, sized to the stream
       "stream_retention" -> (() => {
-        import org.apache.spark.sql.functions._
-        val s2 = spark.newSession()
-        s2.conf.set("spark.sql.session.timeZone", "UTC")
-        s2.conf.set("spark.sql.shuffle.partitions", "8")
         val ev = SparkEntry.events(spark, sfDir)
           .select(col("user_id"), expr("tus div 3600000000").as("hour"))
-        SparkEntry.withTempRoot(spark, "graft_retention_bench") { tmp =>
-          ev.repartition(4).write.mode("overwrite").parquet(s"$tmp/in")
+        fileStream(spark, ev) { (s2, src, _) =>
           import s2.implicits._
-          val src = s2.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-            .as[graft.streaming.EventStream.HourEvent]
           val cells = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-          val q = graft.streaming.EventStream.retentionCellUpdates(src)
+          graft.streaming.EventStream.retentionCellUpdates(
+              src.as[graft.streaming.EventStream.HourEvent])
             .toDF()
             .writeStream.outputMode("update")
             .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -1111,9 +974,7 @@ object Bench {
               ()
             })
             .start()
-          q.processAllAvailable()
-          q.stop()
-          require(cells.valuesIterator.exists(_ > 0L),
+          () => require(cells.valuesIterator.exists(_ > 0L),
             "no positive retention cells from the stream")
         }
       }))

@@ -42,6 +42,16 @@ object Tasks {
 
   def writeIteration(outDir: String, i: Int, centers: Seq[(Int, Point)]): Unit =
     Sinks.writeCentroidsTsv(s"$outDir/iteration_$i/part-r-00000", centers)
+
+  /** The C4 hook body of the Silhouette mains: iteration `i`'s
+    * clustered-data file is the raw lines assigned against the
+    * iteration's input centroids `prev` (the reference reducer's
+    * clustered output), and its silhouette lines go to stdout. */
+  def evaluate(c: Ctx, i: Int, prev: Seq[Point], assigned: DataFrame): Unit = {
+    Sinks.writeClusteredDataFile(s"${c.outDir}/iteration_$i", Assign.assign(c.raw, prev))
+    Silhouette.metricLines(Silhouette.collectMetrics(assigned, guards = true))
+      .foreach(l => println(s"iteration $i: $l"))
+  }
 }
 
 /** Reference Task1: one K-Means iteration (reference `Task1.java:101-124`). */
@@ -124,17 +134,11 @@ object Silhouette1 {
 object Silhouette2 {
   def main(args: Array[String]): Unit = {
     val c = Tasks.ctx(args, "/tmp/graft-out/Silhouette2")
-    // iteration i's file is the assignment against iteration i's SEEDS
-    // (the reference reducer's clustered output), so track seeds explicitly
     var prev = c.seeds
-    for (i <- 0 until 5) {
-      val assigned = Assign.assign(c.raw, prev)
-      Sinks.writeClusteredDataFile(s"${c.outDir}/iteration_$i", assigned)
-      Silhouette.metricLines(
-        Silhouette.collectMetrics(Assign.assign(c.points, prev), guards = true))
-        .foreach(l => println(s"iteration $i: $l"))
-      prev = KMeansRunner.step(c.points, prev).map(_._2)
-    }
+    KMeansRunner.fixedIterations(c.points, c.seeds, 5, (i, centers, assigned) => {
+      Tasks.evaluate(c, i, prev, assigned)
+      prev = centers.map(_._2)
+    })
     c.spark.stop()
   }
 }
@@ -145,21 +149,14 @@ object Silhouette3 {
   def main(args: Array[String]): Unit = {
     val c = Tasks.ctx(args, "/tmp/graft-out/Silhouette3")
     var prev = c.seeds
-    var i = 0
-    var converged = false
-    while (i < 30 && !converged) {
-      val assigned = Assign.assign(c.raw, prev)
-      Sinks.writeClusteredDataFile(s"${c.outDir}/iteration_$i", assigned)
-      Silhouette.metricLines(
-        Silhouette.collectMetrics(Assign.assign(c.points, prev), guards = true))
-        .foreach(l => println(s"iteration $i: $l"))
-      val curr = KMeansRunner.step(c.points, prev).map(_._2)
-      val d = KMeansRunner.displacement(prev, curr)
-      println(s"Centroid displacement after iteration $i: $d")
-      converged = d < 5.0
-      prev = curr
-      i += 1
-    }
+    KMeansRunner.converge(c.points, c.seeds, maxIter = 30, threshold = 5.0,
+      (i, centers, assigned) => {
+        Tasks.evaluate(c, i, prev, assigned)
+        val curr = centers.map(_._2)
+        println(s"Centroid displacement after iteration $i: " +
+          KMeansRunner.displacement(prev, curr))
+        prev = curr
+      })
     c.spark.stop()
   }
 }

@@ -279,7 +279,11 @@ object KMeansRunner {
 
   /** C1: one iteration — assign + re-center, collecting K rows to the driver. */
   def step(points: DataFrame, centroids: Seq[Point]): Seq[(Int, Point)] =
-    Recenter.recenter(Assign.assign(points, centroids))
+    recentered(Assign.assign(points, centroids))
+
+  /** The re-centre half of [[step]] over an already assigned frame. */
+  private def recentered(assigned: DataFrame): Seq[(Int, Point)] =
+    Recenter.recenter(assigned)
       .collect()
       .map(r => r.getInt(0) -> Point(r.getDouble(1), r.getDouble(2), r.getDouble(3)))
       .sortBy(_._1)
@@ -297,9 +301,12 @@ object KMeansRunner {
     }.sum
 
   /** C4: per-iteration hook — called after each iteration with
-    * (iterationIndex, centers, assignedDataFrame). The reference runs its
-    * silhouette evaluation here (reference `SilhouetteEvaluation2.java:275-278`);
-    * sinks can snapshot `iteration_i` files. No-op by default. */
+    * (iterationIndex, centers, assignedDataFrame), where the frame is the
+    * iteration's assignment against its input centroids, the one the
+    * centers were re-centred from. The reference runs its silhouette
+    * evaluation here (reference `SilhouetteEvaluation2.java:275-278`;
+    * `cli.Silhouette2`/`Silhouette3`); sinks can snapshot `iteration_i`
+    * files. No-op by default. */
   type IterationHook = (Int, Seq[(Int, Point)], DataFrame) => Unit
   val noHook: IterationHook = (_, _, _) => ()
 
@@ -319,7 +326,7 @@ object KMeansRunner {
 
   private def run(points: DataFrame, seeds: Seq[Point],
                   maxIter: Int, threshold: Option[Double],
-                  hook: IterationHook = noHook): Result = {
+                  hook: IterationHook): Result = {
     val managedCache = points.storageLevel == StorageLevel.NONE
     if (managedCache) Cached.keep(points)
     try {
@@ -330,9 +337,10 @@ object KMeansRunner {
       var converged = false
       var i = 0
       while (i < maxIter && !converged) {
-        centers = step(points, prev)
+        val assigned = Assign.assign(points, prev)
+        centers = recentered(assigned)
         history :+= centers
-        hook(i, centers, Assign.assign(points, prev))
+        hook(i, centers, assigned)
         val curr = centers.map(_._2)
         val d = displacement(prev, curr)
         displacements :+= d

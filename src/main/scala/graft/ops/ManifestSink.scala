@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import scala.jdk.CollectionConverters._
-
 /** Manifest-committed batch publishing — atomic table swaps without a
   * table format, the pattern object-store pipelines use when Delta/
   * Iceberg are not on the classpath (and the reason those formats

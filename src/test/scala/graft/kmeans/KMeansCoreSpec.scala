@@ -66,11 +66,19 @@ class KMeansCoreSpec extends SparkSpec {
   }
 
   test("per-iteration hook (C4) fires once per iteration with the assignment") {
-    val pts = Seq((0.0, 0.0, 0.0), (2.0, 0.0, 0.0)).toDF("x", "y", "z")
+    // (5, 0, 0) moves from cluster 1 to cluster 0 after iteration 0, so
+    // an assignment against any other iteration's centroids differs
+    val pts = Seq((3.5, 0.0, 0.0), (5.0, 0.0, 0.0), (9.0, 0.0, 0.0)).toDF("x", "y", "z")
     var calls = Vector.empty[(Int, Long)]
-    KMeansRunner.fixedIterations(pts, seeds, 2, (i, _, assigned) =>
-      calls :+= (i, assigned.count()))
-    calls shouldBe Vector((0, 2L), (1, 2L))
+    var inputs = seeds
+    def clusters(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("x").select("cluster").as[Int].collect().toSeq
+    KMeansRunner.fixedIterations(pts, seeds, 2, (i, centers, assigned) => {
+      calls :+= (i, assigned.count())
+      clusters(assigned) shouldBe clusters(Assign.assign(pts, inputs))
+      inputs = centers.map(_._2)
+    })
+    calls shouldBe Vector((0, 3L), (1, 3L))
   }
 
   test("finalCentersLines prints positional indices, not stored cluster ids") {
