@@ -359,6 +359,7 @@ object Bench {
           drained(s2) {
             graft.streaming.EventStream.clickAttribution(vs, cs, horizonSec = 3600)
               .writeStream
+              .option("checkpointLocation", s"$tmp/ck")
               .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                              _: Long) => { pairs += batch.count(); () })
               .start()
@@ -958,13 +959,14 @@ object Bench {
       "stream_retention" -> (() => {
         val ev = SparkEntry.events(spark, sfDir)
           .select(col("user_id"), expr("tus div 3600000000").as("hour"))
-        fileStream(spark, ev) { (s2, src, _) =>
+        fileStream(spark, ev) { (s2, src, tmp) =>
           import s2.implicits._
           val cells = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
           graft.streaming.EventStream.retentionCellUpdates(
               src.as[graft.streaming.EventStream.HourEvent])
             .toDF()
             .writeStream.outputMode("update")
+            .option("checkpointLocation", s"$tmp/ck")
             .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                            _: Long) => {
               batch.collect().foreach { r =>

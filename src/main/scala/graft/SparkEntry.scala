@@ -2061,8 +2061,7 @@ object SparkEntry {
       oracle = "SELECT user_id, round(sum(value), 4) AS total, count(*) AS n " +
         "FROM events GROUP BY user_id ORDER BY user_id"),
 
-    // Gram matrix of the embedding corpus (join form; scale path =
-    // Similarity.gramMatrixAgg, spec-verified equal)
+    // Gram matrix of the embedding corpus (join form)
     line("q_gram")((s, dir) =>
       Similarity.gramMatrix(emb(s, dir)).orderBy(col("i"), col("j")),
       // positions are 1-based on both sides and DERIVED FROM THE DATA on
@@ -3300,7 +3299,7 @@ object SparkEntry {
 
     // DESCRIBE DETAIL for an ingest-built store, before and after the
     // compact+vacuum maintenance pass: commit state, partition pressure
-    // (the compactIfNeeded trigger quantity), forget backlog, and the
+    // (live batches above the watershed), forget backlog, and the
     // committed/live row counts whose gap is what a compact physically
     // drops — the operational summary as a hash-checked fact. describe
     // is fully eager (driver-side listing + counted aggregates), so the

@@ -660,8 +660,8 @@ object Similarity {
     * SQL-mirrorable contract form): explode positions, self-join per
     * vector, hash-aggregate the d² cells. Output: (i, j, g), 1-based.
     *
-    * Fine at contract scale; the pair-row blowup is rows·d², so use
-    * `gramMatrixAgg` beyond toy sizes. */
+    * Fine at contract scale; the pair-row blowup is rows·d², which
+    * `gramRaw`'s treeAggregate avoids beyond toy sizes. */
   def gramMatrix(emb: DataFrame): DataFrame = {
     val e = emb.select(col("vec_id"), v(col("embedding")).as("vec"))
       .repartition(emb.sparkSession.sessionState.conf.numShufflePartitions)
@@ -673,29 +673,13 @@ object Similarity {
       .agg(round(sum(col("x") * col("y")), 4).as("g"))
   }
 
-  /** The 100 TB formulation: `treeAggregate` accumulates a local d×d
-    * matrix in a primitive array per partition (no pair rows ever
-    * materialize), then merges partials in a tree ON EXECUTORS — the
-    * driver receives ONE d² matrix, not #partitions of them, so the
-    * operator scales to any partition count (the same (sum,count)-style
-    * algebraic decomposition as Recenter, lifted to matrices). Shuffles
-    * nothing; network cost is O(d² · log partitions) spread over the
-    * tree. Output: (i, j, g), 1-based, same layout as `gramMatrix`. */
-  def gramMatrixAgg(emb: DataFrame, depth: Int = 2): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val (d, total) = gramRaw(emb, depth)
-    // same 4-decimal output contract as the join form (values may still
-    // differ by one rounding step when the float sums straddle a boundary)
-    val rows = for (i <- 0 until d; j <- 0 until d)
-      yield ((i + 1).toLong, (j + 1).toLong,
-        BigDecimal(total(i * d + j)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
-    rows.toDF("i", "j", "g")
-  }
-
-  /** The raw (unrounded) flattened d×d gram matrix via treeAggregate —
-    * shared by `gramMatrixAgg` and the PCA power iteration. */
-  private[graft] def gramRaw(emb: DataFrame, depth: Int = 2): (Int, Array[Double]) = {
+  /** The raw (unrounded) flattened d×d gram matrix for the PCA power
+    * iteration, the 100 TB formulation: `treeAggregate` accumulates a
+    * local d×d matrix in a primitive array per partition (no pair rows
+    * ever materialize), then merges partials in a tree ON EXECUTORS, so
+    * the driver receives ONE d² matrix whatever the partition count.
+    * Shuffles nothing. */
+  private[graft] def gramRaw(emb: DataFrame): (Int, Array[Double]) = {
     val spark = emb.sparkSession
     import spark.implicits._
     // accumulator: (dim, flattened d×d sums); dim 0 = "nothing seen yet"
@@ -721,14 +705,13 @@ object Similarity {
           if (da == 0) (db, pb)
           else if (db == 0) (da, pa)
           else {
-            require(da == db, s"gramMatrixAgg: inconsistent dims $da vs $db")
+            require(da == db, s"gramRaw: inconsistent dims $da vs $db")
             var k = 0
             while (k < pa.length) { pa(k) += pb(k); k += 1 }
             (da, pa)
           }
-        },
-        depth = depth)
-    require(d > 0, "gramMatrixAgg: empty embedding table")
+        })
+    require(d > 0, "gramRaw: empty embedding table")
     (d, total)
   }
 

@@ -22,11 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     its file list: in-flight publishes, failed-job orphans and
   *     uncommitted data directories are invisible, and a reader that
   *     resolved version N−1 keeps working through a publish (snapshot
-  *     isolation by immutability);
-  *   - [[vacuum]] deletes data directories not referenced by the
-  *     latest manifest — run it when in-flight readers of older
-  *     versions are done (the caller's retention policy; the same
-  *     contract as a table format's VACUUM).
+  *     isolation by immutability).
   *
   * Scale: the manifest is O(files) metadata; publish adds one rename
   * to a normal parquet write; reads pass an explicit file list to the
@@ -46,20 +42,10 @@ object ManifestSink {
       .sortBy(_._1)
   }
 
-  def currentVersion(spark: SparkSession, dir: String): Option[Long] =
-    committed(spark, dir).lastOption.map(_._1)
-
   /** Committed versions in ascending order — the explicit-version
     * surface the streaming exactly-once consumers resolve against. */
   def committedVersions(spark: SparkSession, dir: String): Seq[Long] =
     committed(spark, dir).map(_._1)
-
-  /** Publishes `df` as the next version of `dir`; returns the version. */
-  def publish(df: DataFrame, dir: String): Long = {
-    val v = currentVersion(df.sparkSession, dir).map(_ + 1).getOrElse(0L)
-    writeAndCommit(df, dir, v, tornOverwrite = false)
-    v
-  }
 
   /** Publishes `df` at an EXPLICIT version — the streaming exactly-once
     * surface: with version = the micro-batch id, a replayed batch
@@ -73,27 +59,21 @@ object ManifestSink {
     require(!committedVersions(df.sparkSession, dir).contains(version),
       s"version $version is already committed under $dir — a replayed " +
         "batch should skip, not republish")
-    writeAndCommit(df, dir, version, tornOverwrite = true)
-  }
-
-  private def writeAndCommit(df: DataFrame, dir: String, v: Long,
-                             tornOverwrite: Boolean): Unit = {
-    val spark = df.sparkSession
-    val fs = fsOf(spark, dir)
-    val dataDir = s"$dir/data-v$v"
-    if (tornOverwrite && fs.exists(new Path(dataDir)))
+    val fs = fsOf(df.sparkSession, dir)
+    val dataDir = s"$dir/data-v$version"
+    if (fs.exists(new Path(dataDir)))
       fs.delete(new Path(dataDir), true)
     df.write.mode("errorifexists").parquet(dataDir)
     val files = fs.listStatus(new Path(dataDir)).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .map(_.getPath.getName).sorted
     require(files.nonEmpty, s"manifest publish of an empty write: $dataDir")
-    val tmp = new Path(dir, s"manifest-$v.tmp")
+    val tmp = new Path(dir, s"manifest-$version.tmp")
     val out = fs.create(tmp, true)
-    try out.write(files.map(n => s"data-v$v/$n").mkString("", "\n", "\n")
+    try out.write(files.map(n => s"data-v$version/$n").mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val dst = new Path(dir, s"manifest-$v")
+    val dst = new Path(dir, s"manifest-$version")
     if (!fs.rename(tmp, dst) || !fs.exists(dst))
       throw new java.io.IOException(s"manifest commit $tmp -> $dst failed")
   }
@@ -118,33 +98,4 @@ object ManifestSink {
   /** Reads a SPECIFIC committed version — the time-travel/replay read. */
   def readAt(spark: SparkSession, dir: String, version: Long): DataFrame =
     spark.read.parquet(manifestFiles(spark, dir, Some(version)): _*)
-
-  /** Deletes data directories not referenced by the LATEST manifest
-    * (older versions and uncommitted/failed publishes). Returns the
-    * number of directories removed. */
-  def vacuum(spark: SparkSession, dir: String): Int =
-    vacuum(spark, dir, keepLast = 1)
-
-  /** Retention-aware vacuum: keeps the `keepLast` NEWEST committed
-    * versions readable (their data and manifests), deletes everything
-    * older plus uncommitted/failed publish leftovers. `keepLast` is the
-    * time-travel retention window for [[readAt]] consumers (the
-    * streaming SCD history keeps a few versions so replays and
-    * point-in-time readers can resolve their base snapshots); the
-    * 1-argument form is the keep-only-latest contract a plain published
-    * table wants. */
-  def vacuum(spark: SparkSession, dir: String, keepLast: Int): Int = {
-    require(keepLast >= 1, s"need keepLast >= 1, got $keepLast")
-    val fs = fsOf(spark, dir)
-    val all = committed(spark, dir)
-    val kept = all.takeRight(keepLast)
-    val live = kept.map { case (v, _) => s"data-v$v" }.toSet
-    val dataDirs = Option(fs.globStatus(new Path(dir, "data-v*"))).map(_.toSeq).getOrElse(Seq.empty)
-      .filter(_.isDirectory).map(_.getPath)
-      .filterNot(p => live.contains(p.getName))
-    val staleManifests = all.dropRight(keepLast).map(_._2)
-    dataDirs.foreach(p => fs.delete(p, true))
-    staleManifests.foreach(p => fs.delete(p, false))
-    dataDirs.size
-  }
 }

@@ -248,16 +248,6 @@ object ScdMerge {
   def eraseKeys(history: DataFrame, keys: DataFrame, key: String): DataFrame =
     history.join(broadcast(keys.select(col(key)).distinct()), Seq(key), "left_anti")
 
-  /** [[eraseKeys]] for a driver-side id list: compiles to a NOT IN
-    * data filter (no join at all — it pushes into the history scan).
-    * Null-key rows are KEPT, matching the anti-join arm: a bare
-    * `NOT isin` evaluates to null on them and would silently drop rows
-    * no one asked to erase. */
-  def erase(history: DataFrame, key: String, ids: Seq[Long]): DataFrame = {
-    require(ids.nonEmpty, "erase needs at least one key")
-    history.filter(col(key).isNull || !col(key).isin(ids: _*))
-  }
-
   /** Point-in-time dimension lookup against an SCD2 history — the read
     * side of [[merge]]: each fact row gets the attribute values that
     * were CURRENT at its version stamp (`asof_<attr>` columns; null

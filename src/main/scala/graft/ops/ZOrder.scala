@@ -128,33 +128,4 @@ object ZOrder {
       if (i == 0) spreadNSql(e, n) else s"(${spreadNSql(e, n)} << $i)"
     }.mkString("(", " | ", ")")
   }
-
-  /** OPTIMIZE ZORDER as a write: cluster `df` by the Morton key of
-    * `dims` (2-4 integer columns) and write it so row-group min/max
-    * stats are tight on EVERY dimension (ZOrderSkipSpec measures the
-    * resulting pruning from the parquet footers).
-    *
-    *   - `repartitionByRange` on the key balances output files by key
-    *     RANGE (each file owns a contiguous Morton interval — exactly
-    *     what makes per-FILE min/max prunable too, not just row
-    *     groups). The range boundaries come from Spark's reservoir
-    *     sampling of the key, so file SPLITS may vary run-to-run while
-    *     file contents stay sorted; the layout contract is the ORDER,
-    *     which is deterministic.
-    *   - the key column is dropped before the write: it is derivable,
-    *     and persisting it would widen every scan.
-    *
-    * At 100 TB this is the whole job: one shuffle (the range exchange)
-    * + a sorted write; no window, no join, no driver state. */
-  def writeClustered(df: org.apache.spark.sql.DataFrame, dims: Seq[Column],
-                     path: String, numFiles: Int,
-                     rowGroupBytes: Long = 128L << 20): Unit = {
-    require(numFiles >= 1, s"need numFiles >= 1, got $numFiles")
-    df.withColumn("__zkey", keyN(dims))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions(col("__zkey"))
-      .drop("__zkey")
-      .write.option("parquet.block.size", rowGroupBytes.toString)
-      .mode("overwrite").parquet(path)
-  }
 }

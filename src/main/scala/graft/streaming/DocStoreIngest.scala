@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Persisted DOCUMENT-TEXT store — the passage-fetch side of a served
   * RAG deployment, [[VecStoreIngest]]'s role on (doc_id, text): the
@@ -19,19 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * fetches are id point-lookups, never scans. */
 object DocStoreIngest {
 
-  /** @param dedupAdmission the batch-disjointness enforcement arm:
-    *        within-batch duplicates collapse to min(text), re-sent ids
-    *        anti-join away against the committed prior view. */
-  def ingestBatch(batch: DataFrame, storePath: String, batchId: Long,
-                  dedupAdmission: Boolean = false): Unit =
-    KeyedStoreCore.ingestBatch(batch, storePath, batchId,
-      "doc_id", "text", dedupAdmission)
-
-  def start(docsStream: DataFrame, storePath: String, checkpoint: String,
-            autoCompactEvery: Option[Int] = None,
-            dedupAdmission: Boolean = false): StreamingQuery =
-    KeyedStoreCore.start(docsStream, storePath, checkpoint,
-      "doc_id", "text", autoCompactEvery, dedupAdmission)
+  def ingestBatch(batch: DataFrame, storePath: String, batchId: Long): Unit =
+    KeyedStoreCore.ingestBatch(batch, storePath, batchId, "doc_id", "text")
 
   /** Logically forget documents: their text stops serving from [[view]]
     * immediately; the next [[compact]] removes the bytes. */

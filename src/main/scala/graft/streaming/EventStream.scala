@@ -150,7 +150,7 @@ object EventStream {
   }
 
   case class SeqEvent(user_id: Long, event_id: Long, event_type: String, tus: Long)
-  case class UserSeq(events: Seq[SeqEvent], hw: Long)
+  case class UserSeq(events: Seq[SeqEvent])
   case class TransitionDelta(prev_type: String, next_type: String, delta: Long)
 
   /** Streaming twin of `analytics.Analytics.transitionMatrix`: per-user
@@ -168,26 +168,10 @@ object EventStream {
     * into the state and the whole sequence re-sorts by (tus, event_id)
     * before pairs are read.
     *
-    * State per user is its event sequence — the price of exact
-    * insert-anywhere retraction; `horizonMicros` bounds it with an
-    * event-time horizon: state events older than (per-user high-water
-    * tus − H) are pruned, keeping ONE boundary event so the chain pair
-    * into the retained region stays representable (its retraction-free
-    * immutability is the horizon's contract), and an arriving event
-    * older than the pruned frontier is DISCARDED — it could only split
-    * pairs that already fell off the state, and inserting it against a
-    * truncated prefix would assert pairs the true sequence never had.
-    * The emitted deltas over the RETAINED window remain exact: pruning
-    * happens after delta emission, and `before` at the next trigger is
-    * computed from the same pruned sequence that was stored. With
-    * `horizonMicros = None` (the default) semantics are the original
-    * unbounded exact-retraction ones. Update output mode; state shards
-    * by user_id. */
-  def transitionCellUpdates(events: Dataset[SeqEvent],
-                            horizonMicros: Option[Long] = None)
-      : Dataset[TransitionDelta] = {
-    horizonMicros.foreach(h =>
-      require(h >= 0L, s"need horizonMicros >= 0, got $h"))
+    * State per user is its whole event sequence — the price of exact
+    * insert-anywhere retraction, unbounded. Update output mode; state
+    * shards by user_id. */
+  def transitionCellUpdates(events: Dataset[SeqEvent]): Dataset[TransitionDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
     def pairCounts(s: Seq[SeqEvent]): Map[(String, String), Long] =
@@ -200,26 +184,9 @@ object EventStream {
         org.apache.spark.sql.streaming.OutputMode.Update(),
         GroupStateTimeout.NoTimeout()) {
         (_: Long, it: Iterator[SeqEvent], state: GroupState[UserSeq]) =>
-          val prevState = state.getOption
-          val prev = prevState.map(_.events).getOrElse(Seq.empty)
-          val prevHw = prevState.map(_.hw).getOrElse(Long.MinValue)
-          // beyond-horizon late arrivals are dropped against the PREVIOUS
-          // trigger's frontier — the frontier the stored prefix was pruned to
-          val arrived = horizonMicros match {
-            case Some(h) if prevHw != Long.MinValue =>
-              it.filter(e => e.tus >= prevHw - h).toSeq
-            case _ => it.toSeq
-          }
-          val merged = (prev ++ arrived).sortBy(e => (e.tus, e.event_id))
-          val hw = (prevHw +: merged.map(_.tus)).max
-          val pruned = horizonMicros match {
-            case Some(h) if merged.nonEmpty =>
-              val cutoff = hw - h
-              val (old, keep) = merged.partition(_.tus < cutoff)
-              if (old.isEmpty) merged else old.last +: keep
-            case _ => merged
-          }
-          state.update(UserSeq(pruned, hw))
+          val prev = state.getOption.map(_.events).getOrElse(Seq.empty)
+          val merged = (prev ++ it).sortBy(e => (e.tus, e.event_id))
+          state.update(UserSeq(merged))
           val before = pairCounts(prev)
           val after = pairCounts(merged)
           (before.keySet ++ after.keySet).iterator.flatMap { k =>

@@ -66,25 +66,12 @@ object IndexedIngest {
     }
   }
 
-  /** @param autoCompactEvery when set, both stores self-OPTIMIZE once
-    *        the corpus's committed batch partitions reach N (the
-    *        [[StoreCompaction.compactIfNeeded]] policy — single-writer
-    *        foreachBatch, replay-safe by the watershed skip; the two
-    *        stores share the batch spine, so one check drives both). */
   def start(docsStream: DataFrame, corpusPath: String, indexPath: String,
-            checkpoint: String, threshold: Double,
-            autoCompactEvery: Option[Int] = None): StreamingQuery =
+            checkpoint: String, threshold: Double): StreamingQuery =
     docsStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         ingestBatch(batch.toDF(), corpusPath, indexPath, batchId, threshold)
-        autoCompactEvery.foreach { k =>
-          val spark = batch.sparkSession
-          if (StoreCompaction.compactIfNeeded(spark, corpusPath, Nil, k,
-              deleteIdCol = Some("doc_id")).isDefined)
-            StoreCompaction.compactIfNeeded(spark, indexPath, Nil, 1,
-              deleteIdCol = Some("doc_id"))
-        }
       }
       .start()
 }

@@ -13,39 +13,27 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the bits [[view]] serves.
   *
   * The per-batch steps are [[StoreCompaction]]'s shared protocol, the
-  * same one [[VectorIndexIngest]] runs: watershed replay skip, optional
-  * admission dedup ([[StoreCompaction.admit]]), and the deterministic
-  * dynamic-overwrite `ingest_batch=` write (replay rewrites
-  * byte-identically). Compaction consolidates id-sorted for row-group
-  * id-lookup locality (fetches are point lookups, never scans). */
+  * same one [[VectorIndexIngest]] runs: watershed replay skip and the
+  * deterministic dynamic-overwrite `ingest_batch=` write (replay
+  * rewrites byte-identically). Ids must be batch-disjoint (each id
+  * ingested once): a re-sent id would serve twice. Compaction
+  * consolidates id-sorted for row-group id-lookup locality (fetches are
+  * point lookups, never scans). */
 private[streaming] object KeyedStoreCore {
 
   def ingestBatch(batch: DataFrame, storePath: String, batchId: Long,
-                  idCol: String, valCol: String,
-                  dedupAdmission: Boolean): Unit = {
+                  idCol: String, valCol: String): Unit = {
     if (batch.isEmpty) return
-    val spark = batch.sparkSession
-    if (StoreCompaction.replayCovered(spark, batchId, storePath)) return
-    val rows = batch.select(col(idCol), col(valCol))
-    val admitted =
-      if (dedupAdmission) StoreCompaction.admit(rows, storePath, batchId, idCol, valCol)
-      else rows
-    if (dedupAdmission && admitted.isEmpty) return
-    StoreCompaction.writeBatch(admitted, storePath, batchId)
+    if (StoreCompaction.replayCovered(batch.sparkSession, batchId, storePath)) return
+    StoreCompaction.writeBatch(batch.select(col(idCol), col(valCol)), storePath, batchId)
   }
 
   def start(stream: DataFrame, storePath: String, checkpoint: String,
-            idCol: String, valCol: String,
-            autoCompactEvery: Option[Int],
-            dedupAdmission: Boolean): StreamingQuery =
+            idCol: String, valCol: String): StreamingQuery =
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), storePath, batchId, idCol, valCol,
-          dedupAdmission)
-        autoCompactEvery.foreach(n => StoreCompaction.compactIfNeeded(
-          batch.sparkSession, storePath, Nil, n, targetFiles = 1,
-          sortCols = Seq(idCol), deleteIdCol = Some(idCol)))
+        ingestBatch(batch.toDF(), storePath, batchId, idCol, valCol)
       }
       .start()
 

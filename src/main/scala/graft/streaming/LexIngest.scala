@@ -36,33 +36,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * below either watershed SKIPS. */
 object LexIngest {
 
-  /** @param dedupAdmission enforce the batch-disjointness contract
-    *        instead of assuming it: re-sent doc_ids are FILTERED before
-    *        the projection — within the batch deterministically (lowest
-    *        text per id, so a replay rewrites byte-identically) and
-    *        against the already-committed corpus via an anti-join on the
-    *        stats store's doc registry (prior view = batches < this one
-    *        through the committed filter, the SpanIngest prior-read
-    *        discipline — deterministic under replay by the watershed
-    *        argument). Without it a duplicate doc silently double-counts
-    *        df, N and Σdl. Off by default: disjoint feeds (the vec_id
-    *        contract) skip the per-batch registry scan. */
-  def ingestBatch(batch: DataFrame, indexPath: String, batchId: Long,
-                  dedupAdmission: Boolean = false): Unit = {
+  def ingestBatch(batch: DataFrame, indexPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val raw = batch.select(col("doc_id"), col("text"))
     if (raw.isEmpty) return
     if (StoreCompaction.replayCovered(spark, batchId,
         s"$indexPath/postings", s"$indexPath/stats")) return
-    val admitted =
-      if (dedupAdmission)
-        StoreCompaction.admit(raw, s"$indexPath/stats", batchId, "doc_id", "text")
-      else raw
     // three writes read this plan (postings, stats, stats_agg) — persist
-    // once or the admission anti-join re-runs per consumer
-    val batchDocs = Cached.keep(admitted)
+    // once or the batch source re-runs per consumer
+    val batchDocs = Cached.keep(raw)
     try {
-      if (dedupAdmission && batchDocs.isEmpty) return
       // materialize the shared batch cache with ONE cheap job before the
       // fan-out, then land the three components CONCURRENTLY (guide
       // §2.6 driver-thread overlap): they are separate sub-stores of
@@ -123,24 +106,11 @@ object LexIngest {
     if (unitIds.nonEmpty) markDeleted(spark, indexPath, unitIds)
   }
 
-  /** @param autoCompactEvery when set, the ingest self-OPTIMIZEs via
-    *        [[compact]]+[[vacuum]] once the postings store's committed
-    *        batch partitions reach N — inside the same foreachBatch
-    *        (single-writer), replay-safe like the manual lifecycle.
-    * @param dedupAdmission see [[ingestBatch]]. */
-  def start(docsStream: DataFrame, indexPath: String, checkpoint: String,
-            autoCompactEvery: Option[Int] = None,
-            dedupAdmission: Boolean = false): StreamingQuery =
+  def start(docsStream: DataFrame, indexPath: String, checkpoint: String): StreamingQuery =
     docsStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), indexPath, batchId, dedupAdmission)
-        autoCompactEvery.foreach { n =>
-          val spark = batch.sparkSession
-          if (StoreCompaction.liveBatches(spark, s"$indexPath/postings") >= n) {
-            compact(spark, indexPath); vacuum(spark, indexPath)
-          }
-        }
+        ingestBatch(batch.toDF(), indexPath, batchId)
       }
       .start()
 

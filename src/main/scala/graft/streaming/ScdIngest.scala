@@ -31,61 +31,39 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Empty batches publish nothing (no version burned, the IndexedIngest
   * convention).
   *
-  * A CDC trigger can carry SEVERAL updates for one key — but
-  * [[graft.ops.ScdMerge.merge]] requires at most one change row per key
-  * (two rows for a key would fan out through the full-outer join and
-  * corrupt the snapshot: duplicated pass-through rows, two open rows).
-  * Callers with ordered CDC pass `seqCol` (LSN / source offset / event
-  * time) and each batch collapses to the key's LAST change —
-  * deterministically, via `max(struct(seq, attrs…))` whose lexicographic
-  * tie-break keeps replay rewrites byte-identical even on seq ties.
-  * Without `seqCol` there is no defensible winner, so a multi-row key
-  * fails the batch loudly instead of corrupting history forever. */
+  * A CDC trigger must carry at most one change row per key:
+  * [[graft.ops.ScdMerge.merge]] needs that (two rows for a key would fan
+  * out through the full-outer join and corrupt the snapshot: duplicated
+  * pass-through rows, two open rows), and a batch has no defensible
+  * winner between them, so a multi-row key fails the batch loudly
+  * instead of corrupting history forever. */
 object ScdIngest {
 
   /** One change row per key, or a loud error: the precondition
-    * [[graft.ops.ScdMerge.merge]] needs, enforced per micro-batch.
-    * With `opCol` set the op rides the collapse struct (after seq,
-    * before attrs — still deterministic on seq ties) so a delete
-    * followed by a re-insert within one trigger keeps the re-insert. */
-  private[streaming] def collapseToLastPerKey(
-      changes: DataFrame, key: String, attrs: Seq[String],
-      seqCol: Option[String], batchId: Long,
-      opCol: Option[String] = None): DataFrame = seqCol match {
-    case Some(sc) =>
-      val carried = opCol.toSeq ++ attrs
-      changes.groupBy(col(key))
-        .agg(max(struct(col(sc).as("_seq") +: carried.map(col): _*)).as("_m"))
-        .select(col(key) +: carried.map(a => col(s"_m.$a").as(a)): _*)
-    case None =>
-      // one-pass guard: the per-key count rides a key-keyed window whose
-      // hashpartitioning(key) is the SAME exchange the merge's full-outer
-      // sort-merge join needs on the change side — no extra scan or
-      // shuffle per trigger (vs an eager groupBy().collect() pre-check).
-      // assert_true is non-foldable so the guard survives optimization;
-      // a duplicate key fails the batch as a task error BEFORE the
-      // manifest commit, so the failed batch publishes nothing.
-      val wk = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
-      changes
-        .withColumn("_kc", count(lit(1)).over(wk))
-        .filter(assert_true(col("_kc") === 1L,
-          concat(
-            lit(s"ScdIngest batch $batchId carries multiple change rows for key "),
-            col(key).cast("string"),
-            lit(" — an SCD2 merge has no well-defined outcome for " +
-              "conflicting rows; pass seqCol to collapse each key to its " +
-              "last change, or dedupe upstream"))).isNull)
-        .drop("_kc")
+    * [[graft.ops.ScdMerge.merge]] needs, enforced per micro-batch. The
+    * per-key count rides a key-keyed window whose hashpartitioning(key)
+    * is the SAME exchange the merge's full-outer sort-merge join needs
+    * on the change side — no extra scan or shuffle per trigger (vs an
+    * eager groupBy().collect() pre-check). assert_true is non-foldable
+    * so the guard survives optimization; a duplicate key fails the batch
+    * as a task error BEFORE the manifest commit, so the failed batch
+    * publishes nothing. */
+  private def oneRowPerKey(changes: DataFrame, key: String,
+                           batchId: Long): DataFrame = {
+    val wk = org.apache.spark.sql.expressions.Window.partitionBy(col(key))
+    changes
+      .withColumn("_kc", count(lit(1)).over(wk))
+      .filter(assert_true(col("_kc") === 1L,
+        concat(
+          lit(s"ScdIngest batch $batchId carries multiple change rows for key "),
+          col(key).cast("string"),
+          lit(" — an SCD2 merge has no well-defined outcome for " +
+            "conflicting rows; dedupe upstream"))).isNull)
+      .drop("_kc")
   }
 
-  /** @param opCol when set, the CDC op column ('U' upsert / 'D' delete)
-    *               — each batch merges through
-    *               [[graft.ops.ScdMerge.mergeOps]], so deletes close
-    *               open rows (tombstones) and later upserts re-insert. */
   def ingestBatch(changes: DataFrame, historyDir: String, key: String,
-                  attrs: Seq[String], batchId: Long,
-                  seqCol: Option[String] = None,
-                  opCol: Option[String] = None): Unit = {
+                  attrs: Seq[String], batchId: Long): Unit = {
     val spark = changes.sparkSession
     if (changes.isEmpty) return
     val versions = ManifestSink.committedVersions(spark, historyDir)
@@ -98,25 +76,17 @@ object ScdIngest {
           .withColumn("valid_to", lit(null).cast("long"))
           .withColumn("is_current", lit(true))
     }
-    val collapsed = collapseToLastPerKey(changes, key, attrs, seqCol,
-      batchId, opCol)
     ManifestSink.publishAt(
-      opCol match {
-        case Some(oc) =>
-          ScdMerge.mergeOps(history, collapsed, key, attrs, oc, batchId)
-        case None => ScdMerge.merge(history, collapsed, key, attrs, batchId)
-      },
+      ScdMerge.merge(history, oneRowPerKey(changes, key, batchId), key, attrs, batchId),
       historyDir, batchId)
   }
 
   def start(changeStream: DataFrame, historyDir: String, key: String,
-            attrs: Seq[String], checkpoint: String,
-            seqCol: Option[String] = None,
-            opCol: Option[String] = None): StreamingQuery =
+            attrs: Seq[String], checkpoint: String): StreamingQuery =
     changeStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), historyDir, key, attrs, batchId, seqCol, opCol)
+        ingestBatch(batch.toDF(), historyDir, key, attrs, batchId)
       }
       .start()
 

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.llm.Similarity
 
@@ -27,41 +26,18 @@ import graft.llm.Similarity
 object SigStoreIngest {
 
   /** Signs and lands one batch of (vec_id, embedding) rows. */
-  def ingestBatch(embBatch: DataFrame, storePath: String, batchId: Long,
-                  dedupAdmission: Boolean = false): Unit =
+  def ingestBatch(embBatch: DataFrame, storePath: String, batchId: Long): Unit =
     KeyedStoreCore.ingestBatch(Similarity.signSignature(embBatch),
-      storePath, batchId, "vec_id", "sig", dedupAdmission)
-
-  def start(embStream: DataFrame, storePath: String, checkpoint: String,
-            autoCompactEvery: Option[Int] = None,
-            dedupAdmission: Boolean = false): StreamingQuery =
-    KeyedStoreCore.start(Similarity.signSignature(embStream), storePath,
-      checkpoint, "vec_id", "sig", autoCompactEvery, dedupAdmission)
+      storePath, batchId, "vec_id", "sig")
 
   /** Logically forget vectors: they leave every Hamming ranking
-    * immediately; the next [[compact]] removes the bits. */
+    * immediately; the next `StoreCompaction.compact` removes the bits. */
   def markDeleted(spark: SparkSession, storePath: String,
                   vecIds: Seq[Long]): Unit =
     StoreCompaction.markDeleted(spark, storePath, vecIds)
 
   /** The served (vec_id, sig) frame — exactly-once minus forgotten ids;
-    * what [[probe]] and the stored propose stage scan. */
+    * what the stored propose stage scans. */
   def view(spark: SparkSession, storePath: String): DataFrame =
     KeyedStoreCore.view(spark, storePath, "vec_id", "sig")
-
-  /** TIME-TRAVEL signature frame (retroactive forget, loud retention
-    * boundary — [[StoreCompaction.committedViewAsOf]] semantics). */
-  def viewAsOf(spark: SparkSession, storePath: String,
-               maxBatch: Long): DataFrame =
-    KeyedStoreCore.viewAsOf(spark, storePath, "vec_id", "sig", maxBatch)
-
-  /** Top-k per query by Hamming distance, served store-only. */
-  def probe(spark: SparkSession, storePath: String,
-            queryIds: Seq[Long], k: Int): DataFrame =
-    Similarity.hammingProbe(view(spark, storePath), queryIds, k)
-
-  /** OPTIMIZE: one consolidated vec_id-sorted generation, pending
-    * deletes applied physically. */
-  def compact(spark: SparkSession, storePath: String): StoreCompaction.Watershed =
-    KeyedStoreCore.compact(spark, storePath, "vec_id")
 }

@@ -47,10 +47,8 @@ import org.apache.spark.sql.functions._
   * ingests' replay contract is preserved above the watershed and
   * subsumed below it (the Delta/Iceberg checkpoint semantics). The
   * rest of the per-batch protocol lives here too, so every ingest runs
-  * the same steps: [[writeBatch]] (the dynamic-overwrite batch write),
-  * [[admit]] (the id-admission anti-join), [[priorIndex]] (the
-  * two-store ingests' torn-first-batch rule) and [[liveBatches]] (the
-  * auto-compaction trigger).
+  * the same steps: [[writeBatch]] (the dynamic-overwrite batch write)
+  * and [[priorIndex]] (the two-store ingests' torn-first-batch rule).
   *
   * [[vacuum]] is pure GC: correctness comes from the marker filter
   * alone, so covered partitions and superseded generations can be
@@ -228,12 +226,11 @@ object StoreCompaction {
     * `DESCRIBE DETAIL` surface an operator reads before trusting a
     * store or scheduling maintenance: commit state (generation,
     * watershed), partition pressure (total `ingest_batch` directories,
-    * live batches above the watershed — the [[compactIfNeeded]]
-    * trigger quantity), forget backlog (distinct pending deletion-
-    * vector ids — REQUESTED ids, present in the store or not: the
-    * deletes file is a set of demands, not an inner join), and row
-    * counts (committed = exactly-once view; live = committed minus the
-    * deletion vectors — `n_committed − n_live` is the rows a compact
+    * live batches above the watershed), forget backlog (distinct
+    * pending deletion-vector ids — REQUESTED ids, present in the store
+    * or not: the deletes file is a set of demands, not an inner join),
+    * and row counts (committed = exactly-once view; live = committed
+    * minus the deletion vectors — `n_committed − n_live` is the rows a compact
     * would physically drop). Counting costs two aggregates over the
     * committed view by design — this is an explicit audit call, never
     * on a probe path. */
@@ -358,28 +355,6 @@ object StoreCompaction {
                                        paths: String*): Boolean =
     paths.exists(p => batchId <= coveredThrough(spark, p))
 
-  /** Id admission for a batch-disjoint store: within the batch each
-    * `idCol` collapses to its min(`valCol`) — deterministic, so a replay
-    * still rewrites byte-identically — and ids already committed to
-    * `registry` by EARLIER batches anti-join away (the prior view is
-    * `ingest_batch < batchId`, so a replay sees its original registry).
-    *
-    * The result is the ONLY empty frame an ingest can meet after its
-    * source's own `isEmpty` check. Callers probe emptiness on it and
-    * nowhere else — with admission off the batch IS its already-checked
-    * source, and a second probe would pay a limit-1 job per batch. */
-  private[streaming] def admit(rows: DataFrame, registry: String, batchId: Long,
-                               idCol: String, valCol: String): DataFrame = {
-    val spark = rows.sparkSession
-    val inBatch = rows.groupBy(col(idCol)).agg(min(col(valCol)).as(valCol))
-    if (batchDirs(spark, registry).isEmpty) inBatch
-    else inBatch.join(
-      committedView(spark, registry)
-        .filter(col("ingest_batch").cast("long") < batchId)
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
-  }
-
   /** The prior view of a corpus+index ingest's INDEX (its committed rows
     * of batches before `batchId`), or None while the corpus holds no
     * batch at all.
@@ -411,18 +386,10 @@ object StoreCompaction {
     }
   }
 
-  /** Committed batch partitions above the watershed — the
-    * auto-compaction trigger quantity, one directory listing. */
-  private[streaming] def liveBatches(spark: SparkSession, path: String): Int = {
-    val w = coveredThrough(spark, path)
-    batchDirs(spark, path).map(_._2).filter(_ > w).distinct.count(_ >= 0L)
-  }
-
   /** Rewrites every committed row into generation (g+1): one shuffle
     * keyed by `clusterCols` (each cluster value lands in exactly one
-    * task → exactly one file per consolidated partition — the
-    * `Compaction.compactClustered` consolidation shape applied
-    * per-cell), or `targetFiles` round-robin files for an unclustered
+    * task → exactly one file per consolidated partition), or
+    * `targetFiles` round-robin files for an unclustered
     * store. `sortCols` sorts rows WITHIN each output file — the
     * `OPTIMIZE … ZORDER`-style re-clustering arm: a store whose probes
     * rely on row-group min/max skipping (the lexical postings' term
@@ -494,27 +461,6 @@ object StoreCompaction {
     // remain, liveView still subtracts, re-applying is a no-op.
     deleteFiles.foreach(fs0.delete(_, false))
     Watershed(gen, covered)
-  }
-
-  /** AUTO-OPTIMIZE policy hook: [[compact]] + [[vacuum]] only when the
-    * committed batch partitions above the watershed have reached
-    * `maxBatches` — the check an ingest runs in its own foreachBatch
-    * (the single-writer contract makes the ingest the only legal
-    * caller; mid-stream compaction is replay-safe because a batch at or
-    * below the new watershed SKIPS on replay). One directory listing
-    * when below threshold; idempotent right after a compaction (live
-    * batches reset to 0). Returns the new watershed when it fired. */
-  def compactIfNeeded(spark: SparkSession, path: String,
-                      clusterCols: Seq[String], maxBatches: Int,
-                      targetFiles: Int = 1, sortCols: Seq[String] = Nil,
-                      deleteIdCol: Option[String] = None): Option[Watershed] = {
-    require(maxBatches >= 1, s"need maxBatches >= 1, got $maxBatches")
-    if (liveBatches(spark, path) < maxBatches) None
-    else {
-      val ws = compact(spark, path, clusterCols, targetFiles, sortCols, deleteIdCol)
-      vacuum(spark, path)
-      Some(ws)
-    }
   }
 
   /** Deletes partitions the latest committed generation superseded:

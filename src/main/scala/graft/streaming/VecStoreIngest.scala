@@ -22,35 +22,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * of [[view]] sees exactly the bits the one-shot path sees and every
   * score stays bitwise (spec-pinned twin equality).
   *
-  * Lifecycle (exactly-once, replay, admission, compaction) is the
-  * shared [[KeyedStoreCore]] — one implementation for the vec and doc
-  * store families, so a fix there reaches both. At 100 TB the store is
-  * the id-keyed vector service: probes fetch R·Q rows by vec_id point
-  * lookup, never scan — [[compact]] consolidates sorted by vec_id so
-  * row-group min/max skipping serves those lookups. */
+  * Lifecycle (exactly-once, replay) is the shared [[KeyedStoreCore]] —
+  * one implementation for the vec and doc store families, so a fix
+  * there reaches both. At 100 TB the store is the id-keyed vector
+  * service: probes fetch R·Q rows by vec_id point lookup, never scan. */
 object VecStoreIngest {
 
-  /** @param dedupAdmission enforce vec_id batch-disjointness instead of
-    *        assuming it — [[VectorIndexIngest.ingestBatch]]'s contract
-    *        (lowest embedding within the batch, anti-join against the
-    *        committed prior view across batches). Without it a re-sent
-    *        id would fetch twice and double a rerank candidate. */
-  def ingestBatch(batch: DataFrame, storePath: String, batchId: Long,
-                  dedupAdmission: Boolean = false): Unit =
-    KeyedStoreCore.ingestBatch(batch, storePath, batchId,
-      "vec_id", "embedding", dedupAdmission)
+  def ingestBatch(batch: DataFrame, storePath: String, batchId: Long): Unit =
+    KeyedStoreCore.ingestBatch(batch, storePath, batchId, "vec_id", "embedding")
 
-  /** @param autoCompactEvery the [[VectorIndexIngest.start]] policy
-    *        hook: self-OPTIMIZE once committed batch partitions above
-    *        the watershed reach N (single-writer, replay-safe). */
-  def start(vecStream: DataFrame, storePath: String, checkpoint: String,
-            autoCompactEvery: Option[Int] = None,
-            dedupAdmission: Boolean = false): StreamingQuery =
-    KeyedStoreCore.start(vecStream, storePath, checkpoint,
-      "vec_id", "embedding", autoCompactEvery, dedupAdmission)
+  def start(vecStream: DataFrame, storePath: String, checkpoint: String): StreamingQuery =
+    KeyedStoreCore.start(vecStream, storePath, checkpoint, "vec_id", "embedding")
 
   /** Logically forget vectors: [[view]] excludes them immediately, the
-    * next [[compact]] removes them physically. */
+    * next `StoreCompaction.compact` removes them physically. */
   def markDeleted(spark: SparkSession, storePath: String,
                   vecIds: Seq[Long]): Unit =
     StoreCompaction.markDeleted(spark, storePath, vecIds)
@@ -68,11 +53,4 @@ object VecStoreIngest {
   def viewAsOf(spark: SparkSession, storePath: String,
                maxBatch: Long): DataFrame =
     KeyedStoreCore.viewAsOf(spark, storePath, "vec_id", "embedding", maxBatch)
-
-  /** OPTIMIZE: one consolidated generation sorted by vec_id (row-group
-    * min/max serves the id point-lookups the refine fetch makes),
-    * pending deletes applied physically. [[StoreCompaction.vacuum]]
-    * after, at the caller's retention policy. */
-  def compact(spark: SparkSession, storePath: String): StoreCompaction.Watershed =
-    KeyedStoreCore.compact(spark, storePath, "vec_id")
 }

@@ -42,19 +42,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * partition would double them. */
 object VectorIndexIngest {
 
-  /** @param dedupAdmission enforce the vec_id batch-disjointness
-    *        contract instead of assuming it: a re-sent id is FILTERED —
-    *        within the batch deterministically (lowest embedding per id,
-    *        arrays order lexicographically, so a replay rewrites
-    *        byte-identically) and against the committed index via an
-    *        anti-join on its integer vec_id column (prior view = batches
-    *        < this one through the committed filter — deterministic
-    *        under replay by the watershed argument). Without it a
-    *        duplicate id lands twice and probes rank the same neighbor
-    *        twice. Off by default: disjoint feeds skip the per-batch
-    *        registry read. */
   def ingestBatch(batch: DataFrame, indexPath: String, q: IvfPqQuantizer,
-                  batchId: Long, dedupAdmission: Boolean = false): Unit = {
+                  batchId: Long): Unit = {
     if (batch.isEmpty) return
     val spark = batch.sparkSession
     // publish the frozen model beside the index on first contact — the
@@ -77,34 +66,17 @@ object VectorIndexIngest {
           "is FROZEN per store (retraining means a batch rebuild via " +
           "writeIvfPqIndex to a new path, never a streaming mutation)")
     if (StoreCompaction.replayCovered(spark, batchId, indexPath)) return
-    val admitted =
-      if (dedupAdmission)
-        StoreCompaction.admit(batch, indexPath, batchId, "vec_id", "embedding")
-      else batch
-    if (dedupAdmission && admitted.isEmpty) return
-    StoreCompaction.writeBatch(Similarity.ivfPqIndexRows(admitted, q),
+    StoreCompaction.writeBatch(Similarity.ivfPqIndexRows(batch, q),
       indexPath, batchId, Seq("cell_id"))
   }
 
-  /** @param vecStream streaming (vec_id, embedding) rows.
-    * @param autoCompactEvery when set, the ingest self-OPTIMIZEs: once
-    *        the committed batch partitions above the watershed reach N,
-    *        the store compacts per-cell and vacuums INSIDE the same
-    *        foreachBatch (single-writer, so this is the one legal place;
-    *        replay-safe — a replayed batch at or below the new watershed
-    *        skips). Pending deletes apply physically as they would at a
-    *        manual compact. Probes stay bitwise throughout (spec-pinned). */
+  /** @param vecStream streaming (vec_id, embedding) rows. */
   def start(vecStream: DataFrame, indexPath: String, q: IvfPqQuantizer,
-            checkpoint: String,
-            autoCompactEvery: Option[Int] = None,
-            dedupAdmission: Boolean = false): StreamingQuery =
+            checkpoint: String): StreamingQuery =
     vecStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        ingestBatch(batch.toDF(), indexPath, q, batchId, dedupAdmission)
-        autoCompactEvery.foreach(n => StoreCompaction.compactIfNeeded(
-          batch.sparkSession, indexPath, Seq("cell_id"), n,
-          deleteIdCol = Some("vec_id")))
+        ingestBatch(batch.toDF(), indexPath, q, batchId)
       }
       .start()
 

@@ -211,19 +211,21 @@ class HammingSpec extends SparkSpec {
         postForget.map(_._2).toSet.intersect(forget.toSet) shouldBe empty
 
         // the as-of signature frame travels (retroactive forget composed)
-        graft.streaming.SigStoreIngest.viewAsOf(spark, s"$root/sigs", 1L)
+        graft.streaming.StoreCompaction.liveViewAsOf(spark, s"$root/sigs", "vec_id", 1L)
           .select($"vec_id").as[Long].collect().toSet shouldBe
           e.filter($"vec_id" % 3 <= 1 && !$"vec_id".isin(forget: _*))
             .select($"vec_id").as[Long].collect().toSet
 
         // physical apply: compact both, probe bitwise unchanged
-        graft.streaming.SigStoreIngest.compact(spark, s"$root/sigs")
-        graft.streaming.VecStoreIngest.compact(spark, s"$root/vecs")
+        for (store <- Seq(s"$root/sigs", s"$root/vecs"))
+          graft.streaming.StoreCompaction.compact(spark, store, Nil,
+            sortCols = Seq("vec_id"), deleteIdCol = Some("vec_id"))
         graft.streaming.StoreCompaction.vacuum(spark, s"$root/sigs")
         graft.streaming.StoreCompaction.vacuum(spark, s"$root/vecs")
         key(stored()) shouldBe postForget
         // ...and the sig-store probe alone serves the Hamming ranking
-        graft.streaming.SigStoreIngest.probe(spark, s"$root/sigs", Seq(0L), 5)
+        Similarity.hammingProbe(
+            graft.streaming.SigStoreIngest.view(spark, s"$root/sigs"), Seq(0L), 5)
           .select($"neighbor_id").as[Long].collect().toSeq shouldBe
           Similarity.hammingTopK(surviving, Seq(0L), 5)
             .select($"neighbor_id").as[Long].collect().toSeq

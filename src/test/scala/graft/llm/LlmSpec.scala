@@ -887,18 +887,16 @@ class LlmSpec extends SparkSpec {
 
   // ---------- multimodal ----------
 
-  test("gramMatrixAgg (mapPartitions scale path) equals the join formulation") {
+  test("gramRaw (treeAggregate scale path) equals the join formulation") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val viaJoin = Similarity.gramMatrix(emb).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val viaAgg = Similarity.gramMatrixAgg(emb).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    viaAgg.keySet shouldBe viaJoin.keySet
-    viaJoin.keySet.size shouldBe 64 * 64
-    for (k <- viaJoin.keys) {
-      // both sides round to 4 decimals; sums may straddle one boundary
-      val (a, b) = (viaJoin(k), viaAgg(k))
-      math.abs(a - b) should be <= 2e-4
+    val (d, raw) = Similarity.gramRaw(emb)
+    d shouldBe 64
+    viaJoin.keySet.size shouldBe d * d
+    for (((i, j), g) <- viaJoin) {
+      // the join form rounds to 4 decimals; raw sums are unrounded
+      math.abs(raw(((i - 1) * d + (j - 1)).toInt) - g) should be <= 1e-4
     }
     // symmetry: G[i][j] == G[j][i] (join form rounds both from the same sum)
     for (((i, j), g) <- viaJoin) viaJoin((j, i)) shouldBe g

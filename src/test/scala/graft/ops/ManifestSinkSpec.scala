@@ -10,7 +10,7 @@ class ManifestSinkSpec extends SparkSpec {
     SparkEntry.withTempRoot(spark, "graft_manifest") { root =>
       val dir = root + "/tbl"
       val v0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-      ManifestSink.publish(v0, dir) shouldBe 0L
+      ManifestSink.publishAt(v0, dir, 0L)
       ManifestSink.read(spark, dir).orderBy("id").collect().map(_.getLong(0)) shouldBe Array(1L, 2L)
       // plant an ORPHAN parquet file in the live data dir (a failed later
       // job's leftovers) — the manifest read must not see it
@@ -25,32 +25,24 @@ class ManifestSinkSpec extends SparkSpec {
       spark.read.parquet(s"$dir/data-v0").count() shouldBe 3L // the dir listing WOULD see it
       // republish: readers of the new version see only the new data
       val v1 = Seq((10L, "x"), (11L, "y"), (12L, "z")).toDF("id", "s")
-      ManifestSink.publish(v1, dir) shouldBe 1L
-      ManifestSink.currentVersion(spark, dir) shouldBe Some(1L)
+      ManifestSink.publishAt(v1, dir, 1L)
+      ManifestSink.committedVersions(spark, dir) shouldBe Seq(0L, 1L)
       ManifestSink.read(spark, dir).orderBy("id").collect().map(_.getLong(0)) shouldBe
         Array(10L, 11L, 12L)
     }
   }
 
-  test("an uncommitted data directory (crashed publish) is invisible and vacuumed") {
+  test("an uncommitted data directory (crashed publish) is invisible") {
     SparkEntry.withTempRoot(spark, "graft_manifest") { root =>
       val dir = root + "/tbl"
-      ManifestSink.publish(Seq((1L, "a")).toDF("id", "s"), dir)
+      ManifestSink.publishAt(Seq((1L, "a")).toDF("id", "s"), dir, 0L)
       // simulate a publish that wrote data but died before its manifest
       Seq((50L, "ghost")).toDF("id", "s").write.parquet(s"$dir/data-v1")
-      ManifestSink.currentVersion(spark, dir) shouldBe Some(0L)
+      ManifestSink.committedVersions(spark, dir) shouldBe Seq(0L)
       ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
-      // vacuum removes the ghost (and nothing live)
-      ManifestSink.vacuum(spark, dir) shouldBe 1
-      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(1L)
-      // a NEXT publish lands at version 1... data dir name collision with
-      // the vacuumed ghost is fine because vacuum removed it
-      ManifestSink.publish(Seq((2L, "b")).toDF("id", "s"), dir) shouldBe 1L
-      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
-      // vacuum now drops version 0's data + stale manifest
-      ManifestSink.vacuum(spark, dir) shouldBe 1
-      ManifestSink.currentVersion(spark, dir) shouldBe Some(1L)
-      ManifestSink.read(spark, dir).collect().map(_.getLong(0)) shouldBe Array(2L)
+      intercept[java.io.FileNotFoundException] {
+        ManifestSink.readAt(spark, dir, 1L)
+      }
     }
   }
 
@@ -71,15 +63,6 @@ class ManifestSinkSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         ManifestSink.publishAt(Seq((3L, "c")).toDF("id", "s"), dir, version = 9L)
       }.getMessage should include("already committed")
-      // retention-aware vacuum: keepLast = 2 preserves both versions for
-      // time travel; the default form then collapses to the latest only
-      ManifestSink.vacuum(spark, dir, keepLast = 2) shouldBe 0
-      ManifestSink.readAt(spark, dir, 5L).count() shouldBe 1L
-      ManifestSink.vacuum(spark, dir) shouldBe 1
-      ManifestSink.committedVersions(spark, dir) shouldBe Seq(9L)
-      intercept[java.io.FileNotFoundException] {
-        ManifestSink.readAt(spark, dir, 5L)
-      }
     }
   }
 }

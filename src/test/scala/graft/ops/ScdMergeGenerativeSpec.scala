@@ -202,13 +202,12 @@ class ScdMergeGenerativeSpec extends SparkSpec {
       val refFiltered = toRows(refHist).filterNot(t => erasedSet(t._1))
       withClue(s"seed $seed erase: ") {
         rowSet(ScdMerge.eraseKeys(df, erased.toDF("key"), "key")) shouldBe refFiltered
-        rowSet(ScdMerge.erase(df, "key", erased)) shouldBe refFiltered
         rowSet(ScdMerge.fromChangeLogOps(
           fullLog.filterNot(r => erasedSet(r._1)).toDF("key", "op", "seg", "nat", "v"),
           "key", Seq("seg", "nat"), "v", "op")) shouldBe refFiltered
       }
       // PIT after erase: erased keys resolve to null attrs at EVERY t
-      val pitAfter = ScdMerge.pointInTime(ScdMerge.erase(df, "key", erased),
+      val pitAfter = ScdMerge.pointInTime(ScdMerge.eraseKeys(df, erased.toDF("key"), "key"),
           probes.toDF("key", "t"), "key", "t", Seq("seg", "nat"))
         .collect().map(r => ((r.getLong(0), r.getLong(1)),
           (Option(r.getString(2)),

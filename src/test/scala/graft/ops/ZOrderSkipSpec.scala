@@ -66,85 +66,6 @@ class ZOrderSkipSpec extends SparkSpec {
     }
   }
 
-  test("writeClustered: the helper-written layout prunes on BOTH dims and drops the key column") {
-    val ev = graft.SparkEntry.events(spark, "/root/testdata/sf0.01")
-      .select(col("user_id"), expr("(tus div 3600000000) % 24").as("hod"))
-    SparkEntry.withTempRoot(spark, "graft_wc") { root =>
-      val dir = root + "/out"
-      ZOrder.writeClustered(ev, Seq(col("user_id"), col("hod")), dir,
-        numFiles = 3, rowGroupBytes = 8192)
-      val g = LayoutStats.rowGroupStats(spark, dir, dims)
-      g.size should be >= 4
-      withClue(s"${g.size} groups: ") {
-        // 3 output files coarsen row-group granularity vs the single-file
-        // fixture above (fewer, larger groups), so the second-dim bound is
-        // looser here — the claim is skipping EXISTS on the non-leading
-        // dim (a linear sort reads 100%), pinned tighter above
-        LayoutStats.survivors(g, Map("hod" -> (6L, 7L))).size.toDouble should be < 0.85 * g.size
-        LayoutStats.survivors(g, Map("user_id" -> (40L, 49L))).size.toDouble should be < 0.7 * g.size
-      }
-      g.map(_.file).distinct.size should be >= 2 // range exchange really split files
-      val back = spark.read.parquet(dir)
-      back.count() shouldBe ev.count()
-      back.columns should not contain "__zkey"
-    }
-  }
-
-  test("compactClustered: row-group pruning survives compaction on both dims; name-order compaction of fragmented ingests does not") {
-    val ev = graft.SparkEntry.events(spark, "/root/testdata/sf0.01")
-      .select(col("user_id"), expr("(tus div 3600000000) % 24").as("hod"))
-    // fragmented ingest: 4 batches, EACH z-clustered internally — so each
-    // file spans the whole key range and cross-file locality is gone
-    SparkEntry.withTempRoot(spark, "graft_zcompact") { root =>
-      val frag = s"$root/frag"
-      for (b <- 0 until 4)
-        ZOrder.writeClustered(ev.filter(col("user_id") % 4 === b),
-          Seq(col("user_id"), col("hod")), s"$frag/b$b", numFiles = 1,
-          rowGroupBytes = 8192)
-      // flatten the batch files into one directory (the ingest aftermath)
-      val fs = new org.apache.hadoop.fs.Path(frag)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val flat = s"$root/flat"
-      fs.mkdirs(new org.apache.hadoop.fs.Path(flat))
-      for (b <- 0 until 4)
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$frag/b$b")).toSeq
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .foreach(f => org.apache.hadoop.fs.FileUtil.copy(
-            fs, f.getPath, fs,
-            new org.apache.hadoop.fs.Path(s"$flat/b${b}_${f.getPath.getName}"),
-            false, spark.sparkContext.hadoopConfiguration))
-      val total = Compaction.listParquet(spark, flat).map(_._2).sum
-      // name-order compaction into one file: each input file spans the full
-      // user range, so merged row groups interleave ranges -> skipping dies
-      val nameDir = s"$root/namec"
-      Compaction.compact(spark, flat,
-        Seq(Compaction.listParquet(spark, flat).map(_._1)), nameDir)
-      // parquet.block.size is a write option — re-read what compact wrote and
-      // measure; compact's plain rewrite keeps default big groups, so compare
-      // at FILE granularity instead: one merged file = one min/max envelope
-      // covering everything -> a user_id range prunes nothing
-      val nameG = LayoutStats.rowGroupStats(spark, s"$nameDir/g0", dims)
-      val nameSurv = LayoutStats.survivors(nameG, Map("user_id" -> (40L, 49L))).size
-      nameSurv shouldBe nameG.size // no pruning at all
-      // z-aware compaction: same byte budget, re-clustered through the key
-      val zcDir = s"$root/zc"
-      val planned = Compaction.compactClustered(spark, flat,
-        Seq("user_id", "hod"), zcDir, targetBytes = total, rowGroupBytes = 8192)
-      planned shouldBe 1
-      val zcG = LayoutStats.rowGroupStats(spark, zcDir, dims)
-      zcG.size should be >= 4
-      withClue(s"${zcG.size} groups after z-compaction: ") {
-        // same bounds as the writeClustered pin: skipping EXISTS on the
-        // non-leading dim (name-order compaction reads 100%), tight on the
-        // leading dim
-        LayoutStats.survivors(zcG, Map("hod" -> (6L, 7L))).size.toDouble should be < 0.85 * zcG.size
-        LayoutStats.survivors(zcG, Map("user_id" -> (40L, 49L))).size.toDouble should be < 0.7 * zcG.size
-      }
-      // and compaction never changed the data
-      spark.read.parquet(zcDir).count() shouldBe ev.count()
-    }
-  }
-
   test("engine agrees: the scan's numOutputRows under the hod predicate is smaller on the Z layout") {
     withLayouts { (linDir, zDir) =>
       def scanRows(dir: String): Long = {

@@ -554,7 +554,7 @@ class StoreCompactionSpec extends SparkSpec {
     }
   }
 
-  test("forget marked BEFORE the first ingest: admission-guarded ingests survive the _deletes-only store and the pre-marked ids never serve") {
+  test("forget marked BEFORE the first ingest: ingests survive the _deletes-only store and the pre-marked ids never serve") {
     import spark.implicits._
     import graft.llm.Similarity
     import graft.llm.TextAnalysis
@@ -564,7 +564,7 @@ class StoreCompactionSpec extends SparkSpec {
       // lexical: the forget request lands first (creates stats/_deletes and
       // postings/_deletes with no data files anywhere)
       LexIngest.markDeleted(spark, s"$dir/lex", Seq(87L))
-      LexIngest.ingestBatch(d, s"$dir/lex", 0L, dedupAdmission = true)
+      LexIngest.ingestBatch(d, s"$dir/lex", 0L)
       val terms = Seq("spark", "window", "customer", "filter")
       def key(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("rn").collect().map(r => (r.getLong(0),
@@ -576,8 +576,7 @@ class StoreCompactionSpec extends SparkSpec {
       val quant = Similarity.trainIvfPqQuantizer(
         emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), m = 4)
       StoreCompaction.markDeleted(spark, s"$dir/vec", Seq(42L))
-      VectorIndexIngest.ingestBatch(emb, s"$dir/vec", quant, 0L,
-        dedupAdmission = true)
+      VectorIndexIngest.ingestBatch(emb, s"$dir/vec", quant, 0L)
       val idx = VectorIndexIngest.index(spark, s"$dir/vec")
       idx.filter(col("vec_id") === 42L).count() shouldBe 0L
       idx.count() shouldBe emb.count() - 1L

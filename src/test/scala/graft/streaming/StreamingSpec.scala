@@ -360,47 +360,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("span ingest selfClean: a self-duplicating batch lands span-disjoint internally AND against the store; counts anchor to the raw batch") {
-    implicit val ctx = spark.sqlContext
-    SparkEntry.withTempRoot(spark, "spanself") { dir =>
-      val (c, i) = (s"$dir/c", s"$dir/i")
-      def corpus(): Seq[(Long, Long, Long, String)] =
-        spark.read.parquet(c).select("doc_id", "n_tokens", "n_dropped", "text")
-          .orderBy("doc_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
-      // batch 0 seeds the corpus with 'a b c'
-      SpanIngest.ingestBatch(Seq((1L, "a b c")).toDF("doc_id", "text"),
-        c, i, 0L, n = 3, selfClean = true)
-      // batch 1 duplicates WITHIN itself (docs 10/11 share 'k l m') and
-      // AGAINST the store (doc 11 also carries 'a b c'); doc 12 repeats a
-      // run inside ONE document (kept: ownership is by lowest doc_id)
-      SpanIngest.ingestBatch(Seq(
-          (10L, "k l m x"), (11L, "k l m y a b c"), (12L, "u v w u v w")
-        ).toDF("doc_id", "text"), c, i, 1L, n = 3, selfClean = true)
-      corpus() shouldBe Seq(
-        (1L, 3L, 0L, "a b c"),
-        (10L, 4L, 0L, "k l m x"),   // first occurrence owns
-        // 'k l m' self-dropped (3) + 'a b c' corpus-dropped (3)
-        (11L, 7L, 6L, "y"),
-        (12L, 6L, 0L, "u v w u v w"))
-      // the landed store matches the batch-wise composition exactly
-      val composed = graft.llm.Dedup.removeCorpusSpans(
-        graft.llm.Dedup.removeDuplicateSpans(
-            Seq((10L, "k l m x"), (11L, "k l m y a b c"), (12L, "u v w u v w"))
-              .toDF("doc_id", "text"), 3)
-          .select(col("doc_id"), col("text")),
-        graft.llm.Dedup.spanIndexRows(Seq((1L, "a b c")).toDF("doc_id", "text"), 3), 3)
-        .select("doc_id", "text").orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1)))
-      corpus().drop(1).map(t => (t._1, t._4)) shouldBe composed
-      // the index follows the FINAL text: a later arrival repeating doc
-      // 12's surviving run cleans against the store
-      SpanIngest.ingestBatch(Seq((20L, "u v w z")).toDF("doc_id", "text"),
-        c, i, 2L, n = 3, selfClean = true)
-      corpus().last shouldBe ((20L, 4L, 3L, "z"))
-    }
-  }
-
   test("scd ingest: versioned SCD2 history per micro-batch; completed replay skips, torn replay rewrites identically") {
     implicit val ctx = spark.sqlContext
     SparkEntry.withTempRoot(spark, "scdingest") { dir =>
@@ -441,29 +400,15 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("scd ingest: a multi-change-per-key batch collapses to the key's last change with seqCol, fails loudly without") {
+  test("scd ingest: a multi-change-per-key batch fails loudly and publishes nothing") {
     SparkEntry.withTempRoot(spark, "scdmulti") { dir =>
       val hist = s"$dir/hist"
-      // CDC trigger with THREE updates for key 1, in sequence order: the
-      // merged snapshot must show only the final value — one open row
-      val batch = Seq((1L, "a", 10L), (1L, "b", 20L), (1L, "c", 30L), (2L, "x", 15L))
-        .toDF("key", "seg", "lsn")
-      ScdIngest.ingestBatch(batch, hist, "key", Seq("seg"), batchId = 0L,
-        seqCol = Some("lsn"))
-      val snap = ScdIngest.currentHistory(spark, hist)
-        .orderBy("key").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getBoolean(4)))
-      snap shouldBe Array((1L, "c", true), (2L, "x", true))
-      // deterministic on seq ties: max(struct) breaks ties lexicographically
-      // by attr value, so replays rewrite byte-identically
-      val tied = ScdIngest.collapseToLastPerKey(
-        Seq((1L, "p", 5L), (1L, "q", 5L)).toDF("key", "seg", "lsn"),
-        "key", Seq("seg"), Some("lsn"), batchId = 1L).collect()
-      tied.map(r => (r.getLong(0), r.getString(1))) shouldBe Array((1L, "q"))
-      // without seqCol there is no defensible winner: the batch fails loudly
-      // (a task-level assert_true riding the merge's own key exchange — no
-      // extra pre-check job) instead of fanning out through the merge join
-      // and corrupting history
+      ScdIngest.ingestBatch(Seq((1L, "a"), (2L, "x")).toDF("key", "seg"),
+        hist, "key", Seq("seg"), batchId = 0L)
+      // two change rows for one key have no defensible winner: the batch
+      // fails loudly (a task-level assert_true riding the merge's own key
+      // exchange — no extra pre-check job) instead of fanning out through
+      // the merge join and corrupting history
       val ex = intercept[Exception] {
         ScdIngest.ingestBatch(
           Seq((3L, "m"), (3L, "n")).toDF("key", "seg"),
@@ -474,52 +419,6 @@ class StreamingSpec extends SparkSpec {
       messages(ex).mkString("\n") should include("change rows for key")
       // and the failed batch published nothing
       graft.ops.ManifestSink.committedVersions(spark, hist) shouldBe Seq(0L)
-    }
-  }
-
-  test("scd ingest with tombstones: deletes close open rows per trigger, re-inserts reopen, the snapshot equals the iterated mergeOps fold") {
-    implicit val ctx = spark.sqlContext
-    SparkEntry.withTempRoot(spark, "scddel") { dir =>
-      val hist = s"$dir/hist"
-      val mem = MemoryStream[(Long, String, String, Long)]
-      val q = ScdIngest.start(mem.toDF.toDF("key", "op", "seg", "lsn"),
-        hist, "key", Seq("seg"), s"$dir/ck",
-        seqCol = Some("lsn"), opCol = Some("op"))
-      val batches = Seq(
-        // trigger 0: two inserts
-        Seq((1L, "U", "a", 1L), (2L, "U", "x", 2L)),
-        // trigger 1: delete key 1, change key 2; key 3 inserts and deletes
-        // WITHIN the trigger — the (seq, op, attrs) collapse keeps the 'D'
-        Seq((1L, "D", "a", 3L), (2L, "U", "y", 4L),
-          (3L, "U", "m", 5L), (3L, "D", "m", 6L)),
-        // trigger 2: re-insert deleted key 1; delete key 2; ghost delete 9
-        Seq((1L, "U", "b", 7L), (2L, "D", "y", 8L), (9L, "D", "z", 9L)))
-      try {
-        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      } finally q.stop()
-      def snap() = ScdIngest.currentHistory(spark, hist)
-        .orderBy("key", "valid_from").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
-      // the iterated batch fold over the same collapsed changes
-      import graft.ops.ScdMerge
-      var folded = Seq.empty[(Long, String, Long, Option[Long], Boolean)]
-        .toDF("key", "seg", "valid_from", "valid_to", "is_current")
-      val perTrigger = Seq(
-        Seq((1L, "U", "a"), (2L, "U", "x")),
-        Seq((1L, "D", "a"), (2L, "U", "y"), (3L, "D", "m")),
-        Seq((1L, "U", "b"), (2L, "D", "y"), (9L, "D", "z")))
-      for ((b, v) <- perTrigger.zipWithIndex)
-        folded = ScdMerge.mergeOps(folded, b.toDF("key", "op", "seg"),
-          "key", Seq("seg"), "op", v.toLong)
-      snap() shouldBe folded.orderBy("key", "valid_from").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          if (r.isNullAt(3)) None else Some(r.getLong(3)), r.getBoolean(4)))
-      // shape sanity: key 1 re-opened with 'b'; key 2 all-closed; key 3
-      // (insert+delete in one trigger) and key 9 (ghost) never appear
-      snap() shouldBe Array(
-        (1L, "a", 0L, Some(1L), false), (1L, "b", 2L, None, true),
-        (2L, "x", 0L, Some(1L), false), (2L, "y", 1L, Some(2L), false))
     }
   }
 
@@ -1057,143 +956,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("auto-compaction: a long vector ingest self-OPTIMIZEs at the batch threshold mid-stream; probes stay bitwise, the store stays bounded") {
-    implicit val ctx = spark.sqlContext
-    import graft.llm.Similarity
-    SparkEntry.withTempRoot(spark, "vecauto") { dir =>
-      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      val coarseIds = Seq(7L, 123L, 247L, 331L, 433L)
-      val cbIds = Seq(11L, 57L, 201L, 401L)
-      val quant = Similarity.trainIvfPqQuantizer(emb, coarseIds, cbIds, m = 4)
-      val queries = Similarity.collectVectors(emb, Seq(0L, 1L, 2L))
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("query_id", "rn").collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
-      val expected = key(Similarity.ivfPqSearch(
-        emb, coarseIds, cbIds, 4, Seq(0L, 1L, 2L), nprobe = 2, k = 10))
-      val rows = emb.select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      val mem = MemoryStream[(Long, Seq[Double])]
-      val q = VectorIndexIngest.start(
-        mem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck",
-        autoCompactEvery = Some(3))
-      try {
-        for (b <- 0 until 8) {
-          mem.addData(rows.filter(_._1 % 8 == b).toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      // the policy fired at least twice over 8 batches (thresholds at 3)
-      val ws = StoreCompaction.watershed(spark, s"$dir/idx")
-      ws should not be empty
-      ws.get.generation should be >= 2L
-      // live batch partitions above the watershed stay under the threshold
-      val live = spark.read.parquet(s"$dir/idx")
-        .filter(col("ingest_batch").cast("long") > ws.get.coveredThrough)
-        .select(col("ingest_batch").cast("long")).distinct().collect()
-        .map(_.getLong(0)).filter(_ >= 0L)
-      live.length should be < 3
-      // probes bitwise the one-shot search throughout
-      key(Similarity.ivfPqProbe(VectorIndexIngest.index(spark, s"$dir/idx"),
-        quant, queries, nprobe = 2, k = 10)) shouldBe expected
-    }
-  }
-
-  test("lex ingest dedup admission: re-sent and within-batch duplicate docs are filtered, never double-counting df/N/Sumdl") {
-    import graft.llm.TextAnalysis
-    SparkEntry.withTempRoot(spark, "lexadm") { dir =>
-      val docs = Seq(
-        1L -> "spark window spark filter",
-        2L -> "customer window filter here",
-        3L -> "spark customer customer data")
-      val clean = docs.toDF("doc_id", "text")
-      val terms = Seq("spark", "window", "customer", "filter")
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("rn").collect().map(r => (r.getLong(0),
-          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-      // batch 1 re-sends doc 2 and carries doc 3 TWICE internally
-      val b0 = Seq(docs(0), docs(1)).toDF("doc_id", "text")
-      val b1 = Seq(docs(1), docs(2), docs(2)).toDF("doc_id", "text")
-      LexIngest.ingestBatch(b0, s"$dir/guarded", 0L, dedupAdmission = true)
-      LexIngest.ingestBatch(b1, s"$dir/guarded", 1L, dedupAdmission = true)
-      val st = TextAnalysis.lexStats(clean).head()
-      LexIngest.corpusStats(spark, s"$dir/guarded") shouldBe
-        ((st.getLong(0), st.getLong(1)))
-      key(LexIngest.probe(spark, s"$dir/guarded", terms, 10)) shouldBe
-        key(TextAnalysis.bm25TopDocs(clean, terms, 10))
-      // each doc owns exactly one postings partition's rows: no term's df
-      // can exceed the distinct doc count
-      StoreCompaction.committedView(spark, s"$dir/guarded/postings")
-        .groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"),
-          count(lit(1)).as("rows"))
-        .filter(col("df") =!= col("rows")).count() shouldBe 0L
-      // the unguarded twin DOES corrupt (the hazard the flag closes):
-      // doc 2 and the doubled doc 3 inflate N from 3 to 6
-      LexIngest.ingestBatch(b0, s"$dir/raw", 0L)
-      LexIngest.ingestBatch(b1, s"$dir/raw", 1L)
-      LexIngest.corpusStats(spark, s"$dir/raw")._1 shouldBe 5L
-    }
-  }
-
-  test("span ingest auto-compaction: a self-OPTIMIZing stream lands the same corpus as the manual twin; both stores compact") {
-    implicit val ctx = spark.sqlContext
-    SparkEntry.withTempRoot(spark, "spanauto") { dir =>
-      val n = 3
-      val batches = Seq(
-        Seq((1L, "w1 w2 w3 w4 w5"), (2L, "p1 p2 p3 p4")),
-        Seq((3L, "x w1 w2 w3 w4 y"), (4L, "q1 q2 q3 q4 q5 q6")),
-        Seq((5L, "w3 w4 w5 z q1 q2 q3"), (6L, "fresh tokens only here")),
-        Seq((7L, "p1 p2 p3 p4 tail run")),
-        Seq((8L, "q4 q5 q6 and w1 w2 w3 again")),
-        Seq((9L, "all novel text at the end")))
-      val mem = MemoryStream[(Long, String)]
-      val q = SpanIngest.start(mem.toDF.toDF("doc_id", "text"),
-        s"$dir/a/corpus", s"$dir/a/index", s"$dir/a/ck", n,
-        autoCompactEvery = Some(2))
-      try {
-        batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      } finally q.stop()
-      for ((b, i) <- batches.zipWithIndex)
-        SpanIngest.ingestBatch(b.toDF("doc_id", "text"),
-          s"$dir/b/corpus", s"$dir/b/index", i.toLong, n)
-      def corpus(root: String) =
-        StoreCompaction.committedView(spark, s"$root/corpus")
-          .select("doc_id", "text").orderBy("doc_id").collect()
-          .map(r => (r.getLong(0), r.getString(1)))
-      corpus(s"$dir/a") shouldBe corpus(s"$dir/b")
-      StoreCompaction.watershed(spark, s"$dir/a/corpus") should not be empty
-      StoreCompaction.watershed(spark, s"$dir/a/index") should not be empty
-    }
-  }
-
-  test("vector ingest dedup admission: re-sent and within-batch duplicate ids are filtered; the index equals the distinct-corpus encode") {
-    import graft.llm.Similarity
-    SparkEntry.withTempRoot(spark, "vecadm") { dir =>
-      val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
-      val quant = Similarity.trainIvfPqQuantizer(
-        emb, Seq(7L, 123L, 247L, 331L, 433L), Seq(11L, 57L, 201L, 401L), m = 4)
-      val half = emb.filter(col("vec_id") % 2 === 0)
-      // batch 1 re-sends the whole corpus (half of it a duplicate of batch
-      // 0) and doubles one row internally
-      val b1 = emb.union(emb.filter(col("vec_id") === 42L))
-      VectorIndexIngest.ingestBatch(half, s"$dir/guarded", quant, 0L,
-        dedupAdmission = true)
-      VectorIndexIngest.ingestBatch(b1, s"$dir/guarded", quant, 1L,
-        dedupAdmission = true)
-      val idx = VectorIndexIngest.index(spark, s"$dir/guarded")
-      idx.count() shouldBe emb.count()
-      idx.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
-        .sortBy(_._1) shouldBe
-        Similarity.ivfPqIndexRows(emb, quant).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).sortBy(_._1)
-      // the unguarded twin lands the duplicates (the hazard the flag closes)
-      VectorIndexIngest.ingestBatch(half, s"$dir/raw", quant, 0L)
-      VectorIndexIngest.ingestBatch(b1, s"$dir/raw", quant, 1L)
-      VectorIndexIngest.index(spark, s"$dir/raw").count() should be > emb.count()
-    }
-  }
-
   test("chunk-level streamed index: ragChunks batches through LexIngest probe bitwise the one-shot chunk retrieval") {
     import graft.llm.TextAnalysis
     SparkEntry.withTempRoot(spark, "chunkidx") { dir =>
@@ -1214,36 +976,6 @@ class StreamingSpec extends SparkSpec {
           java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
       key(LexIngest.probe(spark, dir, terms, 10)) shouldBe
         key(TextAnalysis.bm25TopDocs(chunksOf(d), terms, 10))
-    }
-  }
-
-  test("lex ingest auto-compaction: the streamed store self-OPTIMIZEs at the threshold; probe bitwise, stats_agg rebuilt") {
-    implicit val ctx = spark.sqlContext
-    import graft.llm.TextAnalysis
-    SparkEntry.withTempRoot(spark, "lexauto") { dir =>
-      val d = spark.read.parquet(s"$sf0001/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val terms = Seq("spark", "window", "customer", "filter")
-      def key(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("rn").collect().map(r => (r.getLong(0),
-          java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
-      val rows = d.collect().map(r => (r.getLong(0), r.getString(1)))
-      val mem = MemoryStream[(Long, String)]
-      val q = LexIngest.start(mem.toDF.toDF("doc_id", "text"),
-        s"$dir/idx", s"$dir/ck", autoCompactEvery = Some(3))
-      try {
-        for (b <- 0 until 6) {
-          mem.addData(rows.filter(_._1 % 6 == b).toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-      StoreCompaction.watershed(spark, s"$dir/idx/postings") should not be empty
-      StoreCompaction.watershed(spark, s"$dir/idx/stats") should not be empty
-      key(LexIngest.probe(spark, s"$dir/idx", terms, 10)) shouldBe
-        key(TextAnalysis.bm25TopDocs(d, terms, 10))
-      val st = TextAnalysis.lexStats(d).head()
-      LexIngest.corpusStats(spark, s"$dir/idx") shouldBe
-        ((st.getLong(0), st.getLong(1)))
     }
   }
 
@@ -1433,7 +1165,7 @@ class StreamingSpec extends SparkSpec {
           Similarity.ivfPqIndexRows(survivors, quant), quant, survivors,
           0L, nprobe = 2, poolR = 12, k = 5, lambda = 0.7))
       // compaction applies the delete physically; probes stay bitwise
-      VecStoreIngest.compact(spark, s"$dir/vecs")
+      KeyedStoreCore.compact(spark, s"$dir/vecs", "vec_id")
       StoreCompaction.vacuum(spark, s"$dir/vecs")
       spark.read.parquet(s"$dir/vecs").filter(col("vec_id") === gone)
         .count() shouldBe 0L
@@ -1511,63 +1243,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("vec/doc store admission arms: re-sent and within-batch duplicate ids are filtered — a rerank candidate can never fetch twice, a passage can never assemble twice") {
-    import spark.implicits._
-    SparkEntry.withTempRoot(spark, "storeadm") { dir =>
-      val vecs = Seq(
-        (1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(1.0, 1.0)))
-        .toDF("vec_id", "embedding")
-      // batch 0: id 1 doubled within the batch (collapses to min embedding)
-      VecStoreIngest.ingestBatch(
-        vecs.filter(col("vec_id") <= 2)
-          .union(Seq((1L, Seq(2.0, 2.0))).toDF("vec_id", "embedding")),
-        s"$dir/vecs", 0L, dedupAdmission = true)
-      // batch 1: id 2 re-sent (anti-joins away), id 3 new
-      VecStoreIngest.ingestBatch(
-        vecs.filter(col("vec_id") >= 2), s"$dir/vecs", 1L, dedupAdmission = true)
-      val got = VecStoreIngest.view(spark, s"$dir/vecs").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
-      got shouldBe Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(1.0, 1.0)))
-      // doc twin: duplicate doc collapses to min(text), re-sent doc drops
-      val docs = Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")).toDF("doc_id", "text")
-      DocStoreIngest.ingestBatch(
-        docs.filter(col("doc_id") <= 2)
-          .union(Seq((1L, "zzz")).toDF("doc_id", "text")),
-        s"$dir/docs", 0L, dedupAdmission = true)
-      DocStoreIngest.ingestBatch(
-        docs.filter(col("doc_id") >= 2), s"$dir/docs", 1L, dedupAdmission = true)
-      DocStoreIngest.view(spark, s"$dir/docs").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
-        Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"))
-      // across a compacted generation: after compact + vacuum the registry
-      // is the lone ingest_batch=-1 partition, and a re-sent id 3 must
-      // still anti-join away while a new id lands
-      VecStoreIngest.compact(spark, s"$dir/vecs")
-      StoreCompaction.vacuum(spark, s"$dir/vecs")
-      StoreCompaction.batchDirs(spark, s"$dir/vecs").map(_._2) shouldBe Seq(-1L)
-      VecStoreIngest.ingestBatch(
-        Seq((3L, Seq(9.0, 9.0)), (4L, Seq(2.0, 0.0))).toDF("vec_id", "embedding"),
-        s"$dir/vecs", 2L, dedupAdmission = true)
-      VecStoreIngest.view(spark, s"$dir/vecs").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq shouldBe
-        got :+ ((4L, Seq(2.0, 0.0)))
-      DocStoreIngest.compact(spark, s"$dir/docs")
-      StoreCompaction.vacuum(spark, s"$dir/docs")
-      StoreCompaction.batchDirs(spark, s"$dir/docs").map(_._2) shouldBe Seq(-1L)
-      DocStoreIngest.ingestBatch(Seq((3L, "again"), (4L, "delta")).toDF("doc_id", "text"),
-        s"$dir/docs", 2L, dedupAdmission = true)
-      DocStoreIngest.view(spark, s"$dir/docs").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq shouldBe
-        Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma"), (4L, "delta"))
-      // without the flag the duplicate lands twice — the hazard the arm closes
-      DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
-        s"$dir/raw", 0L)
-      DocStoreIngest.ingestBatch(docs.filter(col("doc_id") === 2),
-        s"$dir/raw", 1L)
-      DocStoreIngest.view(spark, s"$dir/raw").count() shouldBe 2L
-    }
-  }
-
   test("doc-text store: verbatim round-trip, forgotten text unreturnable from the fetch view, replay skip, physical apply at compact") {
     SparkEntry.withTempRoot(spark, "docstore") { dir =>
       val docs = spark.read.parquet(s"$sf0001/documents.parquet")
@@ -1622,10 +1297,11 @@ class StreamingSpec extends SparkSpec {
         vmem.toDF.toDF("vec_id", "embedding"), s"$dir/idx", quant, s"$dir/ck2")
       val vecQ = VecStoreIngest.start(
         vmem.toDF.toDF("vec_id", "embedding"), s"$dir/vecs", s"$dir/ck3")
-      val docQ = DocStoreIngest.start(
-        dmem.toDF.toDF("doc_id", "text"), s"$dir/docs", s"$dir/ck4")
-      val sigQ = SigStoreIngest.start(
-        vmem.toDF.toDF("vec_id", "embedding"), s"$dir/sigs", s"$dir/ck5")
+      val docQ = KeyedStoreCore.start(
+        dmem.toDF.toDF("doc_id", "text"), s"$dir/docs", s"$dir/ck4", "doc_id", "text")
+      val sigQ = KeyedStoreCore.start(
+        Similarity.signSignature(vmem.toDF.toDF("vec_id", "embedding")),
+        s"$dir/sigs", s"$dir/ck5", "vec_id", "sig")
       def prfKey(df: org.apache.spark.sql.DataFrame) =
         df.orderBy("rn").collect().map(r => (r.getLong(0),
           java.lang.Double.doubleToRawLongBits(r.getDouble(1)), r.getLong(2)))
@@ -1671,7 +1347,8 @@ class StreamingSpec extends SparkSpec {
           // corpus at every trigger (all-integer rows)
           def hamKey(df: org.apache.spark.sql.DataFrame) = df.collect()
             .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          hamKey(SigStoreIngest.probe(spark, s"$dir/sigs", Seq(0L), 5)) shouldBe
+          hamKey(Similarity.hammingProbe(
+              SigStoreIngest.view(spark, s"$dir/sigs"), Seq(0L), 5)) shouldBe
             hamKey(Similarity.hammingTopK(seenEmb, Seq(0L), 5))
         }
       } finally { lexQ.stop(); idxQ.stop(); vecQ.stop(); docQ.stop(); sigQ.stop() }
@@ -2033,39 +1710,5 @@ class StreamingSpec extends SparkSpec {
       .toMap
     out(3L) shouldBe None       // fail-safe null, not Some(100L)
     out(4L) shouldBe Some(100L) // the legit fallback match is untouched
-  }
-
-  test("transitionCellUpdates horizon: state prunes to the window, in-horizon retraction stays exact, beyond-horizon lates drop") {
-    implicit val ctx = spark.sqlContext
-    import EventStream.SeqEvent
-    val mem = MemoryStream[SeqEvent]
-    // horizon = 50 micros of event time
-    val q = EventStream.transitionCellUpdates(mem.toDS(), horizonMicros = Some(50L))
-      .writeStream.format("memory").queryName("trhdelta").outputMode("update").start()
-    def summed(): Map[(String, String), Long] = spark.sql(
-      "SELECT prev_type, next_type, sum(delta) AS n FROM trhdelta " +
-        "GROUP BY 1, 2 HAVING sum(delta) <> 0").collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    try {
-      // trigger 1: a->b->c at t=10,20,30 (all within horizon of hw=30)
-      mem.addData(SeqEvent(1L, 1L, "a", 10L), SeqEvent(1L, 2L, "b", 20L),
-        SeqEvent(1L, 3L, "c", 30L))
-      q.processAllAvailable()
-      summed() shouldBe Map(("a", "b") -> 1L, ("b", "c") -> 1L)
-      // trigger 2: hw jumps to 100 → cutoff 50: events 10,20 prune, 30
-      // stays as the boundary. The asserted (a,b) pair is immutable —
-      // it must NOT retract on pruning.
-      mem.addData(SeqEvent(1L, 4L, "d", 100L))
-      q.processAllAvailable()
-      summed() shouldBe Map(("a", "b") -> 1L, ("b", "c") -> 1L, ("c", "d") -> 1L)
-      // trigger 3: a late event INSIDE the horizon (t=60, cutoff=50)
-      // splits (c,d) exactly — retraction still works on the retained
-      // window; a late event BEYOND the pruned frontier (t=5) is
-      // discarded, asserting nothing against the truncated prefix
-      mem.addData(SeqEvent(1L, 5L, "e", 60L), SeqEvent(1L, 6L, "x", 5L))
-      q.processAllAvailable()
-      summed() shouldBe Map(("a", "b") -> 1L, ("b", "c") -> 1L,
-        ("c", "e") -> 1L, ("e", "d") -> 1L)
-    } finally q.stop()
   }
 }
